@@ -638,10 +638,14 @@ def _srp_planes(dim: int, n_bits: int, seed: int):
     """Deterministic random hyperplanes (seeded, cached per process —
     the cache makes good on the docstring: the matmul UDFs call this
     once per Arrow batch, and regenerating the matrix per batch was
-    wasted executor work).  Callers treat the array as read-only."""
+    wasted executor work).  Every caller shares the one cached array, so
+    it is read-only: an in-place write raises instead of corrupting the
+    planes of every later call."""
     import numpy as np
 
-    return np.random.default_rng(seed).standard_normal((dim, n_bits))
+    planes = np.random.default_rng(seed).standard_normal((dim, n_bits))
+    planes.flags.writeable = False
+    return planes
 
 
 def _srp_band_params(n_vectors: int, threshold: float) -> tuple[int, int]:
@@ -871,93 +875,6 @@ def embedding_dup_pairs_bucketed(
     )
 
 
-def connected_components(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 25,
-) -> DataFrame:
-    """Near-dup pairs → (doc_id, cluster_id): connected components via
-    iterative min-label propagation, the step that collapses pair lists
-    into dedup groups (keep one doc per cluster).
-
-    Each iteration is one join + one groupBy over the (symmetrized +
-    self-loop) edge list: label(n) ← min over in-neighbors m of
-    label(m).  Converges in O(diameter) rounds — dup clusters are
-    near-cliques (diameter ≤ 2-3), so a handful of rounds in practice
-    and ONE light shuffle per round; ``max_iters`` bounds pathological
-    chains.  For genuinely chain-like graphs use
-    :func:`connected_components_star` (O(log n) rounds, heavier per
-    round; equivalence-tested against this one).  Driver-side loop holds
-    only a changed-row COUNT, never data; per-round results are
-    persisted and the previous round freed.
-    """
-    from pyspark import StorageLevel
-
-    # materialize the symmetrized edge list ONCE — the pair list's
-    # lineage (LSH, shingle joins, …) is expensive and every loop round
-    # would otherwise recompute it
-    a = pairs.select(F.col(a_col).alias("src"), F.col(b_col).alias("dst"))
-    b = pairs.select(F.col(b_col).alias("src"), F.col(a_col).alias("dst"))
-    sym = a.unionByName(b).distinct().persist(StorageLevel.MEMORY_AND_DISK)
-    sym.count()
-    nodes = sym.select(F.col("src").alias("node")).distinct()
-    self_loops = nodes.select(
-        F.col("node").alias("src"), F.col("node").alias("dst")
-    )
-    # localCheckpoint (not persist): iterative algorithms grow a nested
-    # plan every round — Catalyst re-analysis cost compounds until a
-    # 10-round loop spends minutes planning.  Checkpointing truncates
-    # the lineage so every round plans against a flat in-memory scan.
-    edges = sym.unionByName(self_loops).localCheckpoint()
-    labels = nodes.select("node", F.col("node").alias("label")).localCheckpoint()
-    changed = 0
-    for _ in range(max_iters):
-        prop = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        # self-loops make prop total over nodes; converged when no label
-        # shrank this round
-        changed = (
-            prop.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = prop
-        if changed == 0:
-            break
-    if changed != 0:
-        # the LAST allowed round may itself have completed propagation
-        # (changed counts updates MADE, not updates REMAINING) — run one
-        # verification round before declaring failure
-        prop = (
-            edges.join(labels, edges["src"] == labels["node"])
-            .groupBy(F.col("dst").alias("node"))
-            .agg(F.min("label").alias("label"))
-        ).localCheckpoint()
-        changed = (
-            prop.alias("n")
-            .join(labels.alias("o"), F.col("n.node") == F.col("o.node"))
-            .filter(F.col("n.label") != F.col("o.label"))
-            .count()
-        )
-        labels = prop
-    sym.unpersist()
-    if changed != 0:
-        # never hand back wrong cluster ids silently: a component whose
-        # diameter exceeds max_iters would otherwise split into several
-        # partially-propagated labels
-        raise RuntimeError(
-            f"connected_components did not converge in {max_iters} rounds "
-            f"({changed} labels still shrinking); raise max_iters — dup "
-            "graphs converging this slowly have chain-like components"
-        )
-    return labels.select(F.col("node").alias("doc_id"), F.col("label").alias("cluster_id"))
-
-
 def connected_components_star(
     pairs: DataFrame,
     a_col: str = "doc_a",
@@ -966,11 +883,12 @@ def connected_components_star(
     stats: dict | None = None,
     driver_threshold: int = 1_000_000,
 ) -> DataFrame:
-    """O(log n)-round connected components via alternating large-star /
-    small-star contraction (Kiveris et al., *Connected Components in
-    MapReduce and Beyond*, SoCC 2014) — the scale path for graphs whose
-    components are NOT near-cliques (chain-like link graphs), where
-    min-label propagation needs O(diameter) rounds.
+    """Near-dup pairs → (doc_id, cluster_id = component min): the step
+    that collapses pair lists into dedup groups (keep one doc per
+    cluster).  O(log n) rounds of alternating large-star / small-star
+    contraction (Kiveris et al., *Connected Components in MapReduce and
+    Beyond*, SoCC 2014), so a chain-like component needs O(log n)
+    rounds, not one per hop of its diameter.
 
     - large-star(u): every strictly-larger neighbor of u re-attaches to
       ``m = min(N(u) ∪ {u})``
@@ -980,11 +898,11 @@ def connected_components_star(
     Both phases are one groupBy + one join over the edge list; the edge
     set is a fixed point exactly when it is a forest of stars rooted at
     component minima.  The driver holds only change counts;
-    ``localCheckpoint`` truncates per-round lineage as in
-    :func:`connected_components`.  Output matches it exactly:
-    (doc_id, cluster_id = component min) — including nodes whose only
-    pairs are self-pairs (they label themselves, as in the
-    label-propagation variant).
+    ``localCheckpoint`` truncates per-round lineage so every round plans
+    against a flat in-memory scan instead of a plan nested one level
+    deeper per round.  Nodes whose only pairs are self-pairs label
+    themselves.  A graph that has not reached the fixed point after
+    ``max_iters`` rounds raises instead of returning partial labels.
 
     r6 size-adaptive fast path (output unchanged): a dup-pair graph is
     orders of magnitude smaller than its corpus, and each star round
@@ -998,19 +916,12 @@ def connected_components_star(
     table itself may be arbitrarily large — only the DISTINCT non-self
     edges are bounded).  Past the threshold nothing changes: the
     O(log n)-round star contraction below is the scale path.  Python's
-    int min ≡ Spark's numeric min, so labels are identical (the
-    equivalence tests cover both paths); non-integral id types always
-    take the distributed path (string min differs between engines in
-    principle).
+    int min ≡ Spark's numeric min, so labels are identical (the tests
+    pin both paths to each other and to a recursive-CTE reference);
+    non-integral id types always take the distributed path (string min
+    differs between engines in principle).
 
     r6 round-cost trims (output unchanged):
-    - the shuffle width for the iterative rounds is derived from the
-      measured edge count (~500k edges per partition, capped at the
-      session default) instead of running every tiny round at the full
-      session width — a dup-pair graph is orders of magnitude smaller
-      than its corpus, and each round re-shuffles it ~4×; at scale the
-      derived width saturates at the cluster conf, so nothing changes
-      there.
     - the intra-round ``large`` edge set is persisted (materialized by
       the round's one checkpoint job, unpersisted after the round), not
       eagerly checkpointed — one fewer job per round.
@@ -1019,6 +930,10 @@ def connected_components_star(
       check — both sets are distinct, so equal counts + small ⊆ edges ⟺
       equal.  Non-final rounds pay one count, not a full exceptAll
       symmetric difference.
+
+    No session conf is touched — a conf write would leak into every
+    other query sharing the session — so the rounds shuffle at the
+    session width.
     """
     from pyspark import StorageLevel
 
@@ -1108,69 +1023,59 @@ def connected_components_star(
         .distinct()
     )
     n_edges = edges.count()
-    # size-adaptive width for the round shuffles (guide: derive from
-    # input size, don't hard-code either local or cluster constants)
-    session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    round_parts = max(1, min(session_parts, (n_edges + 499_999) // 500_000))
-    old_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.shuffle.partitions", str(round_parts))
-    try:
-        converged = False
-        rounds = 0
-        for _ in range(max_iters):
-            rounds += 1
-            # LARGE-STAR
-            sym = edges.unionByName(
-                edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            mins = sym.groupBy("u").agg(F.min("v").alias("mn")).select(
-                "u", F.least("mn", F.col("u")).alias("m")
-            )
-            large = (
-                sym.join(mins, "u")
-                .filter(F.col("v") > F.col("u"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .filter(F.col("u") != F.col("v"))
-                .distinct()
-                .persist(StorageLevel.MEMORY_AND_DISK)
-            )
-            # SMALL-STAR
-            oriented = large.select(
-                F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
-            )
-            mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
-            members = oriented.unionByName(
-                mins2.select("u", F.col("u").alias("v"))
-            ).distinct()
-            small = (
-                members.join(mins2, "u")
-                .filter(F.col("v") != F.col("m"))
-                .select(F.col("v").alias("u"), F.col("m").alias("v"))
-                .distinct()
-                .localCheckpoint()
-            )
-            large.unpersist()
-            n_small = small.count()
-            unchanged = n_small == n_edges and (
-                small.join(edges, ["u", "v"], "left_anti").limit(1).count()
-                == 0
-            )
-            edges, n_edges = small, n_small
-            if unchanged:
-                converged = True
-                break
-        if not converged:
-            raise RuntimeError(
-                f"connected_components_star did not converge in {max_iters} "
-                "rounds — pathological input (the scheme is O(log n) rounds)"
-            )
-        if stats is not None:
-            # round-count visibility (VERDICT r5 item 6): callers/benches
-            # can observe convergence behavior without re-deriving it
-            stats["cc_rounds"] = rounds
-            stats["cc_edges"] = n_edges
-    finally:
-        spark.conf.set("spark.sql.shuffle.partitions", old_parts)
+    converged = False
+    rounds = 0
+    for _ in range(max_iters):
+        rounds += 1
+        # LARGE-STAR
+        sym = edges.unionByName(
+            edges.select(F.col("v").alias("u"), F.col("u").alias("v"))
+        )
+        mins = sym.groupBy("u").agg(F.min("v").alias("mn")).select(
+            "u", F.least("mn", F.col("u")).alias("m")
+        )
+        large = (
+            sym.join(mins, "u")
+            .filter(F.col("v") > F.col("u"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .filter(F.col("u") != F.col("v"))
+            .distinct()
+            .persist(StorageLevel.MEMORY_AND_DISK)
+        )
+        # SMALL-STAR
+        oriented = large.select(
+            F.greatest("u", "v").alias("u"), F.least("u", "v").alias("v")
+        )
+        mins2 = oriented.groupBy("u").agg(F.min("v").alias("m"))
+        members = oriented.unionByName(
+            mins2.select("u", F.col("u").alias("v"))
+        ).distinct()
+        small = (
+            members.join(mins2, "u")
+            .filter(F.col("v") != F.col("m"))
+            .select(F.col("v").alias("u"), F.col("m").alias("v"))
+            .distinct()
+            .localCheckpoint()
+        )
+        large.unpersist()
+        n_small = small.count()
+        unchanged = n_small == n_edges and (
+            small.join(edges, ["u", "v"], "left_anti").limit(1).count() == 0
+        )
+        edges, n_edges = small, n_small
+        if unchanged:
+            converged = True
+            break
+    if not converged:
+        raise RuntimeError(
+            f"connected_components_star did not converge in {max_iters} "
+            "rounds — pathological input (the scheme is O(log n) rounds)"
+        )
+    if stats is not None:
+        # round-count visibility (VERDICT r5 item 6): callers/benches
+        # can observe convergence behavior without re-deriving it
+        stats["cc_rounds"] = rounds
+        stats["cc_edges"] = n_edges
     # fixed point = stars: non-roots appear as u, roots as v; nodes with
     # no surviving edges (self-pairs only) label themselves.  r6: in a
     # star forest every non-root carries exactly ONE edge (to its root)

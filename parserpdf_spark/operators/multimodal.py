@@ -16,14 +16,6 @@ Decode tiers:
   BMP/JPEG/PNG/GIF payloads and ``decode_frames_auto`` AVI/GIF, so the
   /DCTDecode bytes the PDF kernel surfaces and the docx ``word/media``
   parts yield genuine pixel features.
-- **Stub for the remaining compressed formats**: MP3/H.264 codecs
-  aren't in this container, so ``decode_image_real`` raises
-  NotImplementedError unless PIL is importable, and the gated default
-  pipeline uses ``_fake_decode`` — a deterministic pure function of the
-  bytes.  Everything Spark-side (schema, binary columns, batch
-  iteration, UDF signatures, partitioning) is real and tested; swapping
-  a stub for a real codec changes no dataflow (the BMP/JPEG tiers prove
-  it end-to-end).
 
 The reference handles media as PIL images written to per-doc dirs
 (``utils/file_utils.py:562-626``); here payloads are opaque ``binary``
@@ -35,103 +27,12 @@ from __future__ import annotations
 from typing import Iterator
 
 import pandas as pd
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame
 
 MEDIA_DDL = (
     "doc_id string, media_ref string, payload binary, "
     "n_bytes int, magic string"
 )
-
-
-def attach_fake_payloads(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Synthesize a deterministic binary payload column (UTF-8 bytes of
-    the text posing as media bytes) + metadata — all JVM-side."""
-    payload = F.encode(F.col(text_col), "UTF-8")
-    return docs.select(
-        F.col("doc_id").cast("string").alias("doc_id"),
-        F.concat(F.lit("media_"), F.col("doc_id").cast("string"), F.lit(".bin")).alias(
-            "media_ref"
-        ),
-        payload.alias("payload"),
-        F.octet_length(payload).alias("n_bytes"),
-        F.substring(F.hex(payload), 1, 8).alias("magic"),
-    )
-
-
-def decode_image_real(payload: bytes):  # pragma: no cover - not in container
-    """Real decode path — requires PIL, absent in this container."""
-    try:
-        import io
-
-        from PIL import Image
-    except ImportError as exc:
-        raise NotImplementedError(
-            "image decode requires PIL; this container ships none — "
-            "the pipeline uses the deterministic stub instead"
-        ) from exc
-    return Image.open(io.BytesIO(payload))
-
-
-def _fake_decode(payload: bytes) -> tuple[int, int, str]:
-    """Deterministic stand-in for decode: (width, height, format) as a
-    pure function of the payload bytes."""
-    n = len(payload)
-    checksum = sum(payload[:64]) if n else 0
-    return (64 + n % 577, 64 + checksum % 389, "FAKERGB")
-
-
-def decode_features(media: DataFrame) -> DataFrame:
-    """Decode + feature-extract stage: binary → (width, height, format,
-    aspect_millis) via mapInPandas over Arrow batches of payloads."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            decoded = [_fake_decode(bytes(p)) for p in pdf["payload"]]
-            out = pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "media_ref": pdf["media_ref"],
-                    "width": [d[0] for d in decoded],
-                    "height": [d[1] for d in decoded],
-                    "format": [d[2] for d in decoded],
-                }
-            )
-            out["aspect_millis"] = (
-                out["width"] * 1000 // out["height"]
-            ).astype("int64")
-            yield out
-
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, width int, height int, "
-               "format string, aspect_millis long",
-    )
-
-
-def frame_sample(media: DataFrame, every_bytes: int = 64) -> DataFrame:
-    """Frame-sampling shape for video-like payloads: one output row per
-    sampled frame offset — a mapInPandas that *expands* rows, the batch
-    contract a real frame sampler needs."""
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "media_ref": [], "frame_no": [], "frame_sig": []}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                data = bytes(payload)
-                for i, start in enumerate(range(0, len(data), every_bytes)):
-                    chunk = data[start : start + every_bytes]
-                    rows["doc_id"].append(doc_id)
-                    rows["media_ref"].append(ref)
-                    rows["frame_no"].append(i)
-                    rows["frame_sig"].append(sum(chunk) % 65536)
-            yield pd.DataFrame(rows)
-
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, frame_no int, frame_sig int",
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -377,7 +278,7 @@ def decode_features_real(media: DataFrame) -> DataFrame:
     (kernels/jpeg.py, from-scratch T.81) → dimensions and per-channel
     pixel statistics, keep-with-status per row (a payload outside the
     codec subsets yields decode_ok=false + nulls, never a task
-    failure).  Same mapInPandas shape as the stubbed tier."""
+    failure)."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:

@@ -277,7 +277,7 @@ def export_image_payloads(media: DataFrame, out_dir: str) -> int:
     shared-filesystem requirement as :func:`export_markdown_files`.
 
     ``media`` needs (doc_id, media_ref, payload) — the shape
-    ``multimodal.attach_fake_payloads`` (or a real media table) carries.
+    ``multimodal.attach_bmp_payloads`` (or any real media table) carries.
     Returns payloads written (DataFrame count, cluster-correct)."""
     view = media.select("doc_id", "media_ref", "payload").persist()
 

@@ -47,9 +47,7 @@ def _rows(frame):
 @pytest.mark.parametrize("name", sorted(entry_mod.queries()))
 def test_query_matches_oracle(name, spark, duck):
     q = entry_mod.queries()[name]
-    sql = entry_mod.oracle_sql().get(name)
-    if sql is None:
-        pytest.skip(f"{name}: no oracle (rows-only check)")
+    sql = entry_mod.oracle_sql()[name]
 
     sdf = q(spark, SF_DIR)
     spark_cols = list(sdf.columns)
@@ -74,6 +72,12 @@ def test_query_matches_oracle(name, spark, duck):
         (a, b) for a, b in zip(srt_s, srt_d) if a != b
     ]
     assert not mismatches, f"{name}: first mismatches: {mismatches[:3]}"
+
+
+def test_every_query_has_an_oracle():
+    """No query goes unchecked for want of an oracle, and no oracle
+    outlives its query."""
+    assert set(entry_mod.queries()) == set(entry_mod.oracle_sql())
 
 
 def test_entry_smoke(spark):

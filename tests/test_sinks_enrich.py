@@ -40,14 +40,14 @@ def test_export_markdown_files(spark, sf_small, tmp_path):
 def test_export_image_payloads(spark, sf_small, tmp_path):
     """K2: binary payloads land as real files in per-doc dirs with the
     exact bytes."""
-    from parserpdf_spark.operators.multimodal import attach_fake_payloads
+    from parserpdf_spark.operators.multimodal import attach_bmp_payloads
     from parserpdf_spark.operators.sinks import export_image_payloads
 
     out = str(tmp_path / "media_out")
     docs = spark.read.parquet(f"{sf_small}/documents.parquet").filter(
         F.col("doc_id") < 5
     )
-    media = attach_fake_payloads(docs)
+    media = attach_bmp_payloads(docs)
     n = export_image_payloads(media, out)
     assert n == 5
     rows = media.collect()

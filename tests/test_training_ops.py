@@ -1,6 +1,6 @@
 """Unit/behavior tests for the training-data operator family:
 dedup (exact/jaccard/minhash/simhash/embedding), ANN (brute force + IVF
-recall), text analysis, multimodal plumbing."""
+recall), text analysis, connected components, media codecs."""
 
 import pytest
 from pyspark.sql import functions as F
@@ -12,12 +12,6 @@ from parserpdf_spark.operators.dedup import (
     lsh_candidate_pairs,
     minhash_signatures,
     simhash,
-)
-from parserpdf_spark.operators.multimodal import (
-    attach_fake_payloads,
-    decode_features,
-    decode_image_real,
-    frame_sample,
 )
 from parserpdf_spark.operators.textops import _winnow_one, fingerprint_winnow
 
@@ -244,6 +238,20 @@ def test_srp_signature_determinism(spark, sf_med):
     assert len(set(s1.values())) > 400  # random vectors spread buckets
 
 
+def test_srp_planes_are_read_only():
+    """The cached hyperplanes are shared by every caller: an in-place
+    write must raise instead of corrupting later signatures."""
+    import numpy as np
+
+    from parserpdf_spark.operators.dedup import _srp_planes
+
+    planes = _srp_planes(8, 16, 7)
+    before = planes.copy()
+    with pytest.raises(ValueError):
+        planes[0, 0] += 1.0
+    assert np.array_equal(_srp_planes(8, 16, 7), before)
+
+
 def test_winnow_determinism_and_shift_invariance():
     a = _winnow_one("the quick brown fox jumps over the lazy dog")
     b = _winnow_one("the  quick   brown fox jumps over the lazy dog")  # ws-normalized
@@ -262,28 +270,6 @@ def test_winnow_udf_matches_local(spark, docs):
     for doc_id, text in [(1, "the quick brown fox jumps over the lazy dog near the river bank")]:
         fps = _winnow_one(text)
         assert rows[doc_id] == (len(fps), min(fps), max(fps))
-
-
-def test_multimodal_plumbing(spark, docs):
-    media = attach_fake_payloads(docs)
-    feats = {r["doc_id"]: r for r in decode_features(media).collect()}
-    assert len(feats) == 4
-    r = feats["1"]
-    n = len("the quick brown fox jumps over the lazy dog near the river bank")
-    assert r["width"] == 64 + n % 577
-    assert r["format"] == "FAKERGB"
-    assert r["aspect_millis"] == r["width"] * 1000 // r["height"]
-
-    frames = frame_sample(media, every_bytes=16).collect()
-    per_doc = {}
-    for row in frames:
-        per_doc.setdefault(row["doc_id"], []).append(row["frame_no"])
-    assert sorted(per_doc["1"]) == list(range((n + 15) // 16))
-
-
-def test_decode_real_is_stubbed():
-    with pytest.raises(NotImplementedError, match="PIL"):
-        decode_image_real(b"\x89PNG fake")
 
 
 def test_gopher_quality_signals(spark):
@@ -395,21 +381,38 @@ def test_stratified_sample_deterministic_and_proportional(spark, sf_med):
         assert abs(ratio - frac) < 0.2  # hash buckets roughly proportional
 
 
-def test_connected_components_clusters(spark):
-    from parserpdf_spark.operators.dedup import connected_components
+def _cc_labels(df, **kw):
+    from parserpdf_spark.operators.dedup import connected_components_star
 
+    return {
+        r["doc_id"]: r["cluster_id"]
+        for r in connected_components_star(df, **kw).collect()
+    }
+
+
+def _cc_reference(pairs):
+    """The driver oracle's recursive-CTE connected components, run in
+    DuckDB over the same pair list — independent of Spark."""
+    import duckdb
+    import pandas as pd
+
+    from __spark_entry__ import _CC_SQL
+
+    with duckdb.connect() as con:
+        con.register("pairs", pd.DataFrame(pairs, columns=["doc_a", "doc_b"]))
+        return dict(con.execute(f"WITH RECURSIVE {_CC_SQL}").fetchall())
+
+
+def test_connected_components_clusters(spark):
     # two clusters: {1,2,3,4} chained, {7,8}; singleton pairs absent
     pairs = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a long, doc_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"] for r in connected_components(pairs).collect()}
-    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
-    # a longer chain than one round of propagation still converges
+    assert _cc_labels(pairs) == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(10, 20)], "doc_a long, doc_b long"
     )
-    got2 = {r["doc_id"]: r["cluster_id"] for r in connected_components(chain).collect()}
-    assert set(got2.values()) == {10}
+    assert set(_cc_labels(chain).values()) == {10}
 
 
 def test_connected_components_star_from_persisted_pairs(spark, tmp_path):
@@ -436,17 +439,13 @@ def test_connected_components_star_from_persisted_pairs(spark, tmp_path):
 
 
 def test_connected_components_raises_on_non_convergence(spark):
-    """A component whose diameter exceeds max_iters must raise — wrong
-    (partially-propagated) cluster ids can never be consumed silently."""
-    import pytest
-
-    from parserpdf_spark.operators.dedup import connected_components
-
+    """A graph that is not at the fixed point after max_iters rounds must
+    raise — partial cluster ids can never be consumed silently."""
     chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(10, 20)], "doc_a long, doc_b long"
+        [(i, i + 1) for i in range(100, 140)], "doc_a long, doc_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(chain, max_iters=2)
+        _cc_labels(chain, max_iters=1, driver_threshold=0)
 
 
 def test_curation_funnel_monotone_and_deterministic(spark, sf_med):
@@ -694,20 +693,20 @@ def test_remove_repeated_lines_literal_separator(spark):
 
 
 def test_connected_components_converging_at_last_round_ok(spark):
-    """Regression (review finding): convergence ON the final allowed
-    round must not raise — a verification round distinguishes 'made its
-    last update' from 'still propagating'."""
-    from parserpdf_spark.operators.dedup import connected_components
+    """Convergence ON the final allowed round must not raise: a budget
+    of exactly the rounds the distributed path needs returns the full
+    labels."""
+    from parserpdf_spark.operators.dedup import connected_components_star
 
-    # a 4-chain converges in 3 rounds of min-propagation; max_iters=3
-    # ends the loop with changed > 0 on some schedules — the extra
-    # verify round must accept it
     chain = spark.createDataFrame(
         [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
     )
-    got = {r["doc_id"]: r["cluster_id"]
-           for r in connected_components(chain, max_iters=3).collect()}
-    assert set(got.values()) == {1}
+    stats: dict = {}
+    connected_components_star(chain, driver_threshold=0, stats=stats)
+    rounds = stats["cc_rounds"]
+    assert rounds > 1
+    got = _cc_labels(chain, max_iters=rounds, driver_threshold=0)
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
 def test_curate_job_end_to_end(spark, tmp_path, sf_med):
@@ -769,16 +768,14 @@ def test_curate_job_end_to_end(spark, tmp_path, sf_med):
     assert a == b
 
 
-def test_connected_components_star_equals_label_propagation(spark):
-    """The O(log n) large-star/small-star contraction produces exactly
-    the label-propagation clustering — including on a chain four times
-    longer than the round budget label propagation would need."""
+def test_connected_components_star_paths_equal_oracle(spark):
+    """The driver union-find fast path and the distributed star rounds
+    (driver_threshold=0) label every graph identically, and both equal
+    the recursive-CTE reference — chains, cliques and random graphs.
+    The distributed path gets 10 rounds: O(log n) contraction meets that
+    budget on the 40-chain, where one-hop-per-round propagation needs
+    40."""
     import random
-
-    from parserpdf_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
 
     rng = random.Random(7)
     cases = [
@@ -791,32 +788,27 @@ def test_connected_components_star_equals_label_propagation(spark):
     for pairs in cases:
         pairs = [(a, b) for a, b in pairs if a != b]
         df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
-        # default: the bounded driver union-find fast path
-        star = {r["doc_id"]: r["cluster_id"]
-                for r in connected_components_star(df).collect()}
-        # driver_threshold=0 forces the distributed star rounds — both
-        # paths must agree with each other and with label propagation
-        star_dist = {
-            r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(
-                df, driver_threshold=0
-            ).collect()
-        }
-        naive = {r["doc_id"]: r["cluster_id"]
-                 for r in connected_components(df, max_iters=200).collect()}
-        assert star == naive
-        assert star_dist == naive
-    # the chain case: star converges well inside a budget where plain
-    # propagation provably cannot (info travels one hop per round);
-    # driver_threshold=0 so the round budget is actually exercised
-    chain = spark.createDataFrame(
-        [(i, i + 1) for i in range(100, 140)], "doc_a long, doc_b long"
+        fast = _cc_labels(df)
+        assert _cc_labels(df, max_iters=10, driver_threshold=0) == fast
+        assert fast == _cc_reference(pairs)
+
+
+def test_connected_components_star_leaves_session_conf_alone(
+    spark, monkeypatch
+):
+    """The distributed path runs with the session's own conf: any
+    session-wide conf write would leak into concurrent queries."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    def refuse(self, key, value=None):
+        raise AssertionError(f"session conf written: {key}={value}")
+
+    pairs = spark.createDataFrame(
+        [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a long, doc_b long"
     )
-    got = {r["cluster_id"] for r in
-           connected_components_star(
-               chain, max_iters=10, driver_threshold=0
-           ).collect()}
-    assert got == {100}
+    monkeypatch.setattr(RuntimeConfig, "set", refuse)
+    got = _cc_labels(pairs, driver_threshold=0)
+    assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
 
 
 def test_cc_star_fast_path_singletons_from_dropped_rows(spark):
@@ -880,20 +872,13 @@ def test_redact_pii_plus_phone_does_not_eat_longer_digit_runs(spark):
 
 def test_connected_components_star_keeps_self_pair_nodes(spark):
     """Regression: nodes whose only pairs are self-pairs must label
-    themselves (exactly like the label-propagation variant)."""
-    from parserpdf_spark.operators.dedup import (
-        connected_components,
-        connected_components_star,
-    )
-
+    themselves, on both paths."""
     pairs = spark.createDataFrame(
         [(7, 7), (1, 2)], "doc_a long, doc_b long"
     )
-    star = {r["doc_id"]: r["cluster_id"]
-            for r in connected_components_star(pairs).collect()}
-    naive = {r["doc_id"]: r["cluster_id"]
-             for r in connected_components(pairs).collect()}
-    assert star == naive == {1: 1, 2: 1, 7: 7}
+    expected = {1: 1, 2: 1, 7: 7}
+    assert _cc_labels(pairs) == expected
+    assert _cc_labels(pairs, driver_threshold=0) == expected
 
 
 def test_curate_job_default_fraction_and_empty_run(spark, tmp_path, sf_med):
