@@ -7,9 +7,9 @@ per-document map chain ``convert_files → extract → converter(src_path)``
 
 - **Zero-shuffle by construction**: the input table keeps a document's
   spans co-located in one row (``array<struct>``), so extraction is a
-  single ``mapInPandas`` pass — no explode, no reassembly shuffle.  This
+  single ``mapInArrow`` pass — no explode, no reassembly shuffle.  This
   is the single biggest 10^12-scale lever (SURVEY.md §7.4-7): the plan
-  is Scan → ArrowEvalPython → (sink), with zero Exchange nodes.
+  is Scan → MapInArrow → (sink), with zero Exchange nodes.
 - **Arrow-vectorized**: documents cross the JVM↔Python boundary as
   Arrow record batches (``maxRecordsPerBatch`` bounds giant-doc memory);
   no per-row Python UDF (input_hint).

@@ -57,7 +57,10 @@ def get_spark(
         # would bin-pack them into fewer splits than cores
         .config("spark.sql.files.openCostInBytes", "262144")
         # 4 task waves per core: one straggler then costs 1/4 of a wave,
-        # not a whole wave (32 tasks on 32 cores has zero slack)
+        # not a whole wave (32 tasks on 32 cores has zero slack).  Each
+        # Python task costs ~0.07 core-s even when empty (an empty
+        # mapInArrow over range(10000) in 64 partitions: ~1.1 s on 4
+        # vCPUs, ~0.25 core-s a task before the package's zip guard)
         .config(
             "spark.sql.files.minPartitionNum",
             str(4 * (int(cores) if cores.isdigit() else 32)),
