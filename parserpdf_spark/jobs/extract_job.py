@@ -70,11 +70,10 @@ def main(argv=None, spark=None) -> int:
 
     from parserpdf_spark.plans.checkpoint import (
         committed_chunks,
-        read_metrics,
         run_checkpointed_extraction,
     )
 
-    ingest_report = None
+    bridged = None
     if os.path.exists(os.path.join(args.input, "documents.parquet")):
         from parserpdf_spark.sources.synth import synth_docs_df
 
@@ -88,8 +87,6 @@ def main(argv=None, spark=None) -> int:
         name.endswith((".warc", ".warc.gz")) for name in os.listdir(args.input)
     ):
         # crawl corpus: WARC records → bridge → canonical docs table
-        from pyspark.sql import functions as F
-
         from parserpdf_spark.sources.scans import scan_multi
         from parserpdf_spark.sources.warc import warc_to_docs
 
@@ -97,29 +94,20 @@ def main(argv=None, spark=None) -> int:
             spark, args.input, ["*.warc", "*.warc.gz"], with_content=True
         )
         bridged = warc_to_docs(files).persist()
-        ingest_report = {
-            r["ingest_status"]: r["n"]
-            for r in bridged.groupBy("ingest_status")
-            .agg(F.count("*").alias("n"))
-            .collect()
-        }
-        docs = bridged.filter(F.col("ingest_status") == "ok").select(
-            "doc_id", "spans"
-        )
     else:
         # raw files: scan → bridge → canonical docs table
-        from pyspark.sql import functions as F
-
-        from parserpdf_spark.sources.files import files_to_docs, ingested_docs
+        from parserpdf_spark.sources.files import files_to_docs
         from parserpdf_spark.sources.scans import scan_files
 
         files = scan_files(spark, args.input, args.glob, with_content=True)
         bridged = files_to_docs(files, ocr=args.ocr).persist()
+    if bridged is not None:
+        from parserpdf_spark.sources.files import ingested_docs
+
+        # this groupBy is also the action that materializes the bridge
         ingest_report = {
-            r["ingest_status"]: r["n"]
-            for r in bridged.groupBy("ingest_status")
-            .agg(F.count("*").alias("n"))
-            .collect()
+            r["ingest_status"]: r["count"]
+            for r in bridged.groupBy("ingest_status").count().collect()
         }
         docs = ingested_docs(bridged)
 
@@ -130,19 +118,17 @@ def main(argv=None, spark=None) -> int:
     committed = run_checkpointed_extraction(
         spark, docs, args.output, n_chunks=args.chunks, run_id=args.run_id
     )
-    from pyspark.sql import functions as F
-
-    metrics = read_metrics(spark, args.output)
-    by_status = {
-        r["status"]: r["n"]
-        for r in metrics.groupBy("status").agg(F.count("*").alias("n")).collect()
-    }
+    # every committed chunk's manifest, this run's and earlier runs'
+    by_status: dict[str, int] = {}
+    for rec in committed_chunks(args.output).values():
+        for status, n in rec["docs_by_status"].items():
+            by_status[status] = by_status.get(status, 0) + n
     report = {
         "committed_this_run": [r["chunk_id"] for r in committed],
         "total_chunks": args.chunks,
         "docs_by_status": by_status,
     }
-    if ingest_report is not None:
+    if bridged is not None:
         report["files_by_ingest_status"] = ingest_report
     print(json.dumps(report))
     if owns_session:

@@ -225,9 +225,10 @@ def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
     **Requires ``out_dir`` on a shared filesystem** (NFS/FUSE-mounted
     object store): each executor writes its own partitions' docs with
     plain file IO.  On executor-local disks the files would scatter.
-    The count comes from the DataFrame (cluster-correct), never from a
-    driver-local directory listing."""
-    view = render_markdown_col(extracted).persist()
+    The count comes from an accumulator the writing tasks add to
+    (cluster-correct, no second pass), never from a driver-local
+    directory listing."""
+    written = extracted.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
         import os as _os
@@ -243,12 +244,11 @@ def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
             if row["media_refs"]:
                 with open(_os.path.join(doc_dir, "media.txt"), "w") as fh:
                     fh.write("\n".join(row["media_refs"]) + "\n")
+            written.add(1)
 
     os.makedirs(out_dir, exist_ok=True)
-    view.foreachPartition(write_partition)
-    n = view.count()
-    view.unpersist()
-    return n
+    render_markdown_col(extracted).foreachPartition(write_partition)
+    return written.value
 
 
 def ordered_prepend(
@@ -278,8 +278,8 @@ def export_image_payloads(media: DataFrame, out_dir: str) -> int:
 
     ``media`` needs (doc_id, media_ref, payload) — the shape
     ``multimodal.attach_bmp_payloads`` (or any real media table) carries.
-    Returns payloads written (DataFrame count, cluster-correct)."""
-    view = media.select("doc_id", "media_ref", "payload").persist()
+    Returns payloads written (accumulator count, cluster-correct)."""
+    written = media.sparkSession.sparkContext.accumulator(0)
 
     def write_partition(rows):
         import os as _os
@@ -292,9 +292,8 @@ def export_image_payloads(media: DataFrame, out_dir: str) -> int:
             name = _os.path.basename(row["media_ref"])
             with open(_os.path.join(doc_dir, name), "wb") as fh:
                 fh.write(bytes(row["payload"]))
+            written.add(1)
 
     os.makedirs(out_dir, exist_ok=True)
-    view.foreachPartition(write_partition)
-    n = view.count()
-    view.unpersist()
-    return n
+    media.select("doc_id", "media_ref", "payload").foreachPartition(write_partition)
+    return written.value

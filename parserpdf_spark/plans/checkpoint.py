@@ -35,9 +35,10 @@ import os
 import tempfile
 import uuid
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from parserpdf_spark.operators.extract import extract_combined, split_combined
+from parserpdf_spark.schema import COMBINED_DDL, DOC_STATUSES
 
 MANIFEST_DIR = "_manifest"
 CHUNKS_DIR = "chunks"
@@ -134,20 +135,21 @@ def run_checkpointed_extraction(
             continue
         part = docs.filter(chunk_of(F.col("doc_id"), n_chunks) == chunk)
         chunk_path = os.path.join(output_dir, CHUNKS_DIR, f"chunk={chunk}")
-        combined = extract_combined(part)
-        combined.write.mode("overwrite").parquet(chunk_path)
-
-        # lineage from the *written* files (what readers will see)
-        written = spark.read.parquet(chunk_path)
-        stats = written.agg(
-            F.count(F.when(F.col("kind") == "_metrics", 1)).alias("n_docs"),
-            F.count(F.when(F.col("kind") != "_metrics", 1)).alias("n_spans"),
-        ).collect()[0]
+        # the write's own pass counts the lineage: an Observation, no second job
+        obs = Observation()
+        extract_combined(part).observe(
+            obs,
+            F.count_if(F.col("kind") == "_metrics").alias("n_docs"),
+            F.count_if(F.col("kind") != "_metrics").alias("n_spans"),
+            *[F.count_if(F.col("status") == s).alias(s) for s in DOC_STATUSES],
+        ).write.mode("overwrite").parquet(chunk_path)
+        stats = obs.get
         record = {
             "run_id": run_id,
             "chunk_id": chunk,
             "n_docs": stats["n_docs"],
             "n_spans": stats["n_spans"],
+            "docs_by_status": {s: stats[s] for s in DOC_STATUSES if stats[s]},
             "input_fingerprint": _fingerprint(n_chunks, chunk),
         }
         _commit_manifest(output_dir, record)
@@ -179,27 +181,25 @@ def rollback_chunk(output_dir: str, chunk_id: int) -> dict:
     return done[chunk_id]
 
 
-def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
-    """Union of committed chunks only → extracted spans table."""
-    done = committed_chunks(output_dir)
+def _read_committed(spark: SparkSession, output_dir: str) -> DataFrame:
+    """Combined rows of the committed chunks only, read with the known
+    schema (no schema-inference job)."""
     paths = [
-        os.path.join(output_dir, CHUNKS_DIR, f"chunk={c}") for c in sorted(done)
+        os.path.join(output_dir, CHUNKS_DIR, f"chunk={c}")
+        for c in sorted(committed_chunks(output_dir))
     ]
     if not paths:
         raise FileNotFoundError(f"no committed chunks under {output_dir}")
-    combined = spark.read.parquet(*paths)
-    return split_combined(combined)[0]
+    return spark.read.schema(COMBINED_DDL).parquet(*paths)
+
+
+def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
+    """Union of committed chunks only → extracted spans table."""
+    return split_combined(_read_committed(spark, output_dir))[0]
 
 
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
-    done = committed_chunks(output_dir)
-    paths = [
-        os.path.join(output_dir, CHUNKS_DIR, f"chunk={c}") for c in sorted(done)
-    ]
-    if not paths:
-        raise FileNotFoundError(f"no committed chunks under {output_dir}")
-    combined = spark.read.parquet(*paths)
-    return split_combined(combined)[1]
+    return split_combined(_read_committed(spark, output_dir))[1]
 
 
 def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:

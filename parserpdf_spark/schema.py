@@ -71,13 +71,16 @@ COMBINED_DDL = (
 METRICS_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # ok | error | skipped
+        T.StructField("status", T.StringType(), False),  # one of DOC_STATUSES
         T.StructField("error", T.StringType(), True),
         T.StructField("n_input_spans", T.IntegerType(), True),
         T.StructField("n_output_spans", T.IntegerType(), True),
         T.StructField("n_images", T.IntegerType(), True),
     ]
 )
+
+# every status kernels.extract.extract_document_safe gives a document
+DOC_STATUSES = ("ok", "error")
 
 # ---------------------------------------------------------------------------
 # Lineage sidecar: per committed chunk — the Spark equivalent of the
@@ -90,6 +93,9 @@ LINEAGE_SCHEMA = T.StructType(
         T.StructField("chunk_id", T.IntegerType(), False),
         T.StructField("n_docs", T.LongType(), True),
         T.StructField("n_spans", T.LongType(), True),
+        T.StructField(
+            "docs_by_status", T.MapType(T.StringType(), T.LongType()), True
+        ),
         T.StructField("input_fingerprint", T.StringType(), True),
     ]
 )

@@ -1,0 +1,113 @@
+"""Run reports come from the passes that do the work: the extract job's
+lineage, status report and the sinks' counts add no Spark jobs of their
+own, and they equal what a re-read of the output would say."""
+
+import io
+import json
+import os
+from contextlib import redirect_stdout
+
+import pytest
+from pyspark.sql import functions as F
+
+from parserpdf_spark.jobs.extract_job import main
+from parserpdf_spark.operators.sinks import export_markdown_files
+from parserpdf_spark.plans.checkpoint import (
+    committed_chunks,
+    read_extracted,
+    read_metrics,
+    run_checkpointed_extraction,
+)
+from parserpdf_spark.sources.files import files_to_docs, ingested_docs
+from parserpdf_spark.sources.scans import scan_files
+from parserpdf_spark.sources.synth import DOCS_DDL
+
+REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+FIXTURES = os.path.join(REPO, "fixtures", "files_corpus")
+INGEST_STATUSES = {
+    "ok": 44, "error": 1, "needs_prechunk": 1, "skipped": 2,
+    "encrypted": 1, "needs_ocr": 1,
+}
+
+
+def _job_ids(spark) -> set[int]:
+    return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
+
+
+def _run_job(spark, out: str, chunks: int) -> dict:
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert main(
+            ["--input", FIXTURES, "--output", out, "--chunks", str(chunks)],
+            spark=spark,
+        ) == 0
+    return json.loads(buf.getvalue().strip().splitlines()[-1])
+
+
+def test_extract_job_and_sink_spark_jobs(spark, tmp_path):
+    """One ingest pass: the bridge's status groupBy plus one write per
+    chunk; the Markdown sink: its render shuffle and the write pass."""
+    out = str(tmp_path / "job")
+    before = _job_ids(spark)
+    report = _run_job(spark, out, chunks=1)
+    main_jobs = len(_job_ids(spark) - before)
+    assert report == {
+        "committed_this_run": [0],
+        "total_chunks": 1,
+        "docs_by_status": {"ok": 44},
+        "files_by_ingest_status": INGEST_STATUSES,
+    }
+    assert main_jobs <= 4
+
+    before = _job_ids(spark)
+    n = export_markdown_files(read_extracted(spark, out), str(tmp_path / "md"))
+    sink_jobs = len(_job_ids(spark) - before)
+    assert n == 44
+    assert sink_jobs <= 2
+
+
+def test_report_counts_chunks_committed_by_an_earlier_run(spark, tmp_path):
+    """A crashed run's committed chunks still count in the resumed job's
+    docs_by_status; committed_this_run holds only the resumed chunks."""
+    out = str(tmp_path / "job")
+    docs = ingested_docs(
+        files_to_docs(scan_files(spark, FIXTURES, "*", with_content=True))
+    )
+    with pytest.raises(RuntimeError, match="injected failure"):
+        run_checkpointed_extraction(
+            spark, docs, out, n_chunks=4, fail_after_chunk=2
+        )
+    first = set(committed_chunks(out))
+    assert len(first) == 2
+
+    report = _run_job(spark, out, chunks=4)
+    assert report["docs_by_status"] == {"ok": 44}
+    assert sorted(report["committed_this_run"]) == sorted(set(range(4)) - first)
+
+
+def test_manifest_status_counts_equal_metrics(spark, tmp_path):
+    """Status counts summed from the manifests equal a groupBy over the
+    written metrics rows, an error doc included; 10 docs in 12 chunks
+    leave some chunks empty, whose write still fills the Observation."""
+    out = str(tmp_path / "run")
+    good = [
+        (f"d{i}", [("html", f"<h1>T{i}</h1><p>body {i}</p>", None, 0)])
+        for i in range(9)
+    ]
+    bad = [("bad", [("pdf_block", "{truncated json", None, 0)])]
+    docs = spark.createDataFrame(good + bad, DOCS_DDL)
+    run_checkpointed_extraction(spark, docs, out, n_chunks=12)
+    assert len(committed_chunks(out)) == 12
+
+    from_manifests: dict[str, int] = {}
+    for rec in committed_chunks(out).values():
+        for status, n in rec["docs_by_status"].items():
+            from_manifests[status] = from_manifests.get(status, 0) + n
+    from_metrics = {
+        r["status"]: r["n"]
+        for r in read_metrics(spark, out)
+        .groupBy("status")
+        .agg(F.count("*").alias("n"))
+        .collect()
+    }
+    assert from_manifests == from_metrics == {"ok": 9, "error": 1}
