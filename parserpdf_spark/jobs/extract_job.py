@@ -70,6 +70,7 @@ def main(argv=None, spark=None) -> int:
 
     from parserpdf_spark.plans.checkpoint import (
         committed_chunks,
+        read_metrics,
         run_checkpointed_extraction,
     )
 
@@ -118,11 +119,21 @@ def main(argv=None, spark=None) -> int:
     committed = run_checkpointed_extraction(
         spark, docs, args.output, n_chunks=args.chunks, run_id=args.run_id
     )
-    # every committed chunk's manifest, this run's and earlier runs'
+    # every committed chunk's manifest, this run's and earlier runs';
+    # manifests written before they carried docs_by_status make the
+    # report count the committed metrics rows instead
+    records = committed_chunks(args.output).values()
     by_status: dict[str, int] = {}
-    for rec in committed_chunks(args.output).values():
-        for status, n in rec["docs_by_status"].items():
-            by_status[status] = by_status.get(status, 0) + n
+    if all("docs_by_status" in rec for rec in records):
+        for rec in records:
+            for status, n in rec["docs_by_status"].items():
+                by_status[status] = by_status.get(status, 0) + n
+    else:
+        by_status = {
+            r["status"]: r["count"]
+            for r in read_metrics(spark, args.output)
+            .groupBy("status").count().collect()
+        }
     report = {
         "committed_this_run": [r["chunk_id"] for r in committed],
         "total_chunks": args.chunks,

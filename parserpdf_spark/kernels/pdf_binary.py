@@ -65,9 +65,10 @@ reproduced, and silent misplacement is worse than the pre-chunker).
 
 Encrypted PDFs with the standard security handler and an EMPTY user
 password (the owner-restricted class every viewer opens silently)
-decrypt from scratch — RC4 and AES via kernels/crypto.py +
-kernels/pdf_crypt.py (V1-V5, R2-R6); user-password-protected files and
-non-Standard handlers raise with the "encrypted" triage category.
+decrypt via kernels/pdf_crypt.py (V1-V5, R2-R6; hand-written RC4, AES
+from the ``cryptography`` package); user-password-protected files,
+non-Standard handlers and executors without ``cryptography`` raise with
+the "encrypted" triage category.
 
 Scope (honest): raw-charset predefined CID encodings (GBK-EUC-H,
 B5pc-H, … — the CMaps needing Adobe registry tables) extract ONLY when
@@ -1827,18 +1828,19 @@ def pdf_to_blocks_and_media(
     if b"/Encrypt" in data:
         # standard-security-handler files with an EMPTY user password
         # (the common owner-restricted class every viewer opens
-        # silently) decrypt from scratch (kernels/pdf_crypt.py);
-        # anything else keeps the "encrypted" triage status
-        from parserpdf_spark.kernels.pdf_crypt import (
-            build_decryptor,
-            file_id0,
-        )
-
+        # silently) decrypt (kernels/pdf_crypt.py); anything else, and
+        # an executor without the `cryptography` package pdf_crypt
+        # imports, keeps the "encrypted" triage status
         objects = _split_objects(data)
         em = None
         for m in re.finditer(rb"/Encrypt\s+(\d+)\s+\d+\s+R", data):
             em = m  # last trailer wins (incremental updates)
         try:
+            from parserpdf_spark.kernels.pdf_crypt import (
+                build_decryptor,
+                file_id0,
+            )
+
             if em is None:
                 raise ValueError("unresolvable /Encrypt reference")
             enc_num = int(em.group(1))
@@ -1847,6 +1849,11 @@ def pdf_to_blocks_and_media(
             decryptor = build_decryptor(
                 _head(objects[enc_num]), file_id0(data)
             )
+        except ImportError as exc:
+            raise PdfUnsupported(
+                "encrypted PDF (decrypting needs the 'cryptography' "
+                f"package: {exc})", category="encrypted"
+            ) from exc
         except ValueError as exc:
             raise PdfUnsupported(
                 f"encrypted PDF ({exc})", category="encrypted"

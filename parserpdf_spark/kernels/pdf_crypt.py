@@ -1,5 +1,5 @@
-"""PDF standard security handler from scratch (PDF 32000-1 §7.6.3,
-PDF 2.0 §7.6.4 — public spec; hashlib + kernels/crypto.py).
+"""PDF standard security handler (PDF 32000-1 §7.6.3, PDF 2.0 §7.6.4 —
+public spec; hashlib, the ``cryptography`` package's AES, and RC4).
 
 Most "encrypted" PDFs in real corpora are owner-restricted with an
 EMPTY user password — every consumer viewer opens them silently.  The
@@ -19,6 +19,15 @@ Supported: /Filter /Standard with
 Out of scope (raise ValueError → ``encrypted`` triage): non-Standard
 security handlers, /EFF embedded-file-only crypt, public-key (PKCS#7)
 encryption.
+
+AES is the ``cryptography`` package's (a compiled wheel the executors
+must have installed; ``pdf_binary`` triages encrypted PDFs as
+``encrypted`` when it is missing).  The extraction pipeline is written
+from scratch; cipher primitives are not part of that.  RC4 stays
+hand-written for the key-size reason in its docstring.
+
+This is DECRYPTION of documents the caller is entitled to open — not a
+password cracker: one password attempt per file, supplied by the caller.
 """
 
 from __future__ import annotations
@@ -27,16 +36,78 @@ import hashlib
 import re
 import struct
 
-from parserpdf_spark.kernels.crypto import (
-    aes_cbc_decrypt,
-    aes_cbc_encrypt,
-    rc4,
-)
+from cryptography.hazmat.primitives.ciphers import Cipher, algorithms, modes
 
 # the 32-byte password pad constant from the spec (Algorithm 2)
 _PAD = bytes.fromhex(
     "28BF4E5E4E758A4164004E56FFFA01082E2E00B6D0683E802F0CA9FE6453697A"
 )
+
+
+def rc4(key: bytes, data: bytes) -> bytes:
+    """RC4 stream cipher (encrypt == decrypt; KSA + PRGA, RFC 6229).
+
+    Hand-written because ``cryptography``'s ``ARC4`` accepts only
+    40/56/64/80/128/160/192/256-bit keys, while PDF R2-R4 allows any
+    file key from 40 to 128 bits in steps of 8 and derives per-object
+    keys of ``min(n + 5, 16)`` bytes — a legal ``/Length 64`` file
+    decrypts its streams with 104-bit keys the library refuses.  One
+    RC4 for every key length beats two paths split by key size."""
+    s = list(range(256))
+    j = 0
+    klen = len(key)
+    if klen == 0:
+        raise ValueError("empty RC4 key")
+    for i in range(256):
+        j = (j + s[i] + key[i % klen]) & 0xFF
+        s[i], s[j] = s[j], s[i]
+    out = bytearray(len(data))
+    i = j = 0
+    for k, c in enumerate(data):
+        i = (i + 1) & 0xFF
+        j = (j + s[i]) & 0xFF
+        s[i], s[j] = s[j], s[i]
+        out[k] = c ^ s[(s[i] + s[j]) & 0xFF]
+    return bytes(out)
+
+
+def aes_cbc_decrypt(data: bytes, key: bytes, iv: bytes | None = None,
+                    unpad: bool = True) -> bytes:
+    """AES-CBC decrypt.  With ``iv=None`` the first 16 bytes of data
+    are the IV (the PDF AESV2/AESV3 string/stream layout); ``unpad``
+    strips the last byte's count of bytes when it is 1..16 (the other
+    pad bytes are not checked, so files readers open still open)."""
+    if iv is None:
+        if len(data) < 16:
+            raise ValueError("AES-CBC data shorter than its IV")
+        iv, data = data[:16], data[16:]
+    if len(data) % 16:
+        raise ValueError("AES-CBC data not block-aligned")
+    dec = Cipher(algorithms.AES(key), modes.CBC(iv)).decryptor()
+    out = dec.update(data) + dec.finalize()
+    if unpad:
+        if not out:
+            return b""
+        pad = out[-1]
+        if pad < 1 or pad > 16 or pad > len(out):
+            raise ValueError("bad AES-CBC padding")
+        out = out[:-pad]
+    return out
+
+
+def aes_cbc_encrypt(data: bytes, key: bytes, iv: bytes,
+                    pad: bool = True) -> bytes:
+    """AES-CBC encrypt (PKCS#7 when ``pad``); returns ciphertext
+    WITHOUT the IV prefix (callers that need the PDF layout prepend
+    it)."""
+    if pad:
+        n = 16 - len(data) % 16
+        data = data + bytes([n]) * n
+    elif len(data) % 16:
+        raise ValueError("unpadded AES-CBC data must be block-aligned")
+    enc = Cipher(algorithms.AES(key), modes.CBC(iv)).encryptor()
+    return enc.update(data) + enc.finalize()
+
 
 
 def _dict_string(head: bytes, key: bytes) -> bytes | None:

@@ -1,7 +1,10 @@
-"""From-scratch crypto (kernels/crypto.py) + PDF standard security
-handler (kernels/pdf_crypt.py): FIPS-197 / classic public test vectors
-for the primitives, then encrypt→decrypt round-trips at every handler
-revision, wrong-password refusal, and the ingest triage path.
+"""PDF standard security handler (kernels/pdf_crypt.py) and its two
+ciphers — the hand-written RC4 and the ``cryptography`` package's AES
+behind ``aes_cbc_encrypt``/``aes_cbc_decrypt``: FIPS-197 / classic
+public test vectors for the primitives, RC4 against the library's ARC4
+where the library accepts the key, then encrypt→decrypt round-trips at
+every handler revision, wrong-password refusal, and the ingest triage
+path.
 
 Honest limitation: the AES/RC4/MD5/SHA PRIMITIVES are pinned to
 external known-answer vectors, but the R5/R6 KEY-DERIVATION composition
@@ -22,36 +25,36 @@ REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 sys.path.insert(0, os.path.join(REPO, "tools"))
 
-from parserpdf_spark.kernels.crypto import (  # noqa: E402
+from parserpdf_spark.kernels.pdf_crypt import (  # noqa: E402
     aes_cbc_decrypt,
     aes_cbc_encrypt,
-    aes_decrypt_block,
-    aes_encrypt_block,
     rc4,
 )
 
 
 def test_aes_fips197_vectors():
-    """FIPS-197 Appendix B and C known-answer vectors (public spec)."""
+    """FIPS-197 Appendix B and C known-answer vectors (public spec),
+    each as one CBC block under a zero IV (which is ECB)."""
+    zero = bytes(16)
+
+    def check(pt: bytes, key: bytes, ct_hex: str) -> None:
+        ct = aes_cbc_encrypt(pt, key, iv=zero, pad=False)
+        assert ct.hex() == ct_hex
+        assert aes_cbc_decrypt(ct, key, iv=zero, unpad=False) == pt
+
     pt = bytes.fromhex("00112233445566778899aabbccddeeff")
     k128 = bytes.fromhex("000102030405060708090a0b0c0d0e0f")
     k192 = bytes.fromhex("000102030405060708090a0b0c0d0e0f1011121314151617")
     k256 = bytes.fromhex(
         "000102030405060708090a0b0c0d0e0f"
         "101112131415161718191a1b1c1d1e1f")
-    assert aes_encrypt_block(pt, k128).hex() == \
-        "69c4e0d86a7b0430d8cdb78070b4c55a"
-    assert aes_encrypt_block(pt, k192).hex() == \
-        "dda97ca4864cdfe06eaf70a0ec0d7191"
-    assert aes_encrypt_block(pt, k256).hex() == \
-        "8ea2b7ca516745bfeafc49904b496089"
-    for k in (k128, k192, k256):
-        assert aes_decrypt_block(aes_encrypt_block(pt, k), k) == pt
+    check(pt, k128, "69c4e0d86a7b0430d8cdb78070b4c55a")
+    check(pt, k192, "dda97ca4864cdfe06eaf70a0ec0d7191")
+    check(pt, k256, "8ea2b7ca516745bfeafc49904b496089")
     # Appendix B
-    k = bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c")
-    p2 = bytes.fromhex("3243f6a8885a308d313198a2e0370734")
-    assert aes_encrypt_block(p2, k).hex() == \
-        "3925841d02dc09fbdc118597196a0b32"
+    check(bytes.fromhex("3243f6a8885a308d313198a2e0370734"),
+          bytes.fromhex("2b7e151628aed2a6abf7158809cf4f3c"),
+          "3925841d02dc09fbdc118597196a0b32")
 
 
 def test_rc4_classic_vectors():
@@ -60,6 +63,45 @@ def test_rc4_classic_vectors():
     assert rc4(b"Secret", b"Attack at dawn").hex().upper() == \
         "45A01F645FC35B383552544B9BF5"
     assert rc4(b"k", rc4(b"k", b"round trip")) == b"round trip"
+
+
+def test_rc4_equals_library_arc4_where_it_accepts_the_key():
+    """The hand-written RC4 equals ``cryptography``'s ARC4 at every key
+    size both accept (the library refuses the PDF-legal 48..120-bit
+    sizes in between, which is why RC4 stays hand-written)."""
+    import random
+
+    from cryptography.hazmat.decrepit.ciphers.algorithms import ARC4
+    from cryptography.hazmat.primitives.ciphers import Cipher
+
+    rng = random.Random(6229)
+    for bits in (40, 56, 64, 80, 128):
+        key = rng.randbytes(bits // 8)
+        data = rng.randbytes(rng.randrange(1, 4096))
+        lib = Cipher(ARC4(key), mode=None).encryptor().update(data)
+        assert rc4(key, data) == lib, bits
+
+
+def test_rc4_roundtrip_at_every_pdf_key_length():
+    """PDF R2-R4 file keys run 5..16 bytes and per-object keys
+    min(n + 5, 16) bytes (10..16, e.g. 13 = 104 bits for /Length 64):
+    a stream encrypted under the spec's object key decrypts through
+    StreamDecryptor at every file-key length."""
+    import hashlib
+    import struct
+
+    from parserpdf_spark.kernels.pdf_crypt import StreamDecryptor
+
+    data = bytes(range(256)) * 3
+    num, gen = 7, 0
+    for n in range(5, 17):
+        file_key = bytes((7 * i + n) & 0xFF for i in range(n))
+        obj_key = hashlib.md5(
+            file_key + struct.pack("<I", num)[:3] + struct.pack("<I", gen)[:2]
+        ).digest()[: min(n + 5, 16)]
+        ct = rc4(obj_key, data)
+        assert ct != data
+        assert StreamDecryptor("rc4", file_key, 2).decrypt(num, gen, ct) == data
 
 
 def test_aes_cbc_roundtrip_and_padding_gates():
@@ -150,6 +192,54 @@ def test_committed_encrypted_fixtures():
         assert len(row["spans"]) > 0
 
 
+def test_encrypt_pdf_reproduces_committed_fixtures():
+    """The writer side, from build_corpus's own inputs, reproduces the
+    committed encrypted fixtures byte for byte (fixture drift fails
+    here without regenerating fixtures/)."""
+    import pandas as pd
+
+    from make_file_fixtures import FIXTURES, SF_DIR, build_pdf, encrypt_pdf
+
+    src = pd.read_parquet(f"{SF_DIR}/documents.parquet")
+    by_id = dict(zip(src["doc_id"].astype(int), src["text"]))
+    docx_ids = sorted(i for i in by_id if i % 3 == 1)
+    rc4_id, a256_id = docx_ids[17], docx_ids[18]
+    cases = {
+        f"doc_{rc4_id}.pdf": encrypt_pdf(
+            build_pdf(rc4_id, by_id[rc4_id], compress=True), "rc4"),
+        f"doc_{a256_id}.pdf": encrypt_pdf(
+            build_pdf(a256_id, by_id[a256_id], compress=True), "aes256"),
+        "locked_4.pdf": encrypt_pdf(
+            build_pdf(4, by_id[docx_ids[0]], compress=True), "aes",
+            user=b"secret-user-pw"),
+    }
+    for name, built in cases.items():
+        with open(os.path.join(FIXTURES, name), "rb") as fh:
+            assert built == fh.read(), name
+
+
+def test_missing_cryptography_triages_encrypted(monkeypatch):
+    """An executor without the ``cryptography`` package routes an
+    encrypted PDF to ``encrypted`` with a reason naming the package,
+    and still routes unencrypted PDFs ``ok``."""
+    from parserpdf_spark.sources.files import route_file
+
+    for name in list(sys.modules):
+        if name == "cryptography" or name.startswith("cryptography."):
+            monkeypatch.setitem(sys.modules, name, None)
+    monkeypatch.delitem(sys.modules, "parserpdf_spark.kernels.pdf_crypt",
+                        raising=False)
+    fx = os.path.join(REPO, "fixtures", "files_corpus")
+    with open(os.path.join(fx, "doc_55.pdf"), "rb") as fh:
+        row = route_file("/x/doc_55.pdf", fh.read())
+    assert row["ingest_status"] == "encrypted"
+    assert "cryptography" in row["ingest_error"]
+    with open(os.path.join(fx, "doc_34.pdf"), "rb") as fh:
+        row = route_file("/x/doc_34.pdf", fh.read())
+    assert row["ingest_status"] == "ok"
+    assert len(row["spans"]) > 0
+
+
 def test_malformed_encryption_dicts_stay_triage_not_crash():
     from parserpdf_spark.sources.files import route_file
 
@@ -181,7 +271,6 @@ def test_generation_nonzero_objects_decrypt():
 
     from make_file_fixtures import build_pdf, encrypt_pdf
 
-    from parserpdf_spark.kernels.crypto import rc4
     from parserpdf_spark.kernels.pdf_binary import (
         _raw_stream,
         _split_objects,
@@ -220,7 +309,6 @@ def test_v4_without_stmf_defaults_to_identity_streams():
 
     from make_file_fixtures import build_pdf
 
-    from parserpdf_spark.kernels.crypto import rc4
     from parserpdf_spark.kernels.pdf_crypt import _PAD, _key_r234
 
     plain = _plain_and_variants()

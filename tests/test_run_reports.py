@@ -13,6 +13,7 @@ from pyspark.sql import functions as F
 from parserpdf_spark.jobs.extract_job import main
 from parserpdf_spark.operators.sinks import export_markdown_files
 from parserpdf_spark.plans.checkpoint import (
+    MANIFEST_DIR,
     committed_chunks,
     read_extracted,
     read_metrics,
@@ -83,6 +84,27 @@ def test_report_counts_chunks_committed_by_an_earlier_run(spark, tmp_path):
     report = _run_job(spark, out, chunks=4)
     assert report["docs_by_status"] == {"ok": 44}
     assert sorted(report["committed_this_run"]) == sorted(set(range(4)) - first)
+
+
+def test_report_resumes_over_manifests_without_status_counts(spark, tmp_path):
+    """Manifests committed before they carried docs_by_status: the
+    rerun's report counts the committed metrics rows, not KeyError."""
+    out = str(tmp_path / "job")
+    _run_job(spark, out, chunks=4)
+    mdir = os.path.join(out, MANIFEST_DIR)
+    manifests = sorted(n for n in os.listdir(mdir) if n.startswith("chunk-"))
+    assert len(manifests) == 4
+    for name in manifests[:2]:
+        path = os.path.join(mdir, name)
+        with open(path) as fh:
+            rec = json.load(fh)
+        del rec["docs_by_status"]
+        with open(path, "w") as fh:
+            json.dump(rec, fh)
+
+    report = _run_job(spark, out, chunks=4)
+    assert report["committed_this_run"] == []
+    assert report["docs_by_status"] == {"ok": 44}
 
 
 def test_manifest_status_counts_equal_metrics(spark, tmp_path):

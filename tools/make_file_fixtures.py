@@ -771,9 +771,9 @@ def build_pdf(
 def encrypt_pdf(pdf: bytes, variant: str, owner: bytes = b"owner-pw",
                 user: bytes = b"") -> bytes:
     """Encrypt a built PDF with the standard security handler — the
-    writer side of kernels/pdf_crypt.py, used to make fixtures that the
-    from-scratch decryptor must open (empty user password) or refuse
-    (real user password).
+    writer side of kernels/pdf_crypt.py (same RC4 and AES helpers), used
+    to make fixtures that the decryptor must open (empty user password)
+    or refuse (real user password).
 
     variants: ``"rc4"`` (V2 R3, 128-bit), ``"aes"`` (V4 R4 /AESV2),
     ``"aes256"`` (V5 R6 /AESV3).  Deterministic: fixed /ID and IVs
@@ -783,12 +783,13 @@ def encrypt_pdf(pdf: bytes, variant: str, owner: bytes = b"owner-pw",
     import re as _re
     import struct
 
-    from parserpdf_spark.kernels.crypto import aes_cbc_encrypt, rc4
     from parserpdf_spark.kernels.pdf_crypt import (
         _PAD,
         _hash_2b,
         _key_r234,
         _user_check_r234,
+        aes_cbc_encrypt,
+        rc4,
     )
     from parserpdf_spark.kernels.pdf_binary import (
         _raw_stream,
@@ -1401,7 +1402,7 @@ def build_corpus() -> None:
 
     # encrypted PDFs with an EMPTY user password (owner-restricted, the
     # class every viewer opens silently): RC4-128 and AES-256/R6 — both
-    # decrypt through the from-scratch standard security handler and
+    # decrypt through the standard security handler and
     # extract normally (ingest_status "ok")
     rc4_id = docx_ids[17]
     with open(os.path.join(FIXTURES, f"doc_{rc4_id}.pdf"), "wb") as fh:
