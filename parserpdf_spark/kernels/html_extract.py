@@ -229,9 +229,9 @@ def parse_html(markup: str) -> Node:
 
 
 def parse_html_stdlib(markup: str) -> Node:
-    """Reference implementation on stdlib html.parser — kept for the
-    equivalence test (test_html_kernel.py) and as the fallback for
-    markup the fast tokenizer would mis-lex."""
+    """Reference implementation on stdlib html.parser — the test
+    reference the fast tokenizer is checked against
+    (``tests/test_properties.py``); nothing falls back to it."""
     builder = _TreeBuilder()
     builder.feed(markup)
     builder.close()

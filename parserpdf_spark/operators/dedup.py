@@ -21,6 +21,8 @@ import functools
 
 from pyspark.sql import DataFrame, Window as W, functions as F, types as T
 
+from parserpdf_spark.operators.bounded import collect_bounded, filter_ids, local_df
+
 # A cross-engine 60-bit token hash: md5 hex prefix → bigint.  Spark's
 # xxhash64/hash have no DuckDB twin; md5 exists in both, and 15 hex
 # chars (60 bits) always fit a signed 64-bit int.
@@ -56,57 +58,6 @@ def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFr
     )
 
 
-def _in_predicate(col_name: str, values, dtype):
-    """``col IN (…)`` over a collected id list in ONE py4j call.
-
-    ``Column.isin(vs)`` creates one JVM ``Literal`` per element — a py4j
-    round trip each, measured ~2 s of pure DRIVER time for ~5k ids
-    (guide §5: the driver should do almost no data work, and this was
-    data-proportional plan construction).  Rendering the predicate as a
-    single SQL string costs one round trip and parses in the JVM in
-    milliseconds, producing the SAME ``In(col, literals)`` expression —
-    parquet ``PushedFilters: In(doc_id, …)`` behavior is unchanged.
-
-    Only integral values are rendered (their SQL spelling is exact);
-    everything else falls back to ``isin`` unchanged (string literals
-    would need parser-config-dependent escaping — not worth the risk).
-    """
-    vals = list(values)
-    if not vals:
-        return F.lit(False)
-    integral = isinstance(
-        dtype, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
-    )
-    if integral and all(
-        isinstance(v, int) and not isinstance(v, bool) for v in vals
-    ):
-        rendered = ",".join(str(v) for v in vals)
-        return F.expr(f"`{col_name}` IN ({rendered})")
-    return F.col(col_name).isin(vals)
-
-
-def _local_pairs_df(spark, local_pairs, schema):
-    """LocalRelation for collected (a, b) pairs — via pandas so the
-    conversion rides Arrow (one buffer) instead of pickling row tuples
-    through py4j (measured ~1 s of driver time at a few thousand rows);
-    falls back to the plain list path for exotic id types."""
-    simple = all(
-        isinstance(f.dataType, (T.LongType, T.IntegerType, T.StringType))
-        for f in schema.fields
-    )
-    if simple and local_pairs:
-        try:
-            import pandas as pd
-
-            pdf = pd.DataFrame(
-                local_pairs, columns=[f.name for f in schema.fields]
-            )
-            return spark.createDataFrame(pdf, schema=schema)
-        except Exception:  # pragma: no cover — pandas/Arrow unavailable
-            pass
-    return spark.createDataFrame(local_pairs, schema=schema)
-
-
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
@@ -137,10 +88,9 @@ def jaccard_pairs(
     rounding (oracle-parity tested).
     """
     if only_pairs is not None:
-        # r6: ONE bounded collect of the candidate PAIRS themselves
-        # (≤1M — the engine's standard bounded-collect budget,
-        # operators/skew.py).  Two things follow from it:
-        # - the candidate-doc restriction becomes an isin literal that
+        # ONE bounded collect of the candidate PAIRS themselves
+        # (operators/bounded.py).  Two things follow from it:
+        # - the candidate-doc restriction becomes an id filter that
         #   pushes through union/repartition into the parquet scan
         #   (PushedFilters: In(doc_id, …)) — the verify re-reads
         #   O(candidate docs), not O(corpus);
@@ -150,56 +100,33 @@ def jaccard_pairs(
         #   the most expensive subtree in the job, and referencing
         #   ``only_pairs`` from the verify plan re-evaluated it (one
         #   extra band join per reference, measured ~3 s of a 4 s verify
-        #   at the 50k-doc scale, even with the pairs persisted).
-        # Past the bound, the lazy plan-shaped fallback keeps the old
+        #   at the 50k-doc scale).
+        # Past the budget, the lazy plan-shaped fallback keeps the
         # semi-join form.
         # the doc_a < doc_b orientation filter runs IN SPARK before the
         # collect so pair comparison semantics (e.g. string ordering)
         # are the engine's, identical to the old grouped-self-join path;
         # de-duplication is plain equality — engine-agnostic, so it runs
         # in Python on the collected rows (no extra distinct shuffle)
-        pair_rows = (
-            only_pairs.select("doc_a", "doc_b")
-            .filter(F.col("doc_a") < F.col("doc_b"))
-            .limit(1_000_001)
-            .collect()
+        pairs = only_pairs.select("doc_a", "doc_b").filter(
+            F.col("doc_a") < F.col("doc_b")
         )
-        if len(pair_rows) <= 1_000_000:
+        pair_rows = collect_bounded(pairs)
+        if pair_rows is not None:
             local_pairs = list({(r["doc_a"], r["doc_b"]) for r in pair_rows})
             ids = sorted({x for p in local_pairs for x in p})
-            docs = docs.filter(
-                _in_predicate("doc_id", ids, docs.schema["doc_id"].dataType)
-            )
-            cand = _local_pairs_df(
-                docs.sparkSession,
-                local_pairs,
-                T.StructType(
-                    [
-                        T.StructField(
-                            "doc_a", only_pairs.schema["doc_a"].dataType
-                        ),
-                        T.StructField(
-                            "doc_b", only_pairs.schema["doc_b"].dataType
-                        ),
-                    ]
-                ),
-            )
+            docs = filter_ids(docs, "doc_id", ids)
+            cand = local_df(docs.sparkSession, local_pairs, pairs.schema)
         else:
             cand_docs = (
-                only_pairs.select(F.col("doc_a").alias("doc_id"))
-                .unionByName(only_pairs.select(F.col("doc_b").alias("doc_id")))
+                pairs.select(F.col("doc_a").alias("doc_id"))
+                .unionByName(pairs.select(F.col("doc_b").alias("doc_id")))
                 .distinct()
             )
-            docs = docs.join(F.broadcast(cand_docs), "doc_id", "left_semi")
-            # pairs as given, constrained to the old path's doc_a < doc_b
-            # orientation and de-duplicated (the grouped self-join
-            # emitted one row per distinct pair regardless of input
-            # multiplicity)
-            cand = (
-                only_pairs.select("doc_a", "doc_b")
-                .filter(F.col("doc_a") < F.col("doc_b"))
-                .distinct()
-            )
+            docs = filter_ids(docs, "doc_id", cand_docs)
+            # the grouped self-join emitted one row per distinct pair
+            # regardless of input multiplicity
+            cand = pairs.distinct()
         # distinct-shingle ARRAY per candidate doc (never exploded)
         arrs = _tokenized(docs, n, text_col).selectExpr(
             "doc_id",
@@ -469,7 +396,6 @@ def lsh_candidate_pairs(
 
 def minhash_lsh_pairs(
     docs: DataFrame, threshold: float, n: int = 3, text_col: str = "text",
-    persist_candidates: bool = True,
 ) -> DataFrame:
     """LSH candidates verified by exact Jaccard ≥ threshold.
 
@@ -477,24 +403,14 @@ def minhash_lsh_pairs(
     documents (``only_pairs``), so the cost is the MinHash pass plus a
     shingle join over the candidate subset — never an all-pairs scan.
     At high thresholds the 16×4 banding's recall is ≈1, so output
-    matches exact all-pairs Jaccard.
-
-    ``persist_candidates`` (default on) caches the CANDIDATE PAIRS,
-    which the >1M-pair fallback of the verify references three times
-    (candidate-doc derivation ×2 + the pair distinct) — Spark's exchange
-    reuse does not de-duplicate the subtree under AQE, so unpersisted,
-    the signature pipeline (the expensive part) would execute per
-    reference.  Pairs are near-dup-sized — the persisted-intermediate
-    contract a production run uses anyway; pass False to keep the plan
-    fully lazy.  The signatures themselves no longer need a persist:
-    the groupBy band form (:func:`_bucket_pairs`, r6 third pass)
-    references the signature subtree exactly once."""
+    matches exact all-pairs Jaccard.  Nothing is persisted: within the
+    collect budget the verify reads the candidates once, through its
+    bounded collect, and the groupBy band form (:func:`_bucket_pairs`)
+    references the signature subtree once."""
     signatures = minhash_signatures(docs, n=n, text_col=text_col)
-    candidates = lsh_candidate_pairs(signatures)
-    if persist_candidates:
-        candidates = candidates.persist()
     return jaccard_pairs(
-        docs, threshold=threshold, n=n, text_col=text_col, only_pairs=candidates
+        docs, threshold=threshold, n=n, text_col=text_col,
+        only_pairs=lsh_candidate_pairs(signatures),
     )
 
 
@@ -534,7 +450,6 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
 def simhash_pairs(
     docs: DataFrame, max_hamming: int = 3, text_col: str = "text",
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """Near-dup pairs with hamming(simhash) ≤ max_hamming, found via
     band join on 4 × 15-bit chunks (a pair within distance 3 must agree
@@ -542,10 +457,8 @@ def simhash_pairs(
 
     Like the other LSH operators, the chunk self-join references the
     signature subtree (the 60-agg-column groupBy) on both sides, so the
-    signatures persist by default (12 bytes/doc)."""
-    sig = simhash(docs, text_col=text_col)
-    if persist_signatures:
-        sig = sig.persist()
+    signatures persist (12 bytes/doc)."""
+    sig = simhash(docs, text_col=text_col).persist()
     chunks = []
     for c in range(4):
         chunks.append(
@@ -625,11 +538,6 @@ def embedding_dup_pairs(
     )
 
 
-SRP_BITS = 32
-SRP_BANDS = 8  # legacy fixed banding (srp_signatures); the scale path
-# derives (bits_per_band, num_bands) from corpus size — see
-# _srp_band_params
-
 SRP_TARGET_MISS = 1e-2  # per-true-pair miss budget AT the threshold
 
 
@@ -696,42 +604,6 @@ def _srp_band_params(n_vectors: int, threshold: float) -> tuple[int, int]:
     return r, min(64, max(4, b))
 
 
-def srp_signatures(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    n_bits: int = SRP_BITS,
-    seed: int = 7,
-) -> DataFrame:
-    """(id, sig): signed-random-projection signature — bit b = sign of
-    the dot product with seeded hyperplane b.  One vectorized numpy
-    matmul per Arrow batch (the 32×d dot products are BLAS work, not
-    per-element codegen); identical vectors get identical signatures by
-    construction, near vectors agree on most bits
-    (P[bit match] = 1 − θ/π, the SRP-LSH guarantee)."""
-    import pandas as pd
-
-    # NB: no type hints — pd is function-local, so the PySpark type-hint
-    # prober can't resolve the string annotations
-    @F.pandas_udf("long")
-    def sig(vecs):
-        import numpy as np
-
-        if len(vecs) == 0:
-            return pd.Series([], dtype="int64")
-        mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        planes = _srp_planes(mat.shape[1], n_bits, seed)
-        bits = (mat @ planes) >= 0.0
-        out = np.zeros(len(vecs), dtype=np.int64)
-        for b in range(n_bits):
-            out |= bits[:, b].astype(np.int64) << b
-        return pd.Series(out)
-
-    return embeddings.select(
-        F.col(id_col).alias("id"), sig(F.col(vec_col)).alias("sig")
-    )
-
-
 def srp_band_keys(
     embeddings: DataFrame,
     id_col: str = "vec_id",
@@ -791,10 +663,7 @@ def embedding_dup_pairs_bucketed(
     threshold: float,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    n_bits: int | None = None,
-    num_bands: int | None = None,
     seed: int = 7,
-    persist_signatures: bool = True,
 ) -> DataFrame:
     """The 100 TB embedding-dedup path: SRP-LSH banding → candidate
     pairs inside shared band buckets → exact cosine verify.
@@ -804,23 +673,15 @@ def embedding_dup_pairs_bucketed(
     |corpus|² crossJoin of :func:`embedding_dup_pairs`, which stays as
     the small-scale baseline / test oracle.
 
-    Band sizing is CORPUS-AWARE by default (``n_bits=num_bands=None``):
-    one cheap ``count()`` of the input sizes the band keys at
-    ``ceil(log2 n) + 1`` bits (≥2n buckets per band → expected random
-    collisions O(n), not O(n²)) and picks the band count that keeps a
-    true pair's miss probability at the threshold under 1% — see
-    :func:`_srp_band_params` for the p_miss arithmetic.  Exact
-    duplicates have identical signatures and can never miss.  Passing
-    explicit ``n_bits``/``num_bands`` keeps the legacy fixed scheme
-    (``n_bits`` total bits split evenly across ``num_bands``).
+    Band sizing is CORPUS-AWARE: one cheap ``count()`` of the input
+    sizes the band keys at ``ceil(log2 n) + 3`` bits (≥8n buckets per
+    band → expected random collisions O(n), not O(n²)) and picks the
+    band count that keeps a true pair's miss probability at the
+    threshold under 1% — see :func:`_srp_band_params` for the p_miss
+    arithmetic.  Exact duplicates have identical signatures and can
+    never miss.
     """
-    if n_bits is None and num_bands is None:
-        n = embeddings.count()
-        rows, num_bands = _srp_band_params(n, threshold)
-    else:
-        if num_bands is None:
-            num_bands = SRP_BANDS
-        rows = (n_bits if n_bits is not None else SRP_BITS) // num_bands
+    rows, num_bands = _srp_band_params(embeddings.count(), threshold)
     sigs = srp_band_keys(
         embeddings, id_col=id_col, vec_col=vec_col,
         bits_per_band=rows, num_bands=num_bands, seed=seed,
@@ -850,8 +711,7 @@ def embedding_dup_pairs_bucketed(
     buckets = sigs.select(
         "id", F.posexplode("keys").alias("band", "key")
     )
-    if persist_signatures:
-        buckets = buckets.repartition("band", "key").persist()
+    buckets = buckets.repartition("band", "key").persist()
     a = buckets.select(F.col("id").alias("id_a"), "band", "key")
     b = buckets.select(F.col("id").alias("id_b"), "band", "key")
     cands = (
@@ -881,7 +741,6 @@ def connected_components_star(
     b_col: str = "doc_b",
     max_iters: int = 50,
     stats: dict | None = None,
-    driver_threshold: int = 1_000_000,
 ) -> DataFrame:
     """Near-dup pairs → (doc_id, cluster_id = component min): the step
     that collapses pair lists into dedup groups (keep one doc per
@@ -907,14 +766,13 @@ def connected_components_star(
     r6 size-adaptive fast path (output unchanged): a dup-pair graph is
     orders of magnitude smaller than its corpus, and each star round
     costs a fixed number of jobs regardless of size — pure scheduling
-    overhead when the graph is tiny.  When the measured edge count is
-    ≤ ``driver_threshold`` (1M — the engine's standard bounded-collect
-    budget, cf. operators/skew.py and the LSH verify) and the id type is
-    integral, the component minima are computed with a driver-side
+    overhead when the graph is tiny.  When the distinct non-self edges
+    fit the collect budget (:mod:`operators.bounded`) and the id type
+    is integral, the component minima are computed with a driver-side
     union-find over the collected edge list and the iterative rounds are
     skipped entirely; singleton handling stays distributed (the pair
     table itself may be arbitrarily large — only the DISTINCT non-self
-    edges are bounded).  Past the threshold nothing changes: the
+    edges are bounded).  Past the budget nothing changes: the
     O(log n)-round star contraction below is the scale path.  Python's
     int min ≡ Spark's numeric min, so labels are identical (the tests
     pin both paths to each other and to a recursive-CTE reference);
@@ -950,15 +808,12 @@ def connected_components_star(
     integral = isinstance(
         id_type, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     )
-    # r6 third pass: the fast path sizes the graph with the SAME bounded
-    # collect that fetches the edges (limit threshold+1 — complete iff
-    # within budget), so the separate count() job is gone; the
+    # the fast path sizes the graph with the SAME bounded collect that
+    # fetches the edges, so it needs no separate count() job; the
     # distributed branch still counts (it needs n_edges for the round
-    # width, and pays one extra job only past the 1M bound).
-    edge_rows = (
-        edges.limit(driver_threshold + 1).collect() if integral else None
-    )
-    if edge_rows is not None and len(edge_rows) <= driver_threshold:
+    # width, and pays one extra job only past the budget)
+    edge_rows = collect_bounded(edges) if integral else None
+    if edge_rows is not None:
         n_edges = len(edge_rows)
         # bounded driver fast path: union-find with min-root labels
         parent: dict = {}
@@ -988,7 +843,7 @@ def connected_components_star(
         if stats is not None:
             stats["cc_rounds"] = 0
             stats["cc_edges"] = n_edges
-        labels = _local_pairs_df(
+        labels = local_df(
             spark,
             label_rows,
             T.StructType(

@@ -27,6 +27,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
+from parserpdf_spark.operators.bounded import collect_bounded, filter_ids
+
 DEFAULT_GIANT_THRESHOLD = 4096
 DEFAULT_NUM_SALTS = 16
 
@@ -61,30 +63,17 @@ def assemble_spans(
     pairs — bytes, not spans.
     """
     counts = exploded.groupBy("doc_id").agg(F.count("*").alias("n_spans"))
-    giant_rows = (
-        counts.filter(F.col("n_spans") > giant_threshold)
-        .select("doc_id")
-        .limit(1_000_001)
-        .collect()
-    )
-    giant_id_list = [r["doc_id"] for r in giant_rows]
-
-    if len(giant_id_list) > 1_000_000:
-        # skew tail implausibly large — fall back to broadcast joins
-        # rather than a giant literal filter
-        giant_ids = counts.filter(F.col("n_spans") > giant_threshold).select(
-            "doc_id"
-        )
-        normal = exploded.join(F.broadcast(giant_ids), "doc_id", "left_anti")
-        giant = exploded.join(F.broadcast(giant_ids), "doc_id", "left_semi")
-    elif giant_id_list:
-        # the common case: a small collected skew tail becomes a literal
-        # isin predicate — the main pass splits with NO join and the
-        # input lineage is evaluated once per side, not three times
-        normal = exploded.filter(~F.col("doc_id").isin(giant_id_list))
-        giant = exploded.filter(F.col("doc_id").isin(giant_id_list))
-    else:
+    giant_ids = counts.filter(F.col("n_spans") > giant_threshold).select("doc_id")
+    giant_rows = collect_bounded(giant_ids)
+    if giant_rows == []:
         return assemble_spans_unsalted(exploded)
+    # the common case: a small collected skew tail, so the main pass
+    # splits with a literal filter and no join; past the collect budget
+    # the split is a broadcast join against the uncollected ids
+    if giant_rows is not None:
+        giant_ids = [r["doc_id"] for r in giant_rows]
+    normal = filter_ids(exploded, "doc_id", giant_ids, anti=True)
+    giant = filter_ids(exploded, "doc_id", giant_ids)
 
     normal_docs = normal.groupBy("doc_id").agg(
         F.array_sort(F.collect_list(_span_struct())).alias("ordered")

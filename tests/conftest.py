@@ -24,3 +24,24 @@ def sf_small():
 @pytest.fixture(scope="session")
 def sf_med():
     return SF_MED
+
+
+@pytest.fixture
+def budgets():
+    """``with budgets(collect=0):`` runs its body with the bounded-collect
+    budget (and/or ``in_list=`` the rendered-``IN`` budget) moved, so
+    every collect-then-fall-back site takes its fallback path."""
+    import contextlib
+
+    from parserpdf_spark.operators import bounded
+
+    @contextlib.contextmanager
+    def at(collect=None, in_list=None):
+        with pytest.MonkeyPatch.context() as mp:
+            if collect is not None:
+                mp.setattr(bounded, "COLLECT_BUDGET", collect)
+            if in_list is not None:
+                mp.setattr(bounded, "IN_LIST_BUDGET", in_list)
+            yield
+
+    return at

@@ -212,3 +212,40 @@ def test_no_driver_query_is_accidentally_cartesian(spark, sf_small):
         if bad:
             offenders[name] = bad
     assert not offenders, f"cartesian pair spaces crept in: {offenders}"
+
+
+def test_rendered_id_filter_pushes_into_the_scan(spark, tmp_path):
+    """String ids are rendered as UTF-8 hex casts; those fold to plain
+    literals, so the filter still reaches parquet as ``In(doc_id, …)``."""
+    from parserpdf_spark.operators.bounded import filter_ids
+
+    path = str(tmp_path / "ids.parquet")
+    spark.createDataFrame(
+        [(f"d{i}", i) for i in range(50)], "doc_id string, n int"
+    ).write.parquet(path)
+    kept = filter_ids(spark.read.parquet(path), "doc_id", ["d3", "it's", "d7"])
+    pushed = [ln for ln in plan_of(kept).splitlines() if "PushedFilters" in ln]
+    assert pushed and "In(doc_id," in pushed[0]
+    assert sorted(r["n"] for r in kept.collect()) == [3, 7]
+
+
+def test_only_the_bounded_module_collects():
+    """Every driver-side collect under operators/ goes through
+    ``operators.bounded.collect_bounded``, so each one is bounded by the
+    same budget."""
+    import ast
+    import pathlib
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "parserpdf_spark" / "operators"
+    offenders = []
+    for path in sorted(ops.rglob("*.py")):
+        if path.name == "bounded.py":
+            continue
+        for node in ast.walk(ast.parse(path.read_text())):
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr == "collect"
+            ):
+                offenders.append(f"{path.name}:{node.lineno}")
+    assert offenders == []

@@ -65,3 +65,61 @@ def test_extraction_of_salted_giant_docs(spark, skewed_exploded):
     ]
     n = extracted.filter(F.col("doc_id") == "7").count()
     assert n == GIANT_SPANS
+
+
+EXPLODED_DDL = (
+    "doc_id string, kind string, text string, media_ref string, offset int"
+)
+
+
+def _doc_map(df):
+    return {r["doc_id"]: [list(s) for s in r["spans"]] for r in df.collect()}
+
+
+@pytest.fixture(scope="module")
+def odd_ids_exploded(spark):
+    """A 20-span giant doc, small docs whose ids need SQL escaping, and
+    one null-id span — the shapes the collected id filter must keep."""
+    rows = [("g", "html", f"<p>g {i}</p>", None, i) for i in range(20)]
+    for doc in ("a", "it's", "back\\slash", "x'); --"):
+        rows += [(doc, "html", f"<p>{doc} {i}</p>", None, i) for i in range(3)]
+    rows.append((None, "html", "<p>orphan</p>", None, 0))
+    return spark.createDataFrame(rows, EXPLODED_DDL)
+
+
+@pytest.mark.parametrize(
+    "moved",
+    [{}, {"collect": 0}, {"in_list": 0}],
+    ids=["rendered_in", "over_collect_budget", "join_past_in_list_budget"],
+)
+def test_salted_equals_unsalted_on_every_split_form(
+    odd_ids_exploded, budgets, moved
+):
+    """Each form of the giant/normal split (a rendered IN over the
+    collected ids, a broadcast join against the uncollected ids past the
+    collect budget, a broadcast join against a LocalRelation past the IN
+    budget) assembles the same docs as the unsalted path — including
+    the null-id span, which a NOT IN predicate would drop."""
+    plain = _doc_map(assemble_spans_unsalted(odd_ids_exploded))
+    assert None in plain and "it's" in plain and "back\\slash" in plain
+    with budgets(**moved):
+        salted = _doc_map(
+            assemble_spans(odd_ids_exploded, giant_threshold=8, num_salts=4)
+        )
+    assert salted == plain
+
+
+def test_string_id_split_makes_no_per_id_isin_call(
+    spark, odd_ids_exploded, monkeypatch
+):
+    """The collected string ids become one rendered predicate, not a
+    ``Column.isin`` call (one py4j round trip per id)."""
+
+    def refuse(self, *cols):
+        raise AssertionError("Column.isin over a collected id list")
+
+    # pyspark.sql.Column is the abstract parent; patch the class the
+    # session's columns actually are
+    monkeypatch.setattr(type(F.col("doc_id")), "isin", refuse)
+    salted = assemble_spans(odd_ids_exploded, giant_threshold=8, num_salts=4)
+    assert len(_doc_map(salted)["g"]) == 20

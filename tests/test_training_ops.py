@@ -194,6 +194,63 @@ def test_minhash_empty_candidate_set(spark):
     assert minhash_lsh_pairs(docs, threshold=0.8).collect() == []
 
 
+def _near_dup_docs(spark, id_type):
+    """30 random 40-word docs, every other one with a one-word-edited
+    copy (3-gram Jaccard 35/41 ≈ 0.85): 15 near-dup pairs.  String ids
+    carry a quote and a backslash, which a rendered IN must survive."""
+    import random
+
+    rng = random.Random(11)
+    texts = []
+    for i in range(30):
+        base = [f"w{rng.randrange(300)}" for _ in range(40)]
+        texts.append(" ".join(base))
+        if i % 2 == 0:
+            base[rng.randrange(40)] = "edited"
+            texts.append(" ".join(base))
+    ids = (
+        list(range(len(texts))) if id_type == "long"
+        else [f"d'{i}\\" for i in range(len(texts))]
+    )
+    return spark.createDataFrame(
+        list(zip(ids, texts)), f"doc_id {id_type}, text string"
+    )
+
+
+@pytest.mark.parametrize("id_type", ["long", "string"])
+def test_minhash_verify_fallbacks_equal(spark, budgets, id_type):
+    """The verify's three forms — rendered IN over the collected
+    candidate docs, a LocalRelation join past the IN budget, and the
+    uncollected semi-join past the collect budget — return the same
+    pairs, and those equal the all-pairs Jaccard baseline."""
+    from parserpdf_spark.operators.dedup import minhash_lsh_pairs
+
+    docs = _near_dup_docs(spark, id_type)
+
+    def pairs(fn):
+        return sorted(tuple(r) for r in fn(docs, threshold=0.8).collect())
+
+    within = pairs(minhash_lsh_pairs)
+    assert len(within) == 15
+    assert within == pairs(jaccard_pairs)
+    with budgets(in_list=0):
+        assert pairs(minhash_lsh_pairs) == within
+    with budgets(collect=0):
+        assert pairs(minhash_lsh_pairs) == within
+
+
+def test_minhash_lsh_pairs_leaves_no_cache_entry(spark, docs):
+    """Within the collect budget the verify reads the candidates once,
+    so nothing is persisted: a persisted intermediate would outlive the
+    query as a session cache entry."""
+    from parserpdf_spark.operators.dedup import minhash_lsh_pairs
+
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+    assert minhash_lsh_pairs(docs, threshold=0.8).count() == 3
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
 def test_srp_corpus_aware_banding_keeps_candidates_linear(spark, sf_med):
     """r6: the corpus-aware band sizing must spread vectors over ≥2n
     buckets per band so the candidate-pair count stays O(n) — the r5
@@ -229,11 +286,16 @@ def test_srp_corpus_aware_banding_keeps_candidates_linear(spark, sf_med):
 
 
 def test_srp_signature_determinism(spark, sf_med):
-    from parserpdf_spark.operators.dedup import srp_signatures
+    from parserpdf_spark.operators.dedup import srp_band_keys
 
     emb = spark.read.parquet(f"{sf_med}/embeddings.parquet")
-    s1 = {r["id"]: r["sig"] for r in srp_signatures(emb).collect()}
-    s2 = {r["id"]: r["sig"] for r in srp_signatures(emb).collect()}
+
+    def sigs():
+        # one 32-bit band: the key is the whole 32-plane signature
+        keys = srp_band_keys(emb, bits_per_band=32, num_bands=1)
+        return {r["id"]: r["keys"][0] for r in keys.collect()}
+
+    s1, s2 = sigs(), sigs()
     assert s1 == s2  # seeded hyperplanes: same input → same signature
     assert len(set(s1.values())) > 400  # random vectors spread buckets
 
@@ -438,14 +500,16 @@ def test_connected_components_star_from_persisted_pairs(spark, tmp_path):
     assert stored == inline == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7, 9: 9}
 
 
-def test_connected_components_raises_on_non_convergence(spark):
+def test_connected_components_raises_on_non_convergence(spark, budgets):
     """A graph that is not at the fixed point after max_iters rounds must
     raise — partial cluster ids can never be consumed silently."""
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(100, 140)], "doc_a long, doc_b long"
     )
-    with pytest.raises(RuntimeError, match="did not converge"):
-        _cc_labels(chain, max_iters=1, driver_threshold=0)
+    with budgets(collect=0), pytest.raises(
+        RuntimeError, match="did not converge"
+    ):
+        _cc_labels(chain, max_iters=1)
 
 
 def test_curation_funnel_monotone_and_deterministic(spark, sf_med):
@@ -692,7 +756,7 @@ def test_remove_repeated_lines_literal_separator(spark):
     assert row2["n_removed"] == 0
 
 
-def test_connected_components_converging_at_last_round_ok(spark):
+def test_connected_components_converging_at_last_round_ok(spark, budgets):
     """Convergence ON the final allowed round must not raise: a budget
     of exactly the rounds the distributed path needs returns the full
     labels."""
@@ -702,10 +766,11 @@ def test_connected_components_converging_at_last_round_ok(spark):
         [(1, 2), (2, 3), (3, 4)], "doc_a long, doc_b long"
     )
     stats: dict = {}
-    connected_components_star(chain, driver_threshold=0, stats=stats)
-    rounds = stats["cc_rounds"]
-    assert rounds > 1
-    got = _cc_labels(chain, max_iters=rounds, driver_threshold=0)
+    with budgets(collect=0):
+        connected_components_star(chain, stats=stats)
+        rounds = stats["cc_rounds"]
+        assert rounds > 1
+        got = _cc_labels(chain, max_iters=rounds)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1}
 
 
@@ -768,9 +833,9 @@ def test_curate_job_end_to_end(spark, tmp_path, sf_med):
     assert a == b
 
 
-def test_connected_components_star_paths_equal_oracle(spark):
+def test_connected_components_star_paths_equal_oracle(spark, budgets):
     """The driver union-find fast path and the distributed star rounds
-    (driver_threshold=0) label every graph identically, and both equal
+    (collect budget 0) label every graph identically, and both equal
     the recursive-CTE reference — chains, cliques and random graphs.
     The distributed path gets 10 rounds: O(log n) contraction meets that
     budget on the 40-chain, where one-hop-per-round propagation needs
@@ -789,12 +854,13 @@ def test_connected_components_star_paths_equal_oracle(spark):
         pairs = [(a, b) for a, b in pairs if a != b]
         df = spark.createDataFrame(pairs, "doc_a long, doc_b long")
         fast = _cc_labels(df)
-        assert _cc_labels(df, max_iters=10, driver_threshold=0) == fast
+        with budgets(collect=0):
+            assert _cc_labels(df, max_iters=10) == fast
         assert fast == _cc_reference(pairs)
 
 
 def test_connected_components_star_leaves_session_conf_alone(
-    spark, monkeypatch
+    spark, monkeypatch, budgets
 ):
     """The distributed path runs with the session's own conf: any
     session-wide conf write would leak into concurrent queries."""
@@ -807,11 +873,12 @@ def test_connected_components_star_leaves_session_conf_alone(
         [(1, 2), (2, 3), (3, 4), (7, 8)], "doc_a long, doc_b long"
     )
     monkeypatch.setattr(RuntimeConfig, "set", refuse)
-    got = _cc_labels(pairs, driver_threshold=0)
+    with budgets(collect=0):
+        got = _cc_labels(pairs)
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 7: 7, 8: 7}
 
 
-def test_cc_star_fast_path_singletons_from_dropped_rows(spark):
+def test_cc_star_fast_path_singletons_from_dropped_rows(spark, budgets):
     """r6: the fast path derives singleton candidates from the pair rows
     that contributed NO edge (self-pairs and null-id rows) instead of a
     distinct over every node — output must still match the distributed
@@ -840,13 +907,12 @@ def test_cc_star_fast_path_singletons_from_dropped_rows(spark):
          for r in connected_components_star(pairs).collect()),
         key=str,
     )
-    dist = sorted(
-        ((r["doc_id"], r["cluster_id"])
-         for r in connected_components_star(
-             pairs, driver_threshold=0
-         ).collect()),
-        key=str,
-    )
+    with budgets(collect=0):
+        dist = sorted(
+            ((r["doc_id"], r["cluster_id"])
+             for r in connected_components_star(pairs).collect()),
+            key=str,
+        )
     assert fast == dist
     as_dict = dict(fast)
     assert as_dict[5] == 5 and as_dict[7] == 7   # self-pair singletons
@@ -870,7 +936,7 @@ def test_redact_pii_plus_phone_does_not_eat_longer_digit_runs(spark):
     assert "<PHONE>34" not in row["text_redacted"].replace("<PHONE> ", "")
 
 
-def test_connected_components_star_keeps_self_pair_nodes(spark):
+def test_connected_components_star_keeps_self_pair_nodes(spark, budgets):
     """Regression: nodes whose only pairs are self-pairs must label
     themselves, on both paths."""
     pairs = spark.createDataFrame(
@@ -878,7 +944,8 @@ def test_connected_components_star_keeps_self_pair_nodes(spark):
     )
     expected = {1: 1, 2: 1, 7: 7}
     assert _cc_labels(pairs) == expected
-    assert _cc_labels(pairs, driver_threshold=0) == expected
+    with budgets(collect=0):
+        assert _cc_labels(pairs) == expected
 
 
 def test_curate_job_default_fraction_and_empty_run(spark, tmp_path, sf_med):
