@@ -23,7 +23,9 @@ The engine's layers:
 - :mod:`parserpdf_spark.streaming` — incremental ingestion.
 
 Importing the package inside a Spark Python worker also installs
-:func:`_guard_zip_invalidation`, once per worker process.
+:func:`_guard_zip_invalidation`, once per worker process; sessions from
+``session.get_spark`` fork their workers from :mod:`parserpdf_spark._daemon`
+with it already installed.
 
 Reference parity notes cite ``/root/reference`` files as ``file:line``.
 """
@@ -56,7 +58,8 @@ def _guard_zip_invalidation():
             return None
         return st.st_mtime_ns, st.st_size, st.st_ino
 
-    # a worker imports this package inside a task, after that task's re-read
+    # installed by the daemon before it forks, or by a worker inside a task
+    # after that task's re-read: either way the cached directories are fresh
     read_at = {archive: stat_key(archive) for archive in cache}
 
     def invalidate_caches(self):

@@ -11,16 +11,18 @@ on-disk layout from it when a consumer needs files:
   engine (the reference also writes them straight to disk); we emit the
   per-doc media manifest (ref list) the writer needs.
 
-Distribution: ``foreachPartition`` — each executor writes its own docs,
-no driver collect.  Only the export is file-per-doc; at 10^12 docs you
-export *selections*, not the corpus.
+Distribution: one ``mapInArrow`` pass — each executor writes its own
+docs, no driver collect.  Only the export is file-per-doc; at 10^12 docs
+you export *selections*, not the corpus.
 """
 
 from __future__ import annotations
 
+import functools
 import os
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+from pyspark.sql import DataFrame, Observation, functions as F
 
 
 def render_markdown_col(extracted: DataFrame) -> DataFrame:
@@ -218,6 +220,39 @@ def render_html_col(extracted: DataFrame) -> DataFrame:
     )
 
 
+def _write_files(df: DataFrame, write_batch) -> int:
+    """Run ``write_batch(batch) -> files written`` over every Arrow batch
+    of ``df`` on the executors; returns the files written.
+
+    One ``mapInArrow`` pass drained by a ``noop`` write, so the tasks run
+    in the session's one Python worker pool (``foreachPartition`` pickles
+    Rows one by one and starts a second daemon).  The count comes from an
+    Observation on that pass (cluster-correct, no second job)."""
+
+    def write(batches):
+        for batch in batches:
+            yield pa.RecordBatch.from_pydict({"written": [write_batch(batch)]})
+
+    obs = Observation()
+    df.mapInArrow(write, "written long").observe(
+        obs, F.sum("written").alias("written")
+    ).write.format("noop").mode("overwrite").save()
+    return obs.get["written"] or 0
+
+
+def _write_markdown(out_dir: str, batch: pa.RecordBatch) -> int:
+    for row in batch.to_pylist():
+        doc_dir = os.path.join(out_dir, row["doc_id"])
+        os.makedirs(doc_dir, exist_ok=True)
+        with open(os.path.join(doc_dir, f"{row['doc_id']}.md"), "w") as fh:
+            fh.write(row["markdown"])
+            fh.write("\n")
+        if row["media_refs"]:
+            with open(os.path.join(doc_dir, "media.txt"), "w") as fh:
+                fh.write("\n".join(row["media_refs"]) + "\n")
+    return batch.num_rows
+
+
 def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
     """Write ``{out_dir}/{doc_id}/{doc_id}.md`` (+ ``media.txt`` manifest
     when the doc has media) for every document; returns docs written.
@@ -225,30 +260,13 @@ def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
     **Requires ``out_dir`` on a shared filesystem** (NFS/FUSE-mounted
     object store): each executor writes its own partitions' docs with
     plain file IO.  On executor-local disks the files would scatter.
-    The count comes from an accumulator the writing tasks add to
-    (cluster-correct, no second pass), never from a driver-local
-    directory listing."""
-    written = extracted.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows):
-        import os as _os
-
-        for row in rows:
-            doc_dir = _os.path.join(out_dir, row["doc_id"])
-            _os.makedirs(doc_dir, exist_ok=True)
-            with open(
-                _os.path.join(doc_dir, f"{row['doc_id']}.md"), "w"
-            ) as fh:
-                fh.write(row["markdown"])
-                fh.write("\n")
-            if row["media_refs"]:
-                with open(_os.path.join(doc_dir, "media.txt"), "w") as fh:
-                    fh.write("\n".join(row["media_refs"]) + "\n")
-            written.add(1)
-
+    The count comes from the writing pass (:func:`_write_files`), never
+    from a driver-local directory listing."""
     os.makedirs(out_dir, exist_ok=True)
-    render_markdown_col(extracted).foreachPartition(write_partition)
-    return written.value
+    return _write_files(
+        render_markdown_col(extracted),
+        functools.partial(_write_markdown, out_dir),
+    )
 
 
 def ordered_prepend(
@@ -272,28 +290,27 @@ def ordered_prepend(
 def export_image_payloads(media: DataFrame, out_dir: str) -> int:
     """K2 image sink (reference ``utils/file_utils.py:562-626``, which
     writes PIL images into per-doc dirs): dump binary payload columns to
-    ``{out_dir}/{doc_id}/{media_ref}`` via foreachPartition — each
-    executor writes its own partitions, no driver collect.  Same
-    shared-filesystem requirement as :func:`export_markdown_files`.
+    ``{out_dir}/{doc_id}/{media_ref}`` — each executor writes its own
+    partitions, no driver collect.  Same shared-filesystem requirement
+    as :func:`export_markdown_files`.
 
     ``media`` needs (doc_id, media_ref, payload) — the shape
     ``multimodal.attach_bmp_payloads`` (or any real media table) carries.
-    Returns payloads written (accumulator count, cluster-correct)."""
-    written = media.sparkSession.sparkContext.accumulator(0)
-
-    def write_partition(rows):
-        import os as _os
-
-        for row in rows:
-            doc_dir = _os.path.join(out_dir, row["doc_id"])
-            _os.makedirs(doc_dir, exist_ok=True)
-            # media_ref is a bare filename by contract; strip any path
-            # components defensively so a hostile ref can't escape out_dir
-            name = _os.path.basename(row["media_ref"])
-            with open(_os.path.join(doc_dir, name), "wb") as fh:
-                fh.write(bytes(row["payload"]))
-            written.add(1)
-
+    Returns payloads written (an Observation count, cluster-correct)."""
     os.makedirs(out_dir, exist_ok=True)
-    media.select("doc_id", "media_ref", "payload").foreachPartition(write_partition)
-    return written.value
+    return _write_files(
+        media.select("doc_id", "media_ref", "payload"),
+        functools.partial(_write_payloads, out_dir),
+    )
+
+
+def _write_payloads(out_dir: str, batch: pa.RecordBatch) -> int:
+    for row in batch.to_pylist():
+        doc_dir = os.path.join(out_dir, row["doc_id"])
+        os.makedirs(doc_dir, exist_ok=True)
+        # media_ref is a bare filename by contract; strip any path
+        # components defensively so a hostile ref can't escape out_dir
+        name = os.path.basename(row["media_ref"])
+        with open(os.path.join(doc_dir, name), "wb") as fh:
+            fh.write(row["payload"])
+    return batch.num_rows

@@ -19,6 +19,10 @@ from pyspark.sql import SparkSession
 # 10^5-span giants.
 ARROW_MAX_RECORDS = 2048
 
+# the worker daemon (_daemon.py) imports the package, so its root goes on
+# the workers' path whatever the driver's cwd (``python -m`` adds the cwd)
+PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(
     cores: int | str | None = None,
@@ -47,6 +51,9 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.python.worker.reuse", "true")
+        # workers fork with pyspark's bytecode and the zip guard loaded
+        .config("spark.python.daemon.module", "parserpdf_spark._daemon")
+        .config("spark.executorEnv.PYTHONPATH", PACKAGE_ROOT)
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
         )
@@ -58,9 +65,11 @@ def get_spark(
         .config("spark.sql.files.openCostInBytes", "262144")
         # 4 task waves per core: one straggler then costs 1/4 of a wave,
         # not a whole wave (32 tasks on 32 cores has zero slack).  Each
-        # Python task costs ~0.07 core-s even when empty (an empty
-        # mapInArrow over range(10000) in 64 partitions: ~1.1 s on 4
-        # vCPUs, ~0.25 core-s a task before the package's zip guard)
+        # Python task costs ~0.07 core-s even when empty: an empty
+        # mapInArrow over range(10000) in 64 partitions takes 1.1-1.6 s
+        # a pass on 4 vCPUs.  Workers forked from the package's daemon
+        # never re-read a zip directory per task, which costs ~0.25
+        # core-s a task where the zip guard is missing
         .config(
             "spark.sql.files.minPartitionNum",
             str(4 * (int(cores) if cores.isdigit() else 32)),
