@@ -114,8 +114,8 @@ def main() -> None:
         if args.no_time:
             continue
         # warm-up (codegen + python worker spawn), then min-of-N; every
-        # build starts with an empty cache, so what an operator persists
-        # (simhash_pairs, embedding_dup_pairs_bucketed) is not timed as a hit
+        # build starts with an empty cache, so anything an operator
+        # persists is not timed as a hit
         spark.catalog.clearCache()
         noop(build(name))
         best = None

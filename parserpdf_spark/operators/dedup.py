@@ -7,12 +7,15 @@ Scale shapes:
 - exact: hash-groupBy (one shuffle of (hash, id) pairs, not texts).
 - n-gram Jaccard: shingle-explode self-join — the join key is the
   shingle hash, so co-occurring docs meet without all-pairs.
-- MinHash+LSH: 64 permutations aggregated in ONE groupBy (64 agg
-  columns, map-side partial), banded into 16 buckets; candidate pairs
-  only inside a bucket; exact Jaccard verifies candidates.
-- SimHash: 64-bit signature via per-bit majority vote, one groupBy.
-- embedding cosine: block self-join on an LSH/band key or brute force
-  below a size threshold.
+- MinHash+LSH: 64 permutations, banded into 16 buckets; exact Jaccard
+  verifies the candidates.
+- SimHash: 60-bit signature via per-bit majority vote, one groupBy;
+  four 15-bit chunks are its bands; exact hamming verifies.
+- embedding cosine: SRP-LSH band keys; exact cosine verifies.  The
+  brute-force crossJoin stays as the small-scale oracle.
+
+The three banded schemes share one bucket-pair path,
+:func:`_bucket_pairs`: (id, band, key) rows → distinct candidate pairs.
 """
 
 from __future__ import annotations
@@ -96,10 +99,10 @@ def jaccard_pairs(
         #   O(candidate docs), not O(corpus);
         # - the pair list becomes a LocalRelation, so the verify's plan
         #   carries ZERO reference to the candidate lineage.  This
-        #   matters: the LSH band self-join that produces the pairs is
+        #   matters: the LSH banding that produces the pairs is
         #   the most expensive subtree in the job, and referencing
         #   ``only_pairs`` from the verify plan re-evaluated it (one
-        #   extra band join per reference, measured ~3 s of a 4 s verify
+        #   extra banding pass per reference, measured ~3 s of a 4 s verify
         #   at the 50k-doc scale).
         # Past the budget, the lazy plan-shaped fallback keeps the
         # semi-join form.
@@ -319,44 +322,38 @@ def _mins_udf(coeffs: tuple):
 def _bucket_pairs(
     buckets: DataFrame, id_col: str, a_name: str, b_name: str
 ) -> DataFrame:
-    """Distinct id pairs sharing any (band, key) bucket — the shared
-    tail of every banded-LSH scheme here.
+    """Distinct id pairs sharing any (band, key) bucket — the one
+    candidate-pair path of every banded-LSH scheme here (MinHash, SimHash
+    chunks, SRP bands).
 
-    ONE ``groupBy(band, key)`` collects each bucket's ids and the i<j
-    pairs are generated array-locally from the sorted list (r6 third
-    pass; previously a bucket SELF-JOIN).  The join form shuffled the
-    bucket rows twice (one Exchange per join side — exchange reuse does
-    not fire under AQE, which is also why the upstream signatures had to
-    be persisted) and paid two sort-merge sorts; the groupBy form
-    shuffles them once, needs no sort and no persist, and references the
-    signature subtree exactly once.  Output is identical: ``sort_array``
-    orders by the engine's own comparator, so emitting (ids[i], ids[j])
-    for i<j plus the ``a < b`` filter reproduces the join+filter
-    semantics exactly (including duplicate-id and NULL-id edge cases —
-    ``collect_list`` drops NULL ids, which the old path's ``a < b``
-    filter also discarded).  Buckets with ≥2 members are near-dup-sized
-    by construction (band keys are parameterized so random collisions
-    are rare), and a giant bucket is Σ|bucket|² work in BOTH forms —
-    the groupBy form just materializes the bucket's id list (not its
-    payloads) in one task first.
+    ONE ``groupBy(band, key)`` collects each bucket's ids, sorted by the
+    engine's own comparator; ``posexplode`` then emits one row per id
+    holding that id and the bucket's id list, and each row explodes the
+    ids after it.  A row is O(k) for a bucket of k ids, never the bucket's
+    k(k−1)/2 pairs as one array value, so a giant bucket streams its
+    pairs instead of building them in one value.  Compared with a bucket
+    self-join it shuffles the bucket rows once, needs no sort-merge and
+    no persist, and references the signature subtree once.
+
+    Output equals the self-join's ``a < b`` + ``distinct``: the list is
+    sorted, the ``a < b`` filter drops equal ids, and ``collect_list``
+    drops NULL ids, which ``a < b`` also discarded.  Struct ids compare
+    field by field and a NULL field does not drop the row, so callers
+    filter NULL struct fields first.
     """
     grouped = (
         buckets.groupBy("band", "key")
         .agg(F.sort_array(F.collect_list(id_col)).alias("ids"))
         .filter(F.size("ids") >= 2)
     )
-    pairs = F.flatten(
-        F.transform(
-            F.col("ids"),
-            lambda x, i: F.transform(
-                F.slice(F.col("ids"), i + F.lit(2), F.size(F.col("ids"))),
-                lambda y: F.struct(x.alias(a_name), y.alias(b_name)),
-            ),
-        )
-    )
     return (
-        grouped.select(F.explode(pairs).alias("p"))
-        .select(f"p.{a_name}", f"p.{b_name}")
+        grouped.select("ids", F.posexplode("ids").alias("i", a_name))
+        .select(
+            a_name,
+            F.explode(
+                F.slice("ids", F.col("i") + 2, F.size("ids"))
+            ).alias(b_name),
+        )
         .filter(F.col(a_name) < F.col(b_name))
         .distinct()
     )
@@ -373,8 +370,7 @@ def lsh_candidate_pairs(
     over the band's signature columns (bigint shuffle key), not a
     cryptographic digest of a concatenated string; a key collision can
     only ADD a candidate pair, which the exact-Jaccard verify removes.
-    Pair generation is the one-shuffle groupBy form — see
-    :func:`_bucket_pairs`.
+    Pair generation is :func:`_bucket_pairs`.
     """
     rows = num_perms // num_bands
     # one selectExpr string builds all band structs in a single py4j
@@ -405,8 +401,8 @@ def minhash_lsh_pairs(
     At high thresholds the 16×4 banding's recall is ≈1, so output
     matches exact all-pairs Jaccard.  Nothing is persisted: within the
     collect budget the verify reads the candidates once, through its
-    bounded collect, and the groupBy band form (:func:`_bucket_pairs`)
-    references the signature subtree once."""
+    bounded collect, and :func:`_bucket_pairs` references the signature
+    subtree once."""
     signatures = minhash_signatures(docs, n=n, text_col=text_col)
     return jaccard_pairs(
         docs, threshold=threshold, n=n, text_col=text_col,
@@ -451,47 +447,32 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
 def simhash_pairs(
     docs: DataFrame, max_hamming: int = 3, text_col: str = "text",
 ) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) ≤ max_hamming, found via
-    band join on 4 × 15-bit chunks (a pair within distance 3 must agree
-    on ≥1 chunk — pigeonhole), then exact popcount verify.
+    """Near-dup pairs with hamming(simhash) ≤ max_hamming: candidates
+    share one of 4 × 15-bit chunks (a pair within distance 3 must agree
+    on ≥1 chunk — pigeonhole), then an exact popcount verify.
 
-    Like the other LSH operators, the chunk self-join references the
-    signature subtree (the 60-agg-column groupBy) on both sides, so the
-    signatures persist (12 bytes/doc)."""
-    sig = simhash(docs, text_col=text_col).persist()
-    chunks = []
-    for c in range(4):
-        chunks.append(
-            F.struct(
-                F.lit(c).alias("chunk"),
-                F.shiftright(F.col("simhash"), c * 15)
-                .bitwiseAND(F.lit((1 << 15) - 1))
-                .alias("key"),
-            )
-        )
+    The bucket id is ``struct(doc_id, simhash)``, so each candidate pair
+    carries both signatures and the verify needs no join back to them.
+    NULL doc_ids are dropped first: a struct with a NULL field still
+    compares, where ``doc_a < doc_b`` discarded it."""
+    sig = simhash(docs, text_col=text_col).filter(F.col("doc_id").isNotNull())
+    chunks = [
+        F.shiftright(F.col("simhash"), c * 15).bitwiseAND(F.lit((1 << 15) - 1))
+        for c in range(4)
+    ]
     buckets = sig.select(
-        "doc_id", "simhash", F.explode(F.array(*chunks)).alias("b")
-    ).select("doc_id", "simhash", "b.chunk", "b.key")
-    a = buckets.select(
-        F.col("doc_id").alias("doc_a"), F.col("simhash").alias("sig_a"),
-        "chunk", "key",
+        F.struct("doc_id", "simhash").alias("id"),
+        F.posexplode(F.array(*chunks)).alias("band", "key"),
     )
-    b = buckets.select(
-        F.col("doc_id").alias("doc_b"), F.col("simhash").alias("sig_b"),
-        "chunk", "key",
-    )
-    pairs = (
-        a.join(b, ["chunk", "key"])
-        .filter(F.col("doc_a") < F.col("doc_b"))
-        .select("doc_a", "doc_b", "sig_a", "sig_b")
-        .distinct()
-    )
+    pairs = _bucket_pairs(buckets, "id", "a", "b")
     return (
-        pairs.withColumn(
-            "hamming", F.bit_count(F.col("sig_a").bitwiseXOR(F.col("sig_b")))
+        pairs.select(
+            F.col("a.doc_id").alias("doc_a"),
+            F.col("b.doc_id").alias("doc_b"),
+            F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
+            .alias("hamming"),
         )
         .filter(F.col("hamming") <= max_hamming)
-        .select("doc_a", "doc_b", "hamming")
     )
 
 
@@ -668,10 +649,11 @@ def embedding_dup_pairs_bucketed(
     """The 100 TB embedding-dedup path: SRP-LSH banding → candidate
     pairs inside shared band buckets → exact cosine verify.
 
-    Mirrors the MinHash+LSH shape (:func:`minhash_lsh_pairs`): the join
-    key is (band, key), so pair cost is Σ|bucket|² per band — never the
-    |corpus|² crossJoin of :func:`embedding_dup_pairs`, which stays as
-    the small-scale baseline / test oracle.
+    Mirrors the MinHash+LSH shape (:func:`minhash_lsh_pairs`): the
+    candidates come from :func:`_bucket_pairs` over the (band, key) rows,
+    so pair cost is Σ|bucket|² per band — never the |corpus|² crossJoin
+    of :func:`embedding_dup_pairs`, which stays as the small-scale
+    baseline / test oracle.
 
     Band sizing is CORPUS-AWARE: one cheap ``count()`` of the input
     sizes the band keys at ``ceil(log2 n) + 3`` bits (≥8n buckets per
@@ -686,40 +668,8 @@ def embedding_dup_pairs_bucketed(
         embeddings, id_col=id_col, vec_col=vec_col,
         bits_per_band=rows, num_bands=num_bands, seed=seed,
     )
-    # The band-bucket self-join references its input subtree on both
-    # sides, and the Arrow-batch matmul stage would run twice
-    # (exchange reuse does not fire under AQE) — so the intermediate is
-    # persisted: the persisted-intermediate a production job writes to
-    # a table anyway.  r6 third pass, two measured refinements:
-    # - the one-shuffle groupBy form (:func:`_bucket_pairs`, taken for
-    #   MinHash) was A/B'd here and measured SLOWER (1.51 → 1.91 s at
-    #   20k vectors × 29 bands): with corpus-aware keys nearly every
-    #   bucket is a singleton, so collect_list's per-group
-    #   ObjectHashAggregate overhead exceeds the exchange it saves.
-    #   The join form stays — measured, not assumed.
-    # - what IS persisted changed: the exploded bucket rows,
-    #   repartitioned by (band, key), instead of the signature rows.
-    #   The cached relation then exposes hashpartitioning(band, key)
-    #   (AQE leaves cached-plan partitioning alone), so BOTH join sides
-    #   read it co-partitioned and the join needs NO further exchange —
-    #   the band rows cross the wire once (the repartition) instead of
-    #   twice (A/B'd: 1.31→1.21 / 1.04→0.96 s paired runs, candidates
-    #   identical).  The repartition width follows the session shuffle
-    #   conf — scale-adaptive, nothing hard-coded.  If a future engine
-    #   re-plans cached partitioning the join degrades to the old
-    #   two-exchange shape, never to an error.
-    buckets = sigs.select(
-        "id", F.posexplode("keys").alias("band", "key")
-    )
-    buckets = buckets.repartition("band", "key").persist()
-    a = buckets.select(F.col("id").alias("id_a"), "band", "key")
-    b = buckets.select(F.col("id").alias("id_b"), "band", "key")
-    cands = (
-        a.join(b, ["band", "key"])
-        .filter(F.col("id_a") < F.col("id_b"))
-        .select("id_a", "id_b")
-        .distinct()
-    )
+    buckets = sigs.select("id", F.posexplode("keys").alias("band", "key"))
+    cands = _bucket_pairs(buckets, "id", "id_a", "id_b")
     v = embeddings.select(
         F.col(id_col).alias("id"),
         F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),

@@ -20,7 +20,7 @@ per-document map chain ``convert_files → extract → converter(src_path)``
 - **One pass, two outputs**: span rows and per-doc metrics rows ride the
   same iterator (metrics rows carry ``kind='_metrics'``), so extraction
   runs once; callers split with two cheap filters (write the combined
-  frame first at scale, or persist).
+  frame first).
 """
 
 from __future__ import annotations
@@ -146,19 +146,14 @@ def split_combined(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     return extracted, metrics
 
 
-def extract_docs(
-    docs: DataFrame, persist: bool = False
-) -> tuple[DataFrame, DataFrame]:
+def extract_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """(extracted, metrics) from a docs table.
 
-    ``persist=True`` caches the combined frame so materializing both
-    outputs runs extraction once; at 100 TB prefer
-    ``extract_combined(...).write`` + ``split_combined(spark.read...)``.
+    Each output is a lazy plan over the same extraction, so
+    materializing both runs it twice; to run it once, write
+    ``extract_combined(...)`` and ``split_combined(spark.read...)``.
     """
-    combined = extract_combined(docs)
-    if persist:
-        combined = combined.persist()
-    return split_combined(combined)
+    return split_combined(extract_combined(docs))
 
 
 def reassemble(extracted: DataFrame) -> DataFrame:

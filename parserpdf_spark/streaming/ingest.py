@@ -32,6 +32,22 @@ def stream_docs(
     )
 
 
+def _drain(docs: DataFrame, output_dir: str, checkpoint_dir: str):
+    """Extract what the stream holds now into parquet, then stop
+    (``availableNow``).  Returns the finished StreamingQuery."""
+    query = (
+        extract_combined(docs)
+        .writeStream.outputMode("append")
+        .format("parquet")
+        .option("path", output_dir)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+    query.awaitTermination()
+    return query
+
+
 def run_incremental_extraction(
     spark: SparkSession,
     input_dir: str,
@@ -45,18 +61,7 @@ def run_incremental_extraction(
     checkpoint dir tracks consumed files, replacing the reference's
     session-state concat).  Returns the finished StreamingQuery.
     """
-    docs = stream_docs(spark, input_dir)
-    query = (
-        extract_combined(docs)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(stream_docs(spark, input_dir), output_dir, checkpoint_dir)
 
 
 FILES_STREAM_SCHEMA = (
@@ -105,17 +110,7 @@ def run_incremental_file_ingestion(
 
     files = stream_files(spark, input_dir, glob=glob)
     docs = ingested_docs(files_to_docs(files, ocr=ocr))
-    query = (
-        extract_combined(docs)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    return _drain(docs, output_dir, checkpoint_dir)
 
 
 def run_incremental_warc_ingestion(
@@ -127,26 +122,12 @@ def run_incremental_warc_ingestion(
     """Watch a directory where crawl WARC files land (the CommonCrawl
     delivery shape): each new .warc/.warc.gz is parsed, its HTML
     captures extracted, exactly-once per file via the checkpoint."""
-    from pyspark.sql import functions as F
-
+    from parserpdf_spark.sources.files import ingested_docs
     from parserpdf_spark.sources.warc import warc_to_docs
 
     files = stream_files(spark, input_dir, glob="*.warc*")
-    rows = warc_to_docs(files)
-    docs = rows.filter(F.col("ingest_status") == "ok").select(
-        "doc_id", "spans"
-    )
-    query = (
-        extract_combined(docs)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", output_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .trigger(availableNow=True)
-        .start()
-    )
-    query.awaitTermination()
-    return query
+    docs = ingested_docs(warc_to_docs(files))
+    return _drain(docs, output_dir, checkpoint_dir)
 
 
 def windowed_event_counts(events: DataFrame) -> DataFrame:

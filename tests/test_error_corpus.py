@@ -26,7 +26,7 @@ def _corrupt(spark, sf_small):
 
 def test_corpus_with_malformed_fraction(spark, sf_small):
     corrupted = _corrupt(spark, sf_small)
-    extracted, metrics = extract_docs(corrupted, persist=True)
+    extracted, metrics = extract_docs(corrupted)
     by_status = {
         r["status"]: r["n"]
         for r in metrics.groupBy("status").agg(F.count("*").alias("n")).collect()
@@ -47,7 +47,7 @@ def test_page_filter_keeps_malformed_spans(spark, sf_small):
     from parserpdf_spark.operators.pages import filter_pages
 
     filtered = filter_pages(_corrupt(spark, sf_small), "0")
-    _, metrics = extract_docs(filtered, persist=True)
+    _, metrics = extract_docs(filtered)
     by_status = {
         r["status"]: r["n"]
         for r in metrics.groupBy("status").agg(F.count("*").alias("n")).collect()
@@ -61,7 +61,7 @@ def test_exploded_path_with_malformed_fraction(spark, sf_small):
 
     exploded = explode_docs(_corrupt(spark, sf_small))
     docs = assemble_spans(exploded, giant_threshold=8, num_salts=4)
-    _, metrics = extract_docs(docs, persist=True)
+    _, metrics = extract_docs(docs)
     by_status = {
         r["status"]: r["n"]
         for r in metrics.groupBy("status").agg(F.count("*").alias("n")).collect()

@@ -100,7 +100,7 @@ def test_scan_to_extract_end_to_end(spark):
     assert statuses == {"ok": 44, "error": 1, "needs_prechunk": 1,
                         "skipped": 2, "encrypted": 1, "needs_ocr": 1}
 
-    extracted, metrics = extract_docs(ingested_docs(bridged), persist=True)
+    extracted, metrics = extract_docs(ingested_docs(bridged))
     assert metrics.filter(F.col("status") != "ok").count() == 0
     assert metrics.count() == 44
 

@@ -19,7 +19,7 @@ from parserpdf_spark.sources.synth import synth_doc, synth_docs_df, synth_docs_p
 @pytest.fixture(scope="module")
 def small_results(spark, sf_small):
     docs = synth_docs_df(spark, sf_small)
-    extracted, metrics = extract_docs(docs, persist=True)
+    extracted, metrics = extract_docs(docs)
     extracted = extracted.persist()
     yield extracted, metrics
     extracted.unpersist()
@@ -115,7 +115,7 @@ def test_error_rows_never_fail_task(spark):
         rows,
         schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    extracted, metrics = extract_docs(docs, persist=True)
+    extracted, metrics = extract_docs(docs)
     stat = {r["doc_id"]: (r["status"], r["n_output_spans"]) for r in metrics.collect()}
     assert stat["good"] == ("ok", 1)
     assert stat["bad_json"][0] == "error"

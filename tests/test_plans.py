@@ -136,8 +136,9 @@ def test_file_ingestion_plan_has_no_exchange(spark):
 
 
 def test_bucketed_embedding_dedup_never_cartesian(spark, sf_med):
-    """The SRP scale path must stay an equi-join on (band, key) — a
-    regression to crossJoin/BNLJ is the 100 TB killer."""
+    """The SRP scale path must pair ids inside (band, key) buckets and
+    verify with equi-joins — a regression to crossJoin/BNLJ is the
+    100 TB killer."""
     from parserpdf_spark.operators.dedup import embedding_dup_pairs_bucketed
 
     emb = spark.read.parquet(f"{sf_med}/embeddings.parquet")
@@ -248,4 +249,33 @@ def test_only_the_bounded_module_collects():
                 and node.func.attr == "collect"
             ):
                 offenders.append(f"{path.name}:{node.lineno}")
+    assert offenders == []
+
+
+def test_operators_unpersist_what_they_persist():
+    """An operator function that calls ``.persist()`` or ``.cache()`` also
+    calls ``.unpersist()``: a cache entry nobody releases lives as long as
+    the session, and a later identical plan reads it back."""
+    import ast
+    import pathlib
+
+    def calls(fn):
+        return [
+            node for node in ast.walk(fn)
+            if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute)
+        ]
+
+    ops = pathlib.Path(__file__).resolve().parents[1] / "parserpdf_spark" / "operators"
+    offenders = []
+    for path in sorted(ops.rglob("*.py")):
+        for fn in ast.walk(ast.parse(path.read_text())):
+            if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            found = calls(fn)
+            if any(c.func.attr == "unpersist" for c in found):
+                continue
+            offenders += [
+                f"{path.name}:{c.lineno}"
+                for c in found if c.func.attr in ("persist", "cache")
+            ]
     assert offenders == []

@@ -5,6 +5,7 @@ own, and they equal what a re-read of the output would say."""
 import io
 import json
 import os
+import shutil
 from contextlib import redirect_stdout
 
 import pytest
@@ -35,11 +36,11 @@ def _job_ids(spark) -> set[int]:
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
 
 
-def _run_job(spark, out: str, chunks: int) -> dict:
+def _run_job(spark, out: str, chunks: int, src: str = FIXTURES) -> dict:
     buf = io.StringIO()
     with redirect_stdout(buf):
         assert main(
-            ["--input", FIXTURES, "--output", out, "--chunks", str(chunks)],
+            ["--input", src, "--output", out, "--chunks", str(chunks)],
             spark=spark,
         ) == 0
     return json.loads(buf.getvalue().strip().splitlines()[-1])
@@ -133,3 +134,30 @@ def test_manifest_status_counts_equal_metrics(spark, tmp_path):
         .collect()
     }
     assert from_manifests == from_metrics == {"ok": 9, "error": 1}
+
+
+def test_rerun_over_a_grown_directory_sees_the_new_files(spark, tmp_path):
+    """The job releases its cached bridge: a second run in the same
+    session, over the same directory after files landed, reports and
+    extracts the new files, and no cache entry outlives either run."""
+    src = tmp_path / "corpus"
+    src.mkdir()
+    for name in ("doc_0.html", "doc_3.html", "doc_1.docx", "doc_15.html",
+                 "broken_99.docx", "LICENSE"):
+        shutil.copy(os.path.join(FIXTURES, name), src / name)
+    jsc = spark.sparkContext._jsc
+    before = set(jsc.getPersistentRDDs().keySet())
+
+    first = _run_job(spark, str(tmp_path / "one"), chunks=1, src=str(src))
+    assert first["files_by_ingest_status"] == {"ok": 4, "error": 1, "skipped": 1}
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+    (src / "late.html").write_text("<h1>Late</h1><p>arrived after the first run</p>")
+    (src / "late.xyz").write_bytes(b"no route for this suffix")
+    out = str(tmp_path / "two")
+    second = _run_job(spark, out, chunks=1, src=str(src))
+    assert second["files_by_ingest_status"] == {"ok": 5, "error": 1, "skipped": 2}
+    assert second["docs_by_status"] == {"ok": 5}
+    extracted = {r["doc_id"] for r in read_extracted(spark, out).collect()}
+    assert extracted == {"doc_0", "doc_3", "doc_1", "doc_15", "late"}
+    assert set(jsc.getPersistentRDDs().keySet()) - before == set()

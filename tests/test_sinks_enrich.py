@@ -21,7 +21,7 @@ def test_export_markdown_files(spark, sf_small, tmp_path):
     docs = synth_docs_df(spark, sf_small).filter(
         F.col("doc_id").isin("0", "1", "2")
     )
-    extracted, _ = extract_docs(docs, persist=True)
+    extracted, _ = extract_docs(docs)
     n = export_markdown_files(extracted, out)
     assert n == 3
     # reference layout: {out}/{stem}/{stem}.md (file_utils.py:530-539)
@@ -67,7 +67,7 @@ def test_render_json_is_valid_and_roundtrips(spark, sf_small):
     from parserpdf_spark.operators.sinks import render_json_col
 
     docs = synth_docs_df(spark, sf_small).filter(F.col("doc_id").isin("0", "1", "2"))
-    extracted, _ = extract_docs(docs, persist=True)
+    extracted, _ = extract_docs(docs)
     rendered = {r["doc_id"]: r["json"] for r in render_json_col(extracted).collect()}
     spans = {}
     for r in extracted.collect():
@@ -85,7 +85,7 @@ def test_render_html_structure(spark, sf_small):
     from parserpdf_spark.operators.sinks import render_html_col
 
     docs = synth_docs_df(spark, sf_small).filter(F.col("doc_id").isin("0", "2"))
-    extracted, _ = extract_docs(docs, persist=True)
+    extracted, _ = extract_docs(docs)
     html = {r["doc_id"]: r["html"] for r in render_html_col(extracted).collect()}
     assert html["0"].startswith("<article><h1>")
     assert "<table><tr><th>" in html["0"]  # id%6==0 embeds a table
@@ -95,7 +95,7 @@ def test_render_html_structure(spark, sf_small):
 
 def test_enrichment_stage(spark, sf_small):
     docs = synth_docs_df(spark, sf_small).limit(30)
-    extracted, _ = extract_docs(docs, persist=True)
+    extracted, _ = extract_docs(docs)
     enriched = enrich_spans(extracted)
     rows = enriched.collect()
     assert rows and all(r["kind"] in ("heading", "caption") for r in rows)

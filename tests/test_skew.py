@@ -47,7 +47,7 @@ def test_giant_docs_actually_salted(spark, skewed_exploded):
 def test_extraction_of_salted_giant_docs(spark, skewed_exploded):
     docs = assemble_spans(skewed_exploded, giant_threshold=500, num_salts=8)
     extracted, metrics = extract_docs(
-        docs.filter(F.col("doc_id").isin(GIANT_IDS)), persist=True
+        docs.filter(F.col("doc_id").isin(GIANT_IDS))
     )
     stat = {r["doc_id"]: r["status"] for r in metrics.collect()}
     assert stat == {g: "ok" for g in GIANT_IDS}

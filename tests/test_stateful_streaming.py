@@ -48,7 +48,7 @@ def test_batch_duplicate_doc_ids_both_processed(spark):
         base,
         schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
     )
-    extracted, metrics = extract_docs(docs, persist=True)
+    extracted, metrics = extract_docs(docs)
     assert metrics.count() == 3  # both dup rows processed
     collisions = (
         metrics.groupBy("doc_id").agg(F.count("*").alias("n"))

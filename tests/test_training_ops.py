@@ -8,10 +8,13 @@ from pyspark.sql import functions as F
 from parserpdf_spark.operators.ann import ann_bruteforce_topk, ann_ivf_topk
 from parserpdf_spark.operators.dedup import (
     dedup_exact_keep_min,
+    embedding_dup_pairs_bucketed,
     jaccard_pairs,
     lsh_candidate_pairs,
+    minhash_lsh_pairs,
     minhash_signatures,
     simhash,
+    simhash_pairs,
 )
 from parserpdf_spark.operators.textops import _winnow_one, fingerprint_winnow
 
@@ -67,6 +70,16 @@ def test_simhash_properties(docs):
     ham_far = bin(sigs[1] ^ sigs[3]).count("1")
     assert ham_near < ham_far
     assert all(0 <= s < (1 << 60) for s in sigs.values())
+
+
+def test_simhash_pairs_drop_null_doc_ids(spark, docs):
+    """A NULL doc_id pairs with nothing, as ``doc_a < doc_b`` decides,
+    even though its ``struct(doc_id, simhash)`` bucket id compares."""
+    text = docs.filter("doc_id = 1").first()["text"]
+    with_null = docs.unionByName(spark.createDataFrame([(None, text)], docs.schema))
+    pairs = {tuple(r) for r in simhash_pairs(docs).collect()}
+    assert {tuple(r) for r in simhash_pairs(with_null).collect()} == pairs
+    assert (1, 4, 0) in pairs
 
 
 def test_ann_ivf_recall(spark, sf_med):
@@ -239,15 +252,36 @@ def test_minhash_verify_fallbacks_equal(spark, budgets, id_type):
         assert pairs(minhash_lsh_pairs) == within
 
 
-def test_minhash_lsh_pairs_leaves_no_cache_entry(spark, docs):
-    """Within the collect budget the verify reads the candidates once,
-    so nothing is persisted: a persisted intermediate would outlive the
-    query as a session cache entry."""
-    from parserpdf_spark.operators.dedup import minhash_lsh_pairs
+def _two_dup_vectors(spark):
+    """Six distinct 8-d vectors plus exact copies of the first two."""
+    vecs = [[float((i * 7 + j * 3) % 11 - 5) for j in range(8)] for i in range(6)]
+    rows = list(enumerate(vecs)) + [(10 + i, vecs[i]) for i in range(2)]
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
 
+
+# banded-LSH operator → (build(spark, docs), expected pair count)
+LSH_QUERIES = {
+    "minhash_lsh_pairs": (
+        lambda spark, docs: minhash_lsh_pairs(docs, threshold=0.8), 3
+    ),
+    "simhash_pairs": (lambda spark, docs: simhash_pairs(docs, max_hamming=3), 3),
+    "embedding_dup_pairs_bucketed": (
+        lambda spark, docs: embedding_dup_pairs_bucketed(
+            _two_dup_vectors(spark), threshold=0.95
+        ),
+        2,
+    ),
+}
+
+
+@pytest.mark.parametrize("name", list(LSH_QUERIES))
+def test_minhash_lsh_pairs_leaves_no_cache_entry(spark, docs, name):
+    """No banded-LSH operator persists anything: a persisted intermediate
+    would outlive the query as a session cache entry."""
+    build, expected = LSH_QUERIES[name]
     jsc = spark.sparkContext._jsc
     before = set(jsc.getPersistentRDDs().keySet())
-    assert minhash_lsh_pairs(docs, threshold=0.8).count() == 3
+    assert build(spark, docs).count() == expected
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
 
 

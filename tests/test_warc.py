@@ -152,7 +152,7 @@ def test_warc_to_extraction_end_to_end(spark):
     assert statuses == {"ok": 16, "skipped": 3, "error": 1}
 
     docs = rows.filter(F.col("ingest_status") == "ok").select("doc_id", "spans")
-    extracted, metrics = extract_docs(docs, persist=True)
+    extracted, metrics = extract_docs(docs)
     assert metrics.filter(F.col("status") != "ok").count() == 0
 
     golden = spark.read.parquet(os.path.join(REPO, "goldens", "extract_warc.parquet"))
