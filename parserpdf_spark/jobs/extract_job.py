@@ -56,7 +56,7 @@ def main(argv=None, spark=None) -> int:
     ap.add_argument("--run-id", default=None)
     args = ap.parse_args(argv)
 
-    from pyspark.sql import SparkSession
+    from pyspark.sql import Observation, SparkSession, functions as F
 
     owns_session = spark is None
     if spark is not None:
@@ -75,80 +75,84 @@ def main(argv=None, spark=None) -> int:
     )
 
     bridged = None
-    try:
-        if os.path.exists(os.path.join(args.input, "documents.parquet")):
-            from parserpdf_spark.sources.synth import synth_docs_df
+    if os.path.exists(os.path.join(args.input, "documents.parquet")):
+        from parserpdf_spark.sources.synth import synth_docs_df
 
-            docs = synth_docs_df(spark, args.input)
-        elif any(
-            name.endswith(".parquet") or name == "_SUCCESS"
-            for name in os.listdir(args.input)
-        ):
-            docs = spark.read.parquet(args.input)
-        elif any(
-            name.endswith((".warc", ".warc.gz")) for name in os.listdir(args.input)
-        ):
-            # crawl corpus: WARC records → bridge → canonical docs table
-            from parserpdf_spark.sources.scans import scan_multi
-            from parserpdf_spark.sources.warc import warc_to_docs
+        docs = synth_docs_df(spark, args.input)
+    elif any(
+        name.endswith(".parquet") or name == "_SUCCESS"
+        for name in os.listdir(args.input)
+    ):
+        docs = spark.read.parquet(args.input)
+    elif any(
+        name.endswith((".warc", ".warc.gz")) for name in os.listdir(args.input)
+    ):
+        # crawl corpus: WARC records → bridge → canonical docs table
+        from parserpdf_spark.sources.scans import scan_multi
+        from parserpdf_spark.sources.warc import warc_to_docs
 
-            files = scan_multi(
-                spark, args.input, ["*.warc", "*.warc.gz"], with_content=True
-            )
-            bridged = warc_to_docs(files).persist()
-        else:
-            # raw files: scan → bridge → canonical docs table
-            from parserpdf_spark.sources.files import files_to_docs
-            from parserpdf_spark.sources.scans import scan_files
-
-            files = scan_files(spark, args.input, args.glob, with_content=True)
-            bridged = files_to_docs(files, ocr=args.ocr).persist()
-        if bridged is not None:
-            from parserpdf_spark.sources.files import ingested_docs
-
-            # this groupBy is also the action that materializes the bridge
-            ingest_report = {
-                r["ingest_status"]: r["count"]
-                for r in bridged.groupBy("ingest_status").count().collect()
-            }
-            docs = ingested_docs(bridged)
-
-        already = committed_chunks(args.output)
-        if already:
-            print(f"resuming: {sorted(already)} already committed", file=sys.stderr)
-
-        committed = run_checkpointed_extraction(
-            spark, docs, args.output, n_chunks=args.chunks, run_id=args.run_id
+        files = scan_multi(
+            spark, args.input, ["*.warc", "*.warc.gz"], with_content=True
         )
-        # every committed chunk's manifest, this run's and earlier runs';
-        # manifests written before they carried docs_by_status make the
-        # report count the committed metrics rows instead
-        records = committed_chunks(args.output).values()
-        by_status: dict[str, int] = {}
-        if all("docs_by_status" in rec for rec in records):
-            for rec in records:
-                for status, n in rec["docs_by_status"].items():
-                    by_status[status] = by_status.get(status, 0) + n
-        else:
-            by_status = {
-                r["status"]: r["count"]
-                for r in read_metrics(spark, args.output)
-                .groupBy("status").count().collect()
-            }
-        report = {
-            "committed_this_run": [r["chunk_id"] for r in committed],
-            "total_chunks": args.chunks,
-            "docs_by_status": by_status,
+        bridged = warc_to_docs(files)
+    else:
+        # raw files: scan → bridge → canonical docs table
+        from parserpdf_spark.sources.files import files_to_docs
+        from parserpdf_spark.sources.scans import scan_files
+
+        files = scan_files(spark, args.input, args.glob, with_content=True)
+        bridged = files_to_docs(files, ocr=args.ocr)
+    if bridged is not None:
+        from parserpdf_spark.schema import INGEST_STATUSES
+        from parserpdf_spark.sources.files import ingested_docs
+
+        # counted by the chunk writes' own pass, above the ok filter
+        ingest_obs = Observation()
+        bridged = bridged.observe(
+            ingest_obs,
+            F.count(F.lit(1)).alias("_files"),
+            *[F.count_if(F.col("ingest_status") == s).alias(s) for s in INGEST_STATUSES],
+        )
+        docs = ingested_docs(bridged)
+
+    already = committed_chunks(args.output)
+    if already:
+        print(f"resuming: {sorted(already)} already committed", file=sys.stderr)
+
+    committed = run_checkpointed_extraction(
+        spark, docs, args.output, n_chunks=args.chunks, run_id=args.run_id
+    )
+    # every committed chunk's manifest, this run's and earlier runs';
+    # manifests written before they carried docs_by_status make the
+    # report count the committed metrics rows instead
+    records = committed_chunks(args.output).values()
+    by_status: dict[str, int] = {}
+    if all("docs_by_status" in rec for rec in records):
+        for rec in records:
+            for status, n in rec["docs_by_status"].items():
+                by_status[status] = by_status.get(status, 0) + n
+    else:
+        by_status = {
+            r["status"]: r["count"]
+            for r in read_metrics(spark, args.output)
+            .groupBy("status").count().collect()
         }
-        if bridged is not None:
-            report["files_by_ingest_status"] = ingest_report
-        print(json.dumps(report))
-    finally:
-        # the bridge is cached for its two readers (the status groupBy and
-        # the extraction); a cache entry left behind would answer a later
-        # run over the same directory with this run's files
-        if bridged is not None:
-            bridged.unpersist()
+    report = {
+        "committed_this_run": [r["chunk_id"] for r in committed],
+        "total_chunks": args.chunks,
+        "docs_by_status": by_status,
+    }
+    if bridged is not None:
+        if not committed:
+            # every chunk was committed earlier: one pass fills the counts
+            bridged.write.format("noop").mode("overwrite").save()
+        stats = ingest_obs.get
+        counts = {s: stats[s] for s in INGEST_STATUSES if stats[s]}
+        if sum(counts.values()) != stats["_files"]:
+            raise RuntimeError(f"{stats['_files']} files, counted {counts}: a status "
+                               "is missing from schema.INGEST_STATUSES")
+        report["files_by_ingest_status"] = counts
+    print(json.dumps(report))
     if owns_session:
         spark.stop()
     return 0

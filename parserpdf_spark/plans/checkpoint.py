@@ -118,46 +118,48 @@ def run_checkpointed_extraction(
                 "fresh output_dir"
             )
     committed_now: list[dict] = []
+    pending = [c for c in range(n_chunks) if c not in done]
 
     # each chunk job filters the input by hash, which a scan can't prune —
-    # persist so N chunk jobs don't rescan (or re-synthesize) N times.
-    # At 100 TB granularity you'd instead run ONE pass writing
+    # persist so N > 1 pending chunks don't rescan (or re-synthesize, or
+    # re-route) it N times; for one chunk a cache is written once and read
+    # once.  At 100 TB you'd instead run ONE pass writing
     # partitionBy('chunk') and commit manifests per written chunk dir;
-    # per-chunk jobs are kept here because they give crash-commit
-    # granularity of one chunk, which the tests exercise.
+    # per-chunk jobs give crash-commit granularity of one chunk, which
+    # the tests exercise.
     from pyspark import StorageLevel
 
-    materialized = docs.persist(StorageLevel.MEMORY_AND_DISK)
-    docs = materialized
-
-    for chunk in range(n_chunks):
-        if chunk in done:
-            continue
-        part = docs.filter(chunk_of(F.col("doc_id"), n_chunks) == chunk)
-        chunk_path = os.path.join(output_dir, CHUNKS_DIR, f"chunk={chunk}")
-        # the write's own pass counts the lineage: an Observation, no second job
-        obs = Observation()
-        extract_combined(part).observe(
-            obs,
-            F.count_if(F.col("kind") == "_metrics").alias("n_docs"),
-            F.count_if(F.col("kind") != "_metrics").alias("n_spans"),
-            *[F.count_if(F.col("status") == s).alias(s) for s in DOC_STATUSES],
-        ).write.mode("overwrite").parquet(chunk_path)
-        stats = obs.get
-        record = {
-            "run_id": run_id,
-            "chunk_id": chunk,
-            "n_docs": stats["n_docs"],
-            "n_spans": stats["n_spans"],
-            "docs_by_status": {s: stats[s] for s in DOC_STATUSES if stats[s]},
-            "input_fingerprint": _fingerprint(n_chunks, chunk),
-        }
-        _commit_manifest(output_dir, record)
-        committed_now.append(record)
-        if fail_after_chunk is not None and len(committed_now) >= fail_after_chunk:
-            materialized.unpersist()
-            raise RuntimeError(f"injected failure after chunk {chunk}")
-    materialized.unpersist()
+    cache = len(pending) > 1
+    if cache:
+        docs = docs.persist(StorageLevel.MEMORY_AND_DISK)
+    try:
+        for chunk in pending:
+            part = docs.filter(chunk_of(F.col("doc_id"), n_chunks) == chunk)
+            chunk_path = os.path.join(output_dir, CHUNKS_DIR, f"chunk={chunk}")
+            # the write's own pass counts the lineage: an Observation, no second job
+            obs = Observation()
+            extract_combined(part).observe(
+                obs,
+                F.count_if(F.col("kind") == "_metrics").alias("n_docs"),
+                F.count_if(F.col("kind") != "_metrics").alias("n_spans"),
+                *[F.count_if(F.col("status") == s).alias(s) for s in DOC_STATUSES],
+            ).write.mode("overwrite").parquet(chunk_path)
+            stats = obs.get
+            record = {
+                "run_id": run_id,
+                "chunk_id": chunk,
+                "n_docs": stats["n_docs"],
+                "n_spans": stats["n_spans"],
+                "docs_by_status": {s: stats[s] for s in DOC_STATUSES if stats[s]},
+                "input_fingerprint": _fingerprint(n_chunks, chunk),
+            }
+            _commit_manifest(output_dir, record)
+            committed_now.append(record)
+            if fail_after_chunk is not None and len(committed_now) >= fail_after_chunk:
+                raise RuntimeError(f"injected failure after chunk {chunk}")
+    finally:
+        if cache:
+            docs.unpersist()
     return committed_now
 
 

@@ -82,6 +82,9 @@ METRICS_SCHEMA = T.StructType(
 # every status kernels.extract.extract_document_safe gives a document
 DOC_STATUSES = ("ok", "error")
 
+# every status the raw-file and WARC bridges give a file or record
+INGEST_STATUSES = ("ok", "error", "skipped", "encrypted", "needs_ocr", "needs_prechunk")
+
 # ---------------------------------------------------------------------------
 # Lineage sidecar: per committed chunk — the Spark equivalent of the
 # reference's zip manifest + dated logfile (utils/file_utils.py:242-288,

@@ -60,20 +60,11 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
-        # sandbox tables are MB-sized; the 4 MB default open-cost floor
-        # would bin-pack them into fewer splits than cores
+        # each file counts 256 KB toward a split, and no split is planned
+        # smaller than that: MB-sized tables still cut into
+        # spark.default.parallelism splits, where the 4 MB default would
+        # plan fewer.  Past 128 MB a table's files set the splits
         .config("spark.sql.files.openCostInBytes", "262144")
-        # 4 task waves per core: one straggler then costs 1/4 of a wave,
-        # not a whole wave (32 tasks on 32 cores has zero slack).  Each
-        # Python task costs ~0.07 core-s even when empty: an empty
-        # mapInArrow over range(10000) in 64 partitions takes 1.1-1.6 s
-        # a pass on 4 vCPUs.  Workers forked from the package's daemon
-        # never re-read a zip directory per task, which costs ~0.25
-        # core-s a task where the zip guard is missing
-        .config(
-            "spark.sql.files.minPartitionNum",
-            str(4 * (int(cores) if cores.isdigit() else 32)),
-        )
     )
     for key, value in (extra_conf or {}).items():
         builder = builder.config(key, value)

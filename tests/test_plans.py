@@ -190,6 +190,20 @@ def test_aqe_enabled(spark):
     assert spark.conf.get("spark.sql.adaptive.enabled") == "true"
 
 
+def test_tiny_files_plan_one_wave_of_splits(spark, tmp_path):
+    """A table of many tiny files plans spark.default.parallelism splits
+    (one wave on the session's cores): a per-core split multiplier would
+    pay a fixed task cost per extra split on every stage."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    table = pa.table({"doc_id": ["d"] * 10})
+    for i in range(64):
+        pq.write_table(table, str(tmp_path / f"part-{i:03d}.parquet"))
+    splits = spark.read.parquet(str(tmp_path)).rdd.getNumPartitions()
+    assert splits == spark.sparkContext.defaultParallelism
+
+
 # the two documented brute-force baselines are the ONLY queries allowed
 # a cartesian/broadcast-nested-loop pair space
 _CARTESIAN_OK = {"embedding_dups", "ann_topk", "ann_ivf_full_probe"}

@@ -6,6 +6,7 @@ import io
 import json
 import os
 import shutil
+import threading
 from contextlib import redirect_stdout
 
 import pytest
@@ -13,6 +14,7 @@ from pyspark.sql import functions as F
 
 from parserpdf_spark.jobs.extract_job import main
 from parserpdf_spark.operators.sinks import export_markdown_files
+from parserpdf_spark import schema
 from parserpdf_spark.plans.checkpoint import (
     MANIFEST_DIR,
     committed_chunks,
@@ -21,11 +23,14 @@ from parserpdf_spark.plans.checkpoint import (
     run_checkpointed_extraction,
 )
 from parserpdf_spark.sources.files import files_to_docs, ingested_docs
-from parserpdf_spark.sources.scans import scan_files
+from parserpdf_spark.sources.scans import scan_files, scan_multi
 from parserpdf_spark.sources.synth import DOCS_DDL
+from parserpdf_spark.sources.warc import warc_to_docs
 
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 FIXTURES = os.path.join(REPO, "fixtures", "files_corpus")
+OCR_CORPUS = os.path.join(REPO, "fixtures", "ocr_corpus")
+WARC_DIR = os.path.join(REPO, "fixtures", "warc")
 INGEST_STATUSES = {
     "ok": 44, "error": 1, "needs_prechunk": 1, "skipped": 2,
     "encrypted": 1, "needs_ocr": 1,
@@ -36,19 +41,21 @@ def _job_ids(spark) -> set[int]:
     return set(spark.sparkContext.statusTracker().getJobIdsForGroup())
 
 
-def _run_job(spark, out: str, chunks: int, src: str = FIXTURES) -> dict:
+def _run_job(spark, out: str, chunks: int, src: str = FIXTURES,
+             flags: tuple = ()) -> dict:
     buf = io.StringIO()
     with redirect_stdout(buf):
         assert main(
-            ["--input", src, "--output", out, "--chunks", str(chunks)],
+            ["--input", src, "--output", out, "--chunks", str(chunks), *flags],
             spark=spark,
         ) == 0
     return json.loads(buf.getvalue().strip().splitlines()[-1])
 
 
 def test_extract_job_and_sink_spark_jobs(spark, tmp_path):
-    """One ingest pass: the bridge's status groupBy plus one write per
-    chunk; the Markdown sink: its render shuffle and the write pass."""
+    """One ingest pass: one write per chunk, whose pass also counts the
+    ingest statuses; the Markdown sink: its render shuffle and the write
+    pass."""
     out = str(tmp_path / "job")
     before = _job_ids(spark)
     report = _run_job(spark, out, chunks=1)
@@ -137,9 +144,9 @@ def test_manifest_status_counts_equal_metrics(spark, tmp_path):
 
 
 def test_rerun_over_a_grown_directory_sees_the_new_files(spark, tmp_path):
-    """The job releases its cached bridge: a second run in the same
-    session, over the same directory after files landed, reports and
-    extracts the new files, and no cache entry outlives either run."""
+    """A second run in the same session, over the same directory after
+    files landed, reports and extracts the new files, and no cache entry
+    outlives either run."""
     src = tmp_path / "corpus"
     src.mkdir()
     for name in ("doc_0.html", "doc_3.html", "doc_1.docx", "doc_15.html",
@@ -161,3 +168,82 @@ def test_rerun_over_a_grown_directory_sees_the_new_files(spark, tmp_path):
     extracted = {r["doc_id"] for r in read_extracted(spark, out).collect()}
     assert extracted == {"doc_0", "doc_3", "doc_1", "doc_15", "late"}
     assert set(jsc.getPersistentRDDs().keySet()) - before == set()
+
+
+@pytest.mark.parametrize("chunks", [1, 3])
+def test_raw_file_job_runs_one_spark_job_per_chunk(spark, tmp_path, chunks):
+    """The ingest counts ride on the chunk writes: a raw-file run is one
+    Spark job per chunk, with no status job of its own, and it leaves no
+    cache entry behind (three chunks share a cache the run releases)."""
+    jsc = spark.sparkContext._jsc
+    cached = set(jsc.getPersistentRDDs().keySet())
+    before = _job_ids(spark)
+    report = _run_job(spark, str(tmp_path / "job"), chunks=chunks)
+    assert len(_job_ids(spark) - before) == chunks
+    assert report["files_by_ingest_status"] == INGEST_STATUSES
+    assert report["docs_by_status"] == {"ok": 44}
+    assert set(jsc.getPersistentRDDs().keySet()) - cached == set()
+
+
+def test_full_resume_reports_the_first_runs_statuses(spark, tmp_path):
+    """A rerun over an output whose chunks are all committed writes no
+    chunk, yet still reports the first run's ingest counts: one pass
+    over the bridge fills the Observation.  The rerun runs under a
+    bounded wait, so a never-filled Observation fails instead of hanging."""
+    out = str(tmp_path / "job")
+    first = _run_job(spark, out, chunks=3)
+    before = _job_ids(spark)
+    result = {}
+    worker = threading.Thread(
+        target=lambda: result.update(_run_job(spark, out, chunks=3)), daemon=True
+    )
+    worker.start()
+    worker.join(timeout=180)
+    assert not worker.is_alive(), "the rerun's ingest Observation never filled"
+    assert result["committed_this_run"] == []
+    assert result["files_by_ingest_status"] == first["files_by_ingest_status"]
+    assert result["docs_by_status"] == first["docs_by_status"]
+    assert len(_job_ids(spark) - before) == 1
+
+
+@pytest.mark.parametrize(
+    "src,flags,bridge",
+    [
+        (FIXTURES, (), lambda spark: files_to_docs(
+            scan_files(spark, FIXTURES, "*", with_content=True))),
+        (OCR_CORPUS, ("--ocr",), lambda spark: files_to_docs(
+            scan_files(spark, OCR_CORPUS, "*", with_content=True), ocr=True)),
+        (WARC_DIR, (), lambda spark: warc_to_docs(
+            scan_multi(spark, WARC_DIR, ["*.warc", "*.warc.gz"], with_content=True))),
+    ],
+    ids=["files", "ocr", "warc"],
+)
+def test_observed_ingest_statuses_equal_a_groupby(spark, tmp_path, src, flags, bridge):
+    """The job's observed files_by_ingest_status equals a groupBy over
+    the same bridge, for raw files, the OCR tier and WARC records."""
+    report = _run_job(spark, str(tmp_path / "job"), chunks=2, src=src, flags=flags)
+    grouped = {
+        r["ingest_status"]: r["count"]
+        for r in bridge(spark).groupBy("ingest_status").count().collect()
+    }
+    assert report["files_by_ingest_status"] == grouped
+
+
+@pytest.mark.parametrize("golden", ["file_ingest_status", "ocr_ingest_status"])
+def test_golden_ingest_statuses_are_known(golden):
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(REPO, "goldens", f"{golden}.parquet"))
+    statuses = set(table.column("ingest_status").to_pylist())
+    assert statuses and statuses <= set(schema.INGEST_STATUSES)
+
+
+def test_an_unlisted_ingest_status_fails_the_job(spark, tmp_path, monkeypatch):
+    """The job counts every file as well as each known status: a status
+    missing from schema.INGEST_STATUSES raises instead of vanishing."""
+    monkeypatch.setattr(
+        schema, "INGEST_STATUSES",
+        tuple(s for s in schema.INGEST_STATUSES if s != "skipped"),
+    )
+    with pytest.raises(RuntimeError, match="INGEST_STATUSES"):
+        _run_job(spark, str(tmp_path / "job"), chunks=1)
