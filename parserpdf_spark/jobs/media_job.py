@@ -2,10 +2,10 @@
 
 Scans a directory of real files, bridges embedded media payloads (PDF
 image XObjects — including scanned/``needs_ocr`` files' page images —
-and docx ``word/media`` parts) plus standalone image/audio/video files
+and docx ``word/media`` parts) plus standalone image and video files
 into the canonical (doc_id, media_ref, payload) shape, then decodes
-through the from-scratch codec fleet (BMP/JPEG/PNG/GIF/TIFF, WAV, AVI)
-into per-item feature rows.
+through the from-scratch codec fleet (BMP/JPEG/PNG/GIF/TIFF, AVI)
+into per-item feature rows.  Other files (audio included) yield no row.
 
 Cluster use::
 
@@ -17,13 +17,16 @@ Local smoke (this sandbox)::
     python parserpdf_spark/jobs/media_job.py \
         --input fixtures/files_corpus --output /tmp/media --cores 8
 
-Output: one parquet table of decode features (decode_ok per row —
-keep-with-status, a corrupt payload never kills the job) plus a JSON
-summary line on stdout.
+Output: one parquet table per modality, ``images/`` and ``video/``
+(plus ``image_ocr/`` with ``--ocr``), of decode features (decode_ok per
+row — keep-with-status, a corrupt payload never kills the job), and a
+JSON report line on stdout: ``{"images": {"rows", "decoded"}, "video":
+{"rows", "decoded"}[, "image_ocr": {"rows", "recognized"}]}``.  Each
+table's counts come from an Observation on its own write, so the report
+adds no Spark job: one job per written table.
 
 Scale shape: binaryFile scan splits per file across executors; the
-bridge and decode stages are narrow mapInPandas passes (zero shuffle);
-the only exchange is the final per-status count.
+bridge and decode stages are narrow mapInPandas passes (zero shuffle).
 """
 
 from __future__ import annotations
@@ -42,7 +45,6 @@ if _REPO_ROOT not in os.environ.get("PYTHONPATH", ""):
     ).rstrip(os.pathsep)
 
 _IMAGE_EXTS = (".bmp", ".jpg", ".jpeg", ".png", ".gif", ".tif", ".tiff")
-_AUDIO_EXTS = (".wav", ".flac")
 _VIDEO_EXTS = (".avi",)
 
 
@@ -72,6 +74,20 @@ def image_rows(files):
     return files_to_media(files).unionByName(_standalone(files, _IMAGE_EXTS))
 
 
+def _write_counted(df, dest, **counts):
+    """Write ``df`` to ``dest``; return its row count and ``counts``
+    (name → boolean column), observed on the write's own pass."""
+    from pyspark.sql import Observation, functions as F
+
+    obs = Observation()
+    df.observe(
+        obs,
+        F.count(F.lit(1)).alias("rows"),
+        *[F.count_if(cond).alias(name) for name, cond in counts.items()],
+    ).write.mode("overwrite").parquet(dest)
+    return obs.get
+
+
 def main(argv=None, spark=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
@@ -91,7 +107,6 @@ def main(argv=None, spark=None) -> int:
         from pyspark.sql import functions as F
 
         from parserpdf_spark.operators.multimodal import (
-            decode_audio_features_real,
             decode_features_real,
             frame_sample_real,
         )
@@ -102,29 +117,18 @@ def main(argv=None, spark=None) -> int:
         summary = {}
         for name, df in (
             ("images", decode_features_real(image_rows(files))),
-            ("audio", decode_audio_features_real(
-                _standalone(files, _AUDIO_EXTS))),
             ("video", frame_sample_real(_standalone(files, _VIDEO_EXTS))),
         ):
-            dest = os.path.join(args.output, name)
-            df.write.mode("overwrite").parquet(dest)
-            out = spark.read.parquet(dest)
-            summary[name] = {
-                "rows": out.count(),
-                "decoded": out.filter(F.col("decode_ok")).count(),
-            }
+            summary[name] = _write_counted(
+                df, os.path.join(args.output, name),
+                decoded=F.col("decode_ok"))
         if args.ocr:
             from parserpdf_spark.operators.multimodal import ocr_from_media
 
-            dest = os.path.join(args.output, "image_ocr")
-            ocr_from_media(image_rows(files)).write.mode(
-                "overwrite").parquet(dest)
-            out = spark.read.parquet(dest)
-            summary["image_ocr"] = {
-                "rows": out.count(),
-                "recognized": out.filter(
-                    F.col("ocr_status") == "ok").count(),
-            }
+            summary["image_ocr"] = _write_counted(
+                ocr_from_media(image_rows(files)),
+                os.path.join(args.output, "image_ocr"),
+                recognized=F.col("ocr_status") == "ok")
         print(json.dumps(summary))
         return 0
     finally:

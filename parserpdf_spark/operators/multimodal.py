@@ -173,8 +173,8 @@ def _bmp_rle8(data: bytes, w: int, h: int):
 
 def _attach_media(docs: DataFrame, ref_fmt: str, make_payload) -> DataFrame:
     """Shared deterministic-payload generator: one media row per doc,
-    payload = make_payload(doc_id) — the scaffolding all three real
-    modalities (BMP/WAV/AVI) use."""
+    payload = make_payload(doc_id) — the scaffolding the BMP, JPEG and
+    AVI payload attachers share."""
 
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -356,162 +356,6 @@ def ocr_from_media(media: DataFrame) -> DataFrame:
         run,
         schema="doc_id string, media_ref string, ocr_status string, "
                "ocr_text string",
-    )
-
-
-# ---------------------------------------------------------------------------
-# Real decode tier, audio: from-scratch WAV/PCM codec (stdlib + numpy)
-# ---------------------------------------------------------------------------
-
-def encode_wav(samples, sample_rate: int = 16000) -> bytes:
-    """1-D int16 array → mono 16-bit PCM RIFF/WAVE bytes."""
-    import struct
-
-    import numpy as np
-
-    arr = np.asarray(samples, dtype=np.int16)
-    if arr.ndim != 1:
-        raise ValueError("encode_wav expects a 1-D int16 array")
-    data = arr.tobytes()
-    fmt = struct.pack(
-        "<4sIHHIIHH", b"fmt ", 16, 1, 1, sample_rate,
-        sample_rate * 2, 2, 16,
-    )
-    body = fmt + struct.pack("<4sI", b"data", len(data)) + data
-    return struct.pack("<4sI4s", b"RIFF", 4 + len(body), b"WAVE") + body
-
-
-def decode_wav(payload: bytes):
-    """RIFF/WAVE bytes → (sample_rate, mono int16 array).
-
-    Mono/stereo 8/16-bit PCM and 32-bit IEEE float decode (stereo
-    downmixes to mono, other widths rescale to int16); the chunk walk
-    tolerates LIST/INFO etc.  Anything outside that subset raises
-    ValueError."""
-    import struct
-
-    import numpy as np
-
-    data = bytes(payload)
-    if len(data) < 12 or data[:4] != b"RIFF" or data[8:12] != b"WAVE":
-        raise ValueError("not a WAV (missing RIFF/WAVE header)")
-    pos = 12
-    rate = None
-    raw_data = None
-    fmt_info = None
-    while pos + 8 <= len(data):
-        cid, size = struct.unpack_from("<4sI", data, pos)
-        body = data[pos + 8 : pos + 8 + size]
-        if len(body) < size:
-            raise ValueError("truncated WAV chunk")
-        if cid == b"fmt ":
-            if size < 16:
-                raise ValueError("malformed fmt chunk")
-            audio_fmt, channels, rate, _, _, bits = struct.unpack_from(
-                "<HHIIHH", body, 0
-            )
-            if (audio_fmt not in (1, 3) or channels not in (1, 2)
-                    or rate <= 0
-                    or (audio_fmt == 1 and bits not in (8, 16))
-                    or (audio_fmt == 3 and bits != 32)):
-                raise ValueError(
-                    f"unsupported WAV ({audio_fmt=} {channels=} {bits=}) — "
-                    "mono/stereo 8/16-bit PCM or 32-bit float only"
-                )
-            fmt_info = (audio_fmt, channels, bits)
-        elif cid == b"data":
-            raw_data = body
-        pos += 8 + size + (size & 1)  # chunks are word-aligned
-    if rate is None or raw_data is None or fmt_info is None:
-        raise ValueError("WAV without fmt/data chunks")
-    audio_fmt, channels, bits = fmt_info
-    if audio_fmt == 3:  # IEEE float32 → int16 range
-        f = np.frombuffer(raw_data[: len(raw_data) & ~3], dtype="<f4")
-        samples = np.clip(f * 32767.0, -32768, 32767).astype(np.int16)
-    elif bits == 8:  # unsigned 8-bit → centered int16
-        u = np.frombuffer(raw_data, dtype=np.uint8)
-        samples = ((u.astype(np.int16) - 128) << 8)
-    else:
-        samples = np.frombuffer(raw_data[: len(raw_data) & ~1],
-                                dtype="<i2").copy()
-    if channels == 2:  # downmix to mono (mean of L/R)
-        samples = samples[: len(samples) & ~1].reshape(-1, 2)
-        samples = (samples.astype(np.int32).sum(axis=1) // 2).astype(
-            np.int16)
-    return rate, samples
-
-
-def attach_wav_payloads(docs: DataFrame, sample_rate: int = 16000) -> DataFrame:
-    """Deterministic REAL audio: one short mono PCM clip per doc,
-    samples seeded from doc_id (PCG64 noise) — byte-stable every run."""
-    import numpy as np
-
-    def make(nid: int) -> bytes:
-        rng = np.random.default_rng(nid + 10**9)
-        n = 800 + nid % 801  # 50-100 ms at 16 kHz
-        return encode_wav(
-            rng.integers(-20000, 20000, size=n, dtype=np.int16), sample_rate
-        )
-
-    return _attach_media(docs, "clip_{doc_id}.wav", make)
-
-
-def decode_audio_auto(payload: bytes):
-    """Magic-dispatched audio decode: RIFF/WAVE or FLAC →
-    (sample_rate, mono int16 array)."""
-    data = bytes(payload)
-    if data[:4] == b"RIFF":
-        return decode_wav(data)
-    if data[:4] == b"fLaC":
-        from parserpdf_spark.kernels.flac import decode_flac
-
-        return decode_flac(data)
-    raise ValueError("unrecognized audio magic (not WAV or FLAC)")
-
-
-def decode_audio_features_real(media: DataFrame) -> DataFrame:
-    """REAL audio decode + features: WAV or FLAC payloads → duration,
-    RMS, peak — keep-with-status per row, same Arrow-batched shape as
-    the image tier."""
-    import numpy as np  # noqa: F401 - used via array methods below
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "decode_ok": [],
-                   "sample_rate": [], "n_samples": [], "duration_millis": [],
-                   "rms_millis": [], "peak": []}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                out["doc_id"].append(doc_id)
-                out["media_ref"].append(ref)
-                try:
-                    rate, samples = decode_audio_auto(bytes(payload))
-                    x = samples.astype(np.float64) / 32768.0
-                except ValueError:
-                    out["decode_ok"].append(False)
-                    for k in ("sample_rate", "n_samples", "duration_millis",
-                              "rms_millis", "peak"):
-                        out[k].append(None)
-                    continue
-                out["decode_ok"].append(True)
-                out["sample_rate"].append(rate)
-                out["n_samples"].append(len(samples))
-                out["duration_millis"].append(len(samples) * 1000 // rate)
-                out["rms_millis"].append(
-                    int(float(np.sqrt((x * x).mean())) * 1000) if len(x)
-                    else 0
-                )
-                out["peak"].append(  # int32: np.abs overflows at int16 -32768
-                    int(np.abs(samples.astype(np.int32)).max())
-                    if len(x) else 0)
-            yield pd.DataFrame(out)
-
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, decode_ok boolean, "
-               "sample_rate int, n_samples int, duration_millis long, "
-               "rms_millis long, peak int",
     )
 
 

@@ -182,7 +182,7 @@ def test_pdf_parser_survives_delimiter_noise(prefix, noise):
     ),
 )
 def test_media_codecs_never_crash_uncontrolled(junk, mutations):
-    """Raw junk AND mutated-valid encodings through the BMP/WAV/AVI
+    """Raw junk AND mutated-valid encodings through the BMP and AVI
     decoders → ValueError only (the keep-with-status wrappers rely on
     that contract).  The mutation arm matters: it gets PAST the header
     checks into the chunk walkers, where raw junk never reaches."""
@@ -191,20 +191,16 @@ def test_media_codecs_never_crash_uncontrolled(junk, mutations):
     from parserpdf_spark.operators.multimodal import (
         decode_avi_frames,
         decode_bmp,
-        decode_wav,
         encode_avi_frames,
         encode_bmp,
-        encode_wav,
     )
 
     rng = np.random.default_rng(3)
     img = rng.integers(0, 256, size=(5, 7, 3), dtype=np.uint8)
-    clip = rng.integers(-100, 100, size=64, dtype=np.int16)
     frames = [rng.integers(0, 256, size=(4, 6, 3), dtype=np.uint8)
               for _ in range(3)]
     valids = [
         (decode_bmp, encode_bmp(img)),
-        (decode_wav, encode_wav(clip)),
         (decode_avi_frames, encode_avi_frames(frames, 6, 4)),
     ]
     for fn, valid in valids:
@@ -330,49 +326,10 @@ def test_bmp_variants_32bit_palette_rle8():
     assert np.array_equal(out, pal[idx2])
 
 
-def test_wav_variants_stereo_8bit_float():
-    """WAV breadth: stereo downmix, unsigned 8-bit rescale, IEEE
-    float32 conversion — expectations computed independently."""
+def test_bmp_rle_palette_index_out_of_range_raises():
+    """An RLE8 run writing an out-of-range palette index must raise
+    ValueError (not IndexError)."""
     import struct
-
-    import numpy as np
-
-    from parserpdf_spark.operators.multimodal import decode_wav
-
-    rng = np.random.default_rng(52)
-
-    def wav(fmt, ch, bits, payload, rate=8000):
-        fmtc = struct.pack("<HHIIHH", fmt, ch, rate,
-                           rate * ch * bits // 8, ch * bits // 8, bits)
-        return (b"RIFF" + struct.pack("<I", 36 + len(payload)) + b"WAVE"
-                + b"fmt " + struct.pack("<I", 16) + fmtc
-                + b"data" + struct.pack("<I", len(payload)) + payload)
-
-    st = rng.integers(-1000, 1000, size=(32, 2), dtype=np.int16)
-    _, s = decode_wav(wav(1, 2, 16, st.astype("<i2").tobytes()))
-    assert np.array_equal(
-        s, (st.astype(np.int32).sum(axis=1) // 2).astype(np.int16))
-
-    u8 = rng.integers(0, 256, size=40, dtype=np.uint8)
-    _, s = decode_wav(wav(1, 1, 8, u8.tobytes()))
-    assert np.array_equal(s, (u8.astype(np.int16) - 128) << 8)
-
-    f32 = (rng.random(24).astype("<f4") - 0.5)
-    _, s = decode_wav(wav(3, 1, 32, f32.tobytes()))
-    assert np.array_equal(
-        s, np.clip(f32 * 32767.0, -32768, 32767).astype(np.int16))
-
-    with pytest.raises(ValueError, match="unsupported WAV"):
-        decode_wav(wav(1, 4, 16, bytes(64)))  # 4-channel outside subset
-
-
-def test_bmp_rle_palette_bounds_and_audio_peak_overflow():
-    """Review findings: an RLE8 run writing an out-of-range palette
-    index must raise ValueError (not IndexError), and the audio peak
-    must survive a full-scale-negative int16 sample."""
-    import struct
-
-    import numpy as np
 
     from parserpdf_spark.operators.multimodal import decode_bmp
 
@@ -384,6 +341,3 @@ def test_bmp_rle_palette_bounds_and_audio_peak_overflow():
                        len(rle), 0, 0, 16, 0)
     with pytest.raises(ValueError, match="palette"):
         decode_bmp(hdr + info + paltab + rle)
-
-    s = np.array([-32768, 5], dtype=np.int16)
-    assert int(np.abs(s.astype(np.int32)).max()) == 32768

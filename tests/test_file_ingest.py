@@ -1244,9 +1244,11 @@ def test_docx_blank_paragraph_does_not_split_list():
 
 def test_media_job_end_to_end(spark, tmp_path):
     """The media-pipeline spark-submit entry: fixture corpus + standalone
-    media files → per-modality feature parquet with keep-with-status."""
+    media files → per-modality feature parquet with keep-with-status.
+    A standalone .wav is no modality: it yields no row and no table."""
     import json
     import shutil
+    import struct
     from contextlib import redirect_stdout
     import io as _io
 
@@ -1254,10 +1256,7 @@ def test_media_job_end_to_end(spark, tmp_path):
 
     from parserpdf_spark.jobs.media_job import main
     from parserpdf_spark.kernels.png import encode_png
-    from parserpdf_spark.operators.multimodal import (
-        encode_avi_frames,
-        encode_wav,
-    )
+    from parserpdf_spark.operators.multimodal import encode_avi_frames
 
     src = tmp_path / "in"
     src.mkdir()
@@ -1266,8 +1265,11 @@ def test_media_job_end_to_end(spark, tmp_path):
     rng = np.random.default_rng(3)
     (src / "photo_1.png").write_bytes(
         encode_png(rng.integers(0, 256, (8, 9, 3), dtype=np.uint8)))
+    pcm = rng.integers(-99, 99, 64, dtype=np.int16).tobytes()
     (src / "clip_1.wav").write_bytes(
-        encode_wav(rng.integers(-99, 99, 64, dtype=np.int16)))
+        b"RIFF" + struct.pack("<I", 36 + len(pcm)) + b"WAVE"
+        + b"fmt " + struct.pack("<IHHIIHH", 16, 1, 1, 16000, 32000, 2, 16)
+        + b"data" + struct.pack("<I", len(pcm)) + pcm)
     (src / "vid_1.avi").write_bytes(encode_avi_frames(
         [rng.integers(0, 256, (4, 6, 3), dtype=np.uint8)
          for _ in range(3)], 6, 4))
@@ -1283,7 +1285,7 @@ def test_media_job_end_to_end(spark, tmp_path):
     # standalone png decoded; the broken jpg is a decode_ok=false row
     assert summary["images"]["rows"] == 5
     assert summary["images"]["decoded"] == 4
-    assert summary["audio"] == {"rows": 1, "decoded": 1}
+    assert set(summary) == {"images", "video"}
     assert summary["video"]["rows"] == 2 and summary["video"]["decoded"] == 2
 
 

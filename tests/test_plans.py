@@ -293,3 +293,56 @@ def test_operators_unpersist_what_they_persist():
                 for c in found if c.func.attr in ("persist", "cache")
             ]
     assert offenders == []
+
+
+def test_every_engine_module_is_reached_from_an_entry_point():
+    """Every module under parserpdf_spark/ is imported, directly or
+    through other modules (function-local imports included), from an
+    entry point: the driver contract, the benches, perfbench, tools, the
+    jobs, streaming, or the worker daemon ``session.get_spark`` names in
+    ``spark.python.daemon.module``.  A module that only its own tests
+    import is a tier no run uses."""
+    import ast
+    import pathlib
+
+    repo = pathlib.Path(__file__).resolve().parents[1]
+    pkg = repo / "parserpdf_spark"
+
+    def module_of(path):
+        parts = list(path.relative_to(repo).with_suffix("").parts)
+        return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
+
+    def imported(path, module):
+        for node in ast.walk(ast.parse(path.read_text())):
+            if isinstance(node, ast.Import):
+                yield from (alias.name for alias in node.names)
+            elif isinstance(node, ast.ImportFrom):
+                base = node.module or ""
+                if node.level:
+                    parts = module.split(".")
+                    if path.name != "__init__.py":
+                        parts = parts[:-1]
+                    parts = parts[: len(parts) - node.level + 1]
+                    base = ".".join(parts + ([node.module] if node.module else []))
+                yield base
+                yield from (f"{base}.{alias.name}" for alias in node.names)
+
+    modules = {module_of(p): p for p in pkg.rglob("*.py")}
+    roots = [
+        repo / "__spark_entry__.py", repo / "bench.py", repo / "bench_extra.py",
+        *(repo / "perfbench").glob("*.py"), *(repo / "tools").glob("*.py"),
+        *(pkg / "jobs").glob("*.py"), *(pkg / "streaming").glob("*.py"),
+        pkg / "_daemon.py",
+    ]
+    reached = {module_of(p) for p in roots}
+    todo = [(p, module_of(p)) for p in roots]
+    while todo:
+        path, module = todo.pop()
+        for name in imported(path, module):
+            parts = name.split(".")
+            for i in range(1, len(parts) + 1):
+                prefix = ".".join(parts[:i])
+                if prefix in modules and prefix not in reached:
+                    reached.add(prefix)
+                    todo.append((modules[prefix], prefix))
+    assert sorted(set(modules) - reached) == []

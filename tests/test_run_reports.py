@@ -247,3 +247,43 @@ def test_an_unlisted_ingest_status_fails_the_job(spark, tmp_path, monkeypatch):
     )
     with pytest.raises(RuntimeError, match="INGEST_STATUSES"):
         _run_job(spark, str(tmp_path / "job"), chunks=1)
+
+
+@pytest.mark.parametrize("flags, tables", [
+    ((), ("images", "video")),
+    (("--ocr",), ("images", "video", "image_ocr")),
+], ids=["plain", "ocr"])
+def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
+    """media_job counts each table on its own write: one Spark job per
+    written table, and the counts equal a re-read of the table."""
+    import numpy as np
+
+    from parserpdf_spark.jobs.media_job import main as media_main
+    from parserpdf_spark.operators.multimodal import encode_avi_frames
+
+    src = tmp_path / "in"
+    src.mkdir()
+    for name in ("doc_31.pdf", "scanned_3.pdf", "doc_1.docx"):
+        shutil.copy(os.path.join(FIXTURES, name), src)
+    rng = np.random.default_rng(3)
+    (src / "vid_1.avi").write_bytes(encode_avi_frames(
+        [rng.integers(0, 256, (4, 6, 3), dtype=np.uint8) for _ in range(3)],
+        6, 4))
+    (src / "broken_1.jpg").write_bytes(b"\xff\xd8 truncated")
+    out = str(tmp_path / "media")
+
+    before = _job_ids(spark)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert media_main(["--input", str(src), "--output", out, *flags],
+                          spark=spark) == 0
+    assert len(_job_ids(spark) - before) == len(tables)
+
+    report = json.loads(buf.getvalue().strip().splitlines()[-1])
+    assert tuple(report) == tables
+    for table in tables:
+        df = spark.read.parquet(os.path.join(out, table))
+        assert report[table]["rows"] == df.count()
+        key, cond = (("recognized", F.col("ocr_status") == "ok")
+                     if table == "image_ocr" else ("decoded", F.col("decode_ok")))
+        assert report[table][key] == df.filter(cond).count()

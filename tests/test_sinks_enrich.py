@@ -1,16 +1,10 @@
-"""Export sinks (K1/K2 file layout) and the stubbed enrichment stage
-(M4) + provider validation (C5)."""
+"""Export sinks: the K1 Markdown and K2 image file layouts, and the
+json/html span renderings."""
 
 import os
 
-import pytest
 from pyspark.sql import functions as F
 
-from parserpdf_spark.operators.enrich import (
-    call_llm_real,
-    enrich_spans,
-    validate_provider,
-)
 from parserpdf_spark.operators.extract import extract_docs
 from parserpdf_spark.operators.sinks import export_markdown_files
 from parserpdf_spark.sources.synth import synth_docs_df
@@ -92,118 +86,3 @@ def test_render_html_structure(spark, sf_small):
     assert "<img src=" in html["2"]  # mixed doc carries images
     assert "&" not in html["0"].replace("&amp;", "").replace("&lt;", "").replace("&gt;", "")
 
-
-def test_enrichment_stage(spark, sf_small):
-    docs = synth_docs_df(spark, sf_small).limit(30)
-    extracted, _ = extract_docs(docs)
-    enriched = enrich_spans(extracted)
-    rows = enriched.collect()
-    assert rows and all(r["kind"] in ("heading", "caption") for r in rows)
-    for r in rows:
-        toks = r["text"].split()
-        assert r["enrichment"] == f"[{toks[0]}..{toks[-1]}|{len(toks)}w]"
-
-
-def test_llm_client_batches_and_preserves_order():
-    from parserpdf_spark.operators.enrich import BatchedLLMClient
-
-    seen_batches = []
-
-    def transport(batch):
-        seen_batches.append(len(batch))
-        return [f"r:{p}" for p in batch]
-
-    client = BatchedLLMClient(transport=transport, batch_size=4, max_concurrency=3)
-    prompts = [f"p{i}" for i in range(11)]
-    assert client.complete_many(prompts) == [f"r:p{i}" for i in range(11)]
-    assert sorted(seen_batches) == [3, 4, 4]  # 11 → 4+4+3 micro-batches
-    assert client.complete_many([]) == []
-
-
-def test_llm_client_retries_transient_then_raises():
-    from parserpdf_spark.operators.enrich import BatchedLLMClient, TransientLLMError
-
-    calls = {"n": 0}
-
-    def flaky(batch):
-        calls["n"] += 1
-        if calls["n"] <= 2:
-            raise TransientLLMError("429")
-        return list(batch)
-
-    sleeps = []
-    client = BatchedLLMClient(
-        transport=flaky, max_retries=3, backoff_base=0.01,
-        sleep=sleeps.append,
-    )
-    assert client.complete_many(["a"]) == ["a"]
-    assert calls["n"] == 3
-    assert sleeps[:2] == [0.01, 0.02]  # exponential backoff
-
-    def always_429(batch):
-        raise TransientLLMError("429")
-
-    dead = BatchedLLMClient(
-        transport=always_429, max_retries=2, sleep=lambda s: None
-    )
-    with pytest.raises(TransientLLMError):
-        dead.complete_many(["a"])
-
-
-def test_llm_client_bounds_concurrency_and_rate():
-    import threading
-    import time
-
-    from parserpdf_spark.operators.enrich import BatchedLLMClient
-
-    state = {"inflight": 0, "peak": 0}
-    lock = threading.Lock()
-
-    def transport(batch):
-        with lock:
-            state["inflight"] += 1
-            state["peak"] = max(state["peak"], state["inflight"])
-        time.sleep(0.02)
-        with lock:
-            state["inflight"] -= 1
-        return list(batch)
-
-    client = BatchedLLMClient(transport=transport, batch_size=1, max_concurrency=2)
-    client.complete_many([f"p{i}" for i in range(8)])
-    assert state["peak"] <= 2
-
-    # token bucket on a fake clock: burst 2 then one token per second
-    from parserpdf_spark.operators.enrich import _TokenBucket
-
-    t = {"now": 0.0}
-    waits = []
-
-    def fake_sleep(s):
-        waits.append(round(s, 3))
-        t["now"] += s
-
-    bucket = _TokenBucket(rate=1.0, burst=2, clock=lambda: t["now"], sleep=fake_sleep)
-    for _ in range(4):
-        bucket.acquire()
-    assert waits == [1.0, 1.0]  # first 2 free (burst), then 1s apart
-
-
-def test_llm_client_rejects_response_count_mismatch():
-    from parserpdf_spark.operators.enrich import BatchedLLMClient
-
-    client = BatchedLLMClient(transport=lambda b: ["only-one"], batch_size=4)
-    with pytest.raises(ValueError, match="responses"):
-        client.complete_many(["a", "b"])
-
-
-def test_real_llm_is_stubbed():
-    with pytest.raises(NotImplementedError, match="stub"):
-        call_llm_real("x", "openai")
-
-
-def test_provider_validation():
-    assert validate_provider(" OpenAI ") == ("openai", None)
-    assert validate_provider("hf") == ("huggingface", None)
-    canonical, suggestion = validate_provider("anthropc")
-    assert canonical is None and suggestion == "anthropic"
-    assert validate_provider("zzz") == (None, None)

@@ -1072,58 +1072,6 @@ def test_real_bmp_decode_features_end_to_end(spark, sf_med):
     assert [r["doc_id"] for r in bad.collect()] == ["3"]
 
 
-def test_wav_codec_roundtrip_and_real_audio_features(spark, sf_med):
-    """Real audio decode: WAV round-trips bit-exact (incl. odd-size
-    word alignment and chunk walking past an INFO chunk); Spark features
-    match a locally recomputed RMS; corrupt rows keep their status."""
-    import struct
-
-    import numpy as np
-    import pytest as _pytest
-    from pyspark.sql import functions as F
-
-    from parserpdf_spark.operators.multimodal import (
-        attach_wav_payloads,
-        decode_audio_features_real,
-        decode_wav,
-        encode_wav,
-    )
-
-    rng = np.random.default_rng(11)
-    clip = rng.integers(-32768, 32768, size=777, dtype=np.int16)
-    rate, back = decode_wav(encode_wav(clip, 22050))
-    assert rate == 22050 and (back == clip).all()
-    # an extra LIST chunk before data must be walked over
-    raw = encode_wav(clip, 22050)
-    info = struct.pack("<4sI", b"LIST", 5) + b"INFOx" + b"\x00"  # odd+pad
-    spliced = raw[:12] + info + raw[12:]
-    spliced = spliced[:4] + struct.pack("<I", len(spliced) - 8) + spliced[8:]
-    rate2, back2 = decode_wav(spliced)
-    assert rate2 == 22050 and (back2 == clip).all()
-    with _pytest.raises(ValueError, match="RIFF"):
-        decode_wav(b"not audio")
-
-    docs = spark.read.parquet(f"{sf_med}/documents.parquet").select("doc_id")
-    media = attach_wav_payloads(docs)
-    feats = decode_audio_features_real(media).persist()
-    assert feats.filter(~F.col("decode_ok")).count() == 0
-    row = feats.filter(F.col("doc_id") == "9").collect()[0]
-    rng9 = np.random.default_rng(9 + 10**9)
-    clip9 = rng9.integers(-20000, 20000, size=800 + 9 % 801, dtype=np.int16)
-    x = clip9.astype(np.float64) / 32768.0
-    assert row["n_samples"] == len(clip9)
-    assert row["rms_millis"] == int(float(np.sqrt((x * x).mean())) * 1000)
-    assert row["peak"] == int(np.abs(clip9).max())
-    feats.unpersist()
-
-    corrupt = media.withColumn(
-        "payload",
-        F.when(F.col("doc_id") == "5", F.lit(b"zz")).otherwise(F.col("payload")),
-    )
-    bad = decode_audio_features_real(corrupt).filter(~F.col("decode_ok"))
-    assert [r["doc_id"] for r in bad.collect()] == ["5"]
-
-
 def test_avi_codec_and_real_frame_sampling(spark, sf_med):
     """Real video frames: AVI round-trips pixel-exact; Spark frame
     sampling emits every 2nd frame with genuine brightness (recomputed
