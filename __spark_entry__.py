@@ -320,7 +320,9 @@ def q_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parserpdf_spark.operators.curation import pack_shards
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    return pack_shards(docs, shard_tokens=10_000, stratum_col="lang")
+    return pack_shards(docs, shard_tokens=10_000).select(
+        "lang", "doc_id", "n_tokens", "shard_id"
+    )
 
 
 def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -25,6 +25,13 @@ Every stage is deterministic (hash-threshold sampling, min-id dedup,
 doc_id-ordered packing), so re-running over the same input reproduces
 the same shards byte-for-byte — the property training-data pipelines
 are audited on.
+
+The printed JSON report comes from the shard write's own pass, with no
+persist and no count job: ``funnel`` (1_raw → 2_quality → 3_dedup →
+4_sample) is an Observation on the flagged curation plan;
+``n_docs_written``, ``total_tokens`` and, with ``--eval``,
+``funnel.5_decontaminated`` are an Observation on the write; and
+``n_shards`` lists the ``lang=*/shard_id=*`` directories it created.
 """
 
 from __future__ import annotations
@@ -47,6 +54,14 @@ def _read_docs(spark, path: str):
     if os.path.exists(os.path.join(path, "documents.parquet")):
         return spark.read.parquet(os.path.join(path, "documents.parquet"))
     return spark.read.parquet(path)
+
+
+def _count_shards(spark, output: str) -> int:
+    """The ``lang=*/shard_id=*`` directories under ``output``: a
+    file-system listing (any Hadoop file system), not a Spark job."""
+    Path = spark._jvm.org.apache.hadoop.fs.Path
+    fs = Path(output).getFileSystem(spark._jsc.hadoopConfiguration())
+    return len(fs.globStatus(Path(output, "lang=*/shard_id=*")) or [])
 
 
 def main(argv=None, spark=None) -> int:
@@ -80,9 +95,10 @@ def main(argv=None, spark=None) -> int:
                 SparkSession.builder.appName("parserpdf_curate_job").getOrCreate()
             )
 
-    from pyspark.sql import functions as F
+    from pyspark.sql import Observation, functions as F
 
-    from parserpdf_spark.operators.curation import curate, pack_shards
+    from parserpdf_spark.operators.curation import flag_stages, funnel_counts
+    from parserpdf_spark.operators.curation import pack_shards
     from parserpdf_spark.operators.dedup import ngram_contamination
 
     fractions = {}
@@ -91,43 +107,39 @@ def main(argv=None, spark=None) -> int:
         fractions[lang] = float(frac)
 
     docs = _read_docs(spark, args.input).select("doc_id", "text", "lang")
-    curated, funnel = curate(
-        docs, fractions, key_col="lang", text_col="text",
-        default_fraction=args.default_fraction,
-    )
-    report = {
-        "funnel": {r["stage"]: r["n_docs"] for r in funnel.collect()},
-    }
-
+    flagged = flag_stages(docs, fractions, args.default_fraction)
+    funnel = Observation()
+    curated = flagged.observe(funnel, *funnel_counts()).filter("sampled")
     if args.eval is not None:
         eval_docs = _read_docs(spark, args.eval).select("doc_id", "text")
-        flagged = ngram_contamination(curated, eval_docs, n=8)
-        clean_ids = flagged.filter(~F.col("contaminated")).select("doc_id")
+        checked = ngram_contamination(curated, eval_docs, n=8)
+        clean_ids = checked.filter(~F.col("contaminated")).select("doc_id")
         curated = curated.join(clean_ids, "doc_id", "left_semi")
 
-    packed = pack_shards(
-        curated, shard_tokens=args.shard_tokens, stratum_col="lang"
+    # the write's own pass fills both Observations: no count, no re-read
+    written = Observation()
+    pack_shards(curated, shard_tokens=args.shard_tokens).select(
+        "lang", "shard_id", "doc_id", "n_tokens", "text"
+    ).observe(
+        written,
+        F.count(F.lit(1)).alias("rows"),
+        F.sum("n_tokens").alias("tokens"),
+    ).write.mode("overwrite").partitionBy("lang", "shard_id").parquet(
+        args.output
     )
-    # persist the FINAL frame: the whole quality→dedup→sample→decontam→
-    # pack lineage materializes once and serves the write + every report
-    # aggregate (curate()'s internal caches are freed before it returns)
-    shards = packed.join(
-        docs.select("doc_id", "text"), "doc_id"
-    ).select("lang", "shard_id", "doc_id", "n_tokens", "text").persist()
-    n_written = shards.count()
+    rows = written.get["rows"]
+    # an empty write lets AQE swap the emptied stages, and the funnel's
+    # Observation node with them, for an empty relation: only then does
+    # the funnel cost an aggregate of its own
+    report = {
+        "funnel": funnel.get if rows
+        else flagged.agg(*funnel_counts()).first().asDict()
+    }
     if args.eval is not None:
-        report["funnel"]["5_decontaminated"] = n_written
-    if n_written:
-        shards.write.mode("overwrite").partitionBy("lang", "shard_id").parquet(
-            args.output
-        )
-    report["n_docs_written"] = n_written
-    report["n_shards"] = shards.select("lang", "shard_id").distinct().count()
-    report["total_tokens"] = (
-        shards.agg(F.sum("n_tokens").cast("bigint").alias("t"))
-        .collect()[0]["t"] or 0
-    )
-    shards.unpersist()
+        report["funnel"]["5_decontaminated"] = rows
+    report["n_docs_written"] = rows
+    report["n_shards"] = _count_shards(spark, args.output)
+    report["total_tokens"] = written.get["tokens"] or 0
     print(json.dumps(report))
     if owns_session:
         spark.stop()

@@ -4,121 +4,86 @@ shape a training-data pipeline runs over extracted text (each stage is
 individually gated elsewhere; this operator chains them and reports the
 funnel counts, the number every curation run is judged by).
 
-All three stages are deterministic (no RNG, no partitioning
-sensitivity), so the curated doc set is reproducible run-to-run and
-engine-to-engine:
+One lazy plan of row flags, each implying the one before; all are
+deterministic (no RNG, no partitioning sensitivity), so the curated doc
+set is reproducible run-to-run and engine-to-engine:
 
-- quality: the Gopher-rule ``keep`` gate (textops.gopher_quality)
-- dedup: keep the min-doc_id copy per distinct text (dedup family)
-- sample: md5 hash-threshold per stratum (dedup.stratified_sample)
+- ``keep``: the Gopher-rule gate (textops.gopher_keep)
+- ``canonical``: the min-doc_id kept copy per distinct text (one
+  window, dedup.keep_min_copy)
+- ``sampled``: md5 hash-threshold per stratum (dedup.sample_keep)
+
+The stage counts are one aggregate over the flags (or an Observation
+on the plan the caller runs), never a second pass over the docs.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from parserpdf_spark.operators.dedup import stratified_sample
-from parserpdf_spark.operators.textops import gopher_quality
+from parserpdf_spark.operators.dedup import keep_min_copy, sample_keep
+from parserpdf_spark.operators.textops import gopher_keep
+
+# funnel stage → the flag its rows carry (raw counts every row)
+STAGES = {"1_raw": None, "2_quality": "keep", "3_dedup": "canonical",
+          "4_sample": "sampled"}
+
+
+def flag_stages(
+    docs: DataFrame, fractions: dict[str, float], default_fraction: float = 0.0
+) -> DataFrame:
+    """(doc_id, text, lang, …) docs plus the three stage flags."""
+    return (
+        docs.withColumn("keep", gopher_keep())
+        .withColumn("canonical", keep_min_copy(F.col("keep")))
+        .withColumn("sampled",
+                    F.col("canonical") & sample_keep(fractions, default_fraction))
+    )
+
+
+def funnel_counts() -> list:
+    """Per-stage counts over :func:`flag_stages` rows, named by stage."""
+    return [(F.count_if(flag) if flag else F.count(F.lit(1))).alias(stage)
+            for stage, flag in STAGES.items()]
 
 
 def curate(
     docs: DataFrame,
     fractions: dict[str, float],
-    key_col: str = "lang",
-    text_col: str = "text",
     default_fraction: float = 0.0,
 ) -> tuple[DataFrame, DataFrame]:
     """(curated_docs, funnel) — curated rows plus per-stage counts.
 
     ``funnel`` is (stage string, n_docs bigint) for
     raw → quality → dedup → sample, each stage applied to the previous
-    stage's survivors.  The two heavy stages are persisted while the
-    four counts materialize, so the Gopher gate and the dedup semi-joins
-    each execute exactly ONCE per curate() call (not once per count);
-    both caches are freed before returning.  The returned curated
-    DataFrame is an ordinary lazy plan — persist it at the call site if
-    it feeds multiple downstream actions.
+    stage's survivors: one aggregate, so collecting it reads ``docs``
+    once.  Both are lazy plans.
     """
-    from pyspark import StorageLevel
-
-    quality_ids = gopher_quality(docs, text_col=text_col).filter(
-        F.col("keep")
-    ).select("doc_id")
-    quality = docs.join(quality_ids, "doc_id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    canonical = (
-        quality.groupBy(F.md5(F.col(text_col)).alias("_h"))
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-    deduped = quality.join(canonical, "doc_id", "left_semi").persist(
-        StorageLevel.MEMORY_AND_DISK
-    )
-
-    sampled = stratified_sample(
-        deduped, fractions, key_col=key_col, id_col="doc_id",
-        default=default_fraction,
-    )
-
-    spark = docs.sparkSession
-    # count order matters: quality.count() populates the quality cache,
-    # so deduped.count() computes canonical FROM that cache (the gopher
-    # lineage runs once); sampled is a filter over the deduped cache
-    counts = [
-        ("1_raw", docs.count()),
-        ("2_quality", quality.count()),
-        ("3_dedup", deduped.count()),
-        ("4_sample", sampled.count()),
-    ]
-    quality.unpersist()
-    deduped.unpersist()
-    funnel = spark.createDataFrame(counts, "stage string, n_docs long")
-    return sampled, funnel
+    flagged = flag_stages(docs, fractions, default_fraction)
+    funnel = flagged.agg(*funnel_counts()).select(F.stack(
+        F.lit(len(STAGES)), *(c for s in STAGES for c in (F.lit(s), F.col(s)))
+    ).alias("stage", "n_docs"))
+    return flagged.filter("sampled").drop("keep", "canonical", "sampled"), funnel
 
 
-def pack_shards(
-    docs: DataFrame,
-    shard_tokens: int,
-    *,
-    stratum_col: str | None,
-    text_col: str = "text",
-    order_col: str = "doc_id",
-) -> DataFrame:
-    """Assign docs to fixed-budget training shards: running token total
-    in a deterministic order, shard = floor(cumulative_before / budget).
+def pack_shards(docs: DataFrame, shard_tokens: int) -> DataFrame:
+    """Assign docs to fixed-budget training shards: ``docs`` plus
+    ``n_tokens`` and ``shard_id`` = floor(tokens before the doc /
+    budget), the running total in doc_id order within each ``lang``.
 
-    ``stratum_col`` is required (pass ``None`` explicitly for the global
-    form): with a stratum (e.g. language, domain, date bucket) each
-    stratum packs independently under
-    ``Window.partitionBy(stratum).orderBy(order)`` — strata sort in
-    parallel across the cluster and no task ever sees the whole corpus.
-    ``stratum_col=None`` is the tiny-corpus special case: a single
-    global ordering window, which Spark executes as a one-task
-    single-partition sort — correct, but deliberately opt-in because it
-    cannot scale.
-
-    The order column makes packing reproducible (training-data shards
-    must be stable across reruns); a doc larger than the budget still
-    lands in exactly one shard.
+    Each lang packs under its own ``partitionBy("lang")`` window, so
+    strata sort in parallel and no task ever sees the whole corpus.
+    The order makes packing reproducible (training-data shards must be
+    stable across reruns); a doc larger than the budget still lands in
+    exactly one shard.
     """
-    toks = F.size(
-        F.filter(F.split(F.col(text_col), " "), lambda x: x != F.lit(""))
+    toks = F.size(F.filter(F.split("text", " "), lambda x: x != F.lit("")))
+    w = W.partitionBy("lang").orderBy("doc_id").rowsBetween(
+        W.unboundedPreceding, -1
     )
-    if stratum_col is None:
-        w = W.orderBy(F.col(order_col).asc())
-        lead_cols = []
-    else:
-        w = W.partitionBy(stratum_col).orderBy(F.col(order_col).asc())
-        lead_cols = [F.col(stratum_col).alias(stratum_col)]
-    w = w.rowsBetween(W.unboundedPreceding, -1)
-    before = F.coalesce(
-        F.sum(toks).over(w), F.lit(0).cast("bigint")
-    )
+    before = F.coalesce(F.sum(toks).over(w), F.lit(0).cast("bigint"))
     return docs.select(
-        *lead_cols,
-        F.col(order_col).alias("doc_id"),
+        "*",
         toks.cast("bigint").alias("n_tokens"),
         F.floor(before / F.lit(int(shard_tokens))).cast("int").alias("shard_id"),
     )

@@ -940,15 +940,9 @@ def ngram_contamination(
     )
 
 
-def stratified_sample(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    key_col: str = "lang",
-    id_col: str = "doc_id",
-    default: float = 0.0,
-) -> DataFrame:
-    """Deterministic stratified sampling for corpus balancing: keep a
-    row iff ``md5_60(id) % 10^6 < fraction(key) * 10^6``.
+def sample_keep(fractions: dict[str, float], default: float = 0.0):
+    """Deterministic stratified sampling as a Column: true iff
+    ``md5_60(doc_id) % 10^6 < fraction(lang) * 10^6``.
 
     No RNG state, no seed plumbing: the same row is kept in every run,
     on every cluster, in every engine (the md5 bucket is the
@@ -962,12 +956,19 @@ def stratified_sample(
                 (F.lit(k), F.lit(float(v))) for k, v in sorted(fractions.items())
             )
         )
-        frac = F.coalesce(frac_map[F.col(key_col)], F.lit(float(default)))
+        frac = F.coalesce(frac_map[F.col("lang")], F.lit(float(default)))
     else:  # no per-key overrides: every stratum keeps the default
         # (an argless create_map() is map<void,void> — unindexable)
         frac = F.lit(float(default))
-    bucket = md5_60(F.col(id_col).cast("string")) % 1_000_000
-    return docs.filter(bucket < (frac * 1_000_000).cast("bigint"))
+    bucket = md5_60(F.col("doc_id").cast("string")) % 1_000_000
+    return bucket < (frac * 1_000_000).cast("bigint")
+
+
+def stratified_sample(
+    docs: DataFrame, fractions: dict[str, float], default: float = 0.0
+) -> DataFrame:
+    """Corpus balancing: the rows :func:`sample_keep` keeps."""
+    return docs.filter(sample_keep(fractions, default))
 
 
 def paragraph_dedup(
@@ -999,11 +1000,14 @@ def paragraph_dedup(
     )
 
 
-def dedup_exact_keep_min(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def keep_min_copy(among):
+    """The exact-dedup keep-min rule as a Column: true on the min-doc_id
+    row among the ``among`` rows sharing an ``md5(text)`` (one window)."""
+    first = F.min(F.when(among, F.col("doc_id"))).over(W.partitionBy(F.md5("text")))
+    return among & (F.col("doc_id") == first)
+
+
+def dedup_exact_keep_min(docs: DataFrame) -> DataFrame:
     """Exact dedup: keep the min-id doc per distinct content hash."""
-    w = W.partitionBy(F.md5(F.col(text_col))).orderBy(F.col("doc_id"))
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") == 1)
-        .drop("rn")
-    )
+    keep = keep_min_copy(F.lit(True))
+    return docs.withColumn("_keep", keep).filter("_keep").drop("_keep")

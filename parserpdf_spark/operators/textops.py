@@ -114,7 +114,7 @@ def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def _gopher(text):
     """Gopher-rule-style quality signals (the published corpus-filter
     family: mean word length, duplicate-n-gram fraction, symbol and
     numeric ratios) — all JVM-side array expressions, zero UDF.
@@ -123,8 +123,8 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
       n_words, mean_word_len, frac_dup_2grams (1 − distinct/total
       bigrams — the repetition signal), frac_numeric_tokens,
       frac_long_tokens (len > 10), keep (the gate: 3 ≤ mean_word_len
-      ≤ 12 AND frac_dup_2grams < 0.5)."""
-    toks = _tokens(F.col(text_col))
+      ≤ 12 AND frac_dup_2grams < 0.5) — as (signal columns, keep)."""
+    toks = _tokens(text)
     n = F.size(toks)
     mean_len = F.when(
         n > 0,
@@ -156,17 +156,24 @@ def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
     ).otherwise(F.lit(0.0))
     mean_r = F.round(mean_len, 6)
     dup_r = F.round(frac_dup, 6)
-    return docs.select(
-        "doc_id",
+    return [
         n.alias("n_words"),
         mean_r.alias("mean_word_len"),
         dup_r.alias("frac_dup_2grams"),
         F.round(frac_numeric, 6).alias("frac_numeric_tokens"),
         F.round(frac_long, 6).alias("frac_long_tokens"),
-        (
-            (mean_r >= 3.0) & (mean_r <= 12.0) & (dup_r < 0.5)
-        ).alias("keep"),
-    )
+    ], (mean_r >= 3.0) & (mean_r <= 12.0) & (dup_r < 0.5)
+
+
+def gopher_keep(text_col: str = "text"):
+    """The Gopher gate as a Column (the one definition of the rule)."""
+    return _gopher(F.col(text_col))[1]
+
+
+def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
+    """(doc_id, the :func:`_gopher` signals, keep)."""
+    signals, keep = _gopher(F.col(text_col))
+    return docs.select("doc_id", *signals, keep.alias("keep"))
 
 
 # ---------------------------------------------------------------------------

@@ -45,3 +45,23 @@ def budgets():
             yield
 
     return at
+
+
+@pytest.fixture(scope="session")
+def planted_sf(tmp_path_factory):
+    """An sf dir whose documents.parquet is sf0.01 plus 60 exact copies
+    (the first 60 docs, doc_id + 100000) and 25 Gopher rejects (20 docs
+    of "x x x x x x", plus 5 copies): every curation stage drops rows."""
+    import pandas as pd
+
+    src = pd.read_parquet(f"{SF_MED}/documents.parquet")
+    copies = src.head(60).assign(doc_id=src.doc_id.head(60) + 100000)
+    junk = src.head(20).assign(
+        doc_id=range(200000, 200020), text="x x x x x x", n_chars=11
+    )
+    junk_copies = junk.head(5).assign(doc_id=junk.doc_id.head(5) + 100)
+    out = tmp_path_factory.mktemp("planted")
+    pd.concat([src, copies, junk, junk_copies], ignore_index=True).to_parquet(
+        out / "documents.parquet", index=False
+    )
+    return str(out)

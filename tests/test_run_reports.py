@@ -287,3 +287,66 @@ def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
         key, cond = (("recognized", F.col("ocr_status") == "ok")
                      if table == "image_ocr" else ("decoded", F.col("decode_ok")))
         assert report[table][key] == df.filter(cond).count()
+
+
+FRACTIONS = ("--fraction", "en=0.5", "--fraction", "de=0.25",
+             "--fraction", "es=0.75", "--fraction", "fr=0.125")
+
+
+@pytest.mark.parametrize("mode, max_jobs", [
+    ("plain", 4), ("eval", 12), ("empty", 7),
+], ids=["plain", "eval", "empty"])
+def test_curate_job_counts_on_its_write(spark, tmp_path, planted_sf,
+                                        mode, max_jobs):
+    """curate_job fills its report from the shard write: the funnel and
+    the written rows and tokens are Observations on that pass, n_shards
+    a directory listing.  The jobs beyond the write are the plan's own:
+    the input's parquet schema read, and one shuffle-map job each for
+    the dedup window (md5(text)) and the packing window (lang) — 4.
+    --eval adds the eval set's schema read and the decontamination's
+    stages: the eval-shingle distinct and its broadcast, the hit-count
+    groupBy and its broadcast, and two more dedup-window shuffles (the
+    contamination check reads the curated plan three times) — 11.
+    A run that samples nothing writes no row, so AQE drops the funnel's
+    Observation with the emptied stages: the funnel then costs its own
+    aggregate — a dedup-window shuffle, the partial counts' shuffle and
+    the result — 7."""
+    from parserpdf_spark.jobs.curate_job import main as curate_main
+
+    out = str(tmp_path / "shards")
+    argv = ["--input", planted_sf, "--output", out, "--shard-tokens", "5000"]
+    if mode != "empty":
+        argv += FRACTIONS
+    if mode == "eval":
+        import pandas as pd
+
+        (tmp_path / "eval").mkdir()
+        pd.read_parquet(f"{planted_sf}/documents.parquet")[
+            ["doc_id", "text"]
+        ].head(10).to_parquet(tmp_path / "eval" / "e.parquet", index=False)
+        argv += ["--eval", str(tmp_path / "eval")]
+
+    before = _job_ids(spark)
+    buf = io.StringIO()
+    with redirect_stdout(buf):
+        assert curate_main(argv, spark=spark) == 0
+    assert len(_job_ids(spark) - before) <= max_jobs
+
+    report = json.loads(buf.getvalue().strip().splitlines()[-1])
+    funnel = {"1_raw": 585, "2_quality": 560, "3_dedup": 500, "4_sample": 181}
+    if mode == "empty":
+        funnel["4_sample"] = 0
+        assert report == {"funnel": funnel, "n_docs_written": 0,
+                          "n_shards": 0, "total_tokens": 0}
+        return
+    shards = spark.read.parquet(out)
+    n_written = shards.count()
+    if mode == "eval":
+        funnel["5_decontaminated"] = n_written
+    assert report == {
+        "funnel": funnel,
+        "n_docs_written": n_written,
+        "n_shards": shards.select("lang", "shard_id").distinct().count(),
+        "total_tokens": shards.agg(F.sum("n_tokens")).collect()[0][0],
+    }
+    assert n_written == (177 if mode == "eval" else 181)

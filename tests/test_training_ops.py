@@ -564,40 +564,38 @@ def test_shard_packing_budget_property(spark, sf_med):
     from parserpdf_spark.operators.curation import pack_shards
 
     docs = spark.read.parquet(f"{sf_med}/documents.parquet")
-    packed = pack_shards(docs, shard_tokens=10_000, stratum_col=None).collect()
+    packed = pack_shards(docs, shard_tokens=10_000).collect()
     by_shard = {}
-    max_doc = 0
+    max_doc = {}
     for r in packed:
-        by_shard[r["shard_id"]] = by_shard.get(r["shard_id"], 0) + r["n_tokens"]
-        max_doc = max(max_doc, r["n_tokens"])
-    # every shard is within budget + one max doc (the scheme's guarantee)
-    assert all(v <= 10_000 + max_doc for v in by_shard.values())
-    # shards are contiguous 0..K and all docs assigned exactly once
-    assert sorted(by_shard) == list(range(len(by_shard)))
+        key = (r["lang"], r["shard_id"])
+        by_shard[key] = by_shard.get(key, 0) + r["n_tokens"]
+        max_doc[r["lang"]] = max(max_doc.get(r["lang"], 0), r["n_tokens"])
+    # every shard is within budget + one max doc of its lang (the
+    # scheme's guarantee)
+    assert all(v <= 10_000 + max_doc[lang] for (lang, _), v in by_shard.items())
+    # shards are contiguous 0..K per lang and all docs assigned exactly once
+    for lang in max_doc:
+        ids = sorted(s for lg, s in by_shard if lg == lang)
+        assert ids == list(range(len(ids)))
     assert len(packed) == docs.count()
     # deterministic across partitionings
-    again = {(r["doc_id"], r["shard_id"])
-             for r in pack_shards(docs.repartition(9), shard_tokens=10_000,
-                                  stratum_col=None).collect()}
-    assert again == {(r["doc_id"], r["shard_id"]) for r in packed}
+    again = {(r["doc_id"], r["lang"], r["shard_id"])
+             for r in pack_shards(docs.repartition(9),
+                                  shard_tokens=10_000).collect()}
+    assert again == {(r["doc_id"], r["lang"], r["shard_id"]) for r in packed}
 
 
 def test_shard_packing_per_stratum(spark, sf_med):
     """Per-stratum packing: budgets hold within every stratum, shard ids
     restart per stratum, and the plan has NO single-partition Exchange
-    (the global form's scale-killer)."""
+    (the one-task sort a global window would need)."""
     from parserpdf_spark.operators.curation import pack_shards
 
     docs = spark.read.parquet(f"{sf_med}/documents.parquet")
-    packed_df = pack_shards(docs, shard_tokens=10_000, stratum_col="lang")
+    packed_df = pack_shards(docs, shard_tokens=10_000)
     plan = packed_df._jdf.queryExecution().executedPlan().toString()
     assert "SinglePartition" not in plan
-    # ... while the opt-in global form IS the single-partition sort
-    global_plan = (
-        pack_shards(docs, shard_tokens=10_000, stratum_col=None)
-        ._jdf.queryExecution().executedPlan().toString()
-    )
-    assert "SinglePartition" in global_plan
 
     packed = packed_df.collect()
     assert len(packed) == docs.count()
@@ -617,11 +615,11 @@ def test_shard_packing_per_stratum(spark, sf_med):
         assert ids == list(range(len(ids)))
 
 
-def test_curate_runs_heavy_stages_once(spark, sf_med):
-    """The funnel's four counts must not recompute the quality/dedup
-    lineage: wrap the docs scan in a row-counting accumulator and assert
-    the source is read exactly 3x docs (1 raw count + the two branches
-    of the quality semi-join) — the old uncached form read it 11x."""
+def test_curate_funnel_reads_the_source_once(spark, sf_med):
+    """The funnel is one aggregate over one flagged plan: wrap the docs
+    scan in a row-counting accumulator and assert collecting the funnel
+    reads the source exactly once (the persisted form read it 3x, the
+    uncached form before it 11x)."""
     from parserpdf_spark.operators.curation import curate
 
     docs = spark.read.parquet(f"{sf_med}/documents.parquet")
@@ -636,8 +634,38 @@ def test_curate_runs_heavy_stages_once(spark, sf_med):
     counted = docs.mapInPandas(counting, schema=docs.schema)
     fr = {"en": 0.5, "de": 0.25, "es": 0.75, "fr": 0.125, "zh": 0.0}
     _, funnel = curate(counted, fr)
-    assert funnel.count() == 4
-    assert acc.value == 3 * n
+    assert len(funnel.collect()) == 4
+    assert acc.value == n
+
+
+def test_curate_on_a_planted_corpus_matches_oracle(spark, planted_sf):
+    """sf0.01 alone passes every doc through the quality gate and has
+    no exact duplicate; the planted corpus makes stages 2 and 3 drop
+    rows.  curate()'s funnel and curated ids equal the curation_funnel
+    oracle run through DuckDB over the same file."""
+    import duckdb
+
+    import __spark_entry__ as entry_mod
+    from parserpdf_spark.operators.curation import curate
+
+    path = f"{planted_sf}/documents.parquet"
+    fr = {"en": 0.5, "de": 0.25, "es": 0.75, "fr": 0.125, "zh": 0.0}
+    curated, funnel = curate(spark.read.parquet(path), fr)
+
+    sql = entry_mod.oracle_sql()["curation_funnel"]
+    con = duckdb.connect()
+    con.execute(f"CREATE VIEW documents AS SELECT * FROM read_parquet('{path}')")
+    expected = dict(con.execute(sql).fetchall())
+    # the oracle's own CTEs, ending at the sampled ids instead of the counts
+    sampled_sql = sql[: sql.index("SELECT '1_raw'")] + "SELECT doc_id FROM samp"
+    expected_ids = {r[0] for r in con.execute(sampled_sql).fetchall()}
+    con.close()
+
+    assert expected == {
+        "1_raw": 585, "2_quality": 560, "3_dedup": 500, "4_sample": 181,
+    }
+    assert {r["stage"]: r["n_docs"] for r in funnel.collect()} == expected
+    assert {r["doc_id"] for r in curated.collect()} == expected_ids
 
 
 def test_redact_pii_matches_duckdb(spark, tmp_path):
