@@ -116,7 +116,9 @@ def main(argv=None, spark=None) -> int:
         clean_ids = checked.filter(~F.col("contaminated")).select("doc_id")
         curated = curated.join(clean_ids, "doc_id", "left_semi")
 
-    # the write's own pass fills both Observations: no count, no re-read
+    # the write's own pass fills both Observations: no count, no re-read.
+    # pack_shards' lang window carries ``text`` to the write, so the rows
+    # shuffle once; a narrow window re-joined on doc_id shuffled them twice
     written = Observation()
     pack_shards(curated, shard_tokens=args.shard_tokens).select(
         "lang", "shard_id", "doc_id", "n_tokens", "text"

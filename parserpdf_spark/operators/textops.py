@@ -165,14 +165,15 @@ def _gopher(text):
     ], (mean_r >= 3.0) & (mean_r <= 12.0) & (dup_r < 0.5)
 
 
-def gopher_keep(text_col: str = "text"):
-    """The Gopher gate as a Column (the one definition of the rule)."""
-    return _gopher(F.col(text_col))[1]
+def gopher_keep():
+    """The Gopher gate over ``text`` as a Column (the one definition of
+    the rule)."""
+    return _gopher(F.col("text"))[1]
 
 
-def gopher_quality(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, the :func:`_gopher` signals, keep)."""
-    signals, keep = _gopher(F.col(text_col))
+def gopher_quality(docs: DataFrame) -> DataFrame:
+    """(doc_id, the :func:`_gopher` signals over ``text``, keep)."""
+    signals, keep = _gopher(F.col("text"))
     return docs.select("doc_id", *signals, keep.alias("keep"))
 
 

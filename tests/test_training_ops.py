@@ -35,6 +35,18 @@ def test_dedup_exact_keep_min(docs):
     assert kept == [1, 2, 3]  # 4 is an exact dup of 1; min id wins
 
 
+def test_dedup_exact_keep_min_ties_and_null_ids(spark):
+    # the rule is the curation oracle's `JOIN (min(doc_id) GROUP BY
+    # md5(text)) USING (doc_id)`: every row at the group's min id stays
+    # (a repeated (doc_id, text) row is kept twice), and a null id never
+    # equals the min, so it is dropped even when its group has no other id
+    rows = [(5, "a b c"), (5, "a b c"), (7, "a b c"),
+            (None, "d e f"), (2, "d e f"), (None, "g h i")]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    kept = sorted(r["doc_id"] for r in dedup_exact_keep_min(df).collect())
+    assert kept == [2, 5, 5]
+
+
 def test_jaccard_pairs_finds_near_dups(docs):
     pairs = {
         (r["doc_a"], r["doc_b"]): r["jaccard"]
