@@ -26,7 +26,8 @@ table's counts come from an Observation on its own write, so the report
 adds no Spark job: one job per written table.
 
 Scale shape: binaryFile scan splits per file across executors; the
-bridge and decode stages are narrow mapInPandas passes (zero shuffle).
+bridge and decode stages are narrow ``schema.map_rows`` passes (one
+``mapInArrow`` each, zero shuffle).
 """
 
 from __future__ import annotations

@@ -34,8 +34,9 @@ truth is knowable exactly and the whole loop (render → this repo's
 JPEG encoder → PDF → triage → decode → OCR) is bit-deterministic.
 
 Scale notes: the kernel is pure per-image numpy — it runs inside the
-same Arrow-batched ``mapInPandas`` stages as the codecs (narrow, zero
-shuffle, one image per call), so an OCR fleet is just more executors.
+same ``mapInArrow`` row maps (``schema.map_rows``) as the codecs
+(narrow, zero shuffle, one image per call), so an OCR fleet is just more
+executors.
 """
 
 from __future__ import annotations

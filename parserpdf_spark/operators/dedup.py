@@ -271,13 +271,10 @@ def minhash_signatures(
 # cloudpickle of the closure + a py4j registration (~0.1-0.2 s of driver
 # time), which the former inline definition paid on EVERY query
 # construction; the wrapped function is stateless w.r.t. the DataFrame,
-# so reuse across plans/sessions is sound
-_MINS_UDF_CACHE: dict = {}
-
-
+# so reuse across plans and sessions is sound
+# (tests/test_adversarial.py restarts the session between two uses)
+@functools.lru_cache(maxsize=16)
 def _mins_udf(coeffs: tuple):
-    if coeffs in _MINS_UDF_CACHE:
-        return _MINS_UDF_CACHE[coeffs]
     import pandas as pd  # noqa: F401 — pandas_udf return path
 
     a_vec = [a for a, _ in coeffs]
@@ -315,7 +312,6 @@ def _mins_udf(coeffs: tuple):
             out[:, i : i + blk] = np.minimum.reduceat(vals, starts, axis=1).T
         return pd.Series(list(out))
 
-    _MINS_UDF_CACHE[coeffs] = mins
     return mins
 
 

@@ -24,10 +24,9 @@ columns with metadata structs, the relational shape that scales.
 
 from __future__ import annotations
 
-from typing import Iterator
-
-import pandas as pd
 from pyspark.sql import DataFrame
+
+from parserpdf_spark.schema import map_rows
 
 MEDIA_DDL = (
     "doc_id string, media_ref string, payload binary, "
@@ -176,20 +175,14 @@ def _attach_media(docs: DataFrame, ref_fmt: str, make_payload) -> DataFrame:
     payload = make_payload(doc_id) — the scaffolding the BMP, JPEG and
     AVI payload attachers share."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = {"doc_id": [], "media_ref": [], "payload": [],
-                    "n_bytes": [], "magic": []}
-            for doc_id in pdf["doc_id"]:
-                payload = make_payload(int(doc_id))
-                rows["doc_id"].append(str(doc_id))
-                rows["media_ref"].append(ref_fmt.format(doc_id=doc_id))
-                rows["payload"].append(payload)
-                rows["n_bytes"].append(len(payload))
-                rows["magic"].append(payload[:4].hex().upper())
-            yield pd.DataFrame(rows)
+    def row(doc_id):
+        payload = make_payload(int(doc_id))
+        return ({"doc_id": str(doc_id),
+                 "media_ref": ref_fmt.format(doc_id=doc_id),
+                 "payload": payload, "n_bytes": len(payload),
+                 "magic": payload[:4].hex().upper()},)
 
-    return docs.select("doc_id").mapInPandas(run, schema=MEDIA_DDL)
+    return map_rows(docs, ["doc_id"], row, MEDIA_DDL)
 
 
 def bmp_payload(nid: int) -> bytes:
@@ -280,41 +273,27 @@ def decode_features_real(media: DataFrame) -> DataFrame:
     codec subsets yields decode_ok=false + nulls, never a task
     failure)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "decode_ok": [],
-                   "width": [], "height": [], "mean_r": [], "mean_g": [],
-                   "mean_b": [], "brightness_millis": []}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                out["doc_id"].append(doc_id)
-                out["media_ref"].append(ref)
-                try:
-                    w, h, arr = decode_image_auto(bytes(payload))
-                    means = arr.reshape(-1, 3).mean(axis=0)
-                except ValueError:
-                    out["decode_ok"].append(False)
-                    for k in ("width", "height", "mean_r", "mean_g",
-                              "mean_b", "brightness_millis"):
-                        out[k].append(None)
-                    continue
-                out["decode_ok"].append(True)
-                out["width"].append(w)
-                out["height"].append(h)
-                out["mean_r"].append(round(float(means[0]), 6))
-                out["mean_g"].append(round(float(means[1]), 6))
-                out["mean_b"].append(round(float(means[2]), 6))
-                out["brightness_millis"].append(
-                    int(float(means.mean()) * 1000 / 255)
-                )
-            yield pd.DataFrame(out)
+    def row(doc_id, media_ref, payload):
+        out = {"doc_id": doc_id, "media_ref": media_ref, "decode_ok": False}
+        try:
+            w, h, arr = decode_image_auto(bytes(payload))
+            means = arr.reshape(-1, 3).mean(axis=0)
+        except ValueError:
+            return (out,)
+        out.update(
+            decode_ok=True, width=w, height=h,
+            mean_r=round(float(means[0]), 6),
+            mean_g=round(float(means[1]), 6),
+            mean_b=round(float(means[2]), 6),
+            brightness_millis=int(float(means.mean()) * 1000 / 255),
+        )
+        return (out,)
 
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, decode_ok boolean, "
-               "width int, height int, mean_r double, mean_g double, "
-               "mean_b double, brightness_millis long",
+    return map_rows(
+        media, ["doc_id", "media_ref", "payload"], row,
+        "doc_id string, media_ref string, decode_ok boolean, width int, "
+        "height int, mean_r double, mean_g double, mean_b double, "
+        "brightness_millis long",
     )
 
 
@@ -328,34 +307,24 @@ def ocr_from_media(media: DataFrame) -> DataFrame:
     Keep-with-status per row: ``ocr_status`` is ``"ok"`` (text
     recognized, in ``ocr_text``), ``"no_text"`` (decoded fine but the
     confidence gate found no glyph content — photographs must not
-    transcribe), or ``"decode_error"``.  Same narrow Arrow-batched
-    mapInPandas shape as the feature stages — zero shuffle."""
+    transcribe), or ``"decode_error"``.  Same narrow row map as the
+    feature stages — zero shuffle."""
     from parserpdf_spark.kernels.ocr import ocr_image
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "ocr_status": [],
-                   "ocr_text": []}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                out["doc_id"].append(doc_id)
-                out["media_ref"].append(ref)
-                try:
-                    _, _, arr = decode_image_auto(bytes(payload))
-                except ValueError:
-                    out["ocr_status"].append("decode_error")
-                    out["ocr_text"].append(None)
-                    continue
-                text = ocr_image(arr)
-                out["ocr_status"].append("ok" if text else "no_text")
-                out["ocr_text"].append(text or None)
-            yield pd.DataFrame(out)
+    def row(doc_id, media_ref, payload):
+        try:
+            _, _, arr = decode_image_auto(bytes(payload))
+        except ValueError:
+            return ({"doc_id": doc_id, "media_ref": media_ref,
+                     "ocr_status": "decode_error"},)
+        text = ocr_image(arr)
+        return ({"doc_id": doc_id, "media_ref": media_ref,
+                 "ocr_status": "ok" if text else "no_text",
+                 "ocr_text": text or None},)
 
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, ocr_status string, "
-               "ocr_text string",
+    return map_rows(
+        media, ["doc_id", "media_ref", "payload"], row,
+        "doc_id string, media_ref string, ocr_status string, ocr_text string",
     )
 
 
@@ -543,39 +512,25 @@ def decode_frames_auto(payload: bytes):
 
 def frame_sample_real(media: DataFrame, every: int = 2) -> DataFrame:
     """REAL frame sampling: decode AVI or animated-GIF payloads and
-    emit every ``every``-th frame with genuine per-frame statistics —
-    the row-expanding mapInPandas contract, now over real pixels;
-    keep-with-status (a corrupt payload yields one decode_ok=false
-    row)."""
+    emit every ``every``-th frame with genuine per-frame statistics — a
+    row-expanding row map over real pixels; keep-with-status (a corrupt
+    payload yields one decode_ok=false row)."""
 
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            out = {"doc_id": [], "media_ref": [], "decode_ok": [],
-                   "frame_no": [], "mean_brightness_millis": []}
-            for doc_id, ref, payload in zip(
-                pdf["doc_id"], pdf["media_ref"], pdf["payload"]
-            ):
-                try:
-                    _, _, frames = decode_frames_auto(bytes(payload))
-                except ValueError:
-                    out["doc_id"].append(doc_id)
-                    out["media_ref"].append(ref)
-                    out["decode_ok"].append(False)
-                    out["frame_no"].append(None)
-                    out["mean_brightness_millis"].append(None)
-                    continue
-                for i in range(0, len(frames), every):
-                    out["doc_id"].append(doc_id)
-                    out["media_ref"].append(ref)
-                    out["decode_ok"].append(True)
-                    out["frame_no"].append(i)
-                    out["mean_brightness_millis"].append(
-                        int(float(frames[i].mean()) * 1000 / 255)
-                    )
-            yield pd.DataFrame(out)
+    def rows(doc_id, media_ref, payload):
+        try:
+            _, _, frames = decode_frames_auto(bytes(payload))
+        except ValueError:
+            return ({"doc_id": doc_id, "media_ref": media_ref,
+                     "decode_ok": False},)
+        return (
+            {"doc_id": doc_id, "media_ref": media_ref, "decode_ok": True,
+             "frame_no": i, "mean_brightness_millis":
+                 int(float(frames[i].mean()) * 1000 / 255)}
+            for i in range(0, len(frames), every)
+        )
 
-    return media.mapInPandas(
-        run,
-        schema="doc_id string, media_ref string, decode_ok boolean, "
-               "frame_no int, mean_brightness_millis long",
+    return map_rows(
+        media, ["doc_id", "media_ref", "payload"], rows,
+        "doc_id string, media_ref string, decode_ok boolean, frame_no int, "
+        "mean_brightness_millis long",
     )

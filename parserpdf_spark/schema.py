@@ -4,12 +4,16 @@ The reference has *no* schema objects — shape is enforced dynamically via
 ``is_dict`` / ``is_list_of_dicts`` checks (reference
 ``utils/utils.py:2-16``) and ``getattr`` failures
 (``utils/file_utils.py:549-553``).  Here every boundary is a fixed
-``StructType``, enforced at the Arrow/pandas-UDF boundary.
+``StructType``, enforced at the Arrow boundary.  :func:`map_rows` is
+the one Python row map the per-file and per-payload stages share.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import types as T
+from typing import Any, Callable, Iterable, Iterator
+
+import pyarrow as pa
+from pyspark.sql import DataFrame, types as T
 
 # ---------------------------------------------------------------------------
 # Input:  one row per document (BASELINE.json input_hint)
@@ -31,52 +35,12 @@ DOCS_SCHEMA = T.StructType(
     ]
 )
 
-# Exploded form of the input (one row per span).
-EXPLODED_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-    ]
-)
-
-# ---------------------------------------------------------------------------
-# Output: extracted ordered markdown spans
-#   kind ∈ {"heading","para","table","list","code","image","caption"}
-# (the relational equivalent of the reference's per-doc .md file written at
-#  utils/file_utils.py:555-556 with interleaved image refs)
-# ---------------------------------------------------------------------------
-EXTRACTED_SCHEMA = EXPLODED_SCHEMA  # same flat shape, different kind domain
-
-# DDL strings for mapInPandas
-EXTRACTED_DDL = (
-    "doc_id string, kind string, text string, media_ref string, offset int"
-)
-
 # Combined extraction output: span rows + one per-doc metrics row
 # (metrics rows have kind = '_metrics'; see operators/extract.py).
 COMBINED_DDL = (
     "doc_id string, kind string, text string, media_ref string, offset int, "
     "status string, error string, n_input_spans int, n_output_spans int, "
     "n_images int"
-)
-
-# ---------------------------------------------------------------------------
-# Metrics sidecar: the Spark equivalent of the reference's per-doc result
-# dict {"file","images","filepath","image_path"} (converters/pdf_to_md.py:189)
-# and its JSON run log (ui/gradio_process.py:400-413).
-# ---------------------------------------------------------------------------
-METRICS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("status", T.StringType(), False),  # one of DOC_STATUSES
-        T.StructField("error", T.StringType(), True),
-        T.StructField("n_input_spans", T.IntegerType(), True),
-        T.StructField("n_output_spans", T.IntegerType(), True),
-        T.StructField("n_images", T.IntegerType(), True),
-    ]
 )
 
 # every status kernels.extract.extract_document_safe gives a document
@@ -105,3 +69,53 @@ LINEAGE_SCHEMA = T.StructType(
 
 INPUT_KINDS = ("html", "pdf_block", "media", "markdown")
 OUTPUT_KINDS = ("heading", "para", "table", "list", "code", "image", "caption")
+
+
+# ---------------------------------------------------------------------------
+# The row map: one Arrow pass for every per-file / per-payload Python stage
+# ---------------------------------------------------------------------------
+
+# rows per emitted Arrow batch: a row-expanding function (one WARC file →
+# thousands of records, one video → its frames) then holds a constant
+# number of output rows per task, not one input's worth
+ROW_MAP_BATCH = 256
+
+
+def _map_rows_batches(
+    batches: Iterator[pa.RecordBatch],
+    fn: Callable[..., Iterable[dict[str, Any]]],
+    schema: pa.Schema,
+) -> Iterator[pa.RecordBatch]:
+    """Executor side of :func:`map_rows`: ``fn(*row values)`` per input
+    row, its output dicts flushed every ``ROW_MAP_BATCH`` rows."""
+    rows: list[dict[str, Any]] = []
+    for batch in batches:
+        for values in zip(*(col.to_pylist() for col in batch.columns)):
+            for row in fn(*values):
+                rows.append(row)
+                if len(rows) >= ROW_MAP_BATCH:
+                    yield pa.RecordBatch.from_pylist(rows, schema=schema)
+                    rows = []
+    if rows:
+        yield pa.RecordBatch.from_pylist(rows, schema=schema)
+
+
+def map_rows(
+    df: DataFrame,
+    cols: list[str],
+    fn: Callable[..., Iterable[dict[str, Any]]],
+    ddl: str,
+) -> DataFrame:
+    """One narrow ``mapInArrow`` over ``df.select(*cols)``: each input row
+    becomes ``fn(*values)``, an iterable of zero or more output dicts keyed
+    by the ``ddl`` columns (a missing key is null).  ``fn`` keeps its own
+    keep-with-status contract — nothing here catches.
+
+    The Arrow schema is built here on the driver: ``StructType.fromDDL``
+    needs a session, which executors do not have."""
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = to_arrow_schema(T.StructType.fromDDL(ddl))
+    return df.select(*cols).mapInArrow(
+        lambda batches: _map_rows_batches(batches, fn, schema), schema=ddl
+    )

@@ -47,22 +47,27 @@ Embedded image PAYLOADS (PDF XObjects, docx media parts) ride a second
 narrow bridge, :func:`files_to_media` → (doc_id, media_ref, payload),
 feeding the K2 image sink (operators/sinks.export_image_payloads).
 
-Scale shape: one ``mapInPandas`` over Arrow batches of (path, content) —
-narrow, zero shuffle, same plan position as the extraction kernel; the
-binaryFile scan already splits across executors per file.  A single
-file's bytes can't split below the file (binaryFile semantics), so
-pathological multi-GB uploads bound per-task memory — the reference has
-the same per-file floor; ``maxRecordsPerBatch`` caps docs per Arrow
-batch, and genuinely huge corpora should cap upload size at the edge.
+Scale shape: one ``schema.map_rows`` pass (a ``mapInArrow``) over Arrow
+batches of (path, content) — narrow, zero shuffle, same plan position as
+the extraction kernel; the binaryFile scan already splits across
+executors per file.  A single file's bytes can't split below the file
+(binaryFile semantics), so pathological multi-GB uploads bound per-task
+memory — the reference has the same per-file floor;
+``maxRecordsPerBatch`` caps docs per Arrow batch, and genuinely huge
+corpora should cap upload size at the edge.
 """
 
 from __future__ import annotations
 
-from typing import Any, Iterator
+from typing import Any
 
 from pyspark.sql import DataFrame
 
 from parserpdf_spark.kernels.docx_extract import docx_to_html
+from parserpdf_spark.kernels.epub_extract import epub_to_html
+from parserpdf_spark.kernels.odt_extract import odt_to_html
+from parserpdf_spark.kernels.rtf_extract import rtf_to_html
+from parserpdf_spark.schema import map_rows
 
 FILES_DOCS_DDL = (
     "doc_id string, src_path string, ingest_status string, "
@@ -71,8 +76,17 @@ FILES_DOCS_DDL = (
 )
 
 
-def _html_span(text: str) -> list[dict[str, Any]]:
-    return [{"kind": "html", "text": text, "media_ref": None, "offset": 0}]
+def _span(text: str, kind: str = "html") -> list[dict[str, Any]]:
+    return [{"kind": kind, "text": text, "media_ref": None, "offset": 0}]
+
+
+# suffix → span kind of the files whose UTF-8 text is the span
+_TEXT_KINDS = {".html": "html", ".htm": "html",
+               ".md": "markdown", ".markdown": "markdown"}
+
+# suffix → bytes → HTML converter; a ValueError marks the file "error"
+_HTML_CONVERTERS = {".epub": epub_to_html, ".odt": odt_to_html,
+                    ".rtf": rtf_to_html}
 
 
 def _path_parts(path: str) -> tuple[str, str]:
@@ -95,12 +109,19 @@ def route_file(path: str, content: bytes) -> dict[str, Any]:
         "ingest_error": None,
         "spans": [],
     }
-    if suffix in (".html", ".htm"):
+    if suffix in _TEXT_KINDS:
         try:
-            row["spans"] = _html_span(bytes(content).decode("utf-8"))
+            row["spans"] = _span(bytes(content).decode("utf-8"),
+                                 _TEXT_KINDS[suffix])
         except UnicodeDecodeError as exc:
             row["ingest_status"] = "error"
             row["ingest_error"] = f"UnicodeDecodeError: {exc}"
+    elif suffix in _HTML_CONVERTERS:
+        try:
+            row["spans"] = _span(_HTML_CONVERTERS[suffix](bytes(content)))
+        except ValueError as exc:
+            row["ingest_status"] = "error"
+            row["ingest_error"] = str(exc)
     elif suffix in (".docx", ".doc"):
         import struct
 
@@ -110,9 +131,9 @@ def route_file(path: str, content: bytes) -> dict[str, Any]:
         try:
             if suffix == ".doc" and is_ole2:
                 # legacy Word binary: from-scratch CFB + piece-table read
-                row["spans"] = _html_span(doc_to_html(bytes(content)))
+                row["spans"] = _span(doc_to_html(bytes(content)))
             else:
-                row["spans"] = _html_span(docx_to_html(bytes(content)))
+                row["spans"] = _span(docx_to_html(bytes(content)))
         except (ValueError, struct.error) as exc:
             # struct.error is also translated at the kernel boundary; the
             # widened catch here keeps the keep-with-status contract even
@@ -148,39 +169,6 @@ def route_file(path: str, content: bytes) -> dict[str, Any]:
                     f"outside the built-in pdf subset ({exc}); feed the "
                     "external pre-chunker's pdf_block spans instead"
                 )
-    elif suffix == ".epub":
-        from parserpdf_spark.kernels.epub_extract import epub_to_html
-
-        try:
-            row["spans"] = _html_span(epub_to_html(bytes(content)))
-        except ValueError as exc:
-            row["ingest_status"] = "error"
-            row["ingest_error"] = str(exc)
-    elif suffix == ".odt":
-        from parserpdf_spark.kernels.odt_extract import odt_to_html
-
-        try:
-            row["spans"] = _html_span(odt_to_html(bytes(content)))
-        except ValueError as exc:
-            row["ingest_status"] = "error"
-            row["ingest_error"] = str(exc)
-    elif suffix == ".rtf":
-        from parserpdf_spark.kernels.rtf_extract import rtf_to_html
-
-        try:
-            row["spans"] = _html_span(rtf_to_html(bytes(content)))
-        except ValueError as exc:
-            row["ingest_status"] = "error"
-            row["ingest_error"] = str(exc)
-    elif suffix in (".md", ".markdown"):
-        try:
-            row["spans"] = [{
-                "kind": "markdown", "text": bytes(content).decode("utf-8"),
-                "media_ref": None, "offset": 0,
-            }]
-        except UnicodeDecodeError as exc:
-            row["ingest_status"] = "error"
-            row["ingest_error"] = f"UnicodeDecodeError: {exc}"
     else:
         row["ingest_status"] = "skipped"
         row["ingest_error"] = f"unsupported extension {suffix!r}"
@@ -332,26 +320,9 @@ def files_to_docs(files: DataFrame, ocr: bool = False) -> DataFrame:
     ``needs_ocr`` PDFs (:func:`ocr_route_file`), the analog of the
     reference's ``force_ocr`` knob.
     """
-    import pandas as pd
-
     router = ocr_route_file if ocr else route_file
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows = [
-                router(p, c) for p, c in zip(pdf["path"], pdf["content"])
-            ]
-            yield pd.DataFrame(
-                rows,
-                columns=[
-                    "doc_id", "src_path", "ingest_status", "ingest_error",
-                    "spans",
-                ],
-            )
-
-    return files.select("path", "content").mapInPandas(
-        run, schema=FILES_DOCS_DDL
-    )
+    return map_rows(files, ["path", "content"],
+                    lambda p, c: (router(p, c),), FILES_DOCS_DDL)
 
 
 def ingested_docs(files_docs: DataFrame) -> DataFrame:
@@ -437,19 +408,7 @@ def file_media_rows(path: str, content: bytes) -> list[dict[str, Any]]:
 def files_to_media(files: DataFrame) -> DataFrame:
     """binaryFile scan → (doc_id, media_ref, payload) rows for the K2
     image sink: the embedded-image payloads whose refs the extraction
-    output's ``image`` spans carry.  Same narrow mapInPandas shape as
+    output's ``image`` spans carry.  Same narrow row map as
     :func:`files_to_docs` — zero shuffle, file-per-task."""
-    import pandas as pd
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            rows: list[dict] = []
-            for p, c in zip(pdf["path"], pdf["content"]):
-                rows.extend(file_media_rows(p, c))
-            yield pd.DataFrame(
-                rows, columns=["doc_id", "media_ref", "payload"]
-            )
-
-    return files.select("path", "content").mapInPandas(
-        run, schema=FILES_MEDIA_DDL
-    )
+    return map_rows(files, ["path", "content"], file_media_rows,
+                    FILES_MEDIA_DDL)

@@ -18,9 +18,10 @@ from the buffer as they complete), so a 1 GB archive that inflates 4-5×
 never materializes whole in worker memory: the high-water mark is
 O(largest record), not O(file).
 
-Scale shape: one ``mapInPandas`` over (path, content) Arrow batches; a
-WARC file is the natural work unit (binaryFile gives one split per
-file, and real crawls ship ~1 GB files by convention).
+Scale shape: one ``schema.map_rows`` pass (a ``mapInArrow``) over
+(path, content) Arrow batches; a WARC file is the natural work unit
+(binaryFile gives one split per file, and real crawls ship ~1 GB files
+by convention).
 """
 
 from __future__ import annotations
@@ -29,6 +30,8 @@ import zlib
 from typing import Any, Iterator
 
 from pyspark.sql import DataFrame
+
+from parserpdf_spark.schema import map_rows
 
 WARC_DOCS_DDL = (
     "doc_id string, src_path string, record_uri string, "
@@ -254,38 +257,15 @@ def warc_file_rows(path: str, data: bytes) -> list[dict[str, Any]]:
     return list(iter_warc_file_rows(path, bytes(data)))
 
 
-# rows per emitted Arrow batch in warc_to_docs: with streamed records,
-# caps the rows held per task at a constant, not at archive size
-_ROWS_PER_BATCH = 256
-
-
 def warc_to_docs(files: DataFrame) -> DataFrame:
     """binaryFile scan of .warc/.warc.gz → per-record rows with ingest
     status; filter ``ingest_status == 'ok'`` and select (doc_id, spans)
     for the extraction stage.
 
-    Emits output batches every ``_ROWS_PER_BATCH`` records while the
-    incremental gunzip is still draining the archive, so worker memory
-    holds the compressed input + O(one record + one batch), never the
-    whole inflated file.
+    The row map emits an output batch every ``schema.ROW_MAP_BATCH``
+    records while the incremental gunzip is still draining the archive,
+    so worker memory holds the compressed input + O(one record + one
+    batch), never the whole inflated file.
     """
-    import pandas as pd
-
-    cols = [
-        "doc_id", "src_path", "record_uri", "record_type", "content_type",
-        "ingest_status", "ingest_error", "spans",
-    ]
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        rows: list[dict] = []
-        for pdf in batches:
-            for p, c in zip(pdf["path"], pdf["content"]):
-                for row in iter_warc_file_rows(p, c):
-                    rows.append(row)
-                    if len(rows) >= _ROWS_PER_BATCH:
-                        yield pd.DataFrame(rows, columns=cols)
-                        rows = []
-        if rows:
-            yield pd.DataFrame(rows, columns=cols)
-
-    return files.select("path", "content").mapInPandas(run, schema=WARC_DOCS_DDL)
+    return map_rows(files, ["path", "content"], iter_warc_file_rows,
+                    WARC_DOCS_DDL)

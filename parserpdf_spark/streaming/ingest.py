@@ -104,8 +104,8 @@ def run_incremental_file_ingestion(
     extraction output — run the batch ``file_ingest_gate`` view for the
     keep-with-status report.  ``ocr=True`` runs the deterministic OCR
     tier over needs_ocr PDFs (the reference's force_ocr knob) — the
-    bridge is a stateless mapInPandas, so it composes with the stream
-    unchanged."""
+    bridge is a stateless ``mapInArrow`` row map, so it composes with the
+    stream unchanged."""
     from parserpdf_spark.sources.files import files_to_docs, ingested_docs
 
     files = stream_files(spark, input_dir, glob=glob)

@@ -71,3 +71,59 @@ def test_giant_lsh_bucket_streams_its_pairs_in_a_capped_heap(tmp_path):
     assert json.loads(out.stdout.strip().splitlines()[-1]) == {
         "pairs": k * (k - 1) // 2
     }
+
+
+# The dedup operators memoize their pandas_udf objects per process
+# (``functools.lru_cache``).  Stop the session and start a new one in
+# the same process: the cached udfs must still run, and give the same
+# pairs, in the new session.
+SESSION_RESTART = """
+import json, random, sys
+sys.path.insert(0, {repo!r})
+from parserpdf_spark.operators import dedup
+from parserpdf_spark.session import get_spark
+
+rng = random.Random(11)
+texts = []
+for i in range(20):
+    words = [f"w{{rng.randrange(300)}}" for _ in range(40)]
+    texts.append(" ".join(words))
+    if i % 2 == 0:
+        words[rng.randrange(40)] = "edited"
+        texts.append(" ".join(words))
+vecs = [[float((i * 7 + j * 3) % 11 - 5) for j in range(8)] for i in range(6)]
+vecs += vecs[:2]
+
+runs = []
+for _ in range(2):
+    spark = get_spark(cores=2, extra_conf={{"spark.driver.memory": "1g"}})
+    docs = spark.createDataFrame(list(enumerate(texts)), "doc_id long, text string")
+    emb = spark.createDataFrame(list(enumerate(vecs)), "vec_id long, embedding array<double>")
+    runs.append({{
+        "minhash": sorted(map(list, dedup.minhash_lsh_pairs(docs, threshold=0.8).collect())),
+        "embedding": sorted(map(list, dedup.embedding_dup_pairs_bucketed(emb, threshold=0.95).collect())),
+    }})
+    spark.stop()
+hits = dedup._mins_udf.cache_info().hits + dedup._srp_keys_udf.cache_info().hits
+print(json.dumps({{"runs": runs, "cache_hits": hits}}))
+"""
+
+
+def test_cached_dedup_udfs_survive_a_session_restart(tmp_path):
+    """MinHash and SRP-bucketed embedding dedup return the same pairs
+    before and after ``spark.stop()`` and a new ``get_spark`` in one
+    process, the second session reusing both cached udfs."""
+    out = subprocess.run(
+        [sys.executable, "-c", SESSION_RESTART.format(repo=REPO)],
+        cwd=tmp_path,
+        capture_output=True,
+        text=True,
+        timeout=300,
+    )
+    assert out.returncode == 0, out.stderr[-3000:]
+    got = json.loads(out.stdout.strip().splitlines()[-1])
+    first, second = got["runs"]
+    assert len(first["minhash"]) == 10
+    assert [a[:2] for a in first["embedding"]] == [[0, 6], [1, 7]]
+    assert second == first
+    assert got["cache_hits"] >= 2

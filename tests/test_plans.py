@@ -122,17 +122,18 @@ def test_file_ingestion_plan_has_no_exchange(spark):
     files = scan_files(spark, fixtures, "*", with_content=True)
     plan = plan_of(extract_combined(ingested_docs(files_to_docs(files))))
     assert node_count(plan, "Exchange") == 0
-    assert "MapInPandas" in plan and "MapInArrow" in plan
+    # the bridge's row map, then extraction
+    assert node_count(plan, "MapInArrow") == 2
 
     # the OCR tier keeps the same narrow shape: the recognizer runs
-    # inside the bridge's mapInPandas, nothing shuffles
+    # inside the bridge's row map, nothing shuffles
     ocr_fixtures = os.path.join(os.path.dirname(fixtures), "ocr_corpus")
     ocr_files = scan_files(spark, ocr_fixtures, "*", with_content=True)
     plan = plan_of(
         extract_combined(ingested_docs(files_to_docs(ocr_files, ocr=True)))
     )
     assert node_count(plan, "Exchange") == 0
-    assert "MapInPandas" in plan and "MapInArrow" in plan
+    assert node_count(plan, "MapInArrow") == 2
 
 
 def test_bucketed_embedding_dedup_never_cartesian(spark, sf_med):
