@@ -104,6 +104,7 @@ def main(argv=None, spark=None) -> int:
         from parserpdf_spark.session import get_spark
 
         spark = get_spark(cores=args.cores, app_name="media_job")
+    files = images = None
     try:
         from pyspark.sql import functions as F
 
@@ -115,9 +116,13 @@ def main(argv=None, spark=None) -> int:
 
         files = scan_files(spark, args.input, "*",
                            with_content=True).cache()
+        images = image_rows(files)
+        if args.ocr:
+            # the OCR table reads the payloads the images write bridged
+            images = images.cache()
         summary = {}
         for name, df in (
-            ("images", decode_features_real(image_rows(files))),
+            ("images", decode_features_real(images)),
             ("video", frame_sample_real(_standalone(files, _VIDEO_EXTS))),
         ):
             summary[name] = _write_counted(
@@ -127,18 +132,21 @@ def main(argv=None, spark=None) -> int:
             from parserpdf_spark.operators.multimodal import ocr_from_media
 
             summary["image_ocr"] = _write_counted(
-                ocr_from_media(image_rows(files)),
+                ocr_from_media(images),
                 os.path.join(args.output, "image_ocr"),
                 recognized=F.col("ocr_status") == "ok")
         print(json.dumps(summary))
         return 0
     finally:
-        # the cache pins raw file bytes in executor storage — release it
-        # even when the session outlives the job (injected spark)
-        try:
-            files.unpersist()
-        except Exception:  # noqa: BLE001 - best-effort cleanup
-            pass
+        # the caches pin raw file bytes and payloads in executor storage —
+        # release them even when the session outlives the job (injected
+        # spark)
+        for df in (images, files):
+            try:
+                if df is not None:
+                    df.unpersist()
+            except Exception:  # noqa: BLE001 - best-effort cleanup
+                pass
         if own_spark:
             spark.stop()
 

@@ -4,11 +4,22 @@ The reference's equivalent "session" is its mutable ``Config`` singleton
 pair (``globals.py:55-56``) plus a ProcessPoolExecutor
 (``ui/gradio_process.py:91-93``); here all knobs are explicit Spark conf
 — no mutable global state crosses the driver/executor boundary.
+
+A process that starts the driver JVM starts it from a class-data-sharing
+(CDS) archive of the classes a Spark driver loads, which halves JVM
+start-up.  The first launch per key dumps the archive as its JVM exits;
+every later one maps it (see :func:`_archive_options`).
 """
 
 from __future__ import annotations
 
+import atexit
+import contextlib
+import hashlib
 import os
+import re
+import shutil
+import subprocess
 
 from pyspark.sql import SparkSession
 
@@ -22,6 +33,28 @@ ARROW_MAX_RECORDS = 2048
 # the worker daemon (_daemon.py) imports the package, so its root goes on
 # the workers' path whatever the driver's cwd (``python -m`` adds the cwd)
 PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
+# CDS archives of the driver JVM, one per key, next to the package as
+# __pycache__ is; deleting the directory clears them
+JVM_CACHE = os.path.join(PACKAGE_ROOT, ".jvm-cache")
+JVM_CACHE_KEEP = 4  # archives kept, the least recently used removed first
+# a dump writes 140-195 MB as its JVM exits, ~15-20 s on 4 vCPUs
+DUMP_WAIT_S = 120
+# the JVM logs CDS warnings, and a failed dump its exit message, on its
+# stdout, where a job prints its report
+_CDS_QUIET = "-Xlog:cds*=off -XX:+DisplayVMOutputToStderr"
+# what adds to the driver's classpath or flags past the key's reach, or
+# says the JVM runs already: such launches start without an archive
+_FALLBACK_ENV = ("HADOOP_CONF_DIR", "YARN_CONF_DIR", "SPARK_DIST_CLASSPATH",
+                 "PYSPARK_SUBMIT_ARGS", "PYSPARK_GATEWAY_PORT")
+_FALLBACK_CONF = ("spark.driver.extraJavaOptions",
+                  "spark.driver.defaultJavaOptions",
+                  "spark.driver.extraClassPath")
+# JVM flags that come from the environment, part of the key
+_JVM_FLAG_ENV = ("JAVA_TOOL_OPTIONS", "JDK_JAVA_OPTIONS", "_JAVA_OPTIONS",
+                 "SPARK_SUBMIT_OPTS")
+# (JVM process, dump file, archive) of this process's dumping JVMs
+_dumps: list = []
 
 
 def get_spark(
@@ -40,6 +73,7 @@ def get_spark(
     cores = str(cores)
     if shuffle_partitions is None:
         shuffle_partitions = max(int(cores) if cores.isdigit() else 32, 8)
+    driver_memory = os.environ.get("SPARK_DRIVER_MEM", "48g")
 
     builder = (
         SparkSession.builder.master(f"local[{cores}]")
@@ -57,7 +91,7 @@ def get_spark(
         .config(
             "spark.sql.execution.arrow.maxRecordsPerBatch", str(ARROW_MAX_RECORDS)
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory)
         .config("spark.ui.enabled", "false")
         .config("spark.sql.files.maxPartitionBytes", "128m")
         # each file counts 256 KB toward a split, and no split is planned
@@ -66,8 +100,170 @@ def get_spark(
         # plan fewer.  Past 128 MB a table's files set the splits
         .config("spark.sql.files.openCostInBytes", "262144")
     )
-    for key, value in (extra_conf or {}).items():
+    conf = extra_conf or {}
+    for key, value in conf.items():
         builder = builder.config(key, value)
-    spark = builder.getOrCreate()
+    options = _archive_options(conf.get("spark.driver.memory", driver_memory), conf)
+    if options is None:
+        spark = builder.getOrCreate()
+    else:
+        spark = _launch(builder, *options)
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+def _launch(builder, flag: str, dump: tuple | None) -> SparkSession:
+    """Start the driver JVM with the CDS ``flag``, its classpath's conf
+    directory swapped for the cache's empty one for the launch alone."""
+    from pyspark import SparkContext
+
+    saved = os.environ.get("SPARK_CONF_DIR")
+    os.environ["SPARK_CONF_DIR"] = os.path.join(JVM_CACHE, "conf")
+    try:
+        return builder.config(
+            "spark.driver.extraJavaOptions", f"{_java_option(flag)} {_CDS_QUIET}"
+        ).getOrCreate()
+    finally:
+        if saved is None:
+            del os.environ["SPARK_CONF_DIR"]
+        else:
+            os.environ["SPARK_CONF_DIR"] = saved
+        if dump is not None:
+            proc = getattr(SparkContext._gateway, "proc", None)
+            if proc is not None:
+                _dumps.append((proc, *dump))
+            else:  # the JVM exited before its gateway came up
+                with contextlib.suppress(FileNotFoundError):
+                    os.remove(dump[0])
+
+
+def _archive_options(driver_memory: str, conf: dict) -> tuple | None:
+    """(JVM flag, dump) for a launch from the archive cache, or None to
+    start the JVM as without one.
+
+    The flag maps ``<key>.jsa`` when it exists (dump is None); otherwise
+    it dumps ``<key>.<pid>.tmp`` as the JVM exits, and dump is (tmp,
+    archive) for :func:`_settle_dumps`, which renames the tmp file to the
+    archive only once its JVM exited 0: a truncated archive crashes the
+    JVM that maps it, it is no fallback.  CDS refuses a non-empty
+    directory on the classpath, and Spark puts its conf directory there,
+    so a launch that would hide a real file in it starts without an
+    archive.  So does one whose cache is not writable, and one that runs
+    while a JVM of this process runs already.
+    """
+    from pyspark import SparkContext
+    from pyspark.find_spark_home import _find_spark_home
+
+    if (SparkContext._gateway is not None
+            or any(os.environ.get(name) for name in _FALLBACK_ENV)
+            or any(name in conf for name in _FALLBACK_CONF)):
+        return None
+    spark_home = _find_spark_home()
+    conf_dir = os.environ.get("SPARK_CONF_DIR") or os.path.join(spark_home, "conf")
+    if os.path.isdir(conf_dir) and not all(
+            name.endswith(".template") for name in os.listdir(conf_dir)):
+        return None
+    # the java that bin/spark-class runs
+    java_home = os.environ.get("JAVA_HOME")
+    java = os.path.join(java_home, "bin", "java") if java_home else shutil.which("java")
+    if not java or not os.path.isfile(java):
+        return None
+    try:
+        os.makedirs(os.path.join(JVM_CACHE, "conf"), exist_ok=True)
+    except OSError:
+        return None
+    if not os.access(JVM_CACHE, os.W_OK | os.X_OK):
+        return None
+
+    _settle_dumps(wait=False)
+    key = _archive_key(java, spark_home, driver_memory)
+    archive = os.path.join(JVM_CACHE, f"{key}.jsa")
+    with contextlib.suppress(FileNotFoundError):
+        os.utime(archive)  # the least recently used goes first
+        return f"-XX:SharedArchiveFile={archive}", None
+    tmp = os.path.join(JVM_CACHE, f"{key}.{os.getpid()}.tmp")
+    if any(entry[1] == tmp for entry in _dumps):
+        return None  # this process's earlier JVM is still dumping there
+    _drop_orphaned_dumps()
+    return f"-XX:ArchiveClassesAtExit={tmp}", (tmp, archive)
+
+
+def _archive_key(java: str, spark_home: str, driver_memory: str) -> str:
+    """Hash of what an archive depends on: the java binary, the pyspark
+    version, Spark's jars (names, sizes, mtimes) and the driver's JVM
+    flags (a 48g heap turns compressed oops off)."""
+    import pyspark
+
+    st = os.stat(java)
+    parts = [os.path.realpath(java), st.st_size, st.st_mtime_ns,
+             pyspark.__version__, driver_memory,
+             *(os.environ.get(name, "") for name in _JVM_FLAG_ENV)]
+    jars = os.path.join(spark_home, "jars")
+    for entry in sorted(os.scandir(jars), key=lambda e: e.name):
+        st = entry.stat()
+        parts += [entry.name, st.st_size, st.st_mtime_ns]
+    return hashlib.sha256(repr(parts).encode()).hexdigest()[:20]
+
+
+def _java_option(value: str) -> str:
+    """``value`` as one option of Spark's extraJavaOptions string."""
+    return re.sub(r"""([\\'"\s])""", r"\\\1", value)
+
+
+def _settle_dumps(wait: bool = True) -> None:
+    """Rename each dump of this process whose JVM exited 0 to its
+    archive, and delete every other one.  With ``wait``, close each
+    running JVM's stdin (the JVM exits when it closes) and wait for it;
+    without, leave the running ones be.  Runs at interpreter exit."""
+    for entry in list(_dumps):
+        proc, tmp, archive = entry
+        if proc.poll() is None:
+            if not wait:
+                continue
+            proc.stdin.close()
+            try:
+                proc.wait(timeout=DUMP_WAIT_S)
+            except subprocess.TimeoutExpired:
+                proc.kill()
+                proc.wait()
+        _dumps.remove(entry)
+        with contextlib.suppress(FileNotFoundError):
+            if proc.returncode == 0:
+                os.replace(tmp, archive)
+                _evict_archives()
+            else:
+                os.remove(tmp)
+
+
+atexit.register(_settle_dumps)
+
+
+def _evict_archives() -> None:
+    """Keep the ``JVM_CACHE_KEEP`` most recently used archives (another
+    process may remove one meanwhile; its next promotion evicts again)."""
+    with contextlib.suppress(FileNotFoundError):
+        archives = sorted(
+            (e for e in os.scandir(JVM_CACHE) if e.name.endswith(".jsa")),
+            key=lambda e: e.stat().st_mtime_ns, reverse=True)
+        for entry in archives[JVM_CACHE_KEEP:]:
+            os.remove(entry.path)
+
+
+def _drop_orphaned_dumps() -> None:
+    """Delete dump files whose process is gone without settling them
+    (killed before its exit hook ran)."""
+    for entry in os.scandir(JVM_CACHE):
+        pid = entry.name.split(".")[1] if entry.name.endswith(".tmp") else ""
+        if pid.isdigit() and not _alive(int(pid)):
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(entry.path)
+
+
+def _alive(pid: int) -> bool:
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:
+        pass
+    return True

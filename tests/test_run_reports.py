@@ -249,16 +249,11 @@ def test_an_unlisted_ingest_status_fails_the_job(spark, tmp_path, monkeypatch):
         _run_job(spark, str(tmp_path / "job"), chunks=1)
 
 
-@pytest.mark.parametrize("flags, tables", [
-    ((), ("images", "video")),
-    (("--ocr",), ("images", "video", "image_ocr")),
-], ids=["plain", "ocr"])
-def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
-    """media_job counts each table on its own write: one Spark job per
-    written table, and the counts equal a re-read of the table."""
+def _media_inputs(tmp_path) -> str:
+    """Embedded images (a PDF, a scanned PDF, a docx), a video and a
+    broken standalone image."""
     import numpy as np
 
-    from parserpdf_spark.jobs.media_job import main as media_main
     from parserpdf_spark.operators.multimodal import encode_avi_frames
 
     src = tmp_path / "in"
@@ -270,12 +265,25 @@ def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
         [rng.integers(0, 256, (4, 6, 3), dtype=np.uint8) for _ in range(3)],
         6, 4))
     (src / "broken_1.jpg").write_bytes(b"\xff\xd8 truncated")
+    return str(src)
+
+
+@pytest.mark.parametrize("flags, tables", [
+    ((), ("images", "video")),
+    (("--ocr",), ("images", "video", "image_ocr")),
+], ids=["plain", "ocr"])
+def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
+    """media_job counts each table on its own write: one Spark job per
+    written table, and the counts equal a re-read of the table."""
+    from parserpdf_spark.jobs.media_job import main as media_main
+
+    src = _media_inputs(tmp_path)
     out = str(tmp_path / "media")
 
     before = _job_ids(spark)
     buf = io.StringIO()
     with redirect_stdout(buf):
-        assert media_main(["--input", str(src), "--output", out, *flags],
+        assert media_main(["--input", src, "--output", out, *flags],
                           spark=spark) == 0
     assert len(_job_ids(spark) - before) == len(tables)
 
@@ -287,6 +295,34 @@ def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
         key, cond = (("recognized", F.col("ocr_status") == "ok")
                      if table == "image_ocr" else ("decoded", F.col("decode_ok")))
         assert report[table][key] == df.filter(cond).count()
+
+
+def test_media_job_ocr_bridges_the_images_once(spark, tmp_path):
+    """Under --ocr the image_ocr write reads the image rows the images
+    write bridged: of the MapInArrow nodes in its executed plan, only
+    the OCR one runs, and the bridge's rows come from the cache."""
+    from parserpdf_spark.jobs.media_job import main as media_main
+
+    with redirect_stdout(io.StringIO()):
+        assert media_main(["--input", _media_inputs(tmp_path), "--output",
+                           str(tmp_path / "media"), "--ocr"], spark=spark) == 0
+    store = spark._jsparkSession.sharedState().statusStore()
+    execs = store.executionsList()
+    last = execs.apply(execs.size() - 1).executionId()  # the image_ocr write
+    values = store.executionMetrics(last)
+    rows = {}
+    nodes = store.planGraph(last).allNodes()
+    for i in range(nodes.size()):
+        node = nodes.apply(i)
+        for j in range(node.metrics().size()):
+            metric = node.metrics().apply(j)
+            value = values.get(metric.accumulatorId())
+            if metric.name() == "number of output rows":
+                rows.setdefault(node.name(), []).append(
+                    int(value.get()) if value.isDefined() else 0)
+    assert len(rows["MapInArrow"]) == 2  # the OCR and the cached bridge
+    assert sum(n > 0 for n in rows["MapInArrow"]) == 1
+    assert max(rows["InMemoryTableScan"]) > 0
 
 
 FRACTIONS = ("--fraction", "en=0.5", "--fraction", "de=0.25",
