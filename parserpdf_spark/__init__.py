@@ -20,7 +20,6 @@ The engine's layers:
 - :mod:`parserpdf_spark.sources`   — scans and the deterministic
   interleaved-docs synthesizer.
 - :mod:`parserpdf_spark.plans`     — chunked checkpoint/commit/resume.
-- :mod:`parserpdf_spark.streaming` — incremental ingestion.
 
 Importing the package inside a Spark Python worker also installs
 :func:`_guard_zip_invalidation`, once per worker process; sessions from

@@ -207,19 +207,6 @@ def _doc_internals(data: bytes):
     return word, table, pieces, ccp_text
 
 
-def doc_to_text(data: bytes) -> str:
-    """.doc bytes → the main-document text (paragraph marks as \\r).
-
-    All malformed-input failures surface as ValueError (the dispatcher's
-    keep-with-status contract): struct.error from truncated/misaligned
-    buffers is translated at this boundary.
-    """
-    try:
-        return "".join(t for t, _ in _doc_chars(bytes(data)))
-    except struct.error as exc:
-        raise ValueError(f"malformed .doc structure: {exc}") from exc
-
-
 def _doc_chars(data: bytes, internals=None):
     """Decoded text runs with their FC geometry:
     [(text, [(fc_of_first_char, bytes_per_char)])] — yields (run_text,

@@ -18,9 +18,6 @@ from parserpdf_spark.kernels.html_extract import extract_html
 from parserpdf_spark.kernels.md_extract import markdown_to_spans
 from parserpdf_spark.kernels.pdf_extract import extract_pdf_blocks
 
-INPUT_KINDS = frozenset({"html", "pdf_block", "media", "markdown"})
-
-
 def _sorted_spans(spans: list[dict]) -> list[dict]:
     # stable sort on offset; ties keep input order (total order per SURVEY §7.4-1)
     return sorted(

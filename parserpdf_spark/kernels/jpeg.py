@@ -16,13 +16,14 @@ public ITU-T T.81 spec directly:
   subset (arithmetic coding, lossless/hierarchical SOFs, 12-bit, CMYK,
   truncated entropy data) raises ValueError — the keep-with-status
   contract upstream converts that to a per-row status.
-- **encode_jpeg_baseline** / **encode_jpeg_progressive**: matching
-  writers (quality-scaled Annex K quantization tables, standard or
-  full-symbol Huffman tables, optional 4:2:0 subsampling, restart
-  intervals, spectral/successive scan scripts) so fixtures carry *real*
-  decodable JPEG bytes with known source pixels, and the progressive
-  decoder is pinned byte-equal to the baseline decoder on identical
-  quantized coefficients.
+- **encode_jpeg_baseline**: the matching writer (quality-scaled Annex K
+  quantization tables, standard or full-symbol Huffman tables, optional
+  4:2:0 subsampling, restart intervals), so fixtures carry *real*
+  decodable JPEG bytes with known source pixels.
+- **encode_jpeg_progressive**: a spectral/successive scan-script writer
+  that no engine run calls.  It is the reference the progressive decoder
+  is tested against: decoded byte-equal to the baseline decoder on
+  identical quantized coefficients.
 
 Correctness is NOT self-referential: tests pin closed-form cases (a
 solid-color image is a pure DC term whose quantized value is derivable
@@ -50,7 +51,6 @@ _ZIGZAG = np.array([
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
     58, 59, 52, 45, 38, 31, 39, 46, 53, 60, 61, 54, 47, 55, 62, 63,
 ])
-_UNZIGZAG = np.argsort(_ZIGZAG)
 
 # Annex K.1 luminance / K.2 chrominance quantization tables (quality 50)
 _Q_LUMA = np.array([

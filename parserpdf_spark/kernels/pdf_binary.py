@@ -1334,10 +1334,6 @@ def _decode_pdf_string_bytes(raw: bytes) -> bytes:
     return bytes(out)
 
 
-def _decode_pdf_string(raw: bytes) -> str:
-    return _decode_pdf_string_bytes(raw).decode("latin-1")
-
-
 # ---------------------------------------------------------------------------
 # Text extraction (BT..ET state machine)
 # ---------------------------------------------------------------------------

@@ -1002,8 +1002,3 @@ def keep_min_copy(among):
     first = F.min(F.when(among, F.col("doc_id"))).over(W.partitionBy(F.md5("text")))
     return among & (F.col("doc_id") == first)
 
-
-def dedup_exact_keep_min(docs: DataFrame) -> DataFrame:
-    """Exact dedup: keep the min-id doc per distinct content hash."""
-    keep = keep_min_copy(F.lit(True))
-    return docs.withColumn("_keep", keep).filter("_keep").drop("_keep")

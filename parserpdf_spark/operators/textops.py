@@ -64,7 +64,6 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
 # Quality scoring — length / punctuation / stopword ratios
 # ---------------------------------------------------------------------------
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
-PUNCT_RE = r"[^a-z0-9\s]"
 
 
 def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -247,87 +246,4 @@ def fingerprint_winnow(docs: DataFrame, text_col: str = "text") -> DataFrame:
 
     return docs.select("doc_id", winnow(F.col(text_col)).alias("w")).select(
         "doc_id", "w.n_fp", "w.min_fp", "w.max_fp"
-    )
-
-
-# ---------------------------------------------------------------------------
-# PII redaction — the scrubbing pass every public-corpus pipeline runs
-# before training.  Pure JVM regexp expressions (RE2-compatible patterns
-# so the DuckDB harness can re-derive them); counts surface alongside the
-# redacted text so downstream filters can gate on PII density.
-# ---------------------------------------------------------------------------
-PII_PATTERNS: dict[str, tuple[str, str]] = {
-    # name → (pattern, replacement token)
-    "email": (r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}", "<EMAIL>"),
-    "ipv4": (
-        r"\b(?:\d{1,3}\.){3}\d{1,3}\b",
-        "<IP>",
-    ),
-    "phone": (
-        # either +country followed by 2-4 separated digit groups, or the
-        # bare 3-3-4 shape.  Anchored so dotted versions ("10.15.70"),
-        # ISO dates ("2024-08-16") and digit-runs inside longer numbers
-        # never match (no lookarounds — the pattern must stay RE2-safe
-        # for the DuckDB cross-check)
-        r"\+\d{1,3}(?:[-. ]\d{2,4}){2,4}\b|\b\d{3}[-. ]\d{3}[-. ]\d{4}\b",
-        "<PHONE>",
-    ),
-}
-
-
-def redact_pii(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, text_redacted, n_email, n_ipv4, n_phone).
-
-    Replacement order is the (frozen) PII_PATTERNS insertion order —
-    email before phone matters (an email's digits must not half-match
-    the phone pattern after the @ is gone: the whole email is replaced
-    first).  Counts are measured BEFORE any replacement, each on the
-    original text, so they are order-independent and each mirrors into
-    one ``regexp_count`` / DuckDB ``len(regexp_extract_all(...))``.
-    """
-    counts = [
-        F.regexp_count(F.col(text_col), F.lit(pat)).alias(f"n_{name}")
-        for name, (pat, _) in PII_PATTERNS.items()
-    ]
-    redacted = F.col(text_col)
-    for pat, token in PII_PATTERNS.values():
-        redacted = F.regexp_replace(redacted, pat, token)
-    return docs.select(
-        "doc_id", redacted.alias("text_redacted"), *counts
-    )
-
-
-# ---------------------------------------------------------------------------
-# Within-document repetition removal — boilerplate lines (nav crumbs,
-# cookie banners, repeated headers) dedup INSIDE each document, keeping
-# first occurrences in order.  Array-local (zero shuffle): the line list
-# never leaves its row.
-# ---------------------------------------------------------------------------
-def remove_repeated_lines(
-    docs: DataFrame, text_col: str = "text", sep: str = "\n"
-) -> DataFrame:
-    """(doc_id, text_dedup, n_lines, n_removed): drop line i when an
-    identical NON-BLANK line occurred earlier in the same document
-    (``array_position(lines, line) == own index`` keeps exactly the
-    first copy).  Blank/whitespace-only lines are exempt — they are
-    paragraph separators, not boilerplate, and deduping them would
-    collapse every paragraph break after the first.  O(lines²) per
-    document but JVM-side and array-local — documents are KB-scale;
-    nothing shuffles.
-
-    ``sep`` is treated as a LITERAL separator on both sides (split's
-    pattern argument is a regex, so it is \\Q…\\E-quoted here — a caller
-    passing '|' or '.' gets literal behavior, not regex explosion)."""
-    lines = F.split(F.col(text_col), "\\Q" + sep + "\\E")
-    kept = F.filter(
-        lines,
-        lambda x, i: (F.trim(x) == "") | (
-            F.array_position(lines, x) == i + F.lit(1).cast("bigint")
-        ),
-    )
-    return docs.select(
-        "doc_id",
-        F.concat_ws(sep, kept).alias("text_dedup"),
-        F.size(lines).alias("n_lines"),
-        (F.size(lines) - F.size(kept)).alias("n_removed"),
     )

@@ -21,7 +21,10 @@ identical so the design isn't forked):
   half-written chunk is never visible (snapshot isolation);
 - resume = skip chunks whose manifest exists — the "anti-join inputs
   against committed lineage" of SURVEY.md §2.11, done at partition
-  granularity so it costs a directory listing, not a data join.
+  granularity so it costs a directory listing, not a data join;
+- deleting ``_manifest/chunk-<i>.json`` un-commits chunk i (a snapshot
+  rollback): readers stop seeing it at once, and the next run
+  re-extracts exactly that chunk.
 
 At 10^12 docs, N is sized so one chunk ≈ one comfortable Spark job
 (e.g. N=4096); chunks are embarrassingly parallel across job
@@ -163,26 +166,6 @@ def run_checkpointed_extraction(
     return committed_now
 
 
-def rollback_chunk(output_dir: str, chunk_id: int) -> dict:
-    """Un-commit one chunk — the shim's analog of an Iceberg snapshot
-    ROLLBACK (``rollback_to_snapshot`` dropping the bad commit).
-
-    The manifest IS the commit, so removing it atomically returns the
-    table to the state before that chunk committed: readers
-    (:func:`read_extracted` et al.) union committed chunks only, so the
-    rolled-back chunk's files — however corrupt — become invisible
-    immediately, while every earlier snapshot stays readable.  The next
-    :func:`run_checkpointed_extraction` sees the chunk as absent and
-    re-extracts exactly it (time travel forward again).  Returns the
-    dropped lineage record.
-    """
-    done = committed_chunks(output_dir)
-    if chunk_id not in done:
-        raise ValueError(f"chunk {chunk_id} is not committed — nothing to roll back")
-    os.unlink(os.path.join(output_dir, MANIFEST_DIR, f"chunk-{chunk_id}.json"))
-    return done[chunk_id]
-
-
 def _read_committed(spark: SparkSession, output_dir: str) -> DataFrame:
     """Combined rows of the committed chunks only, read with the known
     schema (no schema-inference job)."""
@@ -203,9 +186,3 @@ def read_extracted(spark: SparkSession, output_dir: str) -> DataFrame:
 def read_metrics(spark: SparkSession, output_dir: str) -> DataFrame:
     return split_combined(_read_committed(spark, output_dir))[1]
 
-
-def read_lineage(spark: SparkSession, output_dir: str) -> DataFrame:
-    from parserpdf_spark.schema import LINEAGE_SCHEMA
-
-    records = list(committed_chunks(output_dir).values())
-    return spark.createDataFrame(records, schema=LINEAGE_SCHEMA)

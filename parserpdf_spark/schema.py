@@ -15,26 +15,6 @@ from typing import Any, Callable, Iterable, Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
-# ---------------------------------------------------------------------------
-# Input:  one row per document (BASELINE.json input_hint)
-#   kind ∈ {"html", "pdf_block", "media"}
-# ---------------------------------------------------------------------------
-SPAN_STRUCT = T.StructType(
-    [
-        T.StructField("kind", T.StringType(), True),
-        T.StructField("text", T.StringType(), True),
-        T.StructField("media_ref", T.StringType(), True),
-        T.StructField("offset", T.IntegerType(), True),
-    ]
-)
-
-DOCS_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.StringType(), False),
-        T.StructField("spans", T.ArrayType(SPAN_STRUCT), True),
-    ]
-)
-
 # Combined extraction output: span rows + one per-doc metrics row
 # (metrics rows have kind = '_metrics'; see operators/extract.py).
 COMBINED_DDL = (
@@ -48,28 +28,6 @@ DOC_STATUSES = ("ok", "error")
 
 # every status the raw-file and WARC bridges give a file or record
 INGEST_STATUSES = ("ok", "error", "skipped", "encrypted", "needs_ocr", "needs_prechunk")
-
-# ---------------------------------------------------------------------------
-# Lineage sidecar: per committed chunk — the Spark equivalent of the
-# reference's zip manifest + dated logfile (utils/file_utils.py:242-288,
-# utils/logger.py:55-85); used by resume (plans/checkpoint.py).
-# ---------------------------------------------------------------------------
-LINEAGE_SCHEMA = T.StructType(
-    [
-        T.StructField("run_id", T.StringType(), False),
-        T.StructField("chunk_id", T.IntegerType(), False),
-        T.StructField("n_docs", T.LongType(), True),
-        T.StructField("n_spans", T.LongType(), True),
-        T.StructField(
-            "docs_by_status", T.MapType(T.StringType(), T.LongType()), True
-        ),
-        T.StructField("input_fingerprint", T.StringType(), True),
-    ]
-)
-
-INPUT_KINDS = ("html", "pdf_block", "media", "markdown")
-OUTPUT_KINDS = ("heading", "para", "table", "list", "code", "image", "caption")
-
 
 # ---------------------------------------------------------------------------
 # The row map: one Arrow pass for every per-file / per-payload Python stage

@@ -114,8 +114,13 @@ def get_spark(
 
 def _launch(builder, flag: str, dump: tuple | None) -> SparkSession:
     """Start the driver JVM with the CDS ``flag``, its classpath's conf
-    directory swapped for the cache's empty one for the launch alone."""
+    directory swapped for the cache's empty one for the launch alone.
+
+    A damaged archive (truncated after its promotion) kills the JVM that
+    maps it with SIGBUS before its gateway comes up; that archive is
+    deleted and the JVM started once more as without the cache."""
     from pyspark import SparkContext
+    from pyspark.errors import PySparkRuntimeError
 
     saved = os.environ.get("SPARK_CONF_DIR")
     os.environ["SPARK_CONF_DIR"] = os.path.join(JVM_CACHE, "conf")
@@ -123,6 +128,9 @@ def _launch(builder, flag: str, dump: tuple | None) -> SparkSession:
         return builder.config(
             "spark.driver.extraJavaOptions", f"{_java_option(flag)} {_CDS_QUIET}"
         ).getOrCreate()
+    except PySparkRuntimeError as exc:
+        if dump is not None or exc.getCondition() != "JAVA_GATEWAY_EXITED":
+            raise
     finally:
         if saved is None:
             del os.environ["SPARK_CONF_DIR"]
@@ -135,6 +143,10 @@ def _launch(builder, flag: str, dump: tuple | None) -> SparkSession:
             else:  # the JVM exited before its gateway came up
                 with contextlib.suppress(FileNotFoundError):
                     os.remove(dump[0])
+    with contextlib.suppress(FileNotFoundError):
+        os.remove(flag.partition("=")[2])
+    del builder._options["spark.driver.extraJavaOptions"]
+    return builder.getOrCreate()
 
 
 def _archive_options(driver_memory: str, conf: dict) -> tuple | None:
@@ -190,19 +202,37 @@ def _archive_options(driver_memory: str, conf: dict) -> tuple | None:
 
 def _archive_key(java: str, spark_home: str, driver_memory: str) -> str:
     """Hash of what an archive depends on: the java binary, the pyspark
-    version, Spark's jars (names, sizes, mtimes) and the driver's JVM
-    flags (a 48g heap turns compressed oops off)."""
+    version, the launch classpath (the cache's ``conf/`` and Spark's
+    jars, by absolute path, and the jars' names, sizes and mtimes) and
+    the driver's JVM flags.  Of the heap size only whether compressed
+    oops are on counts (see :func:`_compressed_oops`)."""
     import pyspark
 
     st = os.stat(java)
-    parts = [os.path.realpath(java), st.st_size, st.st_mtime_ns,
-             pyspark.__version__, driver_memory,
-             *(os.environ.get(name, "") for name in _JVM_FLAG_ENV)]
     jars = os.path.join(spark_home, "jars")
+    parts = [os.path.realpath(java), st.st_size, st.st_mtime_ns,
+             pyspark.__version__, _compressed_oops(driver_memory),
+             os.path.abspath(os.path.join(JVM_CACHE, "conf")), os.path.abspath(jars),
+             *(os.environ.get(name, "") for name in _JVM_FLAG_ENV)]
     for entry in sorted(os.scandir(jars), key=lambda e: e.name):
         st = entry.stat()
         parts += [entry.name, st.st_size, st.st_mtime_ns]
     return hashlib.sha256(repr(parts).encode()).hexdigest()[:20]
+
+
+def _compressed_oops(driver_memory: str) -> bool | str:
+    """Whether a JVM with ``driver_memory`` (a Spark size string, MiB
+    when unitless) of heap runs with compressed oops: an archive maps
+    under any heap on the same side of the ~32 GiB line (one dumped at
+    1g maps from 512m to 31g and is refused from 32g).  A heap within a
+    few MB below 32g may land on the wrong side; its JVM then maps only
+    the JDK's own archive, as any mismatch does, and does not crash.  A
+    string this does not parse counts as itself."""
+    m = re.fullmatch(r"(\d+)([bkmgtp]?)b?", driver_memory.strip().lower())
+    if m is None:
+        return driver_memory
+    shift = {"b": 0, "k": 10, "": 20, "m": 20, "g": 30, "t": 40, "p": 50}
+    return int(m.group(1)) << shift[m.group(2)] < 32 << 30
 
 
 def _java_option(value: str) -> str:

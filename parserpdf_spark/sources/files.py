@@ -6,7 +6,7 @@ walks uploaded paths and hands each file to a converter
 collection ``utils/file_utils.py:452-463``).  This module is the Spark
 analog: it turns a ``binaryFile`` scan (sources/scans.py, columns
 path/content) into the engine's canonical interleaved docs table, so
-``scan_html → files_to_docs → extract_docs`` runs end-to-end from a
+``scan_files → files_to_docs → extract_docs`` runs end-to-end from a
 directory of real files.
 
 Routing (keep-with-status, mirroring the reference's extension gate at

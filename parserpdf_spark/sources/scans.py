@@ -1,14 +1,20 @@
 """File-source scans — the reference's recursive path collectors
 re-expressed as Spark readers.
 
-Reference parity (SURVEY.md §2.1):
-- S1 ``collect_pdf_paths``      (``utils/file_utils.py:442-450``)
-- S2 ``collect_html_paths``     (``:452-463``; note the reference's
-  2-arg ``rglob("*.html", ".htm")`` bug silently drops ``.htm`` — here
-  the pattern list is explicit)
-- S3 ``collect_pdf_html_paths`` (``:427-440``, chained rglobs)
-- S4 ``collect_markdown_paths`` (``:465-471``)
-- F2 file-with-extension gate   (``:351-356``)
+Reference parity (SURVEY.md §2.1), each collector one glob call:
+- S1 ``collect_pdf_paths``      (``utils/file_utils.py:442-450``):
+  ``scan_files(spark, root, "*.pdf")``
+- S2 ``collect_html_paths``     (``:452-463``): ``scan_multi(spark,
+  root, ["*.html", "*.htm"])`` — the reference's 2-arg
+  ``rglob("*.html", ".htm")`` bug silently drops ``.htm``; here the
+  pattern list is explicit
+- S3 ``collect_pdf_html_paths`` (``:427-440``, chained rglobs):
+  ``scan_multi`` over both patterns
+- S4 ``collect_markdown_paths`` (``:465-471``): ``scan_files(spark,
+  root, "*.md")``
+
+The F1/F2 extension gate is ``sources/files.route_file``'s ``skipped``
+status: an unknown extension becomes a status row, never a silent drop.
 
 Spark shape: the ``binaryFile`` source with ``pathGlobFilter`` +
 ``recursiveFileLookup`` — the scan itself is distributed, pushdown
@@ -27,10 +33,7 @@ from __future__ import annotations
 
 from functools import reduce
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
-
-# the reference's allowed-extension tuple (globals.py:16)
-FILE_TYPES = (".pdf", ".html", ".docx", ".doc")
+from pyspark.sql import DataFrame, SparkSession
 
 
 def scan_files(
@@ -52,22 +55,6 @@ def scan_files(
     return df.select(*cols)
 
 
-def scan_pdfs(spark: SparkSession, root: str, **kw) -> DataFrame:
-    """S1: recursive ``*.pdf`` scan."""
-    return scan_files(spark, root, "*.pdf", **kw)
-
-
-def scan_html(spark: SparkSession, root: str, **kw) -> DataFrame:
-    """S2: recursive ``*.html`` + ``*.htm`` scan (the reference intended
-    both; its 2-arg rglob call makes ``.htm`` dead code)."""
-    return scan_multi(spark, root, ["*.html", "*.htm"], **kw)
-
-
-def scan_markdown(spark: SparkSession, root: str, **kw) -> DataFrame:
-    """S4: recursive ``*.md`` scan."""
-    return scan_files(spark, root, "*.md", **kw)
-
-
 def scan_multi(
     spark: SparkSession, root: str, globs: list[str], **kw
 ) -> DataFrame:
@@ -76,24 +63,3 @@ def scan_multi(
     scans = [scan_files(spark, root, g, **kw) for g in globs]
     return reduce(lambda a, b: a.unionByName(b), scans)
 
-
-def with_extension_gate(files: DataFrame, allowed=FILE_TYPES) -> DataFrame:
-    """F1/F2: keep-with-status extension gate — rows are never silently
-    dropped; mirrors the reference's "skipped {name}" rows
-    (``converters/pdf_to_md.py:214-224``)."""
-    suffix = F.lower(F.regexp_extract(F.col("path"), r"(\.[^./\\]+)$", 1))
-    return files.select(
-        "*",
-        suffix.alias("suffix"),
-        F.when(suffix.isin(*allowed), F.lit("accepted"))
-        .otherwise(F.lit("skipped"))
-        .alias("status"),
-    )
-
-
-def accumulate_scans(batches: list[DataFrame]) -> DataFrame:
-    """S5: incremental source accumulation — the reference concatenates
-    upload batches into session state (``utils/file_utils.py:392-424``,
-    no dedup, duplicates preserved); ``unionByName`` is the Spark
-    equivalent.  For continuous arrival use streaming/ingest.py."""
-    return reduce(lambda a, b: a.unionByName(b), batches)

@@ -155,11 +155,6 @@ def iter_warc_records(
         yield rec
 
 
-def parse_warc(data: bytes) -> list[dict[str, Any]]:
-    """Materialized form of :func:`iter_warc_records` (tests, goldens)."""
-    return list(iter_warc_records(data))
-
-
 def _split_http(body: bytes) -> tuple[str, bytes]:
     """HTTP response bytes → (content-type, payload bytes)."""
     sep = body.find(b"\r\n\r\n")

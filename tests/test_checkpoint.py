@@ -6,9 +6,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from parserpdf_spark.plans.checkpoint import (
+    CHUNKS_DIR,
+    MANIFEST_DIR,
     committed_chunks,
     read_extracted,
-    read_lineage,
     read_metrics,
     run_checkpointed_extraction,
 )
@@ -49,9 +50,8 @@ def test_crash_resume_no_dupes_no_gaps(spark, sf_small, tmp_path):
     direct, _ = extract_docs(docs)
     assert read_extracted(spark, out).count() == direct.count()
 
-    # lineage: one row per chunk, doc counts sum to the total
-    lineage = read_lineage(spark, out)
-    rows = lineage.collect()
+    # lineage: one manifest per chunk, doc counts sum to the total
+    rows = list(committed_chunks(out).values())
     assert len(rows) == N_CHUNKS
     assert sum(r["n_docs"] for r in rows) == 500
     # run 1 and run 2 have different run_ids in lineage
@@ -86,15 +86,10 @@ def test_rerun_is_noop(spark, sf_small, tmp_path):
 
 def test_rollback_corrupt_chunk_and_time_travel(spark, sf_small, tmp_path):
     """Iceberg-equivalent rollback semantics: a corrupt last chunk rolls
-    back by dropping its manifest (the commit object); earlier snapshots
+    back by deleting its manifest (the commit object); earlier snapshots
     stay readable throughout; resume re-extracts EXACTLY the rolled-back
     chunk; the final table equals the original — no dupes, no gaps."""
     import os
-
-    from parserpdf_spark.plans.checkpoint import (
-        CHUNKS_DIR,
-        rollback_chunk,
-    )
 
     out = str(tmp_path / "run3")
     docs = synth_docs_df(spark, sf_small)
@@ -103,10 +98,7 @@ def test_rollback_corrupt_chunk_and_time_travel(spark, sf_small, tmp_path):
         r["doc_id"]
         for r in read_metrics(spark, out).select("doc_id").collect()
     }
-    lineage0 = {
-        r["chunk_id"]: r["n_docs"]
-        for r in read_lineage(spark, out).collect()
-    }
+    lineage0 = {c: rec["n_docs"] for c, rec in committed_chunks(out).items()}
 
     # corrupt the last chunk's data files (torn write / bad node)
     last = N_CHUNKS - 1
@@ -116,9 +108,8 @@ def test_rollback_corrupt_chunk_and_time_travel(spark, sf_small, tmp_path):
             with open(os.path.join(chunk_dir, name), "wb") as fh:
                 fh.write(b"corrupt")
 
-    # rollback: drop the commit — the corrupt files become invisible
-    dropped = rollback_chunk(out, last)
-    assert dropped["chunk_id"] == last
+    # rollback: delete the commit — the corrupt files become invisible
+    os.unlink(os.path.join(out, MANIFEST_DIR, f"chunk-{last}.json"))
     assert sorted(committed_chunks(out)) == list(range(N_CHUNKS - 1))
 
     # earlier snapshots readable while the table is rolled back, and
@@ -130,10 +121,6 @@ def test_rollback_corrupt_chunk_and_time_travel(spark, sf_small, tmp_path):
     assert len(partial) == sum(
         n for c, n in lineage0.items() if c != last)
     assert partial < baseline
-
-    # rolling back a chunk that isn't committed is an error
-    with pytest.raises(ValueError, match="not committed"):
-        rollback_chunk(out, last)
 
     # resume re-does exactly the rolled-back chunk
     redone = run_checkpointed_extraction(spark, docs, out, n_chunks=N_CHUNKS)

@@ -67,10 +67,10 @@ def test_docx_kernel_never_raises_through_safe_path(junk):
 def test_warc_parser_never_crashes_uncontrolled(junk):
     """Arbitrary bytes → ValueError or records, never another exception;
     and the row-level wrapper always yields status rows."""
-    from parserpdf_spark.sources.warc import parse_warc, warc_file_rows
+    from parserpdf_spark.sources.warc import iter_warc_records, warc_file_rows
 
     try:
-        parse_warc(junk)
+        list(iter_warc_records(junk))
     except ValueError:
         pass
     rows = warc_file_rows("/x/fuzz.warc", junk)
@@ -225,7 +225,7 @@ def test_doc_cfb_misaligned_fat_raises_valueerror_not_struct_error():
     to ValueError at the kernel boundary (keep-with-status contract)."""
     import struct
 
-    from parserpdf_spark.kernels.doc_extract import CFB_MAGIC, doc_to_text
+    from parserpdf_spark.kernels.doc_extract import CFB_MAGIC, doc_to_html
     from parserpdf_spark.sources.files import route_file
 
     data = bytearray(516)
@@ -235,7 +235,7 @@ def test_doc_cfb_misaligned_fat_raises_valueerror_not_struct_error():
     struct.pack_into("<I", data, 0x44, 0xFFFFFFFE)  # no DIFAT chaining
     struct.pack_into("<I", data, 0x4C, 0)  # DIFAT[0] = sector 0
     with pytest.raises(ValueError):
-        doc_to_text(bytes(data))
+        doc_to_html(bytes(data))
     row = route_file("/x/crafted.doc", bytes(data))
     assert row["ingest_status"] == "error"
 

@@ -63,13 +63,24 @@ print(os.path.getsize(tmp), proc.returncode)
 """
 
 
+# the driver JVM's own arguments: is it mapping a CDS archive?
+MAPS_ARCHIVE = QUERY + """
+bean = spark.sparkContext._jvm.java.lang.management.ManagementFactory
+args = bean.getRuntimeMXBean().getInputArguments()
+print(any(str(a).startswith("-XX:SharedArchiveFile") for a in args))
+"""
+
+
 def test_a_dump_cut_short_is_never_promoted(tmp_path):
     """A JVM whose dump cannot be written in full (a 50 MB file-size
     limit on its process, against a ~140 MB archive) exits non-zero and
     leaves neither an archive nor a dump file, and its exit message
     stays off stdout.  A JVM killed while it writes its dump leaves a
     partial file, which is deleted, not promoted.  The next session on
-    that cache starts, runs a query, and promotes its own dump."""
+    that cache starts, runs a query, and promotes its own dump.  Once
+    that archive is cut to half its size, the JVM that maps it dies
+    (SIGBUS); the session deletes the archive and starts a JVM without
+    one, which runs the query."""
     cache = str(tmp_path / "cache")
     code = QUERY.format(repo=REPO, cache=cache)
     limit = 50 << 20
@@ -93,6 +104,15 @@ def test_a_dump_cut_short_is_never_promoted(tmp_path):
     assert after.stdout.strip() == "499500"
     files = _cache_files(cache)
     assert len(files) == 1 and files[0].endswith(".jsa")
+
+    archive = os.path.join(cache, files[0])
+    os.truncate(archive, os.path.getsize(archive) // 2)
+    crash_cwd = tmp_path / "crash"  # where the dying JVM writes hs_err_pid*.log
+    crash_cwd.mkdir()
+    damaged = _run(MAPS_ARCHIVE.format(repo=REPO, cache=cache), crash_cwd)
+    assert damaged.returncode == 0, damaged.stderr[-3000:]
+    assert damaged.stdout.split()[-2:] == ["499500", "False"]
+    assert _cache_files(cache) == []
 
 
 EXTRACT_JOB = """
@@ -257,14 +277,22 @@ def test_a_miss_plans_a_dump_and_a_hit_maps_the_archive(no_jvm):
 
 
 def test_the_key_covers_heap_size_and_environment_jvm_flags(no_jvm, monkeypatch):
-    def archive():
-        flag, dump = session._archive_options("48g", {})
-        return dump[1]
+    """Of the heap size only compressed oops on or off splits the key
+    (512m, 1g and 31g share one, 48g has another).  Environment JVM
+    flags split it, and so does the cache's own path: the dumped
+    classpath names the cache's conf/ absolutely, so a moved or copied
+    checkout needs an archive of its own."""
+    def key(memory="48g"):
+        flag, dump = session._archive_options(memory, {})
+        return os.path.basename(dump[1])
 
-    base = archive()
-    assert session._archive_options("1g", {})[1][1] != base
+    base = key()
+    assert key("512m") == key("1g") == key("31g") == key("1024") != base
     monkeypatch.setenv("JAVA_TOOL_OPTIONS", "-Dx=1")
-    assert archive() != base
+    assert key() != base
+    monkeypatch.delenv("JAVA_TOOL_OPTIONS")
+    monkeypatch.setattr(session, "JVM_CACHE", str(no_jvm.parent / "moved"))
+    assert key() != base
 
 
 @pytest.mark.parametrize("env", [

@@ -328,34 +328,6 @@ def test_extract_job_ocr_flag(spark, tmp_path):
     assert with_ocr["docs_by_status"] == {"ok": 9}
 
 
-def test_streaming_ingestion_with_ocr(spark, tmp_path):
-    """Structured-streaming ingestion with the OCR tier on: a scanned
-    PDF dropped into the watched dir extracts its recognized text
-    exactly as the batch path does (the bridge is stateless, so the
-    golden pins both)."""
-    import shutil
-
-    from parserpdf_spark.operators.extract import split_combined
-    from parserpdf_spark.streaming.ingest import run_incremental_file_ingestion
-
-    watch = tmp_path / "watch"
-    watch.mkdir()
-    shutil.copy(os.path.join(OCR_CORPUS, "scan_0.pdf"), watch)
-    shutil.copy(os.path.join(OCR_CORPUS, "scan_3.pdf"), watch)  # photo
-    out = str(tmp_path / "out")
-    run_incremental_file_ingestion(
-        spark, str(watch), out, str(tmp_path / "ck"), ocr=True
-    )
-    extracted, metrics = split_combined(spark.read.parquet(out))
-    assert [r["doc_id"] for r in metrics.collect()] == ["scan_0"]
-    golden = spark.read.parquet(
-        os.path.join(REPO, "goldens", "extract_ocr.parquet")
-    ).filter("doc_id = 'scan_0'")
-    got = {tuple(r) for r in extracted.select(*golden.columns).collect()}
-    want = {tuple(r) for r in golden.collect()}
-    assert got == want
-
-
 def test_ocr_from_media_multiformat(spark):
     """Text-in-images across the codec fleet: the SAME rendered page
     encoded as PNG, BMP and JPEG OCRs identically; a noise image is

@@ -2,8 +2,8 @@
 
 Covers: explode→extract→reassemble round trip, golden equality between
 the Spark pipeline and the pure-pandas kernels (the span-sequence
-equality invariant), metrics/error contract, and the structural-count
-formulas the DuckDB oracle uses.
+equality invariant), metrics/error contract, duplicate doc ids, and the
+structural-count formulas the DuckDB oracle uses.
 """
 
 import pandas as pd
@@ -122,6 +122,32 @@ def test_error_rows_never_fail_task(spark):
     assert stat["bad_kind"][0] == "error"
     assert stat["empty"] == ("ok", 0)
     assert extracted.filter(F.col("doc_id") == "bad_json").count() == 0
+
+
+def test_batch_duplicate_doc_ids_both_processed(spark):
+    """The batch engine mirrors the reference: duplicates are NOT
+    silently dropped (utils/file_utils.py:413) — both process, and the
+    metrics table exposes the collision for the pipeline to flag."""
+    base = [
+        ("dup", [{"kind": "html", "text": "<p>one</p>", "media_ref": None, "offset": 0}]),
+        ("dup", [{"kind": "html", "text": "<p>two</p>", "media_ref": None, "offset": 0}]),
+        ("solo", [{"kind": "html", "text": "<p>x</p>", "media_ref": None, "offset": 0}]),
+    ]
+    docs = spark.createDataFrame(
+        base,
+        schema="doc_id string, spans array<struct<kind:string,text:string,media_ref:string,offset:int>>",
+    )
+    extracted, metrics = extract_docs(docs)
+    assert metrics.count() == 3  # both dup rows processed
+    collisions = (
+        metrics.groupBy("doc_id").agg(F.count("*").alias("n"))
+        .filter(F.col("n") > 1)
+    )
+    assert [r["doc_id"] for r in collisions.collect()] == ["dup"]
+    texts = sorted(
+        r["text"] for r in extracted.filter(F.col("doc_id") == "dup").collect()
+    )
+    assert texts == ["one", "two"]
 
 
 def test_synth_matches_pandas_path(spark, sf_small):

@@ -296,13 +296,29 @@ def test_operators_unpersist_what_they_persist():
     assert offenders == []
 
 
+# top-level engine names no entry point reaches that stay anyway, each
+# with its reason; what they reach is kept with them
+UNREACHED_KEPT = {
+    "parserpdf_spark.kernels.html_extract.parse_html_stdlib":
+        "the stdlib-parser reference the fast tokenizer is tested against",
+    "parserpdf_spark.kernels.jpeg.encode_jpeg_progressive":
+        "the writer whose output the progressive decoder is tested against",
+    "parserpdf_spark.operators.sinks.export_image_payloads":
+        "the reference's image sink (PARITY K2), which no job runs yet",
+}
+
+
 def test_every_engine_module_is_reached_from_an_entry_point():
-    """Every module under parserpdf_spark/ is imported, directly or
-    through other modules (function-local imports included), from an
-    entry point: the driver contract, the benches, perfbench, tools, the
-    jobs, streaming, or the worker daemon ``session.get_spark`` names in
-    ``spark.python.daemon.module``.  A module that only its own tests
-    import is a tier no run uses."""
+    """Every module and every top-level name under parserpdf_spark/ is
+    reached from an entry point: the driver contract, the benches,
+    perfbench, tools, the jobs, or the worker daemon ``session.get_spark``
+    names in ``spark.python.daemon.module``.  A name is reached when
+    reached code names it (a ``Name``, a dotted ``Attribute`` through an
+    imported module, or an import; function-local imports included),
+    and a module when it is imported or one of its names is reached,
+    which runs its other top-level statements.  Docstrings and comments
+    name nothing.  A name that only its own tests use is code no run
+    uses; ``UNREACHED_KEPT`` lists the exceptions."""
     import ast
     import pathlib
 
@@ -313,37 +329,111 @@ def test_every_engine_module_is_reached_from_an_entry_point():
         parts = list(path.relative_to(repo).with_suffix("").parts)
         return ".".join(parts[:-1] if parts[-1] == "__init__" else parts)
 
-    def imported(path, module):
-        for node in ast.walk(ast.parse(path.read_text())):
-            if isinstance(node, ast.Import):
-                yield from (alias.name for alias in node.names)
-            elif isinstance(node, ast.ImportFrom):
-                base = node.module or ""
-                if node.level:
-                    parts = module.split(".")
-                    if path.name != "__init__.py":
-                        parts = parts[:-1]
-                    parts = parts[: len(parts) - node.level + 1]
-                    base = ".".join(parts + ([node.module] if node.module else []))
-                yield base
-                yield from (f"{base}.{alias.name}" for alias in node.names)
-
-    modules = {module_of(p): p for p in pkg.rglob("*.py")}
+    engine = {module_of(p): p for p in pkg.rglob("*.py")}
     roots = [
         repo / "__spark_entry__.py", repo / "bench.py", repo / "bench_extra.py",
         *(repo / "perfbench").glob("*.py"), *(repo / "tools").glob("*.py"),
-        *(pkg / "jobs").glob("*.py"), *(pkg / "streaming").glob("*.py"),
-        pkg / "_daemon.py",
+        *(pkg / "jobs").glob("*.py"), pkg / "_daemon.py",
     ]
-    reached = {module_of(p) for p in roots}
-    todo = [(p, module_of(p)) for p in roots]
-    while todo:
-        path, module = todo.pop()
-        for name in imported(path, module):
-            parts = name.split(".")
-            for i in range(1, len(parts) + 1):
-                prefix = ".".join(parts[:i])
-                if prefix in modules and prefix not in reached:
-                    reached.add(prefix)
-                    todo.append((modules[prefix], prefix))
-    assert sorted(set(modules) - reached) == []
+    files = {**{module_of(p): p for p in roots}, **engine}
+
+    def import_base(node, module):
+        if not node.level:
+            return node.module
+        parts = module.split(".")
+        if files[module].name != "__init__.py":
+            parts = parts[:-1]
+        parts = parts[: len(parts) - node.level + 1]
+        return ".".join(parts + ([node.module] if node.module else []))
+
+    defs = {}  # (module, name) -> its top-level statement
+    other = {module: [] for module in files}  # the rest of each module's body
+    aliases = {module: {} for module in files}  # local name -> dotted target
+    for module, path in files.items():
+        tree = ast.parse(path.read_text())
+        for node in ast.walk(tree):
+            if isinstance(node, ast.Import):
+                for alias in node.names:
+                    local = alias.asname or alias.name.split(".")[0]
+                    target = alias.name if alias.asname else local
+                    aliases[module].setdefault(local, target)
+            elif isinstance(node, ast.ImportFrom):
+                base = import_base(node, module)
+                for alias in node.names:
+                    aliases[module].setdefault(alias.asname or alias.name,
+                                               f"{base}.{alias.name}")
+        for node in tree.body:
+            if isinstance(node, (ast.Assign, ast.AnnAssign)):
+                targets = getattr(node, "targets", None) or [node.target]
+                # a module dunder (__version__, which _daemon reads as text)
+                # is metadata, not code
+                names = [n.id for t in targets for n in ast.walk(t)
+                         if isinstance(n, ast.Name) and not n.id.startswith("__")]
+            elif isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef, ast.ClassDef)):
+                names = [node.name]
+            else:
+                names = []
+            if names and module in engine:
+                defs.update({(module, name): node for name in names})
+            else:
+                other[module].append(node)
+
+    def resolve(dotted):
+        """The module, or the (module, name), a dotted name means."""
+        parts = dotted.split(".")
+        for i in range(len(parts), 0, -1):
+            module = ".".join(parts[:i])
+            if module not in files:
+                continue
+            rest = parts[i:]
+            if rest and (module, rest[0]) in defs:
+                return [(module, rest[0])]
+            if rest and rest[0] in aliases[module]:  # a re-export
+                target = aliases[module][rest[0]]
+                return [module, *resolve(".".join([target, *rest[1:]]))]
+            return [module]
+        return []
+
+    def named(module, node):
+        for n in ast.walk(node):
+            if isinstance(n, ast.Import):
+                for alias in n.names:
+                    yield from resolve(alias.name)
+            elif isinstance(n, ast.ImportFrom):
+                base = import_base(n, module)
+                yield from resolve(base)
+                for alias in n.names:
+                    yield from resolve(f"{base}.{alias.name}")
+            elif isinstance(n, (ast.Name, ast.Attribute)):
+                chain = []
+                while isinstance(n, ast.Attribute):
+                    chain.insert(0, n.attr)
+                    n = n.value
+                if not isinstance(n, ast.Name):
+                    continue
+                if (module, n.id) in defs:
+                    yield (module, n.id)
+                elif n.id in aliases[module]:
+                    yield from resolve(".".join([aliases[module][n.id], *chain]))
+
+    def reach(todo):
+        seen = set()
+        while todo:
+            item = todo.pop()
+            if item in seen:
+                continue
+            seen.add(item)
+            if isinstance(item, tuple):
+                todo += [item[0], *named(item[0], defs[item])]
+            else:
+                parent = item.rpartition(".")[0]
+                todo += [parent] if parent in files else []
+                todo += [ref for node in other[item] for ref in named(item, node)]
+        return seen
+
+    reached = reach([module_of(p) for p in roots])
+    kept = {tuple(name.rsplit(".", 1)) for name in UNREACHED_KEPT}
+    assert sorted(kept & reached) == []  # a reached name needs no exception
+    reached |= reach(sorted(kept))
+    unreached = [*(set(engine) - reached), *(".".join(d) for d in set(defs) - reached)]
+    assert sorted(unreached) == []

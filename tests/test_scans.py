@@ -1,18 +1,10 @@
-"""File-source scan tests (SURVEY.md §2.1 S1-S5, F1/F2) against a tmpdir
+"""File-source scan tests (SURVEY.md §2.1 S1-S4) against a tmpdir
 tree with decoy files — mirroring the reference's test approach
 (reference tests/test_file_handler.py:14-43)."""
 
 import pytest
-from pyspark.sql import functions as F
 
-from parserpdf_spark.sources.scans import (
-    accumulate_scans,
-    scan_html,
-    scan_markdown,
-    scan_multi,
-    scan_pdfs,
-    with_extension_gate,
-)
+from parserpdf_spark.sources.scans import scan_files, scan_multi
 
 
 @pytest.fixture(scope="module")
@@ -37,18 +29,20 @@ def names(df):
     return sorted(r["path"].rsplit("/", 1)[-1] for r in df.select("path").collect())
 
 
-def test_s1_recursive_pdf_scan(spark, tree):
-    assert names(scan_pdfs(spark, tree)) == ["a.pdf", "b.pdf"]
-
-
-def test_s2_html_scan_includes_htm(spark, tree):
-    # the reference *intended* .htm but its 2-arg rglob drops it
+@pytest.mark.parametrize("globs, want", [
+    # S1: collect_pdf_paths
+    ("*.pdf", ["a.pdf", "b.pdf"]),
+    # S2: the reference *intended* .htm but its 2-arg rglob drops it
     # (utils/file_utils.py:459); here both patterns scan
-    assert names(scan_html(spark, tree)) == ["c.html", "d.htm"]
-
-
-def test_s4_markdown_scan(spark, tree):
-    assert names(scan_markdown(spark, tree)) == ["e.md"]
+    (["*.html", "*.htm"], ["c.html", "d.htm"]),
+    # S4: collect_markdown_paths
+    ("*.md", ["e.md"]),
+], ids=["s1_pdf", "s2_html_htm", "s4_markdown"])
+def test_recursive_glob_scan(spark, tree, globs, want):
+    if isinstance(globs, str):
+        assert names(scan_files(spark, tree, globs)) == want
+    else:
+        assert names(scan_multi(spark, tree, globs)) == want
 
 
 def test_s3_multi_pattern_scan_with_content(spark, tree):
@@ -58,24 +52,3 @@ def test_s3_multi_pattern_scan_with_content(spark, tree):
                for r in df.collect()}
     assert content["a.pdf"].startswith(b"%PDF")
 
-
-def test_f1_extension_gate_keep_with_status(spark, tree):
-    all_files = scan_multi(spark, tree, ["*"])
-    gated = with_extension_gate(all_files)
-    by_status = {
-        r["path"].rsplit("/", 1)[-1]: r["status"] for r in gated.collect()
-    }
-    assert by_status["a.pdf"] == "accepted"
-    assert by_status["c.html"] == "accepted"
-    assert by_status["decoy.txt"] == "skipped"
-    assert by_status["decoy.docx.bak"] == "skipped"
-    # nothing silently dropped
-    assert gated.count() == all_files.count()
-
-
-def test_s5_accumulation_preserves_duplicates(spark, tree):
-    # the reference concatenates without dedup (utils/file_utils.py:413)
-    b1 = scan_pdfs(spark, tree)
-    acc = accumulate_scans([b1, b1])
-    assert acc.count() == 2 * b1.count()
-    assert acc.select("path").distinct().count() == b1.count()

@@ -7,9 +7,9 @@ from pyspark.sql import functions as F
 
 from parserpdf_spark.operators.ann import ann_bruteforce_topk, ann_ivf_topk
 from parserpdf_spark.operators.dedup import (
-    dedup_exact_keep_min,
     embedding_dup_pairs_bucketed,
     jaccard_pairs,
+    keep_min_copy,
     lsh_candidate_pairs,
     minhash_lsh_pairs,
     minhash_signatures,
@@ -30,8 +30,13 @@ def docs(spark):
     return spark.createDataFrame(rows, "doc_id long, text string")
 
 
+def _keep_min(docs):
+    keep = docs.withColumn("keep", keep_min_copy(F.lit(True))).filter("keep")
+    return sorted(r["doc_id"] for r in keep.collect())
+
+
 def test_dedup_exact_keep_min(docs):
-    kept = sorted(r["doc_id"] for r in dedup_exact_keep_min(docs).collect())
+    kept = _keep_min(docs)
     assert kept == [1, 2, 3]  # 4 is an exact dup of 1; min id wins
 
 
@@ -43,7 +48,7 @@ def test_dedup_exact_keep_min_ties_and_null_ids(spark):
     rows = [(5, "a b c"), (5, "a b c"), (7, "a b c"),
             (None, "d e f"), (2, "d e f"), (None, "g h i")]
     df = spark.createDataFrame(rows, "doc_id long, text string")
-    kept = sorted(r["doc_id"] for r in dedup_exact_keep_min(df).collect())
+    kept = _keep_min(df)
     assert kept == [2, 5, 5]
 
 
@@ -680,156 +685,6 @@ def test_curate_on_a_planted_corpus_matches_oracle(spark, planted_sf):
     assert {r["doc_id"] for r in curated.collect()} == expected_ids
 
 
-def test_redact_pii_matches_duckdb(spark, tmp_path):
-    """PII scrubbing agrees with an independent DuckDB RE2 derivation on
-    a corpus with planted emails/IPs/phones (counts + redacted text)."""
-    import duckdb
-    import pandas as pd
-
-    from parserpdf_spark.operators.textops import PII_PATTERNS, redact_pii
-
-    src = pd.read_parquet("/root/testdata/sf0.01/documents.parquet")[
-        ["doc_id", "text"]
-    ].copy()
-    # plant deterministic PII in a third of the docs
-    def plant(row):
-        i = int(row["doc_id"])
-        t = row["text"]
-        if i % 3 == 0:
-            t += f" contact user{i}@example-{i % 7}.org now"
-        if i % 4 == 0:
-            t += f" from 10.{i % 256}.0.{(i * 7) % 256}"
-        if i % 5 == 0:
-            t += f" call +44 20{i % 10} 7946 09{i % 90:02d}"
-        return t
-
-    src["text"] = src.apply(plant, axis=1)
-    p = str(tmp_path / "pii.parquet")
-    src.to_parquet(p, index=False)
-
-    got = (
-        redact_pii(spark.read.parquet(p))
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    exprs = []
-    red = "text"
-    for name, (pat, tok) in PII_PATTERNS.items():
-        exprs.append(
-            f"len(regexp_extract_all(text, '{pat}')) AS n_{name}"
-        )
-        red = f"regexp_replace({red}, '{pat}', '{tok}', 'g')"
-    want = con.execute(
-        f"SELECT doc_id, {red} AS text_redacted, {', '.join(exprs)} "
-        f"FROM read_parquet('{p}') ORDER BY doc_id"
-    ).fetchdf()
-    pd.testing.assert_frame_equal(
-        got[want.columns], want, check_dtype=False
-    )
-    assert got["n_email"].sum() > 0 and got["n_ipv4"].sum() > 0
-    assert got["n_phone"].sum() > 0
-    assert not got["text_redacted"].str.contains("@").any()
-
-
-def test_remove_repeated_lines_matches_duckdb(spark, tmp_path):
-    """Within-doc line dedup agrees with the DuckDB list-lambda twin and
-    keeps exactly the first copy of each repeated line."""
-    import duckdb
-    import pandas as pd
-
-    from parserpdf_spark.operators.textops import remove_repeated_lines
-
-    src = pd.read_parquet("/root/testdata/sf0.01/documents.parquet")[
-        ["doc_id", "text"]
-    ].copy()
-    # re-shape each doc into lines of 5 words; duplicate a boilerplate
-    # line at top+bottom of every other doc
-    def to_lines(row):
-        words = [w for w in row["text"].split(" ") if w]
-        lines = [" ".join(words[i:i + 5]) for i in range(0, len(words), 5)]
-        if int(row["doc_id"]) % 2 == 0:
-            lines = ["COOKIE BANNER"] + lines + ["COOKIE BANNER"]
-        return "\n".join(lines)
-
-    src["text"] = src.apply(to_lines, axis=1)
-    p = str(tmp_path / "lines.parquet")
-    src.to_parquet(p, index=False)
-
-    got = (
-        remove_repeated_lines(spark.read.parquet(p))
-        .toPandas()
-        .sort_values("doc_id")
-        .reset_index(drop=True)
-    )
-    con = duckdb.connect()
-    want = con.execute(f"""
-        SELECT doc_id,
-               array_to_string(
-                 list_filter(l, (x, i) -> trim(x) = '' OR
-                                          list_position(l, x) = i),
-                 chr(10)) AS text_dedup,
-               len(l) AS n_lines,
-               len(l) - len(list_filter(l, (x, i) -> trim(x) = '' OR
-                                          list_position(l, x) = i))
-                 AS n_removed
-        FROM (SELECT doc_id, string_split(text, chr(10)) AS l
-              FROM read_parquet('{p}'))
-        ORDER BY doc_id
-    """).fetchdf()
-    pd.testing.assert_frame_equal(
-        got[want.columns], want, check_dtype=False
-    )
-    evens = got[got["doc_id"] % 2 == 0]
-    assert (evens["n_removed"] >= 1).all()
-    assert not evens["text_dedup"].str.endswith("COOKIE BANNER").any()
-    assert evens["text_dedup"].str.startswith("COOKIE BANNER").all()
-
-
-def test_redact_pii_leaves_dates_versions_ips_alone(spark):
-    """Regression (review finding): the phone pattern must not corrupt
-    ISO dates, dotted version strings, or double-count IPv4 octets."""
-    from parserpdf_spark.operators.textops import redact_pii
-
-    df = spark.createDataFrame(
-        [
-            (1, "released 2024-08-16 today"),
-            (2, "version 10.15.70 is out"),
-            (3, "host 192.168.10.100 responded"),
-            (4, "call 555-123-4567 or +44 201 7946 0912 now"),
-        ],
-        "doc_id long, text string",
-    )
-    got = {r["doc_id"]: r for r in redact_pii(df).collect()}
-    assert got[1]["text_redacted"] == "released 2024-08-16 today"
-    assert got[2]["text_redacted"] == "version 10.15.70 is out"
-    assert got[1]["n_phone"] == 0 and got[2]["n_phone"] == 0
-    # an IP is an IP, not also a phone
-    assert got[3]["n_ipv4"] == 1 and got[3]["n_phone"] == 0
-    assert got[3]["text_redacted"] == "host <IP> responded"
-    assert got[4]["n_phone"] == 2
-    assert got[4]["text_redacted"] == "call <PHONE> or <PHONE> now"
-
-
-def test_remove_repeated_lines_literal_separator(spark):
-    """Regression (review finding): a regex-metachar separator is
-    treated literally, not as a pattern."""
-    from parserpdf_spark.operators.textops import remove_repeated_lines
-
-    df = spark.createDataFrame([(1, "a|b|a|c")], "doc_id long, text string")
-    row = remove_repeated_lines(df, sep="|").collect()[0]
-    assert row["text_dedup"] == "a|b|c"
-    assert row["n_lines"] == 4 and row["n_removed"] == 1
-    # blank lines are paragraph separators, never deduped
-    df2 = spark.createDataFrame(
-        [(1, "p1\n\np2\n\np3")], "doc_id long, text string"
-    )
-    row2 = remove_repeated_lines(df2).collect()[0]
-    assert row2["text_dedup"] == "p1\n\np2\n\np3"
-    assert row2["n_removed"] == 0
-
-
 def test_connected_components_converging_at_last_round_ok(spark, budgets):
     """Convergence ON the final allowed round must not raise: a budget
     of exactly the rounds the distributed path needs returns the full
@@ -994,20 +849,6 @@ def test_cc_star_fast_path_singletons_from_dropped_rows(spark, budgets):
     assert as_dict[2] == 1                       # self-pair didn't detach 2
     assert (None, None) in fast                  # null node labels itself
     assert len(fast) == len(as_dict)             # no duplicate doc_ids
-
-
-def test_redact_pii_plus_phone_does_not_eat_longer_digit_runs(spark):
-    """Regression: the +country alternative must stop at a word boundary,
-    never redacting a prefix of a longer identifier."""
-    from parserpdf_spark.operators.textops import redact_pii
-
-    df = spark.createDataFrame(
-        [(1, "order id +44 201 7946 091234 end")], "doc_id long, text string"
-    )
-    row = redact_pii(df).collect()[0]
-    # the id's tail digits survive un-split ("091234" never becomes "...34")
-    assert "34 end" in row["text_redacted"]
-    assert "<PHONE>34" not in row["text_redacted"].replace("<PHONE> ", "")
 
 
 def test_connected_components_star_keeps_self_pair_nodes(spark, budgets):

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from parserpdf_spark.sources.warc import (
     _doc_id_from_uri,
-    parse_warc,
+    iter_warc_records,
     warc_file_rows,
     warc_to_docs,
 )
@@ -24,7 +24,7 @@ def _read(name: str) -> bytes:
 
 
 def test_parse_warc_record_framing():
-    recs = parse_warc(_read("crawl_0.warc"))
+    recs = list(iter_warc_records(_read("crawl_0.warc")))
     assert len(recs) == 9  # warcinfo + 6 html + request + jpeg
     assert recs[0]["headers"]["warc-type"] == "warcinfo"
     types = [r["headers"]["warc-type"] for r in recs]
@@ -36,18 +36,19 @@ def test_parse_warc_record_framing():
 
 def test_parse_warc_gzip_transparent():
     plain = gzip.decompress(_read("crawl_2.warc.gz"))
-    assert parse_warc(_read("crawl_2.warc.gz")) == parse_warc(plain)
+    gz = _read("crawl_2.warc.gz")
+    assert list(iter_warc_records(gz)) == list(iter_warc_records(plain))
 
 
 def test_parse_warc_rejects_garbage():
     with pytest.raises(ValueError, match="WARC"):
-        parse_warc(b"HTTP/1.1 200 OK\r\n\r\nnot a warc\r\n\r\n")
+        list(iter_warc_records(b"HTTP/1.1 200 OK\r\n\r\nnot a warc\r\n\r\n"))
     with pytest.raises(ValueError, match="at offset"):
         good = _read("crawl_0.warc")
-        parse_warc(good[: len(good) // 2])
+        list(iter_warc_records(good[: len(good) // 2]))
     with pytest.raises(ValueError, match="truncated"):
         good = _read("crawl_0.warc")
-        parse_warc(good[:170])  # cuts inside the first record's payload
+        list(iter_warc_records(good[:170]))  # cuts inside the first record's payload
 
 
 def test_parse_warc_corrupt_deflate_is_valueerror_not_zlib_error():
@@ -57,7 +58,7 @@ def test_parse_warc_corrupt_deflate_is_valueerror_not_zlib_error():
     gz = bytearray(gzip.compress(_read("crawl_0.warc")))
     gz[20:28] = b"\x00" * 8  # stomp the deflate stream mid-body
     with pytest.raises(ValueError, match="gzip"):
-        parse_warc(bytes(gz))
+        list(iter_warc_records(bytes(gz)))
     rows = warc_file_rows("/x/corrupt.warc.gz", bytes(gz))
     assert rows[-1]["ingest_status"] == "error"
     assert "gzip" in rows[-1]["ingest_error"]
@@ -70,7 +71,7 @@ def test_warc_multimember_gz_streams_bounded():
     import parserpdf_spark.sources.warc as W
 
     plain = _read("crawl_0.warc")
-    records = parse_warc(plain)
+    records = list(iter_warc_records(plain))
     # re-frame each record as its own gzip member
     offsets, pos = [], 0
     multimember = b""
@@ -181,28 +182,3 @@ def test_extract_job_over_warc_dir(spark, tmp_path):
         "ok": 16, "skipped": 3, "error": 1,
     }
     assert report["docs_by_status"] == {"ok": 16}
-
-
-def test_streaming_warc_ingestion_incremental(spark, tmp_path):
-    """Drop WARC files one by one: only new files process; output docs
-    accumulate without dupes."""
-    import shutil
-
-    from parserpdf_spark.operators.extract import split_combined
-    from parserpdf_spark.streaming.ingest import run_incremental_warc_ingestion
-
-    watch = tmp_path / "crawl"
-    watch.mkdir()
-    out = str(tmp_path / "out")
-    ck = str(tmp_path / "ck")
-
-    shutil.copy(os.path.join(FIXTURES, "crawl_0.warc"), watch)
-    run_incremental_warc_ingestion(spark, str(watch), out, ck)
-    _, m1 = split_combined(spark.read.parquet(out))
-    assert m1.count() == 6  # crawl_0's html captures
-
-    shutil.copy(os.path.join(FIXTURES, "crawl_2.warc.gz"), watch)
-    run_incremental_warc_ingestion(spark, str(watch), out, ck)
-    _, m2 = split_combined(spark.read.parquet(out))
-    docs = [r["doc_id"] for r in m2.collect()]
-    assert len(docs) == 10 and len(set(docs)) == 10  # +4, no dupes
