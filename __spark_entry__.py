@@ -44,15 +44,8 @@ GOLDEN_OCR_INGEST = os.path.join(_REPO, "goldens", "ocr_ingest_status.parquet")
 FIXTURE_OCR = os.path.join(_REPO, "fixtures", "ocr_corpus")
 
 
-# The ingest-status goldens store the absolute paths of the checkout
-# that wrote them, so the ingest gates compare repo-relative paths
-# (fixtures/…): the queries strip this checkout's root, the oracles
-# everything before fixtures/.
-_GOLDEN_REL_SRC_PATH = (
-    "substr(src_path, strpos(src_path, 'fixtures/')) AS src_path"
-)
-
-
+# The ingest-status goldens store repo-relative paths (fixtures/…), so
+# the ingest queries strip this checkout's root to compare with them.
 def _rel_src_path():
     # binaryFile reports URIs (file:/…)
     return F.regexp_replace(
@@ -121,9 +114,9 @@ def q_extract_order_checksum(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1: span-sequence *order* invariant — md5 over the offset-ordered
     serialized span stream per doc (order-sensitive even under the
     driver's order-insensitive row hashing)."""
-    from parserpdf_spark.operators.extract import reassemble
+    from parserpdf_spark.operators.skew import assemble_spans_unsalted
 
-    r = reassemble(_extracted(spark, sf_dir))
+    r = assemble_spans_unsalted(_extracted(spark, sf_dir))
     serialized = F.transform(
         F.col("spans"),
         lambda s: F.concat_ws(
@@ -158,24 +151,9 @@ def q_render_markdown(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ordered spans, image spans rendered ``![](ref)`` exactly like
     the reference's written .md (golden md line 1:
     ``![](_page_0_Picture_1.jpeg)``, written at file_utils.py:555)."""
-    e = _extracted(spark, sf_dir)
-    rendered = F.when(
-        F.col("kind") == "image",
-        F.concat(F.lit("![]("), F.coalesce(F.col("media_ref"), F.lit("")), F.lit(")")),
-    ).otherwise(F.col("text"))
-    return (
-        e.select("doc_id", "offset", rendered.alias("md"))
-        .groupBy("doc_id")
-        .agg(
-            F.concat_ws(
-                "\n\n",
-                F.transform(
-                    F.sort_array(F.collect_list(F.struct("offset", "md"))),
-                    lambda s: s["md"],
-                ),
-            ).alias("markdown")
-        )
-    )
+    from parserpdf_spark.operators.sinks import render_markdown_col
+
+    return render_markdown_col(_extracted(spark, sf_dir)).select("doc_id", "markdown")
 
 
 def q_render_json(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -341,7 +319,7 @@ def q_decontamination(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     train = docs.filter(F.col("doc_id") >= 50).unionByName(leaks)
     eval_docs = docs.filter(F.col("doc_id") < 50)
-    return ngram_contamination(train, eval_docs, n=8)
+    return ngram_contamination(train, eval_docs)
 
 
 def q_stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -636,7 +614,7 @@ def q_session_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parserpdf_spark.operators.analytics import session_stats
 
     ev = spark.read.parquet(f"{sf_dir}/events.parquet")
-    return session_stats(ev, gap_minutes=30)
+    return session_stats(ev)
 
 
 def q_rollup_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -790,12 +768,12 @@ def q_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SimHash near-dup pairs on the planted-dup corpus: banded chunk
-    join + exact hamming verify.  max_hamming=3 < 4 chunks keeps the
+    join + exact hamming verify.  Hamming <= 3 < 4 chunks keeps the
     pigeonhole completeness guarantee (a pair within distance 3 must
     agree on >=1 of the 4 15-bit chunks)."""
     from parserpdf_spark.operators.dedup import simhash_pairs
 
-    return simhash_pairs(_aug_docs(spark, sf_dir), max_hamming=3)
+    return simhash_pairs(_aug_docs(spark, sf_dir))
 
 
 def _simhash_pairs_oracle_sql() -> str:
@@ -873,7 +851,7 @@ def q_ann_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     from parserpdf_spark.operators.ann import ann_bruteforce_topk
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    return ann_bruteforce_topk(emb, emb.filter(F.col("vec_id") < 5), k=5)
+    return ann_bruteforce_topk(emb, emb.filter(F.col("vec_id") < 5))
 
 
 def q_ann_ivf_full_probe(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1030,7 +1008,7 @@ def q_frame_counts_real(spark: SparkSession, sf_dir: str) -> DataFrame:
         .unionByName(_attach_media(ids(80, 100), "vid_{doc_id}.gif",
                                    animated_gif_payload))
     )
-    frames = frame_sample_real(media, every=2)
+    frames = frame_sample_real(media)
     return frames.groupBy("doc_id").agg(
         F.count("*").alias("n_rows"),
         F.sum(F.when(F.col("decode_ok"), 1).otherwise(0)).alias("n_decoded"),
@@ -1394,7 +1372,7 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_FILES}')
         """,
         "file_ingest_gate": f"""
-            SELECT doc_id, {_GOLDEN_REL_SRC_PATH}, ingest_status, n_spans
+            SELECT doc_id, src_path, ingest_status, n_spans
             FROM read_parquet('{GOLDEN_INGEST}')
         """,
         "ocr_extract": f"""
@@ -1402,7 +1380,7 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_OCR}')
         """,
         "ocr_ingest_gate": f"""
-            SELECT doc_id, {_GOLDEN_REL_SRC_PATH}, ingest_status, n_spans
+            SELECT doc_id, src_path, ingest_status, n_spans
             FROM read_parquet('{GOLDEN_OCR_INGEST}')
         """,
         "extract_from_warc": f"""
@@ -1410,7 +1388,7 @@ def oracle_sql() -> dict[str, str]:
             FROM read_parquet('{GOLDEN_WARC}')
         """,
         "warc_ingest_gate": f"""
-            SELECT doc_id, {_GOLDEN_REL_SRC_PATH}, record_uri, record_type,
+            SELECT doc_id, src_path, record_uri, record_type,
                    content_type, ingest_status
             FROM read_parquet('{GOLDEN_WARC_INGEST}')
         """,

@@ -112,7 +112,7 @@ def main(argv=None, spark=None) -> int:
     curated = flagged.observe(funnel, *funnel_counts()).filter("sampled")
     if args.eval is not None:
         eval_docs = _read_docs(spark, args.eval).select("doc_id", "text")
-        checked = ngram_contamination(curated, eval_docs, n=8)
+        checked = ngram_contamination(curated, eval_docs)
         clean_ids = checked.filter(~F.col("contaminated")).select("doc_id")
         curated = curated.join(clean_ids, "doc_id", "left_semi")
 

@@ -93,17 +93,22 @@ def main(argv=None, spark=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--input", required=True)
     ap.add_argument("--output", required=True)
-    ap.add_argument("--cores", type=int, default=8)
+    ap.add_argument("--cores", type=int, default=None,
+                    help="local[N] cores; omit under spark-submit")
     ap.add_argument("--ocr", action="store_true",
                     help="additionally OCR every image payload "
                          "(text-in-images table image_ocr/)")
     args = ap.parse_args(argv)
 
     own_spark = spark is None
-    if own_spark:
+    if own_spark and args.cores is not None:
         from parserpdf_spark.session import get_spark
 
         spark = get_spark(cores=args.cores, app_name="media_job")
+    elif own_spark:
+        from pyspark.sql import SparkSession
+
+        spark = SparkSession.builder.appName("media_job").getOrCreate()
     files = images = None
     try:
         from pyspark.sql import functions as F

@@ -8,30 +8,23 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window as W, functions as F
 
 
-def sessionize(
-    events: DataFrame,
-    gap_minutes: int = 30,
-    user_col: str = "user_id",
-    ts_col: str = "ts",
-) -> DataFrame:
-    """Assign session ids per user: a new session starts when the gap to
-    the previous event exceeds ``gap_minutes`` (lag + conditional cumsum
-    — the classic window formulation; `session_window` covers the
-    streaming case)."""
-    w = W.partitionBy(user_col).orderBy(F.col(ts_col), F.col("event_id"))
-    epoch = F.unix_timestamp(F.col(ts_col))
+def sessionize(events: DataFrame) -> DataFrame:
+    """Assign session ids per ``user_id``: a new session starts when the
+    gap to the previous event's ``ts`` exceeds 30 minutes (lag +
+    conditional cumsum — the classic window formulation;
+    `session_window` covers the streaming case)."""
+    w = W.partitionBy("user_id").orderBy(F.col("ts"), F.col("event_id"))
+    epoch = F.unix_timestamp(F.col("ts"))
     gap = epoch - F.lag(epoch).over(w)
-    is_new = F.when(
-        gap.isNull() | (gap > gap_minutes * 60), F.lit(1)
-    ).otherwise(F.lit(0))
+    is_new = F.when(gap.isNull() | (gap > 30 * 60), F.lit(1)).otherwise(F.lit(0))
     return events.withColumn(
         "session_id", F.sum(is_new).over(w).cast("bigint")
     )
 
 
-def session_stats(events: DataFrame, gap_minutes: int = 30) -> DataFrame:
+def session_stats(events: DataFrame) -> DataFrame:
     """Per-session aggregates over the sessionized stream."""
-    s = sessionize(events, gap_minutes=gap_minutes)
+    s = sessionize(events)
     return s.groupBy("user_id", "session_id").agg(
         F.count("*").alias("n_events"),
         (
@@ -53,12 +46,10 @@ def rollup_order_revenue(orders: DataFrame) -> DataFrame:
     )
 
 
-def asof_join_events_orders(
-    events: DataFrame, orders: DataFrame, key_mod: int = 100
-) -> DataFrame:
+def asof_join_events_orders(events: DataFrame, orders: DataFrame) -> DataFrame:
     """As-of join (Spark has no native one — SURVEY/pyspark guide): for
-    each event, the most recent order with the same key at or before the
-    event time.
+    each event, the most recent order with the same key (``user_id`` or
+    ``o_custkey`` mod 100) at or before the event time.
 
     Implementation: the union-and-carry pattern — tag both streams,
     union, and a running ``last(..., ignorenulls)`` window carries the
@@ -66,6 +57,7 @@ def asof_join_events_orders(
     no row explosion, no per-group pandas — scales to arbitrarily many
     quotes per key (unlike merge_asof-per-group, which needs the whole
     group in memory)."""
+    key_mod = 100
     ev = events.select(
         (F.col("user_id") % key_mod).alias("k"),
         F.col("ts").alias("t"),

@@ -19,29 +19,14 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window as W, functions as F
 
-from parserpdf_spark.operators.dedup import cosine_expr
+from parserpdf_spark.operators.dedup import cosine_expr, double_vecs
 
 
-def _as_double_vec(df: DataFrame, id_col: str, vec_col: str, out_id: str):
-    return df.select(
-        F.col(id_col).alias(out_id),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias(
-            f"{out_id}_v"
-        ),
-    )
-
-
-def ann_bruteforce_topk(
-    embeddings: DataFrame,
-    queries: DataFrame,
-    k: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(query_id, neighbor_id, cosine, rank) — exact top-k by cosine,
+def ann_bruteforce_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank) — exact top-5 by cosine,
     self-matches excluded, ties broken by neighbor_id (total order)."""
-    base = _as_double_vec(embeddings, id_col, vec_col, "neighbor_id")
-    q = _as_double_vec(queries, id_col, vec_col, "query_id")
+    base = double_vecs(embeddings, "neighbor_id")
+    q = double_vecs(queries, "query_id")
     scored = (
         base.crossJoin(F.broadcast(q))
         .filter(F.col("neighbor_id") != F.col("query_id"))
@@ -54,7 +39,7 @@ def ann_bruteforce_topk(
     )
     return (
         scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
+        .filter(F.col("rank") <= 5)
         .select(
             "query_id",
             "neighbor_id",
@@ -64,25 +49,16 @@ def ann_bruteforce_topk(
     )
 
 
-def ivf_centroids(
-    embeddings: DataFrame,
-    every: int = 100,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def ivf_centroids(embeddings: DataFrame, every: int = 100) -> DataFrame:
     """Deterministic centroid seed-set: every ``every``-th vector by id;
     tighten with :func:`lloyd_refine` (``ann_ivf_topk(lloyd_iters=…)``)."""
-    return _as_double_vec(
-        embeddings.filter(F.col(id_col) % every == 0), id_col, vec_col, "centroid_id"
+    return double_vecs(
+        embeddings.filter(F.col("vec_id") % every == 0), "centroid_id"
     )
 
 
 def lloyd_refine(
-    embeddings: DataFrame,
-    centroids: DataFrame,
-    iters: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
+    embeddings: DataFrame, centroids: DataFrame, iters: int = 1
 ) -> DataFrame:
     """Lloyd/k-means refinement of the IVF centroid set, fully
     relational: assign every vector to its nearest centroid (broadcast),
@@ -90,7 +66,7 @@ def lloyd_refine(
     (posexplode → per-(centroid, dim) avg → re-assemble).  One shuffle
     of (centroid_id, dim, x) triples per iteration — never materializes
     vectors on the driver, so it scales with the corpus."""
-    base = _as_double_vec(embeddings, id_col, vec_col, "member_id")
+    base = double_vecs(embeddings, "member_id")
     for _ in range(int(iters)):
         assigned = _nearest_centroids(base, centroids, "member_id", 1)
         dims = assigned.select(
@@ -134,8 +110,6 @@ def ann_ivf_topk(
     k: int = 5,
     every: int = 100,
     n_probe: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
     lloyd_iters: int = 0,
 ) -> DataFrame:
     """IVF top-k: search only the buckets of the n_probe nearest
@@ -143,14 +117,11 @@ def ann_ivf_topk(
     Σ bucket×probe, not corpus×queries.  ``lloyd_iters`` k-means passes
     tighten the seed centroids (better balanced buckets → better recall
     at small n_probe)."""
-    centroids = ivf_centroids(embeddings, every=every, id_col=id_col, vec_col=vec_col)
+    centroids = ivf_centroids(embeddings, every=every)
     if lloyd_iters:
-        centroids = lloyd_refine(
-            embeddings, centroids, iters=lloyd_iters,
-            id_col=id_col, vec_col=vec_col,
-        )
-    base = _as_double_vec(embeddings, id_col, vec_col, "neighbor_id")
-    q = _as_double_vec(queries, id_col, vec_col, "query_id")
+        centroids = lloyd_refine(embeddings, centroids, iters=lloyd_iters)
+    base = double_vecs(embeddings, "neighbor_id")
+    q = double_vecs(queries, "query_id")
 
     assigned = _nearest_centroids(base, centroids, "neighbor_id", 1)
     probed = _nearest_centroids(q, centroids, "query_id", n_probe)

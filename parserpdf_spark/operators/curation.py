@@ -48,18 +48,17 @@ def funnel_counts() -> list:
 
 
 def curate(
-    docs: DataFrame,
-    fractions: dict[str, float],
-    default_fraction: float = 0.0,
+    docs: DataFrame, fractions: dict[str, float]
 ) -> tuple[DataFrame, DataFrame]:
-    """(curated_docs, funnel) — curated rows plus per-stage counts.
+    """(curated_docs, funnel) — curated rows plus per-stage counts; a
+    stratum ``fractions`` does not name keeps nothing.
 
     ``funnel`` is (stage string, n_docs bigint) for
     raw → quality → dedup → sample, each stage applied to the previous
     stage's survivors: one aggregate, so collecting it reads ``docs``
     once.  Both are lazy plans.
     """
-    flagged = flag_stages(docs, fractions, default_fraction)
+    flagged = flag_stages(docs, fractions)
     funnel = flagged.agg(*funnel_counts()).select(F.stack(
         F.lit(len(STAGES)), *(c for s in STAGES for c in (F.lit(s), F.col(s)))
     ).alias("stage", "n_docs"))

@@ -33,42 +33,54 @@ def md5_60(col):
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("bigint")
 
 
-def _tokenized(docs: DataFrame, n: int, text_col: str) -> DataFrame:
-    """(doc_id, toks) for docs with ≥ n tokens — the token array is
-    projected ONCE into a column so downstream gram expressions reuse it
-    (the inline form re-evaluated the split per referencing expression:
-    size, transform and filter each paid it).  Built as one selectExpr
-    string — the per-Column form cost ~15 py4j round trips per query
-    construction for the identical expression tree."""
+def _tokenized(docs: DataFrame, n: int) -> DataFrame:
+    """(doc_id, toks) for docs with ≥ n tokens of ``text`` — the token
+    array is projected ONCE into a column so downstream gram expressions
+    reuse it (the inline form re-evaluated the split per referencing
+    expression: size, transform and filter each paid it).  Built as one
+    selectExpr string — the per-Column form cost ~15 py4j round trips per
+    query construction for the identical expression tree."""
     return docs.selectExpr(
         "doc_id",
-        f"filter(split(lower(`{text_col}`), ' '), x -> x != '') as toks",
+        "filter(split(lower(text), ' '), x -> x != '') as toks",
     ).filter(f"size(toks) >= {int(n)}")
 
 
-def word_shingles(docs: DataFrame, n: int = 3, text_col: str = "text") -> DataFrame:
-    """(doc_id, shingle) — distinct word n-grams per doc, built with
-    JVM-side array ops (transform over token index ranges).  Docs with
-    fewer than ``n`` tokens yield no shingles (matching the SQL
-    formulation ``range(len - n + 1)``; a truncated partial gram would
-    silently diverge from the oracle)."""
-    return _tokenized(docs, n, text_col).selectExpr(
-        "doc_id",
-        "explode(array_distinct(transform("
+# word n-gram size of the near-dup schemes: Jaccard and MinHash must
+# shingle alike, or the MinHash candidates miss Jaccard pairs
+SHINGLE_N = 3
+
+
+def _shingles_sql(n: int) -> str:
+    """The distinct word n-grams of :func:`_tokenized`'s ``toks`` as one
+    array, built with JVM-side array ops (transform over token index
+    ranges).  :func:`word_shingles` explodes it in the same projection:
+    in a projection of its own it was evaluated on docs the ``size(toks)
+    >= n`` filter drops, where ``slice`` raises on a start of 0."""
+    return (
+        "array_distinct(transform("
         f"sequence(0, size(toks) - {int(n)}), "
         f"i -> concat_ws(' ', slice(toks, i + 1, {int(n)}))"
-        "))) as shingle",
+        "))"
+    )
+
+
+def word_shingles(docs: DataFrame, n: int = SHINGLE_N) -> DataFrame:
+    """(doc_id, shingle) — distinct word n-grams per doc of ``text``.
+    Docs with fewer than ``n`` tokens yield no shingles (matching the SQL
+    formulation ``range(len - n + 1)``; a truncated partial gram would
+    silently diverge from the oracle)."""
+    return _tokenized(docs, n).selectExpr(
+        "doc_id", f"explode({_shingles_sql(n)}) as shingle"
     )
 
 
 def jaccard_pairs(
     docs: DataFrame,
     threshold: float,
-    n: int = 3,
-    text_col: str = "text",
     only_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Exact n-gram Jaccard similar pairs.
+    """Exact :data:`SHINGLE_N`-gram Jaccard similar pairs over ``text``.
 
     Returns (doc_a, doc_b, jaccard) with doc_a < doc_b, jaccard ≥
     threshold, rounded to 6 dp.
@@ -131,12 +143,8 @@ def jaccard_pairs(
             # regardless of input multiplicity
             cand = pairs.distinct()
         # distinct-shingle ARRAY per candidate doc (never exploded)
-        arrs = _tokenized(docs, n, text_col).selectExpr(
-            "doc_id",
-            "array_distinct(transform("
-            f"sequence(0, size(toks) - {int(n)}), "
-            f"i -> concat_ws(' ', slice(toks, i + 1, {int(n)}))"
-            ")) as sh",
+        arrs = _tokenized(docs, SHINGLE_N).selectExpr(
+            "doc_id", f"{_shingles_sql(SHINGLE_N)} as sh"
         )
         pa = arrs.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
         pb = arrs.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
@@ -152,7 +160,7 @@ def jaccard_pairs(
             .filter(F.col("jaccard") >= threshold)
             .select("doc_a", "doc_b", "jaccard")
         )
-    sh = word_shingles(docs, n=n, text_col=text_col)
+    sh = word_shingles(docs)
     sizes = sh.groupBy("doc_id").agg(F.count("*").alias("sz"))
     a = sh.select(F.col("doc_id").alias("doc_a"), "shingle")
     b = sh.select(F.col("doc_id").alias("doc_b"), "shingle")
@@ -190,11 +198,9 @@ NUM_BANDS = 16  # 16 bands × 4 rows
 _MERSENNE31 = (1 << 31) - 1  # permutation modulus (universal hashing)
 
 
-def minhash_signatures(
-    docs: DataFrame, n: int = 3, text_col: str = "text",
-    num_perms: int = NUM_PERMS, seed: int = 1,
-) -> DataFrame:
-    """(doc_id, h0..h63): min over shingles of 64 seeded permutations.
+def minhash_signatures(docs: DataFrame) -> DataFrame:
+    """(doc_id, h0..h63): min over the :data:`SHINGLE_N`-gram shingles of
+    ``text`` of :data:`NUM_PERMS` seeded permutations.
 
     ONE base hash per shingle + 64 affine maps ``(a·x + b) mod 2^31-1``
     (the standard universal-hash permutation family) — 64× cheaper than
@@ -234,10 +240,10 @@ def minhash_signatures(
 
     import pandas as pd  # noqa: F401 — pandas_udf return path
 
-    rng = random.Random(seed)
+    rng = random.Random(1)
     coeffs = [
         (rng.randrange(1, _MERSENNE31), rng.randrange(0, _MERSENNE31))
-        for _ in range(num_perms)
+        for _ in range(NUM_PERMS)
     ]
     # r6: ZERO-shuffle signatures.  A document's shingle hashes live in
     # one array column (no shingle string — hash the token tuples
@@ -246,11 +252,12 @@ def minhash_signatures(
     # every shingle hash) is gone entirely.  The min over the same value
     # multiset is identical, so signatures are bit-identical to the
     # aggregate form.
+    n = SHINGLE_N
     gram_args = ", ".join(f"element_at(toks, i + {j + 1})" for j in range(n))
-    hashed = _tokenized(docs, n, text_col).selectExpr(
+    hashed = _tokenized(docs, n).selectExpr(
         "doc_id",
         "array_distinct(transform("
-        f"sequence(0, size(toks) - {int(n)}), "
+        f"sequence(0, size(toks) - {n}), "
         f"i -> pmod(xxhash64({gram_args}), {_MERSENNE31}L)"
         ")) as hbase",
     )
@@ -263,7 +270,7 @@ def minhash_signatures(
     # (~0.1 s of driver time every bench run) for the same projection
     return sig.selectExpr(
         "doc_id",
-        *[f"element_at(sig, {i + 1}) as h{i}" for i in range(num_perms)],
+        *[f"element_at(sig, {i + 1}) as h{i}" for i in range(NUM_PERMS)],
     )
 
 
@@ -355,12 +362,9 @@ def _bucket_pairs(
     )
 
 
-def lsh_candidate_pairs(
-    signatures: DataFrame,
-    num_bands: int = NUM_BANDS,
-    num_perms: int = NUM_PERMS,
-) -> DataFrame:
-    """Banded LSH: docs sharing any band bucket become candidates.
+def lsh_candidate_pairs(signatures: DataFrame) -> DataFrame:
+    """Banded LSH: docs sharing any of :data:`NUM_BANDS` band buckets
+    become candidates.
 
     The bucket key is ``xxhash64(band, h_i…)`` — one native JVM hash
     over the band's signature columns (bigint shuffle key), not a
@@ -368,7 +372,7 @@ def lsh_candidate_pairs(
     only ADD a candidate pair, which the exact-Jaccard verify removes.
     Pair generation is :func:`_bucket_pairs`.
     """
-    rows = num_perms // num_bands
+    rows = NUM_PERMS // NUM_BANDS
     # one selectExpr string builds all band structs in a single py4j
     # round trip (the per-Column form cost ~100 round trips per query
     # construction); the parsed expressions are identical — SQL integer
@@ -378,7 +382,7 @@ def lsh_candidate_pairs(
             b=band,
             cols=", ".join(f"h{band * rows + r}" for r in range(rows)),
         )
-        for band in range(num_bands)
+        for band in range(NUM_BANDS)
     )
     buckets = signatures.selectExpr(
         "doc_id", f"explode(array({structs})) as b"
@@ -386,9 +390,7 @@ def lsh_candidate_pairs(
     return _bucket_pairs(buckets, "doc_id", "doc_a", "doc_b")
 
 
-def minhash_lsh_pairs(
-    docs: DataFrame, threshold: float, n: int = 3, text_col: str = "text",
-) -> DataFrame:
+def minhash_lsh_pairs(docs: DataFrame, threshold: float) -> DataFrame:
     """LSH candidates verified by exact Jaccard ≥ threshold.
 
     The exact-Jaccard verify runs ONLY over the candidate pairs'
@@ -399,10 +401,9 @@ def minhash_lsh_pairs(
     collect budget the verify reads the candidates once, through its
     bounded collect, and :func:`_bucket_pairs` references the signature
     subtree once."""
-    signatures = minhash_signatures(docs, n=n, text_col=text_col)
+    signatures = minhash_signatures(docs)
     return jaccard_pairs(
-        docs, threshold=threshold, n=n, text_col=text_col,
-        only_pairs=lsh_candidate_pairs(signatures),
+        docs, threshold=threshold, only_pairs=lsh_candidate_pairs(signatures)
     )
 
 
@@ -412,14 +413,14 @@ def minhash_lsh_pairs(
 SIMHASH_BITS = 60  # md5_60 gives 60 usable bits
 
 
-def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, simhash): per-bit majority vote over token hashes.
+def simhash(docs: DataFrame) -> DataFrame:
+    """(doc_id, simhash): per-bit majority vote over ``text``'s token hashes.
 
     Pure relational: explode distinct tokens → one groupBy with 60
     conditional-sum agg columns → recombine bits.  Ties (sum == 0)
     resolve to bit 0.
     """
-    toks = F.filter(F.split(F.lower(F.col(text_col)), " "), lambda x: x != F.lit(""))
+    toks = F.filter(F.split(F.lower(F.col("text")), " "), lambda x: x != F.lit(""))
     t = docs.select(
         "doc_id", F.explode(F.array_distinct(toks)).alias("tok")
     ).withColumn("th", md5_60(F.col("tok")))
@@ -440,18 +441,16 @@ def simhash(docs: DataFrame, text_col: str = "text") -> DataFrame:
     return votes.select("doc_id", sig.cast("bigint").alias("simhash"))
 
 
-def simhash_pairs(
-    docs: DataFrame, max_hamming: int = 3, text_col: str = "text",
-) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) ≤ max_hamming: candidates
-    share one of 4 × 15-bit chunks (a pair within distance 3 must agree
-    on ≥1 chunk — pigeonhole), then an exact popcount verify.
+def simhash_pairs(docs: DataFrame) -> DataFrame:
+    """Near-dup pairs with hamming(simhash) ≤ 3: candidates share one of
+    4 × 15-bit chunks (a pair within distance 3 must agree on ≥1 chunk —
+    pigeonhole), then an exact popcount verify.
 
     The bucket id is ``struct(doc_id, simhash)``, so each candidate pair
     carries both signatures and the verify needs no join back to them.
     NULL doc_ids are dropped first: a struct with a NULL field still
     compares, where ``doc_a < doc_b`` discarded it."""
-    sig = simhash(docs, text_col=text_col).filter(F.col("doc_id").isNotNull())
+    sig = simhash(docs).filter(F.col("doc_id").isNotNull())
     chunks = [
         F.shiftright(F.col("simhash"), c * 15).bitwiseAND(F.lit((1 << 15) - 1))
         for c in range(4)
@@ -468,7 +467,7 @@ def simhash_pairs(
             F.bit_count(F.col("a.simhash").bitwiseXOR(F.col("b.simhash")))
             .alias("hamming"),
         )
-        .filter(F.col("hamming") <= max_hamming)
+        .filter(F.col("hamming") <= 3)
     )
 
 
@@ -492,30 +491,36 @@ def cosine_expr(a, b):
     return F.when(denom > 0, dot / denom)
 
 
-def embedding_dup_pairs(
-    embeddings: DataFrame, threshold: float, id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
+def double_vecs(embeddings: DataFrame, out_id: str) -> DataFrame:
+    """(``out_id``, ``{out_id}_v``): ``vec_id`` and its ``embedding`` cast
+    to array<double>."""
+    return embeddings.select(
+        F.col("vec_id").alias(out_id),
+        F.transform(F.col("embedding"), lambda x: x.cast("double")).alias(
+            f"{out_id}_v"
+        ),
+    )
+
+
+def embedding_dup_pairs(embeddings: DataFrame, threshold: float) -> DataFrame:
     """(id_a, id_b, cosine≥threshold) — brute-force O(n²) crossJoin.
 
     Baseline/oracle ONLY: use :func:`embedding_dup_pairs_bucketed` (the
     SRP-LSH path) for any real corpus — this one dies at scale."""
-    v = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    a = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    b = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (
-        a.crossJoin(b)
+        double_vecs(embeddings, "id_a")
+        .crossJoin(double_vecs(embeddings, "id_b"))
         .filter(F.col("id_a") < F.col("id_b"))
-        .withColumn("cosine", F.round(cosine_expr(F.col("va"), F.col("vb")), 6))
+        .withColumn(
+            "cosine", F.round(cosine_expr(F.col("id_a_v"), F.col("id_b_v")), 6)
+        )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
 
 
 SRP_TARGET_MISS = 1e-2  # per-true-pair miss budget AT the threshold
+SRP_SEED = 7  # seeds the random hyperplanes
 
 
 @functools.lru_cache(maxsize=16)
@@ -582,34 +587,28 @@ def _srp_band_params(n_vectors: int, threshold: float) -> tuple[int, int]:
 
 
 def srp_band_keys(
-    embeddings: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    bits_per_band: int = 16,
-    num_bands: int = 16,
-    seed: int = 7,
+    embeddings: DataFrame, bits_per_band: int = 16, num_bands: int = 16
 ) -> DataFrame:
-    """(id, keys: array<long>[num_bands]) — per-band SRP bucket keys.
+    """(id, keys: array<long>[num_bands]) — per-band SRP bucket keys of
+    each ``vec_id``'s ``embedding``.
 
     One numpy matmul per Arrow batch against ``num_bands ×
     bits_per_band`` seeded hyperplanes, bits packed band-major into one
     long key per band (so band widths beyond 64 total bits work — the
     corpus-aware sizing needs hundreds of projections at 10⁹⁺ vectors).
     Identical vectors get identical keys in every band by construction.
-    The udf object is cached per (bits, bands, seed) — see
+    The udf object is cached per (bits, bands) — see
     :func:`_mins_udf` for why (cloudpickle + registration per query
     construction is pure driver overhead).
     """
     return embeddings.select(
-        F.col(id_col).alias("id"),
-        _srp_keys_udf(bits_per_band, num_bands, seed)(F.col(vec_col)).alias(
-            "keys"
-        ),
+        F.col("vec_id").alias("id"),
+        _srp_keys_udf(bits_per_band, num_bands)(F.col("embedding")).alias("keys"),
     )
 
 
 @functools.lru_cache(maxsize=16)
-def _srp_keys_udf(bits_per_band: int, num_bands: int, seed: int):
+def _srp_keys_udf(bits_per_band: int, num_bands: int):
     import pandas as pd
 
     total_bits = bits_per_band * num_bands
@@ -623,7 +622,7 @@ def _srp_keys_udf(bits_per_band: int, num_bands: int, seed: int):
         if len(vecs) == 0:
             return pd.Series([], dtype=object)
         mat = np.vstack([np.asarray(v, dtype=np.float64) for v in vecs])
-        planes = _srp_planes(mat.shape[1], total_bits, seed)
+        planes = _srp_planes(mat.shape[1], total_bits, SRP_SEED)
         bits = (mat @ planes) >= 0.0
         weights = np.int64(1) << np.arange(bits_per_band, dtype=np.int64)
         packed = (
@@ -636,11 +635,7 @@ def _srp_keys_udf(bits_per_band: int, num_bands: int, seed: int):
 
 
 def embedding_dup_pairs_bucketed(
-    embeddings: DataFrame,
-    threshold: float,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    seed: int = 7,
+    embeddings: DataFrame, threshold: float
 ) -> DataFrame:
     """The 100 TB embedding-dedup path: SRP-LSH banding → candidate
     pairs inside shared band buckets → exact cosine verify.
@@ -660,37 +655,26 @@ def embedding_dup_pairs_bucketed(
     never miss.
     """
     rows, num_bands = _srp_band_params(embeddings.count(), threshold)
-    sigs = srp_band_keys(
-        embeddings, id_col=id_col, vec_col=vec_col,
-        bits_per_band=rows, num_bands=num_bands, seed=seed,
-    )
+    sigs = srp_band_keys(embeddings, bits_per_band=rows, num_bands=num_bands)
     buckets = sigs.select("id", F.posexplode("keys").alias("band", "key"))
     cands = _bucket_pairs(buckets, "id", "id_a", "id_b")
-    v = embeddings.select(
-        F.col(id_col).alias("id"),
-        F.transform(F.col(vec_col), lambda x: x.cast("double")).alias("v"),
-    )
-    va = v.select(F.col("id").alias("id_a"), F.col("v").alias("va"))
-    vb = v.select(F.col("id").alias("id_b"), F.col("v").alias("vb"))
     return (
-        cands.join(va, "id_a")
-        .join(vb, "id_b")
-        .withColumn("cosine", F.round(cosine_expr(F.col("va"), F.col("vb")), 6))
+        cands.join(double_vecs(embeddings, "id_a"), "id_a")
+        .join(double_vecs(embeddings, "id_b"), "id_b")
+        .withColumn(
+            "cosine", F.round(cosine_expr(F.col("id_a_v"), F.col("id_b_v")), 6)
+        )
         .filter(F.col("cosine") >= threshold)
         .select("id_a", "id_b", "cosine")
     )
 
 
 def connected_components_star(
-    pairs: DataFrame,
-    a_col: str = "doc_a",
-    b_col: str = "doc_b",
-    max_iters: int = 50,
-    stats: dict | None = None,
+    pairs: DataFrame, max_iters: int = 50, stats: dict | None = None
 ) -> DataFrame:
-    """Near-dup pairs → (doc_id, cluster_id = component min): the step
-    that collapses pair lists into dedup groups (keep one doc per
-    cluster).  O(log n) rounds of alternating large-star / small-star
+    """Near-dup (doc_a, doc_b) pairs → (doc_id, cluster_id = component
+    min): the step that collapses pair lists into dedup groups (keep one
+    doc per cluster).  O(log n) rounds of alternating large-star / small-star
     contraction (Kiveris et al., *Connected Components in MapReduce and
     Beyond*, SoCC 2014), so a chain-like component needs O(log n)
     rounds, not one per hop of its diameter.
@@ -743,14 +727,14 @@ def connected_components_star(
 
     spark = pairs.sparkSession
     e = (
-        pairs.select(F.col(a_col).alias("u"), F.col(b_col).alias("v"))
+        pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v"))
         .filter(F.col("u") != F.col("v"))
         .distinct()
     )
     # lazy checkpoint: the first action below materializes it, so sizing
     # the graph costs one job, not an eager-checkpoint job plus a count
     edges = e.localCheckpoint(eager=False)
-    id_type = pairs.schema[a_col].dataType
+    id_type = pairs.schema["doc_a"].dataType
     integral = isinstance(
         id_type, (T.LongType, T.IntegerType, T.ShortType, T.ByteType)
     )
@@ -807,10 +791,10 @@ def connected_components_star(
         # explode+distinct over those few rows replaces the former
         # union of BOTH id columns + full-width distinct over EVERY node
         dropped = pairs.filter(
-            ~F.coalesce(F.col(a_col) != F.col(b_col), F.lit(False))
+            ~F.coalesce(F.col("doc_a") != F.col("doc_b"), F.lit(False))
         )
         selfnodes = dropped.select(
-            F.explode(F.array(a_col, b_col)).alias("node")
+            F.explode(F.array("doc_a", "doc_b")).alias("node")
         ).distinct()
         singletons = selfnodes.join(
             labels, selfnodes["node"] == labels["doc_id"], "left_anti"
@@ -819,8 +803,8 @@ def connected_components_star(
         )
         return labels.unionByName(singletons)
     all_nodes = (
-        pairs.select(F.col(a_col).alias("node"))
-        .unionByName(pairs.select(F.col(b_col).alias("node")))
+        pairs.select(F.col("doc_a").alias("node"))
+        .unionByName(pairs.select(F.col("doc_b").alias("node")))
         .distinct()
     )
     n_edges = edges.count()
@@ -895,14 +879,9 @@ def connected_components_star(
     return labels.unionByName(singletons)
 
 
-def ngram_contamination(
-    train: DataFrame,
-    eval_docs: DataFrame,
-    n: int = 8,
-    text_col: str = "text",
-) -> DataFrame:
+def ngram_contamination(train: DataFrame, eval_docs: DataFrame) -> DataFrame:
     """Train/eval decontamination: for every training doc, how many of
-    its distinct word ``n``-grams appear in ANY eval doc (and the flag).
+    its distinct word 8-grams appear in ANY eval doc (and the flag).
 
     Shape: the eval shingle set is distinct-ed and BROADCAST — eval
     suites are small by construction (thousands of docs vs the corpus'
@@ -912,10 +891,8 @@ def ngram_contamination(
     job).  Asserted in tests/test_plans.py.  Every train doc appears in
     the output (clean docs with 0 hits) — the keep-with-status
     contract."""
-    t = word_shingles(train, n=n, text_col=text_col)
-    e = word_shingles(eval_docs, n=n, text_col=text_col).select(
-        "shingle"
-    ).distinct()
+    t = word_shingles(train, n=8)
+    e = word_shingles(eval_docs, n=8).select("shingle").distinct()
     hits = (
         t.join(F.broadcast(e), "shingle", "left_semi")
         .groupBy("doc_id")
@@ -960,24 +937,20 @@ def sample_keep(fractions: dict[str, float], default: float = 0.0):
     return bucket < (frac * 1_000_000).cast("bigint")
 
 
-def stratified_sample(
-    docs: DataFrame, fractions: dict[str, float], default: float = 0.0
-) -> DataFrame:
+def stratified_sample(docs: DataFrame, fractions: dict[str, float]) -> DataFrame:
     """Corpus balancing: the rows :func:`sample_keep` keeps."""
-    return docs.filter(sample_keep(fractions, default))
+    return docs.filter(sample_keep(fractions))
 
 
-def paragraph_dedup(
-    extracted: DataFrame, kinds: tuple[str, ...] = ("para",)
-) -> DataFrame:
-    """Sub-document exact dedup: one row per distinct span text with its
-    copy count and canonical occurrence (min (doc_id, offset) — a total
-    order, deterministic across engines).
+def paragraph_dedup(extracted: DataFrame) -> DataFrame:
+    """Sub-document exact dedup: one row per distinct ``para`` span text
+    with its copy count and canonical occurrence (min (doc_id, offset) —
+    a total order, deterministic across engines).
 
     Shuffles (hash, doc_id, offset) triples, never the texts twice —
     the hash-groupBy shape that scales; pair with MinHash for near-dup
     paragraphs."""
-    paras = extracted.filter(F.col("kind").isin(*kinds)).select(
+    paras = extracted.filter(F.col("kind") == "para").select(
         F.md5(F.col("text")).alias("text_hash"), "doc_id", "offset"
     )
     w = W.partitionBy("text_hash").orderBy(

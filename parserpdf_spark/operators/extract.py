@@ -155,17 +155,3 @@ def extract_docs(docs: DataFrame) -> tuple[DataFrame, DataFrame]:
     """
     return split_combined(extract_combined(docs))
 
-
-def reassemble(extracted: DataFrame) -> DataFrame:
-    """Exploded output spans → one row per doc with an ordered span array.
-
-    ``sort_array`` on ``struct(offset, …)`` sorts by offset first (struct
-    comparison is field-order lexicographic), giving the deterministic
-    span-sequence the equality invariant needs even though
-    ``collect_list`` is shuffle-order-nondeterministic.
-    """
-    return extracted.groupBy("doc_id").agg(
-        F.sort_array(
-            F.collect_list(F.struct("offset", "kind", "text", "media_ref"))
-        ).alias("spans")
-    )

@@ -332,10 +332,11 @@ def ocr_from_media(media: DataFrame) -> DataFrame:
 # Real decode tier, video: minimal uncompressed AVI (RIFF) frame container
 # ---------------------------------------------------------------------------
 
-def encode_avi_frames(frames, width: int, height: int, fps: int = 10) -> bytes:
-    """List of HxWx3 uint8 RGB frames → minimal RIFF/AVI bytes with raw
-    BGR '00db' frame chunks inside the 'movi' LIST (the uncompressed
-    DIB layout; just enough structure for the frame sampler)."""
+def encode_avi_frames(frames, width: int, height: int) -> bytes:
+    """List of HxWx3 uint8 RGB frames → minimal 10 fps RIFF/AVI bytes
+    with raw BGR '00db' frame chunks inside the 'movi' LIST (the
+    uncompressed DIB layout; just enough structure for the frame
+    sampler)."""
     import struct
 
     import numpy as np
@@ -353,7 +354,7 @@ def encode_avi_frames(frames, width: int, height: int, fps: int = 10) -> bytes:
     # avih main header: us/frame, 0, 0, flags, total frames, 0, streams,
     # 0, width, height + 4 reserved
     avih = struct.pack(
-        "<4sI14I", b"avih", 56, 1_000_000 // fps, 0, 0, 0, len(frames),
+        "<4sI14I", b"avih", 56, 1_000_000 // 10, 0, 0, 0, len(frames),
         0, 1, 0, width, height, 0, 0, 0, 0,
     )
     hdrl = b"LIST" + struct.pack("<I", 4 + len(avih)) + b"hdrl" + avih
@@ -510,9 +511,9 @@ def decode_frames_auto(payload: bytes):
     raise ValueError("unrecognized video magic (not AVI or GIF)")
 
 
-def frame_sample_real(media: DataFrame, every: int = 2) -> DataFrame:
+def frame_sample_real(media: DataFrame) -> DataFrame:
     """REAL frame sampling: decode AVI or animated-GIF payloads and
-    emit every ``every``-th frame with genuine per-frame statistics — a
+    emit every 2nd frame with genuine per-frame statistics — a
     row-expanding row map over real pixels; keep-with-status (a corrupt
     payload yields one decode_ok=false row)."""
 
@@ -526,7 +527,7 @@ def frame_sample_real(media: DataFrame, every: int = 2) -> DataFrame:
             {"doc_id": doc_id, "media_ref": media_ref, "decode_ok": True,
              "frame_no": i, "mean_brightness_millis":
                  int(float(frames[i].mean()) * 1000 / 255)}
-            for i in range(0, len(frames), every)
+            for i in range(0, len(frames), 2)
         )
 
     return map_rows(

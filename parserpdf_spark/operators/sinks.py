@@ -269,20 +269,17 @@ def export_markdown_files(extracted: DataFrame, out_dir: str) -> int:
     )
 
 
-def ordered_prepend(
-    artifacts: DataFrame, first: str, name_col: str = "artifact",
-    pos_col: str = "pos",
-) -> DataFrame:
+def ordered_prepend(artifacts: DataFrame, first: str) -> DataFrame:
     """U3: the reference's ``downloads.insert(0, zip_path)``
-    (``ui/gradio_process.py:426``) — an *ordered* union: the new row
-    takes position 0 and every existing position shifts by one.  Order
-    is data (a rank column), not row order — the only shape that
-    survives distribution."""
+    (``ui/gradio_process.py:426``) — an *ordered* union of (pos,
+    artifact) rows: the new row takes position 0 and every existing
+    position shifts by one.  Order is data (a rank column), not row
+    order — the only shape that survives distribution."""
     head = artifacts.sparkSession.createDataFrame(
-        [(0, first)], f"{pos_col} int, {name_col} string"
+        [(0, first)], "pos int, artifact string"
     )
     shifted = artifacts.select(
-        (F.col(pos_col) + 1).cast("int").alias(pos_col), name_col
+        (F.col("pos") + 1).cast("int").alias("pos"), "artifact"
     )
     return head.unionByName(shifted)
 

@@ -31,13 +31,13 @@ def _tokens(col):
     return F.filter(F.split(F.lower(col), " "), lambda x: x != F.lit(""))
 
 
-def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, per-language marker scores, predicted lang).
+def lang_id(docs: DataFrame) -> DataFrame:
+    """(doc_id, per-language marker scores of ``text``, predicted lang).
 
     Prediction = argmax score, ties broken by language code ascending —
     a total order, so deterministic across engines.
     """
-    toks = _tokens(F.col(text_col))
+    toks = _tokens(F.col("text"))
 
     def marker_score(markers):
         # NB: the lambda must be unary — pyspark passes the element index
@@ -66,20 +66,19 @@ def lang_id(docs: DataFrame, text_col: str = "text") -> DataFrame:
 STOPWORDS = ("the", "a", "of", "and", "is", "to", "in")
 
 
-def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """Per-doc quality features + a blended [0,1] score.
+def quality_score(docs: DataFrame) -> DataFrame:
+    """Per-doc quality features of ``text`` + a blended [0,1] score.
 
     All arithmetic is per-row double math (no aggregation), so results
     are bit-identical across engines; the blended score is rounded to
     6 dp for hash-stable comparison.
     """
-    toks = _tokens(F.col(text_col))
+    text = F.col("text")
+    toks = _tokens(text)
     n_words = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda x: x.isin(*STOPWORDS)))
-    n_chars = F.length(F.col(text_col))
-    n_punct = F.length(
-        F.regexp_replace(F.lower(F.col(text_col)), r"[a-z0-9\s]", "")
-    )
+    n_chars = F.length(text)
+    n_punct = F.length(F.regexp_replace(F.lower(text), r"[a-z0-9\s]", ""))
     return docs.select(
         "doc_id",
         n_words.alias("n_words"),
@@ -104,12 +103,13 @@ def quality_score(docs: DataFrame, text_col: str = "text") -> DataFrame:
 BPE_RE = "[a-z]+|[0-9]+|[^a-z0-9 ]"
 
 
-def token_counts(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    lower = F.lower(F.col(text_col))
+def token_counts(docs: DataFrame) -> DataFrame:
+    """(doc_id, whitespace and BPE-ish token counts of ``text``)."""
+    text = F.col("text")
     return docs.select(
         "doc_id",
-        F.size(_tokens(F.col(text_col))).alias("ws_tokens"),
-        F.regexp_count(lower, F.lit(BPE_RE)).alias("bpe_tokens"),
+        F.size(_tokens(text)).alias("ws_tokens"),
+        F.regexp_count(F.lower(text), F.lit(BPE_RE)).alias("bpe_tokens"),
     )
 
 
@@ -180,9 +180,9 @@ def gopher_quality(docs: DataFrame) -> DataFrame:
 # Document fingerprinting
 # ---------------------------------------------------------------------------
 
-def fingerprint_md5(docs: DataFrame, text_col: str = "text") -> DataFrame:
+def fingerprint_md5(docs: DataFrame) -> DataFrame:
     """Whole-doc content fingerprint over normalized text (exact-dup key)."""
-    norm = F.trim(F.regexp_replace(F.lower(F.col(text_col)), r"\s+", " "))
+    norm = F.trim(F.regexp_replace(F.lower(F.col("text")), r"\s+", " "))
     return docs.select("doc_id", F.md5(norm).alias("fingerprint"))
 
 
@@ -194,7 +194,8 @@ _B = 1000003
 _MOD = (1 << 61) - 1
 
 
-def _winnow_one(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> list[int]:
+def _winnow_one(text: str) -> list[int]:
+    k, w = WINNOW_K, WINNOW_W
     s = " ".join(text.lower().split())
     n = len(s)
     if n < k:
@@ -222,10 +223,10 @@ def _winnow_one(text: str, k: int = WINNOW_K, w: int = WINNOW_W) -> list[int]:
     return out
 
 
-def fingerprint_winnow(docs: DataFrame, text_col: str = "text") -> DataFrame:
-    """(doc_id, n_fingerprints, min_fp, max_fp) via winnowing — the
-    rolling-hash scheme; pandas-UDF (Arrow-batched) since rolling state
-    is inherently sequential per doc."""
+def fingerprint_winnow(docs: DataFrame) -> DataFrame:
+    """(doc_id, n_fingerprints, min_fp, max_fp) of ``text`` via
+    winnowing — the rolling-hash scheme; pandas-UDF (Arrow-batched) since
+    rolling state is inherently sequential per doc."""
     import pandas as pd
 
     # NB: no type hints — a struct-returning scalar pandas UDF yields a
@@ -244,6 +245,6 @@ def fingerprint_winnow(docs: DataFrame, text_col: str = "text") -> DataFrame:
             )
         return pd.DataFrame(rows)
 
-    return docs.select("doc_id", winnow(F.col(text_col)).alias("w")).select(
+    return docs.select("doc_id", winnow(F.col("text")).alias("w")).select(
         "doc_id", "w.n_fp", "w.min_fp", "w.max_fp"
     )

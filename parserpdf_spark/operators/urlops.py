@@ -21,9 +21,9 @@ from pyspark.sql import DataFrame, functions as F
 _URL_RE = r"^([a-zA-Z][a-zA-Z0-9+.-]*)://([^/?#]+)([^?#]*)"
 
 
-def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Append (scheme, host, port, path) parsed from ``url_col``."""
-    url = F.col(url_col)
+def url_parts(df: DataFrame) -> DataFrame:
+    """Append (scheme, host, port, path) parsed from ``url``."""
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, _URL_RE, 1))
     authority = F.regexp_extract(url, _URL_RE, 2)
     host = F.lower(F.regexp_extract(authority, r"^([^:]+)", 1))
@@ -38,9 +38,9 @@ def url_parts(df: DataFrame, url_col: str = "url") -> DataFrame:
     )
 
 
-def normalize_urls(df: DataFrame, url_col: str = "url") -> DataFrame:
-    """Append ``url_norm`` — the canonical form used as a dedup key."""
-    url = F.col(url_col)
+def normalize_urls(df: DataFrame) -> DataFrame:
+    """Append ``url_norm`` — the canonical form of ``url``, a dedup key."""
+    url = F.col("url")
     scheme = F.lower(F.regexp_extract(url, _URL_RE, 1))
     authority = F.regexp_extract(url, _URL_RE, 2)
     host = F.lower(F.regexp_extract(authority, r"^([^:]+)", 1))

@@ -97,13 +97,10 @@ def run_checkpointed_extraction(
     output_dir: str,
     n_chunks: int = 8,
     run_id: str | None = None,
-    fail_after_chunk: int | None = None,
 ) -> list[dict]:
     """Extract ``docs`` into ``output_dir`` chunk by chunk, resumably.
 
     Returns the lineage records committed by THIS run.
-    ``fail_after_chunk`` injects a crash after committing that many
-    chunks (kill-mid-run simulation for tests, SURVEY.md §7.2-7).
     """
     run_id = run_id or uuid.uuid4().hex[:12]
     done = committed_chunks(output_dir)
@@ -158,8 +155,6 @@ def run_checkpointed_extraction(
             }
             _commit_manifest(output_dir, record)
             committed_now.append(record)
-            if fail_after_chunk is not None and len(committed_now) >= fail_after_chunk:
-                raise RuntimeError(f"injected failure after chunk {chunk}")
     finally:
         if cache:
             docs.unpersist()

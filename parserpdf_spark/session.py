@@ -60,7 +60,6 @@ _dumps: list = []
 def get_spark(
     cores: int | str | None = None,
     app_name: str = "parserpdf_spark",
-    shuffle_partitions: int | None = None,
     extra_conf: dict | None = None,
 ) -> SparkSession:
     """Build (or reuse) a local session.
@@ -71,8 +70,7 @@ def get_spark(
     if cores is None:
         cores = os.environ.get("SPARK_GRAFT_CPUS", "32")
     cores = str(cores)
-    if shuffle_partitions is None:
-        shuffle_partitions = max(int(cores) if cores.isdigit() else 32, 8)
+    shuffle_partitions = max(int(cores) if cores.isdigit() else 32, 8)
     driver_memory = os.environ.get("SPARK_DRIVER_MEM", "48g")
 
     builder = (

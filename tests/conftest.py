@@ -47,6 +47,35 @@ def budgets():
     return at
 
 
+@pytest.fixture
+def crash_after_commits():
+    """``with crash_after_commits(n):`` runs its body with the checkpoint
+    loop raising right after its n-th manifest commit — a run killed
+    after n committed chunks (SURVEY.md §7.2-7) — and expects that
+    crash."""
+    import contextlib
+
+    from parserpdf_spark.plans import checkpoint
+
+    @contextlib.contextmanager
+    def at(n):
+        commit = checkpoint._commit_manifest
+        committed = []
+
+        def commit_then_crash(output_dir, record):
+            commit(output_dir, record)
+            committed.append(record["chunk_id"])
+            if len(committed) == n:
+                raise RuntimeError(f"injected failure after chunk {committed[-1]}")
+
+        with pytest.MonkeyPatch.context() as mp:
+            mp.setattr(checkpoint, "_commit_manifest", commit_then_crash)
+            with pytest.raises(RuntimeError, match="injected failure"):
+                yield
+
+    return at
+
+
 @pytest.fixture(scope="session")
 def planted_sf(tmp_path_factory):
     """An sf dir whose documents.parquet is sf0.01 plus 60 exact copies

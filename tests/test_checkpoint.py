@@ -18,15 +18,15 @@ from parserpdf_spark.sources.synth import synth_docs_df
 N_CHUNKS = 4
 
 
-def test_crash_resume_no_dupes_no_gaps(spark, sf_small, tmp_path):
+def test_crash_resume_no_dupes_no_gaps(
+    spark, sf_small, tmp_path, crash_after_commits
+):
     out = str(tmp_path / "run")
     docs = synth_docs_df(spark, sf_small)
 
     # run 1: crash after 2 committed chunks
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed_extraction(
-            spark, docs, out, n_chunks=N_CHUNKS, fail_after_chunk=2
-        )
+    with crash_after_commits(2):
+        run_checkpointed_extraction(spark, docs, out, n_chunks=N_CHUNKS)
     assert len(committed_chunks(out)) == 2
 
     # partial state is readable and consistent (snapshot isolation)
@@ -58,16 +58,16 @@ def test_crash_resume_no_dupes_no_gaps(spark, sf_small, tmp_path):
     assert len({r["run_id"] for r in rows}) == 2
 
 
-def test_resume_with_changed_n_chunks_raises(spark, sf_small, tmp_path):
+def test_resume_with_changed_n_chunks_raises(
+    spark, sf_small, tmp_path, crash_after_commits
+):
     """Resuming under a different partitioning (n_chunks) must be a hard
     error — silently mixing two hash spaces extracts some docs twice and
     others never."""
     out = str(tmp_path / "run3")
     docs = synth_docs_df(spark, sf_small).limit(40)
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed_extraction(
-            spark, docs, out, n_chunks=4, fail_after_chunk=1
-        )
+    with crash_after_commits(1):
+        run_checkpointed_extraction(spark, docs, out, n_chunks=4)
     with pytest.raises(ValueError, match="partitioning"):
         run_checkpointed_extraction(spark, docs, out, n_chunks=8)
     # the original scheme still resumes cleanly

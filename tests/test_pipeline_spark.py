@@ -11,8 +11,8 @@ import pytest
 from pyspark.sql import functions as F
 
 from parserpdf_spark.kernels.extract import extract_document_safe
-from parserpdf_spark.operators.extract import extract_docs, reassemble
-from parserpdf_spark.operators.skew import explode_docs
+from parserpdf_spark.operators.extract import extract_docs
+from parserpdf_spark.operators.skew import assemble_spans_unsalted, explode_docs
 from parserpdf_spark.sources.synth import synth_doc, synth_docs_df, synth_docs_pdf
 
 
@@ -40,8 +40,9 @@ def test_spark_output_equals_pandas_kernel(small_results, spark, sf_small):
     media_ref, order) — the BASELINE.json invariant."""
     extracted, _ = small_results
     got = {
-        r["doc_id"]: [list(s) for s in r["spans"]]
-        for r in reassemble(extracted).collect()
+        r["doc_id"]: [[s["offset"], s["kind"], s["text"], s["media_ref"]]
+                      for s in r["spans"]]
+        for r in assemble_spans_unsalted(extracted).collect()
     }
     src = pd.read_parquet(f"{sf_small}/documents.parquet")
     assert len(got) == len(src)
@@ -93,8 +94,6 @@ def test_structural_count_formulas(small_results, spark, sf_small):
 
 def test_explode_reassemble_roundtrip(spark, sf_small):
     docs = synth_docs_df(spark, sf_small).limit(50)
-    from parserpdf_spark.operators.skew import assemble_spans_unsalted
-
     round_tripped = assemble_spans_unsalted(explode_docs(docs))
     a = {r["doc_id"]: [list(s) for s in r["spans"]] for r in docs.collect()}
     b = {r["doc_id"]: [list(s) for s in r["spans"]] for r in round_tripped.collect()}

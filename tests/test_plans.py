@@ -296,31 +296,15 @@ def test_operators_unpersist_what_they_persist():
     assert offenders == []
 
 
-# top-level engine names no entry point reaches that stay anyway, each
-# with its reason; what they reach is kept with them
-UNREACHED_KEPT = {
-    "parserpdf_spark.kernels.html_extract.parse_html_stdlib":
-        "the stdlib-parser reference the fast tokenizer is tested against",
-    "parserpdf_spark.kernels.jpeg.encode_jpeg_progressive":
-        "the writer whose output the progressive decoder is tested against",
-    "parserpdf_spark.operators.sinks.export_image_payloads":
-        "the reference's image sink (PARITY K2), which no job runs yet",
-}
-
-
-def test_every_engine_module_is_reached_from_an_entry_point():
-    """Every module and every top-level name under parserpdf_spark/ is
-    reached from an entry point: the driver contract, the benches,
-    perfbench, tools, the jobs, or the worker daemon ``session.get_spark``
-    names in ``spark.python.daemon.module``.  A name is reached when
-    reached code names it (a ``Name``, a dotted ``Attribute`` through an
-    imported module, or an import; function-local imports included),
-    and a module when it is imported or one of its names is reached,
-    which runs its other top-level statements.  Docstrings and comments
-    name nothing.  A name that only its own tests use is code no run
-    uses; ``UNREACHED_KEPT`` lists the exceptions."""
+def _engine_index(*extra):
+    """Parse every module under parserpdf_spark/, the entry points and the
+    ``extra`` files.  Returns the module → path maps of the engine and of
+    the entry points, every parsed module's tree, its top-level
+    definitions, the rest of its body, its import aliases, and
+    ``resolve`` and ``import_base`` over them."""
     import ast
     import pathlib
+    from types import SimpleNamespace
 
     repo = pathlib.Path(__file__).resolve().parents[1]
     pkg = repo / "parserpdf_spark"
@@ -335,7 +319,8 @@ def test_every_engine_module_is_reached_from_an_entry_point():
         *(repo / "perfbench").glob("*.py"), *(repo / "tools").glob("*.py"),
         *(pkg / "jobs").glob("*.py"), pkg / "_daemon.py",
     ]
-    files = {**{module_of(p): p for p in roots}, **engine}
+    roots = {module_of(p): p for p in roots}
+    files = {**roots, **{module_of(p): p for p in extra}, **engine}
 
     def import_base(node, module):
         if not node.level:
@@ -346,11 +331,11 @@ def test_every_engine_module_is_reached_from_an_entry_point():
         parts = parts[: len(parts) - node.level + 1]
         return ".".join(parts + ([node.module] if node.module else []))
 
+    trees = {module: ast.parse(path.read_text()) for module, path in files.items()}
     defs = {}  # (module, name) -> its top-level statement
     other = {module: [] for module in files}  # the rest of each module's body
     aliases = {module: {} for module in files}  # local name -> dotted target
-    for module, path in files.items():
-        tree = ast.parse(path.read_text())
+    for module, tree in trees.items():
         for node in ast.walk(tree):
             if isinstance(node, ast.Import):
                 for alias in node.names:
@@ -394,13 +379,48 @@ def test_every_engine_module_is_reached_from_an_entry_point():
             return [module]
         return []
 
+    return SimpleNamespace(
+        engine=engine, roots=roots, files=files, trees=trees,
+        defs=defs, other=other, aliases=aliases, resolve=resolve,
+        import_base=import_base,
+    )
+
+
+# top-level engine names no entry point reaches that stay anyway, each
+# with its reason; what they reach is kept with them
+UNREACHED_KEPT = {
+    "parserpdf_spark.kernels.html_extract.parse_html_stdlib":
+        "the stdlib-parser reference the fast tokenizer is tested against",
+    "parserpdf_spark.kernels.jpeg.encode_jpeg_progressive":
+        "the writer whose output the progressive decoder is tested against",
+    "parserpdf_spark.operators.sinks.export_image_payloads":
+        "the reference's image sink (PARITY K2), which no job runs yet",
+}
+
+
+def test_every_engine_module_is_reached_from_an_entry_point():
+    """Every module and every top-level name under parserpdf_spark/ is
+    reached from an entry point: the driver contract, the benches,
+    perfbench, tools, the jobs, or the worker daemon ``session.get_spark``
+    names in ``spark.python.daemon.module``.  A name is reached when
+    reached code names it (a ``Name``, a dotted ``Attribute`` through an
+    imported module, or an import; function-local imports included),
+    and a module when it is imported or one of its names is reached,
+    which runs its other top-level statements.  Docstrings and comments
+    name nothing.  A name that only its own tests use is code no run
+    uses; ``UNREACHED_KEPT`` lists the exceptions."""
+    import ast
+
+    ix = _engine_index()
+    defs, files, aliases, resolve = ix.defs, ix.files, ix.aliases, ix.resolve
+
     def named(module, node):
         for n in ast.walk(node):
             if isinstance(n, ast.Import):
                 for alias in n.names:
                     yield from resolve(alias.name)
             elif isinstance(n, ast.ImportFrom):
-                base = import_base(n, module)
+                base = ix.import_base(n, module)
                 yield from resolve(base)
                 for alias in n.names:
                     yield from resolve(f"{base}.{alias.name}")
@@ -428,12 +448,153 @@ def test_every_engine_module_is_reached_from_an_entry_point():
             else:
                 parent = item.rpartition(".")[0]
                 todo += [parent] if parent in files else []
-                todo += [ref for node in other[item] for ref in named(item, node)]
+                todo += [ref for node in ix.other[item] for ref in named(item, node)]
         return seen
 
-    reached = reach([module_of(p) for p in roots])
+    reached = reach(list(ix.roots))
     kept = {tuple(name.rsplit(".", 1)) for name in UNREACHED_KEPT}
     assert sorted(kept & reached) == []  # a reached name needs no exception
     reached |= reach(sorted(kept))
-    unreached = [*(set(engine) - reached), *(".".join(d) for d in set(defs) - reached)]
+    unreached = [*(set(ix.engine) - reached), *(".".join(d) for d in set(defs) - reached)]
     assert sorted(unreached) == []
+
+
+# defaulted engine parameters that no caller sets and that stay anyway
+UNSET_OPTIONS_KEPT = {
+    "parserpdf_spark.session.get_spark.extra_conf":
+        "deployment conf; the subprocess tests set it inside script strings",
+    "parserpdf_spark.kernels.pdf_crypt.build_decryptor.password":
+        "a credential, which a deployment supplies and no fixture needs",
+}
+
+
+def test_every_engine_option_is_set_by_some_caller():
+    """Every defaulted parameter of a top-level function under
+    parserpdf_spark/ is an option some call uses: a call in an entry
+    point, in the engine or in tests/ passes it a value other than its
+    default, by keyword, by position or through a caller's own ``**kw``.
+    A literal equal to the default sets nothing, and a caller passing on
+    its own parameter sets it only if that parameter is set itself,
+    iterated to a fixed point.  A value no caller changes is a constant;
+    ``UNSET_OPTIONS_KEPT`` lists the exceptions."""
+    import ast
+    import pathlib
+
+    ix = _engine_index(*pathlib.Path(__file__).parent.glob("*.py"))
+    funcs = (ast.FunctionDef, ast.AsyncFunctionDef)
+
+    options = {}  # (module, function) -> ({param: default}, positional names)
+    for key, node in ix.defs.items():
+        if isinstance(node, funcs):
+            a = node.args
+            positional = [p.arg for p in a.posonlyargs + a.args]
+            defaults = dict(zip(positional[len(positional) - len(a.defaults):],
+                                a.defaults))
+            defaults.update((p.arg, d) for p, d in zip(a.kwonlyargs, a.kw_defaults)
+                            if d is not None)
+            options[key] = (defaults, positional)
+
+    local_defs = {
+        module: {n.name for n in ast.walk(tree) if isinstance(n, funcs)}
+        for module, tree in ix.trees.items()
+    }
+
+    def callee_of(module, func):
+        """(module, name) of the function a call names: a top-level
+        engine function, or any function defined in the calling file."""
+        chain = []
+        while isinstance(func, ast.Attribute):
+            chain.insert(0, func.attr)
+            func = func.value
+        if not isinstance(func, ast.Name):
+            return None
+        if (module, func.id) in ix.defs or func.id in local_defs[module]:
+            return None if chain else (module, func.id)
+        if func.id in ix.aliases[module]:
+            hit = ix.resolve(".".join([ix.aliases[module][func.id], *chain]))
+            return hit[-1] if hit and isinstance(hit[-1], tuple) else None
+        return None
+
+    calls = []  # (callee, call, calling module, defs enclosing it outermost first)
+
+    def walk(module, node, enclosing):
+        for child in ast.iter_child_nodes(node):
+            inner = enclosing
+            if isinstance(child, (*funcs, ast.Lambda)):
+                inner = [*enclosing, child]
+            elif isinstance(child, ast.Call):
+                callee = callee_of(module, child.func)
+                if callee:
+                    calls.append((callee, child, module, enclosing))
+            walk(module, child, inner)
+
+    for module, tree in ix.trees.items():
+        walk(module, tree, [])
+
+    def passed(call, module, enclosing, positional):
+        """(parameter, value) per argument of ``call``."""
+        for name, arg in zip(positional, call.args):
+            if isinstance(arg, ast.Starred):
+                break
+            yield name, arg
+        for kw in call.keywords:
+            if kw.arg is not None:
+                yield kw.arg, kw.value
+                continue
+            # the enclosing def's own ``**kw`` forwards what its callers
+            # pass it by keyword
+            owner = next((
+                fn for fn in reversed(enclosing)
+                if isinstance(fn, funcs) and fn.args.kwarg
+                and isinstance(kw.value, ast.Name)
+                and fn.args.kwarg.arg == kw.value.id
+            ), None)
+            if owner is not None:
+                yield from (
+                    (k.arg, k.value)
+                    for callee, c, _, _ in calls if callee == (module, owner.name)
+                    for k in c.keywords if k.arg is not None
+                )
+
+    def same(value, default):
+        try:
+            return ast.literal_eval(value) == ast.literal_eval(default)
+        except ValueError:  # not a literal
+            return False
+
+    def sets(value, module, enclosing, done):
+        """Does ``value`` set an option, given the options set so far?  Only
+        a caller's own defaulted parameter, passed on, depends on them."""
+        if not isinstance(value, ast.Name):
+            return True
+        for fn in reversed(enclosing):
+            if value.id in {a.arg for a in ast.walk(fn.args) if isinstance(a, ast.arg)}:
+                key = (module, getattr(fn, "name", None))
+                if ix.defs.get(key) is fn and value.id in options[key][0]:
+                    return (key, value.id) in done
+                return True
+        return True
+
+    done = set()
+    while True:
+        before = len(done)
+        for callee, call, module, enclosing in calls:
+            if callee not in options:
+                continue
+            defaults, positional = options[callee]
+            for param, value in passed(call, module, enclosing, positional):
+                if (param in defaults and not same(value, defaults[param])
+                        and sets(value, module, enclosing, done)):
+                    done.add((callee, param))
+        if len(done) == before:
+            break
+
+    unset = sorted(
+        f"{module}.{fn}.{param}"
+        for (module, fn), (defaults, _) in options.items()
+        for param in defaults
+        if ((module, fn), param) not in done
+    )
+    assert sorted(set(UNSET_OPTIONS_KEPT) - set(unset)) == []  # set: no exception
+    unused = [name for name in unset if name not in UNSET_OPTIONS_KEPT]
+    assert unused == [], "options no caller sets:\n" + "\n".join(unused)

@@ -75,17 +75,17 @@ def test_extract_job_and_sink_spark_jobs(spark, tmp_path):
     assert sink_jobs <= 2
 
 
-def test_report_counts_chunks_committed_by_an_earlier_run(spark, tmp_path):
+def test_report_counts_chunks_committed_by_an_earlier_run(
+    spark, tmp_path, crash_after_commits
+):
     """A crashed run's committed chunks still count in the resumed job's
     docs_by_status; committed_this_run holds only the resumed chunks."""
     out = str(tmp_path / "job")
     docs = ingested_docs(
         files_to_docs(scan_files(spark, FIXTURES, "*", with_content=True))
     )
-    with pytest.raises(RuntimeError, match="injected failure"):
-        run_checkpointed_extraction(
-            spark, docs, out, n_chunks=4, fail_after_chunk=2
-        )
+    with crash_after_commits(2):
+        run_checkpointed_extraction(spark, docs, out, n_chunks=4)
     first = set(committed_chunks(out))
     assert len(first) == 2
 
@@ -238,6 +238,19 @@ def test_golden_ingest_statuses_are_known(golden):
     assert statuses and statuses <= set(schema.INGEST_STATUSES)
 
 
+@pytest.mark.parametrize(
+    "golden", ["file_ingest_status", "ocr_ingest_status", "warc_ingest_status"]
+)
+def test_golden_ingest_src_paths_are_repo_relative(golden):
+    """The ingest-status goldens hold repo-relative paths, so the bytes
+    do not depend on the checkout that wrote them."""
+    import pyarrow.parquet as pq
+
+    table = pq.read_table(os.path.join(REPO, "goldens", f"{golden}.parquet"))
+    paths = table.column("src_path").to_pylist()
+    assert paths and all(p.startswith("fixtures/") for p in paths)
+
+
 def test_an_unlisted_ingest_status_fails_the_job(spark, tmp_path, monkeypatch):
     """The job counts every file as well as each known status: a status
     missing from schema.INGEST_STATUSES raises instead of vanishing."""
@@ -295,6 +308,30 @@ def test_media_job_runs_one_spark_job_per_table(spark, tmp_path, flags, tables):
         key, cond = (("recognized", F.col("ocr_status") == "ok")
                      if table == "image_ocr" else ("decoded", F.col("decode_ok")))
         assert report[table][key] == df.filter(cond).count()
+
+
+def test_media_job_without_cores_runs_on_the_active_session(
+    spark, tmp_path, monkeypatch
+):
+    """Without --cores (a spark-submit run) media_job takes the session
+    spark-submit configured, never a local[N] one of its own, and stops
+    it when done."""
+    from pyspark.sql import SparkSession
+
+    from parserpdf_spark import session
+    from parserpdf_spark.jobs.media_job import main as media_main
+
+    def local_session(*args, **kwargs):
+        raise AssertionError("media_job built a local session")
+
+    stopped = []
+    monkeypatch.setattr(session, "get_spark", local_session)
+    monkeypatch.setattr(SparkSession, "stop", lambda self: stopped.append(self))
+    out = str(tmp_path / "media")
+    with redirect_stdout(io.StringIO()):
+        assert media_main(["--input", _media_inputs(tmp_path), "--output", out]) == 0
+    assert stopped == [spark]
+    assert spark.read.parquet(os.path.join(out, "images")).count() > 0
 
 
 def test_media_job_ocr_bridges_the_images_once(spark, tmp_path):

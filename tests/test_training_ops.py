@@ -104,7 +104,7 @@ def test_ann_ivf_recall(spark, sf_med):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r["query_id"], r["neighbor_id"])
-        for r in ann_bruteforce_topk(emb, queries, k=5).collect()
+        for r in ann_bruteforce_topk(emb, queries).collect()
     }
     probed = {
         (r["query_id"], r["neighbor_id"])
@@ -164,7 +164,7 @@ def test_lloyd_refine_changes_centroids_and_keeps_equivalence(spark, sf_med):
     queries = emb.filter(F.col("vec_id") < 5)
     exact = {
         (r["query_id"], r["neighbor_id"], r["rank"])
-        for r in ann_bruteforce_topk(emb, queries, k=5).collect()
+        for r in ann_bruteforce_topk(emb, queries).collect()
     }
     full = {
         (r["query_id"], r["neighbor_id"], r["rank"])
@@ -281,7 +281,7 @@ LSH_QUERIES = {
     "minhash_lsh_pairs": (
         lambda spark, docs: minhash_lsh_pairs(docs, threshold=0.8), 3
     ),
-    "simhash_pairs": (lambda spark, docs: simhash_pairs(docs, max_hamming=3), 3),
+    "simhash_pairs": (lambda spark, docs: simhash_pairs(docs), 3),
     "embedding_dup_pairs_bucketed": (
         lambda spark, docs: embedding_dup_pairs_bucketed(
             _two_dup_vectors(spark), threshold=0.95
@@ -979,7 +979,7 @@ def test_avi_codec_and_real_frame_sampling(spark, sf_med):
 
     docs = spark.read.parquet(f"{sf_med}/documents.parquet").select("doc_id")
     media = attach_avi_payloads(docs)
-    sampled = frame_sample_real(media, every=2).persist()
+    sampled = frame_sample_real(media).persist()
     assert sampled.filter(~F.col("decode_ok")).count() == 0
     # doc 6: 3 + 6%4 = 5 frames → sampled frames 0, 2, 4
     rows = sorted(

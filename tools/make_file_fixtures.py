@@ -42,6 +42,12 @@ SF_DIR = "/root/testdata/sf0.001"
 FIXTURES = os.path.join(REPO, "fixtures", "files_corpus")
 GOLDENS = os.path.join(REPO, "goldens")
 
+
+def _rel(path: str) -> str:
+    """A golden's src_path: repo-relative (fixtures/…), so the goldens
+    hold the same bytes whichever checkout writes them."""
+    return os.path.relpath(path, REPO)
+
 _NS = {
     "w": "http://schemas.openxmlformats.org/wordprocessingml/2006/main",
     "r": "http://schemas.openxmlformats.org/officeDocument/2006/relationships",
@@ -1306,7 +1312,7 @@ def build_ocr_goldens() -> None:
         with open(path, "rb") as fh:
             routed = ocr_route_file(path, fh.read())
         status_rows["doc_id"].append(routed["doc_id"])
-        status_rows["src_path"].append(routed["src_path"])
+        status_rows["src_path"].append(_rel(routed["src_path"]))
         status_rows["ingest_status"].append(routed["ingest_status"])
         status_rows["n_spans"].append(len(routed["spans"]))
         if routed["ingest_status"] != "ok":
@@ -1570,7 +1576,7 @@ def build_warc_goldens() -> None:
             rows = warc_file_rows(path, fh.read())
         for r in rows:
             for k in status_rows:
-                status_rows[k].append(r[k])
+                status_rows[k].append(_rel(r[k]) if k == "src_path" else r[k])
             if r["ingest_status"] != "ok":
                 continue
             out, metrics = extract_document_safe(r["spans"])
@@ -1604,7 +1610,7 @@ def build_goldens() -> None:
         with open(path, "rb") as fh:
             routed = route_file(path, fh.read())
         status_rows["doc_id"].append(routed["doc_id"])
-        status_rows["src_path"].append(routed["src_path"])
+        status_rows["src_path"].append(_rel(routed["src_path"]))
         status_rows["ingest_status"].append(routed["ingest_status"])
         status_rows["n_spans"].append(len(routed["spans"]))
         if routed["ingest_status"] != "ok":
