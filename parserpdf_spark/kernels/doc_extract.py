@@ -171,7 +171,7 @@ def _clx_pieces(clx: bytes) -> list[tuple[int, int, int, bool]]:
     if len(plc) < lcb:
         raise ValueError("truncated PlcPcd")
     n = (lcb - 4) // 12
-    cps = [struct.unpack_from("<I", plc, i * 4)[0] for i in range(n + 1)]
+    cps = _u32s(plc, n + 1)
     pieces = []
     for i in range(n):
         fc_field = struct.unpack_from("<I", plc, (n + 1) * 4 + i * 8 + 2)[0]
@@ -301,28 +301,44 @@ def _papx_flags(grp: bytes) -> tuple[bool, bool]:
     return in_table, ttp
 
 
+def _u32s(buf: bytes, n: int) -> tuple[int, ...]:
+    """The first ``n`` little-endian uint32s of ``buf`` (a PLC's CP or FC
+    array)."""
+    return struct.unpack_from(f"<{n}I", buf)
+
+
+def _fkp_pages(word: bytes, plc: bytes, kind: str, max_crun: int):
+    """PlcfBte{Papx,Chpx} bytes → (page, crun, rgfc) per 512-byte FKP page
+    of the WordDocument stream it points to, checked against the
+    bin-table: an entry inconsistent with its page raises, so the caller
+    falls back to plain paragraphs (style info is best-effort)."""
+    if len(plc) < 12:
+        return
+    n = (len(plc) - 4) // 8
+    fcs = _u32s(plc, n + 1)
+    for i in range(n):
+        (pn,) = struct.unpack_from("<I", plc, (n + 1) * 4 + i * 4)
+        pn &= 0x3FFFFF
+        page = word[pn * 512 : (pn + 1) * 512]
+        if len(page) < 512:
+            raise ValueError(f"{kind.upper()} FKP page out of range")
+        crun = page[511]
+        if crun == 0 or crun > max_crun:
+            raise ValueError(f"implausible {kind.upper()} FKP crun")
+        rgfc = _u32s(page, crun + 1)
+        if fcs[i] > rgfc[0] or fcs[i + 1] < rgfc[crun]:
+            raise ValueError(f"PlcfBte{kind}/FKP fc mismatch")
+        yield page, crun, rgfc
+
+
 def _papx_istd_runs(
     word: bytes, plc: bytes
 ) -> list[tuple[int, int, int, bool, bool]]:
     """PlcfBtePapx bytes → [(fc_start, fc_lim, istd, in_table, ttp)]
     paragraph runs, resolved through the 512-byte PAPX FKP pages in the
     WordDocument stream."""
-    if len(plc) < 12:
-        return []
-    n = (len(plc) - 4) // 8
-    fcs = [struct.unpack_from("<I", plc, i * 4)[0] for i in range(n + 1)]
     runs: list[tuple[int, int, int, bool, bool]] = []
-    for i in range(n):
-        (pn,) = struct.unpack_from("<I", plc, (n + 1) * 4 + i * 4)
-        pn &= 0x3FFFFF
-        page = word[pn * 512 : (pn + 1) * 512]
-        if len(page) < 512:
-            raise ValueError("PAPX FKP page out of range")
-        crun = page[511]
-        if crun == 0 or crun > 0x65:
-            raise ValueError("implausible PAPX FKP crun")
-        rgfc = [struct.unpack_from("<I", page, k * 4)[0]
-                for k in range(crun + 1)]
+    for page, crun, rgfc in _fkp_pages(word, plc, "Papx", 0x65):
         for k in range(crun):
             bx = page[(crun + 1) * 4 + k * 13]
             istd = 0  # no PAPX → default properties (Normal)
@@ -340,10 +356,6 @@ def _papx_istd_runs(
                     istd = struct.unpack_from("<H", grp, 0)[0]
                     in_table, ttp = _papx_flags(grp)
             runs.append((rgfc[k], rgfc[k + 1], istd, in_table, ttp))
-        if fcs[i] > rgfc[0] or fcs[i + 1] < rgfc[crun]:
-            # bin-table entry inconsistent with its page — style info is
-            # best-effort; signal so the caller falls back to all-<p>
-            raise ValueError("PlcfBtePapx/FKP fc mismatch")
     return runs
 
 
@@ -356,22 +368,8 @@ def _chpx_format_runs(
     (sprmCFBold 0x0835, sprmCFItalic 0x0836); a ToggleOperand of 1 or
     0x81 reads as ON (style-level character formatting is out of scope,
     so "opposite of style" means on against the plain default)."""
-    if len(plc) < 12:
-        return []
-    n = (len(plc) - 4) // 8
-    fcs = [struct.unpack_from("<I", plc, i * 4)[0] for i in range(n + 1)]
     runs: list[tuple[int, int, bool, bool]] = []
-    for i in range(n):
-        (pn,) = struct.unpack_from("<I", plc, (n + 1) * 4 + i * 4)
-        pn &= 0x3FFFFF
-        page = word[pn * 512 : (pn + 1) * 512]
-        if len(page) < 512:
-            raise ValueError("CHPX FKP page out of range")
-        crun = page[511]
-        if crun == 0 or crun > 0x7F:
-            raise ValueError("implausible CHPX FKP crun")
-        rgfc = [struct.unpack_from("<I", page, k * 4)[0]
-                for k in range(crun + 1)]
+    for page, crun, rgfc in _fkp_pages(word, plc, "Chpx", 0x7F):
         for k in range(crun):
             bx = page[(crun + 1) * 4 + k]
             bold = italic = False
@@ -387,14 +385,18 @@ def _chpx_format_runs(
                     elif op == 0x0836 and operand:
                         italic = operand[0] in (1, 0x81)
             runs.append((rgfc[k], rgfc[k + 1], bold, italic))
-        if fcs[i] > rgfc[0] or fcs[i + 1] < rgfc[crun]:
-            raise ValueError("PlcfBteChpx/FKP fc mismatch")
     return runs
+
+
+# a character run (text, bold, italic), and a paragraph (its runs, its
+# terminating mark, heading level, in_table, ttp)
+_Segment = tuple[str, bool, bool]
+_Paragraph = tuple[list[_Segment], str, int, bool, bool]
 
 
 def _doc_paragraph_levels(
     data: bytes,
-) -> list[tuple[list[tuple[str, bool, bool]], str, int, bool, bool]]:
+) -> list[_Paragraph]:
     """.doc bytes → [(segments, mark, heading level, in_table, ttp)] per
     paragraph, where ``segments`` is [(text, bold, italic)] character
     runs in order, ``mark`` is the terminating character ("\\r" for
@@ -455,8 +457,8 @@ def _doc_paragraph_levels(
                 return bold, italic
         return False, False
 
-    paras: list[tuple[list[tuple[str, bool, bool]], str, int, bool, bool]] = []
-    segments: list[tuple[str, bool, bool]] = []
+    paras: list[_Paragraph] = []
+    segments: list[_Segment] = []
     cur: list[str] = []
     cur_fmt = (False, False)
 
@@ -492,6 +494,14 @@ def _doc_paragraph_levels(
     return paras
 
 
+def table_html(rows: list[list[str]]) -> str:
+    """Rows of escaped cell texts → one ``<table>`` of ``<tr><td>`` rows,
+    the table markup the .doc and RTF kernels emit."""
+    return "<table>" + "".join(
+        "<tr>" + "".join(f"<td>{c}</td>" for c in row) + "</tr>" for row in rows
+    ) + "</table>"
+
+
 def doc_to_html(data: bytes) -> str:
     """.doc bytes → normalized HTML, the same dialect the docx shim
     emits: Heading-N styled paragraphs (via STSH + PAPX istd lookup)
@@ -510,7 +520,7 @@ def doc_to_html(data: bytes) -> str:
     except struct.error as exc:
         raise ValueError(f"malformed .doc structure: {exc}") from exc
 
-    def clean(segments: list[tuple[str, bool, bool]]) -> str:
+    def clean(segments: list[_Segment]) -> str:
         # strip remaining Word control marks (page break 0x0C, line
         # break 0x0B → space); cell marks are handled structurally.
         # Outer whitespace trims across segment boundaries so a
@@ -551,12 +561,7 @@ def doc_to_html(data: bytes) -> str:
         if cells:
             rows.append(cells)
         if rows:
-            parts.append("<table>")
-            for row in rows:
-                parts.append(
-                    "<tr>" + "".join(f"<td>{c}</td>" for c in row) + "</tr>"
-                )
-            parts.append("</table>")
+            parts.append(table_html(rows))
         rows, cells, cell_buf = [], [], []
 
     for segments, mark, level, in_table, ttp in paras:

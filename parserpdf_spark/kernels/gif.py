@@ -94,6 +94,23 @@ def decode_gif(payload: bytes, max_frames: int = 64):
         raise ValueError(f"malformed GIF structure: {exc}") from exc
 
 
+def _color_table(data: bytes, pos: int, flags: int, scope: str):
+    """The colour table at ``pos`` whose size the descriptor ``flags``
+    give → (N×3 uint8 palette, offset after it)."""
+    size = 2 << (flags & 0x07)
+    if pos + 3 * size > len(data):
+        raise ValueError(f"truncated {scope} color table")
+    table = np.frombuffer(data, dtype=np.uint8, count=3 * size, offset=pos)
+    return table.reshape(-1, 3), pos + 3 * size
+
+
+def _interlace_order(h: int) -> list[int]:
+    """Stored row order of an interlaced image: its four passes start at
+    rows 0, 4, 2 and 1 and step 8, 8, 4 and 2."""
+    return (list(range(0, h, 8)) + list(range(4, h, 8))
+            + list(range(2, h, 4)) + list(range(1, h, 2)))
+
+
 def _decode_gif(data: bytes, max_frames: int):
     if len(data) < 13 or data[:6] not in (b"GIF87a", b"GIF89a"):
         raise ValueError("not a GIF (missing GIF87a/89a signature)")
@@ -104,13 +121,7 @@ def _decode_gif(data: bytes, max_frames: int):
     pos = 13
     global_table = None
     if flags & 0x80:
-        gct_size = 2 << (flags & 0x07)
-        if pos + 3 * gct_size > len(data):
-            raise ValueError("truncated global color table")
-        global_table = np.frombuffer(
-            data, dtype=np.uint8, count=3 * gct_size, offset=pos
-        ).reshape(-1, 3)
-        pos += 3 * gct_size
+        global_table, pos = _color_table(data, pos, flags, "global")
 
     frames: list[np.ndarray] = []
     transparent: int | None = None
@@ -140,13 +151,7 @@ def _decode_gif(data: bytes, max_frames: int):
             pos += 10
             table = global_table
             if iflags & 0x80:
-                lct_size = 2 << (iflags & 0x07)
-                if pos + 3 * lct_size > len(data):
-                    raise ValueError("truncated local color table")
-                table = np.frombuffer(
-                    data, dtype=np.uint8, count=3 * lct_size, offset=pos
-                ).reshape(-1, 3)
-                pos += 3 * lct_size
+                table, pos = _color_table(data, pos, iflags, "local")
             if table is None:
                 raise ValueError("GIF image without any color table")
             if iw == 0 or ih == 0 or ix + iw > w or iy + ih > h:
@@ -166,10 +171,8 @@ def _decode_gif(data: bytes, max_frames: int):
                 raise ValueError("GIF LZW data shorter than the image")
             arr = np.array(idx[: iw * ih], dtype=np.int32).reshape(ih, iw)
             if iflags & 0x40:  # interlaced: 4-pass row order
-                order = (list(range(0, ih, 8)) + list(range(4, ih, 8))
-                         + list(range(2, ih, 4)) + list(range(1, ih, 2)))
                 de = np.empty_like(arr)
-                de[order] = arr
+                de[_interlace_order(ih)] = arr
                 arr = de
             if int(arr.max(initial=0)) >= len(table):
                 raise ValueError("GIF palette index out of range")
@@ -261,9 +264,7 @@ def encode_gif(frames, palette, interlace: bool = False) -> bytes:
             raise ValueError("all frames must be full-screen")
         rows = arr
         if interlace:
-            order = (list(range(0, h, 8)) + list(range(4, h, 8))
-                     + list(range(2, h, 4)) + list(range(1, h, 2)))
-            rows = arr[order]
+            rows = arr[_interlace_order(h)]
         out += b"\x2c" + struct.pack("<HHHH", 0, 0, w, h)
         out += bytes([0x40 if interlace else 0])
         out += bytes([mcs])

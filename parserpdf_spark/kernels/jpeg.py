@@ -38,6 +38,7 @@ and its exact inverse ``block = T.T @ coeffs @ T``.
 from __future__ import annotations
 
 import struct
+from typing import Iterator
 
 import numpy as np
 
@@ -330,13 +331,96 @@ def _ycbcr_to_rgb(ycc: np.ndarray) -> np.ndarray:
 # Encoder
 # ---------------------------------------------------------------------------
 
+def _edge_pad(plane: np.ndarray, m: int) -> np.ndarray:
+    """Plane padded by repeating its last row and column up to multiples
+    of ``m``."""
+    h, w = plane.shape
+    return np.pad(plane, ((0, -h % m), (0, -w % m)), mode="edge")
+
+
 def _block_split(plane: np.ndarray) -> tuple[np.ndarray, int, int]:
     """Plane → (n_by, n_bx, 8, 8) blocks with edge replication."""
-    h, w = plane.shape
-    bh, bw = -(-h // 8) * 8, -(-w // 8) * 8
-    padded = np.pad(plane, ((0, bh - h), (0, bw - w)), mode="edge")
+    padded = _edge_pad(plane, 8)
+    bh, bw = padded.shape
     blocks = padded.reshape(bh // 8, 8, bw // 8, 8).transpose(0, 2, 1, 3)
     return blocks, bh // 8, bw // 8
+
+
+def _planes(arr: np.ndarray, gray: bool, subsample: bool) -> list[np.ndarray]:
+    """Pixels → the Y (or gray) plane and, for colour, Cb and Cr planes,
+    4:2:0-averaged when ``subsample``."""
+    if gray:
+        return [arr.astype(np.float64)]
+    ycc = _rgb_to_ycbcr(arr)
+    y, cb, cr = ycc[..., 0], ycc[..., 1], ycc[..., 2]
+    if subsample:
+        cb, cr = [
+            p.reshape(p.shape[0] // 2, 2, p.shape[1] // 2, 2).mean(axis=(1, 3))
+            for p in (_edge_pad(cb, 2), _edge_pad(cr, 2))
+        ]
+    return [y, cb, cr]
+
+
+def _encode_front(pixels, quality: int, subsample: bool, sof: bytes,
+                  dht: tuple) -> tuple:
+    """The encoders' shared front end: check ``pixels`` (HxWx3 RGB or HxW
+    gray), write SOI, JFIF, DQT, the ``sof`` frame header and the ``dht``
+    Huffman tables (chroma ones only for colour), and split the pixels
+    into planes.  Returns (out, planes, per-plane quant tables, frame
+    components as (id, sampling, table))."""
+    arr = np.asarray(pixels, dtype=np.uint8)
+    gray = arr.ndim == 2
+    if not gray and (arr.ndim != 3 or arr.shape[2] != 3):
+        raise ValueError("the JPEG encoders expect HxWx3 RGB or HxW gray")
+    h, w = arr.shape[:2]
+    if h == 0 or w == 0:
+        raise ValueError("degenerate image dimensions")
+    q_luma, q_chroma = _scaled_tables(quality)
+    qs = [q_luma] if gray else [q_luma, q_chroma, q_chroma]
+
+    out = bytearray(b"\xff\xd8")  # SOI
+    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
+        + struct.pack(">HH", 1, 1) + b"\x00\x00"
+    # DQT (table 0 luma; table 1 chroma when color)
+    for tq, q in enumerate(qs[:2]):
+        out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + bytes([tq]) \
+            + q.flatten()[_ZIGZAG].astype(np.uint8).tobytes()
+    hs = 2 if (subsample and not gray) else 1
+    comps = [(1, (hs << 4) | hs, 0)]
+    if not gray:
+        comps += [(2, 0x11, 1), (3, 0x11, 1)]
+    frame = struct.pack(">BHHB", 8, h, w, len(comps))
+    for cid, samp, tq in comps:
+        frame += struct.pack(">BBB", cid, samp, tq)
+    out += sof + struct.pack(">H", 2 + len(frame)) + frame
+    for tc_th, (bits, values) in dht:
+        if gray and tc_th & 0x0F:
+            continue
+        seg = bytes([tc_th]) + bytes(bits) + bytes(values)
+        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
+    return out, _planes(arr, gray, subsample), qs, comps
+
+
+def _write_dc(writer: _BitWriter, dc_codes: dict, diff: int) -> None:
+    """One DC difference: its size category's code, then its bits."""
+    t, code = _magnitude(diff) if diff else (0, 0)
+    c, ln = dc_codes[t]
+    writer.write(c, ln)
+    if t:
+        writer.write(code, t)
+
+
+def _write_ac(writer: _BitWriter, ac_codes: dict, run: int, v: int) -> None:
+    """One nonzero AC coefficient after ``run`` zeros: a ZRL per 16
+    zeros, then the (run, size) code and the magnitude bits."""
+    while run > 15:
+        c, ln = ac_codes[0xF0]  # ZRL
+        writer.write(c, ln)
+        run -= 16
+    t, code = _magnitude(v)
+    c, ln = ac_codes[(run << 4) | t]
+    writer.write(c, ln)
+    writer.write(code, t)
 
 
 def _encode_block(
@@ -350,14 +434,7 @@ def _encode_block(
     coeffs = _T @ (block - 128.0) @ _T.T
     quant = np.round(coeffs / q).astype(np.int64)
     zz = quant.flatten()[_ZIGZAG]
-    # DC
-    diff = int(zz[0]) - pred
-    t, code = _magnitude(diff) if diff else (0, 0)
-    c, ln = dc_codes[t]
-    writer.write(c, ln)
-    if t:
-        writer.write(code, t)
-    # AC
+    _write_dc(writer, dc_codes, int(zz[0]) - pred)
     run = 0
     nz = np.nonzero(zz[1:])[0]
     last = nz[-1] + 1 if len(nz) else 0
@@ -366,14 +443,7 @@ def _encode_block(
         if v == 0:
             run += 1
             continue
-        while run > 15:
-            c, ln = ac_codes[0xF0]  # ZRL
-            writer.write(c, ln)
-            run -= 16
-        t, code = _magnitude(v)
-        c, ln = ac_codes[(run << 4) | t]
-        writer.write(c, ln)
-        writer.write(code, t)
+        _write_ac(writer, ac_codes, run, v)
         run = 0
     if last < 63:
         c, ln = ac_codes[0x00]  # EOB
@@ -391,71 +461,26 @@ def encode_jpeg_baseline(
 
     ``subsample=True`` emits 4:2:0 chroma; ``restart_interval`` > 0
     emits DRI + RSTn markers every that many MCUs."""
-    arr = np.asarray(pixels, dtype=np.uint8)
-    gray = arr.ndim == 2
-    if not gray and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("encode_jpeg_baseline expects HxWx3 RGB or HxW gray")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("degenerate image dimensions")
-    q_luma, q_chroma = _scaled_tables(quality)
-
-    out = bytearray(b"\xff\xd8")  # SOI
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    # DQT (table 0 luma; table 1 chroma when color)
-    zz_l = q_luma.flatten()[_ZIGZAG].astype(np.uint8).tobytes()
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x00" + zz_l
-    if not gray:
-        zz_c = q_chroma.flatten()[_ZIGZAG].astype(np.uint8).tobytes()
-        out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x01" + zz_c
-    # SOF0
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    hs = 2 if (subsample and not gray) else 1
-    comps = [(1, (hs << 4) | hs, 0)]
-    if not gray:
-        comps += [(2, 0x11, 1), (3, 0x11, 1)]
-    for cid, samp, tq in comps:
-        sof += struct.pack(">BBB", cid, samp, tq)
-    out += b"\xff\xc0" + struct.pack(">H", 2 + len(sof)) + sof
-    # DHT
-    tables = [(0x00, _DC_LUMA), (0x10, _AC_LUMA)]
-    if not gray:
-        tables += [(0x01, _DC_CHROMA), (0x11, _AC_CHROMA)]
-    for tc_th, (bits, values) in tables:
-        seg = bytes([tc_th]) + bytes(bits) + bytes(values)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
+    out, planes, qs, comps = _encode_front(
+        pixels, quality, subsample, b"\xff\xc0",
+        ((0x00, _DC_LUMA), (0x10, _AC_LUMA),
+         (0x01, _DC_CHROMA), (0x11, _AC_CHROMA)),
+    )
+    gray = len(planes) == 1
     if restart_interval:
         out += b"\xff\xdd" + struct.pack(">HH", 4, restart_interval)
     # SOS
-    sos = bytes([ncomp])
+    sos = bytes([len(comps)])
     for cid, _, _ in comps:
         td_ta = 0x00 if cid == 1 else 0x11
         sos += bytes([cid, td_ta])
     sos += b"\x00\x3f\x00"
     out += b"\xff\xda" + struct.pack(">H", 2 + len(sos)) + sos
 
-    # planes
-    if gray:
-        planes = [arr.astype(np.float64)]
-    else:
-        ycc = _rgb_to_ycbcr(arr)
-        y = ycc[..., 0]
-        cb, cr = ycc[..., 1], ycc[..., 2]
-        if subsample:
-            ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
-            cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-            cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-            cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-            cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        planes = [y, cb, cr]
-
     dc_l = _build_codes(*_DC_LUMA)
     ac_l = _build_codes(*_AC_LUMA)
     dc_c = _build_codes(*_DC_CHROMA)
     ac_c = _build_codes(*_AC_CHROMA)
-    qs = [q_luma] + [q_chroma] * (0 if gray else 2)
     dcs = [dc_l] + [dc_c] * (0 if gray else 2)
     acs = [ac_l] + [ac_c] * (0 if gray else 2)
     blockses = [_block_split(p) for p in planes]
@@ -561,16 +586,7 @@ def _decode_jpeg(data: bytes):
                 qtables[tq] = table.reshape(8, 8)
                 sp += n
         elif marker == 0xC4:  # DHT
-            sp = 0
-            while sp + 17 <= len(seg):
-                tc_th = seg[sp]
-                bits = list(seg[sp + 1 : sp + 17])
-                n = sum(bits)
-                values = list(seg[sp + 17 : sp + 17 + n])
-                if len(values) < n:
-                    raise ValueError("truncated DHT")
-                htables[tc_th] = _build_fast_table(bits, values)
-                sp += 17 + n
+            _read_dht(seg, htables)
         elif marker in (0xC0, 0xC1, 0xC2):  # SOF0/1 baseline, SOF2 prog
             if seg[0] != 8:
                 raise ValueError("only 8-bit precision supported")
@@ -605,24 +621,40 @@ def _decode_jpeg(data: bytes):
                 return _decode_progressive(
                     data, pos, frame, qtables, htables, restart_interval,
                 )
-            ns = seg[0]
-            scan_map = []
-            for i in range(ns):
-                cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
-                scan_map.append((cs, tdta >> 4, tdta & 0x0F))
             return _decode_scan(
-                data, pos + 2 + seglen, frame, scan_map,
+                data, pos + 2 + seglen, frame, list(_scan_components(seg)),
                 qtables, htables, restart_interval,
             )
         pos += 2 + seglen
     raise ValueError("no SOS marker (truncated JPEG)")
 
 
-def _decode_scan(data, pos, frame, scan_map, qtables, htables,
-                 restart_interval):
+def _read_dht(seg: bytes, htables: dict) -> None:
+    """DHT segment → ``htables[class << 4 | id]``, one fast lookup table
+    per Huffman table it holds."""
+    sp = 0
+    while sp + 17 <= len(seg):
+        tc_th = seg[sp]
+        bits = list(seg[sp + 1 : sp + 17])
+        n = sum(bits)
+        values = list(seg[sp + 17 : sp + 17 + n])
+        if len(values) < n:
+            raise ValueError("truncated DHT")
+        htables[tc_th] = _build_fast_table(bits, values)
+        sp += 17 + n
+
+
+def _scan_components(seg: bytes) -> Iterator[tuple[int, int, int]]:
+    """SOS segment → (component id, DC table, AC table) per component,
+    read as they are consumed."""
+    for i in range(seg[0]):
+        yield seg[1 + 2 * i], seg[2 + 2 * i] >> 4, seg[2 + 2 * i] & 0x0F
+
+
+def _mcu_grid(frame, entropy_len: int):
+    """Frame → (components, max h and v sampling, MCU rows, MCU columns),
+    checked against the ``entropy_len`` bytes that follow the header."""
     h, w, comps = frame
-    if len(scan_map) != len(comps):
-        raise ValueError("scan component count != frame component count")
     if len(comps) == 1:
         # T.81 A.2.2/B.2.3: a one-component scan is NON-interleaved —
         # plain ceil(w/8) x ceil(h/8) block raster regardless of the
@@ -638,8 +670,17 @@ def _decode_scan(data, pos, frame, scan_map, qtables, htables,
     # allocation sanity: every MCU costs ≥1 entropy bit, so a huge SOF
     # with a tiny payload must fail BEFORE the coefficient store
     # allocates (crafted-bomb guard, not a format rule)
-    if mcus_x * mcus_y > (len(data) - pos) * 8 + 64:
+    if mcus_x * mcus_y > entropy_len * 8 + 64:
         raise ValueError("frame dimensions exceed the entropy data")
+    return comps, max_h, max_v, mcus_y, mcus_x
+
+
+def _decode_scan(data, pos, frame, scan_map, qtables, htables,
+                 restart_interval):
+    h, w, comps = frame
+    if len(scan_map) != len(comps):
+        raise ValueError("scan component count != frame component count")
+    comps, max_h, max_v, mcus_y, mcus_x = _mcu_grid(frame, len(data) - pos)
     comp_info = []
     for cid, hs, vs, tq in comps:
         sm = next((s for s in scan_map if s[0] == cid), None)
@@ -746,21 +787,8 @@ def _decode_progressive(data, pos, frame, qtables, htables,
     """Drive the remaining marker stream of a progressive JPEG: decode
     every scan into persistent per-component coefficient grids, then
     reconstruct once at EOI."""
-    h, w, comps = frame
-    if len(comps) == 1:  # same T.81 single-component normalization as
-        cid, _, _, tq = comps[0]  # the baseline path
-        comps = [(cid, 1, 1, tq)]
-    max_h = max(c[1] for c in comps)
-    max_v = max(c[2] for c in comps)
-    mcus_x = -(-w // (8 * max_h))
-    mcus_y = -(-h // (8 * max_v))
-    if mcus_x * mcus_y > 1_000_000:
-        raise ValueError("image too large for the pure-python decoder")
-    # allocation sanity: every MCU costs ≥1 entropy bit, so a huge SOF
-    # with a tiny payload must fail BEFORE the coefficient store
-    # allocates (crafted-bomb guard, not a format rule)
-    if mcus_x * mcus_y > (len(data) - pos) * 8 + 64:
-        raise ValueError("frame dimensions exceed the entropy data")
+    h, w, _ = frame
+    comps, max_h, max_v, mcus_y, mcus_x = _mcu_grid(frame, len(data) - pos)
     store = []
     for cid, hs, vs, tq in comps:
         rows, cols = mcus_y * vs, mcus_x * hs
@@ -797,29 +825,18 @@ def _decode_progressive(data, pos, frame, qtables, htables,
             raise ValueError("marker segment overruns data")
         seg = data[pos + 4 : pos + 2 + seglen]
         if marker == 0xC4:  # DHT between scans
-            sp = 0
-            while sp + 17 <= len(seg):
-                tc_th = seg[sp]
-                bits = list(seg[sp + 1 : sp + 17])
-                cnt = sum(bits)
-                values = list(seg[sp + 17 : sp + 17 + cnt])
-                if len(values) < cnt:
-                    raise ValueError("truncated DHT")
-                htables[tc_th] = _build_fast_table(bits, values)
-                sp += 17 + cnt
+            _read_dht(seg, htables)
         elif marker == 0xDD:
             (restart_interval,) = struct.unpack_from(">H", seg, 0)
         elif marker == 0xDA:
-            ns = seg[0]
             scan_comps = []
-            for i in range(ns):
-                cs, tdta = seg[1 + 2 * i], seg[2 + 2 * i]
+            for cs, td, ta in _scan_components(seg):
                 comp = next((c for c in store if c["cid"] == cs), None)
                 if comp is None:
                     raise ValueError(f"scan references unknown component {cs}")
-                scan_comps.append((comp, tdta >> 4, tdta & 0x0F))
-            ss, se = seg[1 + 2 * ns], seg[2 + 2 * ns]
-            ahal = seg[3 + 2 * ns]
+                scan_comps.append((comp, td, ta))
+            ns = len(scan_comps)
+            ss, se, ahal = seg[1 + 2 * ns], seg[2 + 2 * ns], seg[3 + 2 * ns]
             ah, al = ahal >> 4, ahal & 0x0F
             if ss > se or se > 63:
                 raise ValueError("invalid spectral selection band")
@@ -1038,21 +1055,6 @@ _AC_PROG = (
 )
 
 
-def _prog_planes(arr: np.ndarray, gray: bool, subsample: bool):
-    if gray:
-        return [arr.astype(np.float64)]
-    h, w = arr.shape[:2]
-    ycc = _rgb_to_ycbcr(arr)
-    y, cb, cr = ycc[..., 0], ycc[..., 1], ycc[..., 2]
-    if subsample:
-        ph, pw = -(-h // 2) * 2, -(-w // 2) * 2
-        cb = np.pad(cb, ((0, ph - h), (0, pw - w)), mode="edge")
-        cr = np.pad(cr, ((0, ph - h), (0, pw - w)), mode="edge")
-        cb = cb.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-        cr = cr.reshape(ph // 2, 2, pw // 2, 2).mean(axis=(1, 3))
-    return [y, cb, cr]
-
-
 def _zz_grid(plane: np.ndarray, q: np.ndarray):
     """Plane → (grid[nby][nbx] of 64-int zigzag lists, nby, nbx)."""
     blocks, nby, nbx = _block_split(plane)
@@ -1110,14 +1112,7 @@ def _emit_ac_first(writer, coef_iter, ss, se, al, ac_codes):
             if v == 0:
                 run += 1
                 continue
-            while run > 15:
-                c, ln = ac_codes[0xF0]
-                writer.write(c, ln)
-                run -= 16
-            t, code = _magnitude(v)
-            c, ln = ac_codes[(run << 4) | t]
-            writer.write(c, ln)
-            writer.write(code, t)
+            _write_ac(writer, ac_codes, run, v)
             run = 0
         if last < se - ss:
             eobrun += 1
@@ -1214,42 +1209,14 @@ def encode_jpeg_progressive(
     at Al=1 and appends DC + AC refinement scans (Ah=1 → Al=0), so the
     decoder's successive-approximation paths are exercised end-to-end.
     """
-    arr = np.asarray(pixels, dtype=np.uint8)
-    gray = arr.ndim == 2
-    if not gray and (arr.ndim != 3 or arr.shape[2] != 3):
-        raise ValueError("encode_jpeg_progressive expects HxWx3 RGB or gray")
-    h, w = arr.shape[:2]
-    if h == 0 or w == 0:
-        raise ValueError("degenerate image dimensions")
-    q_luma, q_chroma = _scaled_tables(quality)
+    out, planes, qs, comps = _encode_front(
+        pixels, quality, subsample, b"\xff\xc2",
+        ((0x00, _DC_LUMA), (0x10, _AC_PROG), (0x01, _DC_CHROMA)),
+    )
+    gray = len(planes) == 1
+    ncomp = len(comps)
     al = 1 if successive else 0
 
-    out = bytearray(b"\xff\xd8")
-    out += b"\xff\xe0" + struct.pack(">H", 16) + b"JFIF\x00\x01\x01\x00" \
-        + struct.pack(">HH", 1, 1) + b"\x00\x00"
-    zz_l = q_luma.flatten()[_ZIGZAG].astype(np.uint8).tobytes()
-    out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x00" + zz_l
-    if not gray:
-        zz_c = q_chroma.flatten()[_ZIGZAG].astype(np.uint8).tobytes()
-        out += b"\xff\xdb" + struct.pack(">H", 2 + 65) + b"\x01" + zz_c
-    ncomp = 1 if gray else 3
-    sof = struct.pack(">BHHB", 8, h, w, ncomp)
-    hs = 2 if (subsample and not gray) else 1
-    comps = [(1, (hs << 4) | hs, 0)]
-    if not gray:
-        comps += [(2, 0x11, 1), (3, 0x11, 1)]
-    for cid, samp, tq in comps:
-        sof += struct.pack(">BBB", cid, samp, tq)
-    out += b"\xff\xc2" + struct.pack(">H", 2 + len(sof)) + sof
-    tables = [(0x00, _DC_LUMA), (0x10, _AC_PROG)]
-    if not gray:
-        tables += [(0x01, _DC_CHROMA)]
-    for tc_th, (bits, values) in tables:
-        seg = bytes([tc_th]) + bytes(bits) + bytes(values)
-        out += b"\xff\xc4" + struct.pack(">H", 2 + len(seg)) + seg
-
-    planes = _prog_planes(arr, gray, subsample)
-    qs = [q_luma] + [q_chroma] * (0 if gray else 2)
     grids = [_zz_grid(p, q) for p, q in zip(planes, qs)]
     dc_codes = [_build_codes(*_DC_LUMA)] + \
         [_build_codes(*_DC_CHROMA)] * (0 if gray else 2)
@@ -1281,13 +1248,8 @@ def encode_jpeg_progressive(
 
     def emit_dc(writer, ci, coef, preds):
         v = coef[0] >> al
-        diff = v - preds[ci]
+        _write_dc(writer, dc_codes[ci], v - preds[ci])
         preds[ci] = v
-        t, code = _magnitude(diff) if diff else (0, 0)
-        c, ln = dc_codes[ci][t]
-        writer.write(c, ln)
-        if t:
-            writer.write(code, t)
 
     if dc_separate:
         # one non-interleaved DC scan per component: T.81 block order

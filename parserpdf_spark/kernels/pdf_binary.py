@@ -88,6 +88,8 @@ from __future__ import annotations
 import re
 import zlib
 
+from parserpdf_spark.kernels.png import unfilter_row
+
 _BT_RE = re.compile(rb"BT(.*?)ET", re.S)
 # one operator step: operands (strings/hex/arrays/names/numbers) then an
 # operator name.  <hex> must not swallow dict markers (<<)
@@ -96,6 +98,9 @@ _TOKEN_RE = re.compile(
     rb"|\[(?:\((?:[^()\\]|\\.)*\)|<(?![<])[0-9A-Fa-f\s]*>|[^\]\\()]|\\.)*\]"
     rb"|/[A-Za-z0-9_.+-]+|-?\.?\d+(?:\.\d+)?|[A-Za-z*'\"]+"
 )
+# first bytes of a _TOKEN_RE operand token (string, hex string, array,
+# name, number); any other token is an operator
+_OPERAND_START = b"([/<-.0123456789"
 # items inside a TJ array: strings, hex strings, kerning numbers
 _TJ_ITEM_RE = re.compile(
     rb"\((?:[^()\\]|\\.)*\)|<(?![<])[0-9A-Fa-f\s]*>|-?\.?\d+(?:\.\d+)?"
@@ -355,28 +360,7 @@ def _png_unpredict(data: bytes, predictor: int, columns: int,
         if len(row) < row_len:
             raise ValueError("PNG predictor: truncated row")
         pos += 1 + row_len
-        if tag == 0:
-            pass
-        elif tag == 1:  # Sub
-            for i in range(bpp, row_len):
-                row[i] = (row[i] + row[i - bpp]) & 0xFF
-        elif tag == 2:  # Up
-            for i in range(row_len):
-                row[i] = (row[i] + prev[i]) & 0xFF
-        elif tag == 3:  # Average
-            for i in range(row_len):
-                left = row[i - bpp] if i >= bpp else 0
-                row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
-        elif tag == 4:  # Paeth
-            for i in range(row_len):
-                a = row[i - bpp] if i >= bpp else 0
-                b = prev[i]
-                c = prev[i - bpp] if i >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[i] = (row[i] + pred) & 0xFF
-        else:
+        if not unfilter_row(tag, row, prev, bpp):
             raise ValueError(f"PNG predictor: unknown row tag {tag}")
         out += row
         prev = row
@@ -1389,11 +1373,7 @@ def _blocks_from_stream(
         stack: list[bytes] = []
         for tok in _TOKEN_RE.finditer(bt.group(1)):
             t = tok.group(0)
-            if (
-                t.startswith(b"(") or t.startswith(b"[") or t.startswith(b"/")
-                or t.startswith(b"<") or t[:1].isdigit() or t.startswith(b"-")
-                or t.startswith(b".")
-            ):
+            if t[0] in _OPERAND_START:
                 stack.append(t)
                 continue
             op = t
@@ -1667,11 +1647,7 @@ def _image_blocks(
 
     for tok in _TOKEN_RE.finditer(content):
         t = tok.group(0)
-        if (
-            t.startswith(b"(") or t.startswith(b"[") or t.startswith(b"/")
-            or t.startswith(b"<") or t[:1].isdigit() or t.startswith(b"-")
-            or t.startswith(b".")
-        ):
+        if t[0] in _OPERAND_START:
             stack.append(t)
             continue
         op = t
@@ -1719,12 +1695,17 @@ def _image_blocks(
     return blocks, used, inline_media, forms
 
 
-def _image_payload(objects: dict[int, bytes], num: int) -> bytes:
-    """Raw image bytes via the one shared stream reader: DCTDecode
-    payloads pass through as the JPEG itself, other filters decode, and
-    indirect /Length refs resolve (a duplicated reader here once
-    truncated such payloads to the object number)."""
-    return _stream_payload(objects[num], objects) or b""
+def _media_rows(objects: dict[int, bytes],
+                used: list[tuple[str, int]]) -> list[dict]:
+    """One media row per placed image XObject (media_ref, object number):
+    its raw bytes via the one shared stream reader (DCTDecode payloads
+    pass through as the JPEG itself, other filters decode, and indirect
+    /Length refs resolve; a duplicated reader here once truncated such
+    payloads to the object number), plus :func:`_image_meta`."""
+    return [{"media_ref": ref,
+             "payload": _stream_payload(objects[num], objects) or b"",
+             **_image_meta(objects, num)}
+            for ref, num in used]
 
 
 def _image_meta(objects: dict[int, bytes], num: int) -> dict:
@@ -1902,10 +1883,7 @@ def pdf_to_blocks_and_media(
         )
         blocks.extend(img_blocks)
         media.extend(inline_media)
-        for ref, obj_num in used:
-            media.append({"media_ref": ref,
-                          "payload": _image_payload(objects, obj_num),
-                          **_image_meta(objects, obj_num)})
+        media.extend(_media_rows(objects, used))
 
         # form XObjects: their content contributes text/images at the
         # Do-time CTM — dropping it would be silent text loss.  Only
@@ -1958,10 +1936,7 @@ def pdf_to_blocks_and_media(
             blocks.extend(f_text)
             blocks.extend(f_imgs)
             media.extend(f_inline_media)
-            for ref, obj_num in f_used:
-                media.append({"media_ref": ref,
-                              "payload": _image_payload(objects, obj_num),
-                              **_image_meta(objects, obj_num)})
+            media.extend(_media_rows(objects, f_used))
             n_text_blocks += len(f_text)
         n_text_blocks += len(text_blocks)
         if rotate:

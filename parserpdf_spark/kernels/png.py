@@ -62,44 +62,49 @@ def encode_png(pixels) -> bytes:
             + _chunk(b"IEND", b""))
 
 
+def unfilter_row(tag: int, row: bytearray, prev: bytearray, bpp: int) -> bool:
+    """Reverse one PNG row filter (None/Sub/Up/Average/Paeth) in place:
+    ``prev`` is the reconstructed row above (zeros for the first) and
+    ``bpp`` the bytes per pixel.  False for an unknown filter tag; each
+    caller words its own error."""
+    if tag == 1:  # Sub
+        for i in range(bpp, len(row)):
+            row[i] = (row[i] + row[i - bpp]) & 0xFF
+    elif tag == 2:  # Up
+        for i in range(len(row)):
+            row[i] = (row[i] + prev[i]) & 0xFF
+    elif tag == 3:  # Average
+        for i in range(len(row)):
+            left = row[i - bpp] if i >= bpp else 0
+            row[i] = (row[i] + ((left + prev[i]) >> 1)) & 0xFF
+    elif tag == 4:  # Paeth
+        for i in range(len(row)):
+            a = row[i - bpp] if i >= bpp else 0
+            b = prev[i]
+            c = prev[i - bpp] if i >= bpp else 0
+            p = a + b - c
+            pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
+            pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
+            row[i] = (row[i] + pred) & 0xFF
+    elif tag:
+        return False
+    return True
+
+
 def _unfilter(data: bytes, h: int, w: int, bpp: int) -> np.ndarray:
     """Reverse per-row filters → (h, w*bpp) uint8 samples."""
     stride = w * bpp
     if len(data) < h * (stride + 1):
         raise ValueError("truncated PNG image data")
-    out = np.zeros((h, stride), dtype=np.uint8)
-    pos = 0
-    prev = np.zeros(stride, dtype=np.uint8)
-    for y in range(h):
-        ftype = data[pos]
-        row = np.frombuffer(data, dtype=np.uint8, count=stride,
-                            offset=pos + 1).copy()
-        pos += stride + 1
-        if ftype == 0:
-            pass
-        elif ftype == 1:  # Sub
-            for x in range(bpp, stride):
-                row[x] = (int(row[x]) + int(row[x - bpp])) & 0xFF
-        elif ftype == 2:  # Up
-            row = (row.astype(np.int32) + prev) .astype(np.uint8)
-        elif ftype == 3:  # Average
-            for x in range(stride):
-                left = int(row[x - bpp]) if x >= bpp else 0
-                row[x] = (int(row[x]) + ((left + int(prev[x])) >> 1)) & 0xFF
-        elif ftype == 4:  # Paeth
-            for x in range(stride):
-                a = int(row[x - bpp]) if x >= bpp else 0
-                b = int(prev[x])
-                c = int(prev[x - bpp]) if x >= bpp else 0
-                p = a + b - c
-                pa, pb, pc = abs(p - a), abs(p - b), abs(p - c)
-                pred = a if (pa <= pb and pa <= pc) else (b if pb <= pc else c)
-                row[x] = (int(row[x]) + pred) & 0xFF
-        else:
-            raise ValueError(f"unknown PNG row filter {ftype}")
-        out[y] = row
-        prev = out[y]
-    return out
+    out = bytearray()
+    prev = bytearray(stride)
+    for pos in range(0, h * (stride + 1), stride + 1):
+        row = bytearray(data[pos + 1 : pos + 1 + stride])
+        if not unfilter_row(data[pos], row, prev, bpp):
+            raise ValueError(f"unknown PNG row filter {data[pos]}")
+        out += row
+        prev = row
+    return np.frombuffer(out, dtype=np.uint8).reshape(h, stride)
 
 
 def decode_png(payload: bytes):

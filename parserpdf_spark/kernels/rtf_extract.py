@@ -23,6 +23,8 @@ from __future__ import annotations
 import re
 from html import escape
 
+from parserpdf_spark.kernels.doc_extract import table_html
+
 _SKIP_DESTINATIONS = {
     "fonttbl", "colortbl", "stylesheet", "info", "pict", "object",
     "header", "footer", "headerl", "headerr", "headerf", "footerl",
@@ -48,12 +50,12 @@ def rtf_to_html(data: bytes) -> str:
     def flush_table() -> None:
         nonlocal rows
         if rows:
-            out_parts.append("<table>")
-            for row in rows:
-                out_parts.append(
-                    "<tr>" + "".join(f"<td>{c}</td>" for c in row) + "</tr>")
-            out_parts.append("</table>")
+            out_parts.append(table_html(rows))
             rows = []
+
+    def close_cell() -> None:
+        cells.append(escape("".join(para).strip()))
+        para.clear()
 
     def flush_para() -> None:
         nonlocal heading
@@ -162,12 +164,10 @@ def rtf_to_html(data: bytes) -> str:
             elif word == "trowd":
                 in_table_row = True
             elif word == "cell":
-                cells.append(escape("".join(para).strip()))
-                para.clear()
+                close_cell()
             elif word == "row":
-                if para and "".join(para).strip():
-                    cells.append(escape("".join(para).strip()))
-                    para.clear()
+                if "".join(para).strip():
+                    close_cell()
                 rows.append(cells)
                 cells = []
                 in_table_row = False
@@ -199,8 +199,7 @@ def rtf_to_html(data: bytes) -> str:
     # a document truncated mid-row (or written without a trailing \row)
     # must not lose the collected cells
     if in_table_row and "".join(para).strip():
-        cells.append(escape("".join(para).strip()))
-        para.clear()
+        close_cell()
     if cells:
         rows.append(cells)
         cells = []

@@ -34,19 +34,7 @@ def ann_bruteforce_topk(embeddings: DataFrame, queries: DataFrame) -> DataFrame:
             "cosine", cosine_expr(F.col("query_id_v"), F.col("neighbor_id_v"))
         )
     )
-    w = W.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= 5)
-        .select(
-            "query_id",
-            "neighbor_id",
-            F.round(F.col("cosine"), 6).alias("cosine"),
-            "rank",
-        )
-    )
+    return _top_k(scored, 5)
 
 
 def ivf_centroids(embeddings: DataFrame, every: int = 100) -> DataFrame:
@@ -138,6 +126,13 @@ def ann_ivf_topk(
         .groupBy("query_id", "neighbor_id")
         .agg(F.first("cosine").alias("cosine"))
     )
+    return _top_k(scored, k)
+
+
+def _top_k(scored: DataFrame, k: int) -> DataFrame:
+    """(query_id, neighbor_id, cosine, rank): the ``k`` best-scored
+    neighbors per query, ties broken by neighbor_id (a total order),
+    cosine rounded to 6 places."""
     w = W.partitionBy("query_id").orderBy(
         F.col("cosine").desc(), F.col("neighbor_id").asc()
     )

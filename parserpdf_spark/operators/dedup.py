@@ -485,8 +485,10 @@ def cosine_expr(a, b):
         F.lit(0.0),
         lambda acc, v: acc + v,
     )
-    na = F.sqrt(F.aggregate(a, F.lit(0.0), lambda acc, v: acc + v * v))
-    nb = F.sqrt(F.aggregate(b, F.lit(0.0), lambda acc, v: acc + v * v))
+    na, nb = (
+        F.sqrt(F.aggregate(x, F.lit(0.0), lambda acc, v: acc + v * v))
+        for x in (a, b)
+    )
     denom = na * nb
     return F.when(denom > 0, dot / denom)
 
@@ -796,12 +798,7 @@ def connected_components_star(
         selfnodes = dropped.select(
             F.explode(F.array("doc_a", "doc_b")).alias("node")
         ).distinct()
-        singletons = selfnodes.join(
-            labels, selfnodes["node"] == labels["doc_id"], "left_anti"
-        ).select(
-            F.col("node").alias("doc_id"), F.col("node").alias("cluster_id")
-        )
-        return labels.unionByName(singletons)
+        return _with_singletons(labels, selfnodes)
     all_nodes = (
         pairs.select(F.col("doc_a").alias("node"))
         .unionByName(pairs.select(F.col("doc_b").alias("node")))
@@ -873,8 +870,14 @@ def connected_components_star(
     ).unionByName(
         roots.select("doc_id", F.col("doc_id").alias("cluster_id"))
     )
-    singletons = all_nodes.join(
-        labels, all_nodes["node"] == labels["doc_id"], "left_anti"
+    return _with_singletons(labels, all_nodes)
+
+
+def _with_singletons(labels: DataFrame, nodes: DataFrame) -> DataFrame:
+    """``labels`` (doc_id, cluster_id) plus a self-label for every
+    ``nodes.node`` they do not hold."""
+    singletons = nodes.join(
+        labels, nodes["node"] == labels["doc_id"], "left_anti"
     ).select(F.col("node").alias("doc_id"), F.col("node").alias("cluster_id"))
     return labels.unionByName(singletons)
 

@@ -31,29 +31,12 @@ import pyarrow as pa
 from pyspark.sql import DataFrame, functions as F
 
 from parserpdf_spark.kernels.extract import extract_document_safe
-from parserpdf_spark.schema import COMBINED_DDL
-
-_METRICS_KIND = "_metrics"
+from parserpdf_spark.schema import COMBINED_DDL, COMBINED_SCHEMA, METRICS_KIND
 
 _SPAN_COLS = ["doc_id", "kind", "text", "media_ref", "offset"]
 _METRIC_COLS = [
     "doc_id", "status", "error", "n_input_spans", "n_output_spans", "n_images",
 ]
-
-_OUT_SCHEMA = pa.schema(
-    [
-        ("doc_id", pa.string()),
-        ("kind", pa.string()),
-        ("text", pa.string()),
-        ("media_ref", pa.string()),
-        ("offset", pa.int32()),
-        ("status", pa.string()),
-        ("error", pa.string()),
-        ("n_input_spans", pa.int32()),
-        ("n_output_spans", pa.int32()),
-        ("n_images", pa.int32()),
-    ]
-)
 
 
 def _decode_docs(batch: pa.RecordBatch):
@@ -95,7 +78,7 @@ def _extract_batches_arrow(
     kernels build no per-call state.
     """
     for batch in batches:
-        cols: dict[str, list] = {name: [] for name in _OUT_SCHEMA.names}
+        cols: dict[str, list] = {name: [] for name in COMBINED_SCHEMA.names}
         n_span_rows = 0
         met: dict[str, list] = {c: [] for c in _METRIC_COLS}
         for doc_id, spans in _decode_docs(batch):
@@ -119,14 +102,14 @@ def _extract_batches_arrow(
         cols["n_output_spans"] = [None] * n_span_rows + met["n_output_spans"]
         cols["n_images"] = [None] * n_span_rows + met["n_images"]
         cols["doc_id"].extend(met["doc_id"])
-        cols["kind"].extend([_METRICS_KIND] * n_docs)
+        cols["kind"].extend([METRICS_KIND] * n_docs)
         cols["text"].extend([None] * n_docs)
         cols["media_ref"].extend([None] * n_docs)
         cols["offset"].extend([None] * n_docs)
 
         yield pa.RecordBatch.from_arrays(
-            [pa.array(cols[f.name], f.type) for f in _OUT_SCHEMA],
-            schema=_OUT_SCHEMA,
+            [pa.array(cols[f.name], f.type) for f in COMBINED_SCHEMA],
+            schema=COMBINED_SCHEMA,
         )
 
 
@@ -141,8 +124,8 @@ def extract_combined(docs: DataFrame) -> DataFrame:
 
 def split_combined(combined: DataFrame) -> tuple[DataFrame, DataFrame]:
     """combined → (extracted spans, metrics) — two pushdown-able filters."""
-    extracted = combined.filter(F.col("kind") != _METRICS_KIND).select(*_SPAN_COLS)
-    metrics = combined.filter(F.col("kind") == _METRICS_KIND).select(*_METRIC_COLS)
+    extracted = combined.filter(F.col("kind") != METRICS_KIND).select(*_SPAN_COLS)
+    metrics = combined.filter(F.col("kind") == METRICS_KIND).select(*_METRIC_COLS)
     return extracted, metrics
 
 

@@ -41,7 +41,7 @@ import uuid
 from pyspark.sql import DataFrame, Observation, SparkSession, functions as F
 
 from parserpdf_spark.operators.extract import extract_combined, split_combined
-from parserpdf_spark.schema import COMBINED_DDL, DOC_STATUSES
+from parserpdf_spark.schema import COMBINED_DDL, DOC_STATUSES, METRICS_KIND
 
 MANIFEST_DIR = "_manifest"
 CHUNKS_DIR = "chunks"
@@ -140,8 +140,8 @@ def run_checkpointed_extraction(
             obs = Observation()
             extract_combined(part).observe(
                 obs,
-                F.count_if(F.col("kind") == "_metrics").alias("n_docs"),
-                F.count_if(F.col("kind") != "_metrics").alias("n_spans"),
+                F.count_if(F.col("kind") == METRICS_KIND).alias("n_docs"),
+                F.count_if(F.col("kind") != METRICS_KIND).alias("n_spans"),
                 *[F.count_if(F.col("status") == s).alias(s) for s in DOC_STATUSES],
             ).write.mode("overwrite").parquet(chunk_path)
             stats = obs.get

@@ -15,13 +15,31 @@ from typing import Any, Callable, Iterable, Iterator
 import pyarrow as pa
 from pyspark.sql import DataFrame, types as T
 
+# one span of a document, in every docs table's ``spans`` column
+SPANS_DDL = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+
 # Combined extraction output: span rows + one per-doc metrics row
-# (metrics rows have kind = '_metrics'; see operators/extract.py).
-COMBINED_DDL = (
-    "doc_id string, kind string, text string, media_ref string, offset int, "
-    "status string, error string, n_input_spans int, n_output_spans int, "
-    "n_images int"
+# (metrics rows have kind = METRICS_KIND; see operators/extract.py).
+# Declared once as the Arrow schema the executors build batches with;
+# the DDL Spark reads is derived from it (``StructType.fromDDL`` would
+# need a session, which executors do not have).
+COMBINED_SCHEMA = pa.schema([
+    ("doc_id", pa.string()),
+    ("kind", pa.string()),
+    ("text", pa.string()),
+    ("media_ref", pa.string()),
+    ("offset", pa.int32()),
+    ("status", pa.string()),
+    ("error", pa.string()),
+    ("n_input_spans", pa.int32()),
+    ("n_output_spans", pa.int32()),
+    ("n_images", pa.int32()),
+])
+COMBINED_DDL = ", ".join(
+    f"{f.name} {({pa.string(): 'string', pa.int32(): 'int'})[f.type]}"
+    for f in COMBINED_SCHEMA
 )
+METRICS_KIND = "_metrics"
 
 # every status kernels.extract.extract_document_safe gives a document
 DOC_STATUSES = ("ok", "error")

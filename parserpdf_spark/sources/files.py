@@ -59,6 +59,7 @@ corpora should cap upload size at the edge.
 
 from __future__ import annotations
 
+import json
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -67,17 +68,24 @@ from parserpdf_spark.kernels.docx_extract import docx_to_html
 from parserpdf_spark.kernels.epub_extract import epub_to_html
 from parserpdf_spark.kernels.odt_extract import odt_to_html
 from parserpdf_spark.kernels.rtf_extract import rtf_to_html
-from parserpdf_spark.schema import map_rows
+from parserpdf_spark.schema import SPANS_DDL, map_rows
 
 FILES_DOCS_DDL = (
     "doc_id string, src_path string, ingest_status string, "
-    "ingest_error string, spans array<struct<"
-    "kind:string,text:string,media_ref:string,offset:int>>"
+    f"ingest_error string, spans {SPANS_DDL}"
 )
 
 
 def _span(text: str, kind: str = "html") -> list[dict[str, Any]]:
     return [{"kind": kind, "text": text, "media_ref": None, "offset": 0}]
+
+
+def _block_spans(blocks: list[dict]) -> list[dict[str, Any]]:
+    """One pdf_block span per layout block, in block order: the block as
+    JSON, with its media_ref."""
+    return [{"kind": "pdf_block", "text": json.dumps(b),
+             "media_ref": b.get("media_ref"), "offset": i}
+            for i, b in enumerate(blocks)]
 
 
 # suffix → span kind of the files whose UTF-8 text is the span
@@ -147,17 +155,11 @@ def route_file(path: str, content: bytes) -> dict[str, Any]:
         # files to an OCR fleet, and only genuine feature gaps to the
         # external pre-chunker (the reference's force_ocr knob,
         # converters/extraction_converter.py:111-114, is the same split)
-        import json
-
         from parserpdf_spark.kernels.pdf_binary import pdf_to_blocks
 
         try:
             blocks = pdf_to_blocks(bytes(content))
-            row["spans"] = [
-                {"kind": "pdf_block", "text": json.dumps(b),
-                 "media_ref": b.get("media_ref"), "offset": i}
-                for i, b in enumerate(blocks)
-            ]
+            row["spans"] = _block_spans(blocks)
         except ValueError as exc:
             category = getattr(exc, "category", None)
             if category in ("encrypted", "needs_ocr"):
@@ -207,8 +209,6 @@ def ocr_route_file(path: str, content: bytes) -> dict[str, Any]:
     row = route_file(path, content)
     if row["ingest_status"] != "needs_ocr":
         return row
-    import json
-
     from parserpdf_spark.kernels.jpeg import decode_jpeg_baseline
     from parserpdf_spark.kernels.ocr import GLYPH_H, ocr_page_blocks
     from parserpdf_spark.kernels.pdf_binary import pdf_to_blocks_and_media
@@ -300,11 +300,7 @@ def ocr_route_file(path: str, content: bytes) -> dict[str, Any]:
             return row
         row["ingest_status"] = "ok"
         row["ingest_error"] = None
-        row["spans"] = [
-            {"kind": "pdf_block", "text": json.dumps(b),
-             "media_ref": b.get("media_ref"), "offset": i}
-            for i, b in enumerate(out_blocks)
-        ]
+        row["spans"] = _block_spans(out_blocks)
     except ValueError as exc:
         row["ingest_status"] = "error"
         row["ingest_error"] = f"ocr tier: {exc}"

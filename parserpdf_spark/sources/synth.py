@@ -32,7 +32,7 @@ import json
 import random
 from html import escape
 
-import pandas as pd
+from parserpdf_spark.schema import SPANS_DDL, map_rows
 
 HEAD_WORDS = 3
 PARA_WORDS = 12
@@ -190,23 +190,7 @@ def synth_doc(numeric_id: int, text: str) -> list[dict]:
     return synth_mixed_doc(doc_id, text, numeric_id)
 
 
-def synth_docs_pdf(documents: pd.DataFrame) -> pd.DataFrame:
-    """pandas documents(doc_id:int64, text) → docs(doc_id:str, spans)."""
-    return pd.DataFrame(
-        {
-            "doc_id": documents["doc_id"].astype(str),
-            "spans": [
-                synth_doc(int(i), t)
-                for i, t in zip(documents["doc_id"], documents["text"])
-            ],
-        }
-    )
-
-
-DOCS_DDL = (
-    "doc_id string, spans array<struct<"
-    "kind:string,text:string,media_ref:string,offset:int>>"
-)
+DOCS_DDL = f"doc_id string, spans {SPANS_DDL}"
 
 
 def synth_docs_df(
@@ -228,40 +212,31 @@ def synth_docs_df(
     The scan is repartitioned to ``partitions`` (default: the session's
     parallelism): the sandbox table is one tiny parquet split, whereas a
     real 10^12-doc table scans as millions of splits — without this the
-    single mapInPandas task would serialize the whole corpus.
+    single Python task would serialize the whole corpus.
     """
+    from pyspark.sql import functions as F
+
     giant = {str(g) for g in (giant_doc_ids or [])}
     n_giant = int(giant_spans)
 
-    def gen(it):
-        for pdf in it:
-            out = synth_docs_pdf(pdf[["doc_id", "text"]])
-            if "rep" in pdf.columns:
-                reps = pdf["rep"].astype(int).to_numpy()
-                out["doc_id"] = [
-                    d if r == 0 else f"{d}_r{r}"
-                    for d, r in zip(out["doc_id"], reps)
-                ]
-            if giant:
-                mask = out["doc_id"].isin(giant)
-                if mask.any():
-                    out.loc[mask, "spans"] = out.loc[mask].apply(
-                        lambda r: [
-                            _span("html",
-                                  f"<p>giant {r.doc_id} chunk {j} filler text</p>",
-                                  None, j)
-                            for j in range(n_giant)
-                        ],
-                        axis=1,
-                    )
-            yield out
+    def row(numeric_id, text, rep):
+        doc_id = f"{numeric_id}_r{rep}" if rep else str(numeric_id)
+        if doc_id in giant:
+            spans = [
+                _span("html", f"<p>giant {doc_id} chunk {j} filler text</p>",
+                      None, j)
+                for j in range(n_giant)
+            ]
+        else:
+            spans = synth_doc(int(numeric_id), text)
+        return ({"doc_id": doc_id, "spans": spans},)
 
     docs = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "text")
     if replicate > 1:
-        from pyspark.sql import functions as F
-
-        docs = docs.withColumn(
-            "rep", F.explode(F.sequence(F.lit(0), F.lit(int(replicate) - 1)))
-        )
+        rep = F.explode(F.sequence(F.lit(0), F.lit(int(replicate) - 1)))
+    else:
+        rep = F.lit(0)
+    docs = docs.withColumn("rep", rep)
     n_parts = partitions or spark.sparkContext.defaultParallelism
-    return docs.repartition(n_parts).mapInPandas(gen, schema=DOCS_DDL)
+    return map_rows(docs.repartition(n_parts), ["doc_id", "text", "rep"], row,
+                    DOCS_DDL)

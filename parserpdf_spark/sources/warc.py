@@ -31,13 +31,12 @@ from typing import Any, Iterator
 
 from pyspark.sql import DataFrame
 
-from parserpdf_spark.schema import map_rows
+from parserpdf_spark.schema import SPANS_DDL, map_rows
 
 WARC_DOCS_DDL = (
     "doc_id string, src_path string, record_uri string, "
     "record_type string, content_type string, ingest_status string, "
-    "ingest_error string, spans array<struct<"
-    "kind:string,text:string,media_ref:string,offset:int>>"
+    f"ingest_error string, spans {SPANS_DDL}"
 )
 
 # incremental-gunzip output quantum: bounds the decompressed bytes held

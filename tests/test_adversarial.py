@@ -127,3 +127,47 @@ def test_cached_dedup_udfs_survive_a_session_restart(tmp_path):
     assert [a[:2] for a in first["embedding"]] == [[0, 6], [1, 7]]
     assert second == first
     assert got["cache_hits"] >= 2
+
+
+def test_srp_recall_holds_for_pairs_exactly_at_the_threshold(spark, tmp_path):
+    """The SRP band sizing promises each true pair at exactly the
+    threshold a miss probability of at most ``SRP_TARGET_MISS``.  2000
+    seeded pairs at cosine 0.95 (v = t·u + √(1−t²)·w, w ⟂ u, 64 dims)
+    run through ``embedding_dup_pairs_bucketed``: the share it misses
+    stays within the binomial 99.9% upper bound of that budget."""
+    import math
+
+    import numpy as np
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parserpdf_spark.operators.dedup import (
+        SRP_TARGET_MISS,
+        embedding_dup_pairs_bucketed,
+    )
+
+    t, n_pairs, dim = 0.95, 2000, 64
+    rng = np.random.default_rng(20)
+    u = rng.standard_normal((n_pairs, dim))
+    u /= np.linalg.norm(u, axis=1, keepdims=True)
+    w = rng.standard_normal((n_pairs, dim))
+    w -= (w * u).sum(axis=1, keepdims=True) * u
+    w /= np.linalg.norm(w, axis=1, keepdims=True)
+    v = t * u + math.sqrt(1 - t * t) * w
+    # pair i is (2i, 2i + 1)
+    vecs = np.empty((2 * n_pairs, dim))
+    vecs[0::2], vecs[1::2] = u, v
+    path = str(tmp_path / "emb.parquet")
+    pq.write_table(pa.table({"vec_id": np.arange(2 * n_pairs),
+                             "embedding": list(vecs)}), path)
+
+    found = embedding_dup_pairs_bucketed(spark.read.parquet(path), threshold=t)
+    hits = {(r["id_a"], r["id_b"]) for r in found.collect()}
+    missed = n_pairs - len(hits & {(2 * i, 2 * i + 1) for i in range(n_pairs)})
+
+    def binom_cdf(k):
+        return sum(math.comb(n_pairs, j) * SRP_TARGET_MISS ** j
+                   * (1 - SRP_TARGET_MISS) ** (n_pairs - j) for j in range(k + 1))
+
+    bound = next(k for k in range(n_pairs + 1) if binom_cdf(k) >= 0.999)
+    assert missed <= bound, f"missed {missed}/{n_pairs} pairs at the threshold (bound {bound})"

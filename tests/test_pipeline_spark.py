@@ -13,7 +13,7 @@ from pyspark.sql import functions as F
 from parserpdf_spark.kernels.extract import extract_document_safe
 from parserpdf_spark.operators.extract import extract_docs
 from parserpdf_spark.operators.skew import assemble_spans_unsalted, explode_docs
-from parserpdf_spark.sources.synth import synth_doc, synth_docs_df, synth_docs_pdf
+from parserpdf_spark.sources.synth import synth_doc, synth_docs_df
 
 
 @pytest.fixture(scope="module")
@@ -150,18 +150,24 @@ def test_batch_duplicate_doc_ids_both_processed(spark):
 
 
 def test_synth_matches_pandas_path(spark, sf_small):
-    """synth_docs_df (Spark) ≡ synth_docs_pdf (pandas) — determinism of
-    the synthesizer across both execution paths."""
-    spark_docs = {
+    """synth_docs_df (one Arrow row map) ≡ synth_doc (pure Python) on
+    every document, replicas and giant docs included — the
+    synthesizer is deterministic across both execution paths."""
+    src = pd.read_parquet(f"{sf_small}/documents.parquet")
+    expected = {}
+    for nid, text in zip(src["doc_id"], src["text"]):
+        spans = [[s["kind"], s["text"], s["media_ref"], s["offset"]]
+                 for s in synth_doc(int(nid), text)]
+        expected[str(nid)] = expected[f"{nid}_r1"] = spans
+    giant = str(src["doc_id"].iloc[0]) + "_r1"
+    expected[giant] = [["html", f"<p>giant {giant} chunk {j} filler text</p>", None, j]
+                       for j in range(3)]
+    got = {
         r["doc_id"]: [list(s) for s in r["spans"]]
-        for r in synth_docs_df(spark, sf_small).limit(30).collect()
+        for r in synth_docs_df(spark, sf_small, giant_doc_ids=[giant],
+                               giant_spans=3, replicate=2).collect()
     }
-    src = pd.read_parquet(f"{sf_small}/documents.parquet").head(30)
-    pandas_docs = synth_docs_pdf(src)
-    for did, spans in zip(pandas_docs["doc_id"], pandas_docs["spans"]):
-        if did in spark_docs:
-            expected = [[s["kind"], s["text"], s["media_ref"], s["offset"]] for s in spans]
-            assert spark_docs[did] == expected
+    assert got == expected
 
 
 def test_hll_sketch_within_5pct(spark, sf_med):

@@ -598,3 +598,83 @@ def test_every_engine_option_is_set_by_some_caller():
     assert sorted(set(UNSET_OPTIONS_KEPT) - set(unset)) == []  # set: no exception
     unused = [name for name in unset if name not in UNSET_OPTIONS_KEPT]
     assert unused == [], "options no caller sets:\n" + "\n".join(unused)
+
+
+# engine code written twice on purpose, keyed by a name every copy uses,
+# each with its reason
+DUPLICATES_KEPT = {
+    "_REPO_ROOT": "each job's sys.path/PYTHONPATH bootstrap runs before the "
+                  "package can be imported, so it cannot live in the package",
+}
+
+
+def test_no_engine_code_is_duplicated():
+    """Every statement or expression of at least 30 AST nodes under parserpdf_spark/ occurs once, compared with every
+    identifier renamed to one placeholder and every literal kept;
+    docstrings and type annotations are left out.  A recurring pattern
+    is one helper.  A clone group inside a larger clone is reported only
+    as the larger one; ``DUPLICATES_KEPT`` lists the exceptions."""
+    import ast
+    import collections
+    import pathlib
+
+    clone_nodes = 30
+    pkg = pathlib.Path(__file__).resolve().parents[1] / "parserpdf_spark"
+    bodies = (ast.Module, ast.ClassDef, ast.FunctionDef, ast.AsyncFunctionDef)
+
+    def strip(tree):
+        for node in ast.walk(tree):
+            if isinstance(node, bodies) and ast.get_docstring(node, clean=False) is not None:
+                node.body = node.body[1:] or [ast.Pass()]
+            if isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                node.returns = None
+            elif isinstance(node, ast.arg):
+                node.annotation = None
+        return tree
+
+    def shape(node):
+        """The node with every identifier one placeholder, literals kept."""
+        if isinstance(node, list):
+            return tuple(shape(n) for n in node)
+        if not isinstance(node, ast.AST):
+            return repr(node)
+        return (type(node).__name__, *(
+            "_" if isinstance(v, str) and f in ("id", "attr", "arg", "name", "asname")
+            else ("_",) * len(v) if f == "names" and all(isinstance(n, str) for n in v)
+            else shape(v)
+            for f, v in ast.iter_fields(node)
+        ))
+
+    groups = collections.defaultdict(list)  # shape -> [(site, node)]
+    outer = {}  # node -> the statement or expression that holds it
+    for path in sorted(pkg.rglob("*.py")):
+        tree = strip(ast.parse(path.read_text()))
+        site = path.relative_to(pkg.parent)
+        for node in ast.walk(tree):
+            for child in ast.iter_child_nodes(node):
+                outer[child] = node if isinstance(node, (ast.stmt, ast.expr)) else outer.get(node)
+            if isinstance(node, (ast.stmt, ast.expr)) and sum(1 for _ in ast.walk(node)) >= clone_nodes:
+                groups[shape(node)].append((f"{site}:{node.lineno}", node))
+    shape_of = {id(node): key for key, sites in groups.items() for _, node in sites}
+    repeated = {key for key, sites in groups.items() if len(sites) > 1}
+
+    def inside_a_clone(node):
+        return shape_of.get(id(outer.get(node))) in repeated
+
+    clones = [
+        sites for key, sites in groups.items()
+        if key in repeated and not all(inside_a_clone(node) for _, node in sites)
+    ]
+    kept = collections.Counter()
+    found = []
+    for sites in clones:
+        names = [{n.id for n in ast.walk(node) if isinstance(n, ast.Name)}
+                 for _, node in sites]
+        reason = next((k for k in DUPLICATES_KEPT if all(k in ns for ns in names)), None)
+        if reason:
+            kept[reason] += 1
+        else:
+            found.append(" ".join(sorted(site for site, _ in sites)) + "  "
+                         + ast.unparse(sites[0][1]).splitlines()[0])
+    assert sorted(set(DUPLICATES_KEPT) - set(kept)) == []  # no clone left: no exception
+    assert found == [], "engine code written twice:\n" + "\n".join(sorted(found))

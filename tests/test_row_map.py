@@ -48,11 +48,10 @@ def test_row_map_flushes_expanded_rows_in_bounded_batches():
     assert sum(sizes) == sum(fan.values())
 
 
-def test_only_the_synthesizer_maps_through_pandas():
+def test_no_stage_maps_through_pandas():
     """Every row-level Python stage under parserpdf_spark/ goes through
-    ``schema.map_rows`` (or its own ``mapInArrow``); only
-    ``sources/synth.py``, whose pandas producer also feeds the golden
-    generator, calls ``mapInPandas``."""
+    ``schema.map_rows`` (or its own ``mapInArrow``): none calls
+    ``mapInPandas``."""
     callers = []
     for root, _, files in os.walk(PACKAGE):
         for name in files:
@@ -66,4 +65,4 @@ def test_only_the_synthesizer_maps_through_pandas():
                 for node in ast.walk(tree)
             ):
                 callers.append(os.path.relpath(path, PACKAGE))
-    assert callers == [os.path.join("sources", "synth.py")]
+    assert callers == []

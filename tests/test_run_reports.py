@@ -251,6 +251,38 @@ def test_golden_ingest_src_paths_are_repo_relative(golden):
     assert paths and all(p.startswith("fixtures/") for p in paths)
 
 
+def test_fixtures_and_goldens_regenerate_byte_identical(tmp_path):
+    """The three generator tools, run from a copy of ``tools/`` and
+    ``parserpdf_spark/`` at another path, write exactly the committed
+    fixtures and goldens, byte for byte: a kernel or synth change that
+    moves any output fails here, not in a manual check."""
+    import subprocess
+    import sys
+
+    ignore = shutil.ignore_patterns("__pycache__")
+    for name in ("tools", "parserpdf_spark"):
+        shutil.copytree(os.path.join(REPO, name), tmp_path / name, ignore=ignore)
+    for tool in ("make_file_fixtures", "make_goldens", "make_media_goldens"):
+        subprocess.run([sys.executable, f"tools/{tool}.py"], cwd=tmp_path,
+                       check=True, capture_output=True)
+
+    def files(root):
+        return sorted(
+            os.path.relpath(os.path.join(d, f), root)
+            for top in ("fixtures", "goldens")
+            for d, _, names in os.walk(os.path.join(root, top)) for f in names
+        )
+
+    written = files(str(tmp_path))
+    assert written == files(REPO)
+    changed = []
+    for rel in written:
+        with open(tmp_path / rel, "rb") as new, open(os.path.join(REPO, rel), "rb") as old:
+            if new.read() != old.read():
+                changed.append(rel)
+    assert changed == []
+
+
 def test_an_unlisted_ingest_status_fails_the_job(spark, tmp_path, monkeypatch):
     """The job counts every file as well as each known status: a status
     missing from schema.INGEST_STATUSES raises instead of vanishing."""
